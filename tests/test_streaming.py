@@ -3,7 +3,9 @@
 - ingest: envelope file stream → partitioned gzip JSON sink, exactly
   the landed rows (T1, checkpointed).
 - incremental SCD2: multi-batch foreachBatch materialization converges
-  to the single-shot batch recompute (streaming ↔ batch equivalence).
+  to the single-shot batch recompute (streaming ↔ batch equivalence);
+  one micro-batch runs at most three Spark jobs, and replayed, empty
+  and op-less batches leave the table equal to the recompute.
 - session_window on static data matches the lag/cumsum sessionize
   operator.
 """
@@ -637,3 +639,91 @@ def test_drain_state_partitions_pinned_from_progress(spark):
         == 8
     )
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+
+
+def _split_envelopes(spark, df, n_batches):
+    """Cut an envelope frame into ``n_batches`` consecutive frames."""
+    rows = df.collect()
+    size = (len(rows) + n_batches - 1) // n_batches
+    return [
+        spark.createDataFrame(rows[i * size:(i + 1) * size], df.schema)
+        for i in range(n_batches)
+    ]
+
+
+def _scd2_matches_recompute(inc, df):
+    want = {tuple(r) for r in scd2_recompute(decode_envelope(df)).collect()}
+    return {tuple(r) for r in inc.result().collect()} == want
+
+
+def test_incremental_scd2_batch_job_budget(spark, tmp_path):
+    """One micro-batch of the incremental merge runs at most three Spark
+    jobs — log write, recompute, table write. The touched-bucket lookup
+    is a driver-side listing and the log read uses the known schema, so
+    neither adds a job (a distinct() over the log or a parquet schema
+    inference would)."""
+    from change_data_capture_poc_spark.streaming import IncrementalScd2
+
+    sc = spark.sparkContext
+    df = CdcGenerator(seed=11).products_df(spark, num_records=80)
+    inc = IncrementalScd2(spark, str(tmp_path / "log"),
+                          str(tmp_path / "scd2"), n_buckets=4)
+    try:
+        for batch_id, batch in enumerate(_split_envelopes(spark, df, 2)):
+            group = f"scd2-job-budget-{batch_id}"
+            sc.setJobGroup(group, group)
+            inc.process_batch(batch, batch_id)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) <= 3, (batch_id, sorted(jobs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _scd2_matches_recompute(inc, df)
+
+
+def test_incremental_scd2_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch replays a batch whose offsets were not committed:
+    re-running batches 0 and 1 with the same rows must leave exactly one
+    log row per event and the table equal to the batch recompute."""
+    from change_data_capture_poc_spark.streaming import IncrementalScd2
+
+    df = CdcGenerator(seed=13).products_df(spark, num_records=90)
+    b0, b1 = _split_envelopes(spark, df, 2)
+    log_p = str(tmp_path / "log")
+    inc = IncrementalScd2(spark, log_p, str(tmp_path / "scd2"),
+                          n_buckets=4)
+    for batch_id, batch in [(0, b0), (1, b1), (0, b0), (1, b1)]:
+        inc.process_batch(batch, batch_id)
+
+    n_events = decode_envelope(df).count()
+    log = spark.read.parquet(log_p)
+    assert log.count() == n_events
+    assert log.select("log_seq_num").distinct().count() == n_events
+    assert _scd2_matches_recompute(inc, df)
+
+
+def test_incremental_scd2_empty_batches_are_noops(spark, tmp_path):
+    """An empty first micro-batch and a middle batch whose rows all lack
+    an op (decode_envelope drops them) write nothing to merge and raise
+    nothing; the next non-empty batch still converges to the recompute."""
+    from change_data_capture_poc_spark.streaming import IncrementalScd2
+
+    df = CdcGenerator(seed=17).products_df(spark, num_records=60)
+    b1, b3 = _split_envelopes(spark, df, 2)
+    empty = spark.createDataFrame([], df.schema)
+    no_op = b3.withColumn(
+        "payload", F.col("payload").withField("op", F.lit(None).cast("string"))
+    )
+    scd2_p = str(tmp_path / "scd2")
+    inc = IncrementalScd2(spark, str(tmp_path / "log"), scd2_p, n_buckets=4)
+
+    inc.process_batch(empty, 0)
+    assert not os.path.exists(scd2_p)
+    inc.process_batch(b1, 1)
+    assert _scd2_matches_recompute(inc, b1)
+    before = {tuple(r) for r in inc.result().collect()}
+    inc.process_batch(no_op, 2)
+    assert {tuple(r) for r in inc.result().collect()} == before
+    inc.process_batch(b3, 3)
+    assert _scd2_matches_recompute(inc, df)
+    inc.reconcile()
+    assert _scd2_matches_recompute(inc, df)

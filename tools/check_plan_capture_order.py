@@ -24,6 +24,7 @@ after file by design).
 
 from __future__ import annotations
 
+import difflib
 import glob
 import os
 import re
@@ -78,8 +79,7 @@ def main() -> None:
                     f"after capture — re-capture from the pre-change "
                     f"commit"
                 )
-            import difflib
-
+                continue
             nb, na = _normalized(before), _normalized(after)
             r = 1.0 if nb == na else difflib.SequenceMatcher(
                 None, nb, na
