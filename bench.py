@@ -19,8 +19,9 @@ nonce before building the session, so serve-path queries
 (ann_serve_from_index, chunk_incremental_serve, ...) can never read an
 index a PREVIOUS run built — their first rep pays the in-run build,
 and the best-of-N min reports serve-only cost off this run's artifact.
-Artifact dirs created under the nonce are removed when the run ends
-(the serve_probe snapshot-diff pattern).
+Artifact dirs built under the nonce (names ending in its
+``artifacts.artifact_key``) are removed when the run ends; other runs'
+``/tmp/spark_graft_*`` directories are left alone.
 
 Each query is materialized via a cheap full-evaluation action
 (``count`` on the final plan would let Catalyst prune work, so we use
@@ -35,6 +36,7 @@ import re
 import sys
 import time
 
+from change_data_capture_poc_spark.functions.artifacts import artifact_key
 from change_data_capture_poc_spark.functions.caching import release_pins
 from change_data_capture_poc_spark.registry import all_queries
 from change_data_capture_poc_spark.session import get_spark
@@ -356,15 +358,15 @@ def main() -> None:
     # their persisted indexes through functions/artifacts.artifact_dir,
     # which keys on this env var — a fresh nonce guarantees this run's
     # serve timings are served off an index THIS run built (first rep
-    # builds, best-of-N min reports serve-only). The snapshot diff in
-    # the finally block removes the run's artifacts so reruns neither
-    # reuse nor leak.
+    # builds, best-of-N min reports serve-only). The finally block
+    # removes only the directories keyed by this nonce, so reruns
+    # neither reuse nor leak, and a concurrent run keeps its own.
     import glob
     import shutil
 
     prior_ns = os.environ.get("SPARK_GRAFT_TMP_NS")
     os.environ["SPARK_GRAFT_TMP_NS"] = f"bench{os.getpid()}"
-    pre_dirs = set(glob.glob("/tmp/spark_graft_*"))
+    key = artifact_key(sf_dir)
     try:
         _run(sf_dir, sf, load_start)
     finally:
@@ -372,7 +374,7 @@ def main() -> None:
             os.environ.pop("SPARK_GRAFT_TMP_NS", None)
         else:
             os.environ["SPARK_GRAFT_TMP_NS"] = prior_ns
-        for d in set(glob.glob("/tmp/spark_graft_*")) - pre_dirs:
+        for d in glob.glob(f"/tmp/spark_graft_*_{key}"):
             shutil.rmtree(d, ignore_errors=True)
 
 

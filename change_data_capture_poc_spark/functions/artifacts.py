@@ -22,7 +22,13 @@ import hashlib
 import os
 
 
-def artifact_dir(prefix: str, sf_dir: str) -> str:
+def artifact_key(sf_dir: str) -> str:
+    """The (SF, current ``SPARK_GRAFT_TMP_NS``) suffix every artifact
+    directory name ends in; a harness globs ``*_<key>`` to find the
+    directories its own namespace built."""
     ns = os.environ.get("SPARK_GRAFT_TMP_NS", "")
-    key = hashlib.md5(f"{sf_dir}{ns}".encode()).hexdigest()[:10]
-    return f"/tmp/spark_graft_{prefix}_{key}"
+    return hashlib.md5(f"{sf_dir}{ns}".encode()).hexdigest()[:10]
+
+
+def artifact_dir(prefix: str, sf_dir: str) -> str:
+    return f"/tmp/spark_graft_{prefix}_{artifact_key(sf_dir)}"

@@ -261,8 +261,15 @@ _MP_K = 5   # final top-k
 _MP_P = 2   # probed partitions per query
 _MP_NQ = 8  # query set size
 
-# Per-dimension mean as an inline SQL list constructor (64 avg exprs).
-_CENTROID_LIST = "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(64)) + "]"
+# Width of every ``embeddings.embedding`` vector; the engine's
+# per-dimension centroid columns and the oracles' SQL lists share it.
+EMBED_DIM = 64
+
+# Per-dimension mean as an inline SQL list constructor (one avg expr
+# per dimension).
+_CENTROID_LIST = (
+    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(EMBED_DIM)) + "]"
+)
 
 
 @register(
@@ -360,9 +367,8 @@ def ann_ivf_multiprobe_recall(
     # vectors into n x dim scalar rows and shuffled them TWICE; here
     # only |labels| x dim partial sums cross the exchange (guide §2.3
     # "aggregate before you shuffle").
-    dim = 64
     cent = e.groupBy("label").agg(
-        F.array(*[F.avg(F.col("v")[i]) for i in range(dim)]).alias("c")
+        F.array(*[F.avg(F.col("v")[i]) for i in range(EMBED_DIM)]).alias("c")
     )
     cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.queries.pipeline4_q import EMBED_DIM
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -191,10 +192,11 @@ _HN_CEIL = 0.95  # near-dup ceiling: candidates above this are assumed
                  # false negatives (mislabeled near-duplicates) and skipped
 _HN_P = 3        # IVF probes: nearest OTHER-label partitions mined per query
 
-# Per-dimension mean as an inline SQL list constructor (64 avg exprs) —
-# same centroid construction as ann_ivf_multiprobe_recall's oracle.
+# Per-dimension mean as an inline SQL list constructor (one avg expr
+# per dimension) — same centroid construction as
+# ann_ivf_multiprobe_recall's oracle.
 _HN_CENTROID_LIST = (
-    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(64)) + "]"
+    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(EMBED_DIM)) + "]"
 )
 
 

@@ -164,6 +164,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from change_data_capture_poc_spark.queries.pipeline4_q import (  # noqa: E402
+    EMBED_DIM,
     _CENTROID_LIST,
     _MP_K,
     _MP_NQ,
@@ -282,10 +283,9 @@ def ann_multiprobe_recall_sampled_truth(
     # oracle's own formulation) instead of the posexplode regroup
     # (n x 64 rows, two shuffles): the centroid pass is this gate's
     # only corpus-sized job, so its constant sets the 8x ratio.
-    dim = 64
     cent = e.groupBy("label").agg(
         F.array(
-            *[F.avg(F.col("v")[i]) for i in range(dim)]
+            *[F.avg(F.col("v")[i]) for i in range(EMBED_DIM)]
         ).alias("c")
     )
     cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
+from change_data_capture_poc_spark.sources.tables import read_events_raw
 
 _EVENTS_RAW_SCHEMA_NANOS = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
@@ -67,23 +68,8 @@ def _events_stream_dir(sf_dir: str) -> str:
 
 def _events_encoding_is_nanos(spark: SparkSession, sf_dir: str) -> bool:
     # Peek the physical encoding with a schema-only batch read (no
-    # scan), scoping the legacy nanosAsLong flag to the peek (set +
-    # restore, same discipline as sources/tables.load_table) — a bare
-    # session-wide set here would silently change how every later
-    # parquet read in the session handles TIMESTAMP(NANOS). The stream
-    # itself needs no flag: it gets an EXPLICIT schema.
-    try:
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-    except Exception:
-        prior = None
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        peek = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
+    # scan). The stream itself needs no flag: it gets an EXPLICIT schema.
+    peek = dict(read_events_raw(spark, sf_dir).dtypes)
     return peek.get("ts") == "bigint"
 
 

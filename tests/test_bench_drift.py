@@ -169,3 +169,37 @@ def test_phantom_flag_scenario_cheap_burst_does_not_widen_heavy():
     # Under the old single global coefficient (cheap-dominated median
     # 2.6) the 2.2x heavy regression would have been absorbed:
     assert not 2.2 * heavy_base > 2 * heavy_base * by["cheap"]
+
+
+def test_main_removes_only_its_own_artifact_dirs(monkeypatch, tmp_path):
+    """The run's cleanup deletes the directories built under its own
+    ``SPARK_GRAFT_TMP_NS`` nonce and leaves another run's alone, even
+    one created while this run was going."""
+    import shutil
+
+    from change_data_capture_poc_spark.functions.artifacts import (
+        artifact_dir,
+    )
+
+    sf_dir = str(tmp_path / "sf0.001")
+    built = []
+
+    def fake_run(sf_dir, sf, load_start):
+        for prefix in ("ann_index", "uni_vocab"):
+            built.append(artifact_dir(prefix, sf_dir))
+            os.makedirs(built[-1])
+        monkeypatch.setenv("SPARK_GRAFT_TMP_NS", "other-run")
+        built.append(artifact_dir("ann_index", sf_dir))
+        os.makedirs(built[-1])
+        monkeypatch.setenv("SPARK_GRAFT_TMP_NS", f"bench{os.getpid()}")
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.delenv("SPARK_GRAFT_TMP_NS", raising=False)
+    monkeypatch.setattr(bench, "_run", fake_run)
+    try:
+        bench.main()
+        assert [os.path.isdir(d) for d in built] == [False, False, True]
+        assert "SPARK_GRAFT_TMP_NS" not in os.environ
+    finally:
+        for d in built:
+            shutil.rmtree(d, ignore_errors=True)

@@ -475,3 +475,147 @@ def test_jdbc_snapshot_option_wiring(spark, monkeypatch):
     assert calls["options"]["lowerBound"] == 100
     assert calls["options"]["upperBound"] == 5000
     assert calls["options"]["numPartitions"] == 32
+
+
+def _jobs_run_by(spark, group, fn):
+    """Run ``fn`` under its own job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy_table(sf_dir, tmp_path, name):
+    import shutil
+
+    shutil.copyfile(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    return str(tmp_path)
+
+
+def test_load_table_caches_schema_not_frame(spark, sf_dir, tmp_path):
+    """The first load of a file infers its schema (one Spark job); a
+    second load reads with the cached schema and runs none, yet returns
+    the same schema and rows."""
+    from change_data_capture_poc_spark.sources.tables import load_table
+
+    d = _copy_table(sf_dir, tmp_path, "nation")
+    first, n_first = _jobs_run_by(
+        spark, "load-table-first", lambda: load_table(spark, d, "nation"))
+    second, n_second = _jobs_run_by(
+        spark, "load-table-second", lambda: load_table(spark, d, "nation"))
+    assert n_first >= 1  # the counter sees the inference job
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_load_table_twice_self_joins(spark, sf_dir):
+    """Each call is a new relation: two loads of ``orders`` carry
+    disjoint attribute IDs, and joined on ``o_custkey`` they count what
+    one load joined with itself counts."""
+    import re
+    from collections import Counter
+
+    from change_data_capture_poc_spark.sources.tables import load_table
+
+    def attr_ids(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return set(re.findall(r"#(\d+)", plan))
+
+    a = load_table(spark, sf_dir, "orders")
+    b = load_table(spark, sf_dir, "orders")
+    assert attr_ids(a) and not attr_ids(a) & attr_ids(b)
+    two_loads = a.join(b, a.o_custkey == b.o_custkey).count()
+    one_load = a.join(a, "o_custkey").count()
+    per_key = Counter(r.o_custkey for r in a.select("o_custkey").collect())
+    assert two_loads == one_load == sum(c * c for c in per_key.values())
+
+
+def test_load_table_sees_rewritten_file(spark, sf_dir, tmp_path):
+    """Overwriting a loaded file changes its size and mtime, so the next
+    load infers again and sees the new column and rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from change_data_capture_poc_spark.sources.tables import load_table
+
+    d = _copy_table(sf_dir, tmp_path, "nation")
+    before = load_table(spark, d, "nation")
+    assert "n_extra" not in before.columns
+    n = before.count()
+
+    path = tmp_path / "nation.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.append_column("n_extra", pa.array(range(n))), path)
+
+    after = load_table(spark, d, "nation")
+    assert after.columns == before.columns + ["n_extra"]
+    assert sorted(r.n_extra for r in after.collect()) == list(range(n))
+
+
+def test_load_table_events_nanos_generation(spark, tmp_path):
+    """An ``events.parquet`` whose ``ts`` is TIMESTAMP(NANOS) loads with
+    ``ts`` truncated to microseconds, on the inferring call and on the
+    cached one, and leaves ``nanosAsLong`` at its prior (unset) value."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from change_data_capture_poc_spark.sources.tables import load_table
+
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    nanos = [1_704_067_200_000_000_000 + i * 1_000_000_789 for i in range(5)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(5), pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+            "user_id": pa.array([7] * 5, pa.int64()),
+            "event_type": ["click"] * 5,
+            "value": [1.5] * 5,
+            "props": ['{"k": 1}'] * 5,
+        }),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    schema = pq.read_schema(tmp_path / "events.parquet")
+    assert schema.field("ts").type == pa.timestamp("ns")
+
+    prior = spark.conf.get(flag, None)
+    spark.conf.unset(flag)
+    loads = []
+    try:
+        for _ in range(2):
+            df = load_table(spark, str(tmp_path), "events")
+            assert spark.conf.get(flag, None) is None
+            assert dict(df.dtypes)["ts"] == "timestamp"
+            loads.append(sorted(
+                df.select("event_id", F.unix_micros("ts")).collect()))
+    finally:
+        if prior is not None:
+            spark.conf.set(flag, prior)
+    want = [(i, ns // 1000) for i, ns in enumerate(nanos)]
+    assert [tuple(r) for r in loads[0]] == want
+    assert loads[1] == loads[0]
+
+
+def test_load_table_uncached_paths(spark, sf_dir, tmp_path):
+    """Paths without a local file fingerprint skip the cache: a table
+    stored as a directory loads normally, and a path ``os.stat`` cannot
+    see fails in Spark's own read, not in the fingerprinting."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from change_data_capture_poc_spark.sources.tables import load_table
+
+    src = load_table(spark, sf_dir, "nation")
+    src.write.parquet(str(tmp_path / "nation.parquet"))
+    for _ in range(2):
+        back = load_table(spark, str(tmp_path), "nation")
+        assert sorted(back.collect()) == sorted(src.collect())
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path / "missing"), "nation")
