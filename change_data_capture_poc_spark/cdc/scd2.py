@@ -12,17 +12,13 @@ Two variants, matching the reference's two formulations:
    anti-join inserts new current versions, semi-join expires superseded
    ones. Spark has no in-place UPDATE, so the merge is expressed as a
    recomputed union (changed-current-rows ∪ untouched rows ∪ inserts) —
-   at scale this becomes a Delta/Iceberg MERGE with the same join
-   structure; the joins here are exactly the MERGE's matching phase.
+   the joins here are exactly the matching phase of a lakehouse
+   ``MERGE INTO history USING batch`` (WHEN MATCHED AND changed THEN
+   UPDATE SET valid_to/is_current, WHEN NOT MATCHED THEN INSERT).
 
-   Production backend note: on a cluster with delta-spark/Iceberg this
-   function maps 1:1 onto ``MERGE INTO history USING batch`` (WHEN
-   MATCHED AND changed THEN UPDATE SET valid_to/is_current, WHEN NOT
-   MATCHED THEN INSERT). This container ships neither lakehouse
-   runtime (``import delta`` fails), so the transactional backend is
-   an environment-gated deployment concern: the parquet
-   dynamic-partition-overwrite path in ``streaming/scd2_stream.py`` is
-   the tested equivalent here, converging to the same table
+   The engine's durable incremental path is the parquet
+   replace-partitions write in ``streaming/scd2_stream.py``, which
+   converges to the same table
    (tests/test_streaming.py::test_incremental_scd2_converges_to_batch).
 
 Scale design: the only shuffle in the recompute is the window's

@@ -64,7 +64,7 @@ def connected_components(
     )
     # try/finally: the non-convergence RuntimeError below must not leak
     # the persisted edge table into executor storage for the rest of
-    # the application (same discipline merge_backend.py applies).
+    # the application.
     try:
         # Round 0 fused into initialization: one min-label round over
         # the identity labeling yields exactly min(self, min neighbor),

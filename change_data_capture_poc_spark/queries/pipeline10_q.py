@@ -1029,7 +1029,7 @@ def _er_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps exactly the pairs the old post-group filter kept, while the
     # accepted name_dist rides along — no re-attach joins back to nrm
     # and fewer pre-aggregation rows in the pair shuffle (r13: plan
-    # drops 2 joins + 2 customer scans; bench 0.67s -> see plans/r13).
+    # drops 2 joins + 2 customer scans).
     accept = (F.col("nat_a") == F.col("nat_b")) & (dist <= _ER_MAX_DIST)
     pass_a = (
         a.join(b, (F.col("sfx_a") == F.col("sfx_b")) & lt & accept)

@@ -1,16 +1,16 @@
 """Event-log readers (SURVEY.md §2.1 S4-S6).
 
-The reference consumes its S3 event log three ways; each has a Spark
-equivalent here:
+The reference consumes its S3 event log three ways. The engine reads
+it with an explicit envelope schema, which stays deterministic at
+100 TB:
 
 - S4 ``read_ndjson_objects`` (raw strings, runtime extraction)
-  → ``read_ndjson_raw`` + ``parse_envelope_json``
-- S5 ``read_json_auto`` (schema inference)
-  → ``read_json_inferred``
-- S6 ``read_parquet`` → plain ``spark.read.parquet``
-
-Explicit-schema reads are the default (deterministic at 100 TB);
-inference mirrors the reference's ``init_duckdb.sh:23-25`` path.
+  → ``read_envelope_log`` (text scan + one ``parse_envelope_json``);
+  ``read_envelope_log_between`` prunes the landed ``year=/month=/day=``
+  layout to a date window, and ``read_envelope_log_tolerant``
+  quarantines malformed lines;
+- S5 ``read_json_auto`` (schema inference) → plain ``spark.read.json``;
+- S6 ``read_parquet`` → plain ``spark.read.parquet``.
 """
 
 from __future__ import annotations
@@ -25,28 +25,14 @@ from change_data_capture_poc_spark.cdc.envelope import (
 )
 
 
-def read_ndjson_raw(spark: SparkSession, path: str) -> DataFrame:
-    """Raw-string fidelity scan (one row per JSON line), the analogue of
-    ``read_ndjson_objects`` (transform_scd2.py:38). Globs and gzip are
-    handled by the text source transparently."""
-    return spark.read.text(path)
-
-
 def read_envelope_log(
     spark: SparkSession, path: str, row_fields: list[T.StructField]
 ) -> DataFrame:
-    """NDJSON envelope log → typed envelope rows (single from_json
-    parse with the explicit schema)."""
-    return parse_envelope_json(read_ndjson_raw(spark, path), row_fields)
-
-
-def read_envelope_log_direct(
-    spark: SparkSession, path: str, row_fields: list[T.StructField]
-) -> DataFrame:
-    """Same result via the JSON source with an explicit schema — lets
-    the source skip whole files on corrupt-record policies and prune
-    columns at parse time."""
-    return spark.read.schema(envelope_schema(row_fields)).json(path)
+    """NDJSON envelope log → typed envelope rows: a raw-string scan
+    (one row per JSON line, the analogue of ``read_ndjson_objects``,
+    transform_scd2.py:38; globs and gzip are handled by the text
+    source) and a single from_json parse with the explicit schema."""
+    return parse_envelope_json(spark.read.text(path), row_fields)
 
 
 def read_envelope_log_between(
@@ -85,83 +71,6 @@ def read_envelope_log_between(
         (day >= F.to_date(F.lit(start))) & (day <= F.to_date(F.lit(end)))
     )
     return bounded.drop("year", "month", "day")
-
-
-def read_json_inferred(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-inference read mirroring ``read_json_auto``
-    (init_duckdb.sh:25). Inference scans the data once — fine for
-    exploration, not for the 100 TB path."""
-    return spark.read.json(path)
-
-
-def read_jdbc_snapshot(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 32,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Initial-snapshot read of an OLTP table over JDBC (S1's
-    ``snapshot.mode=initial`` phase, connectors/postgres-source.json:17).
-
-    With ``partition_column`` (the reference tables' integer primary
-    key, initdb/01_init_schema.sql:9,17) the read issues
-    ``num_partitions`` parallel range queries instead of one cursor —
-    the only way a snapshot of a large table isn't single-threaded.
-    Not exercised in this container (no database); the CDC generator's
-    op='r' batch reproduces the snapshot semantics for tests, and the
-    constructed reader options — the contract this gate rides on — are
-    pinned database-less by
-    tests/test_sources.py::test_jdbc_snapshot_option_wiring.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option(
-        "dbtable", table
-    )
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", num_partitions)
-            .option("lowerBound", lower_bound if lower_bound is not None else 0)
-            .option(
-                "upperBound",
-                upper_bound if upper_bound is not None else 1 << 31,
-            )
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def read_csv_typed(
-    spark: SparkSession,
-    path: str,
-    schema: str | T.StructType | None = None,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """CSV scan. Prefer an explicit ``schema`` at scale: inference
-    triggers an extra full pass over the files AND types drift between
-    runs as data changes — production scans should be deterministic.
-    Header + delimiter options cover the common dialect axes; gzip and
-    globs are transparent like every file source."""
-    reader = (
-        spark.read.option("header", str(header).lower())
-        .option("delimiter", delimiter)
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning contract as parquet
-    (predicate pushdown + column pruning reach the reader)."""
-    return spark.read.orc(path)
 
 
 def read_envelope_log_tolerant(

@@ -2,14 +2,18 @@
 
 - ``write_partitioned_json``: the S3-sink analogue — Hive-style
   ``year=/month=/day=`` partition dirs derived from the envelope
-  event time, gzipped JSON objects (connectors/s3-sink.json:15-27,
-  UTC daily partitioner). The reference flushes every 3 records
-  producing pathological tiny files (SURVEY.md §7); here file count
-  follows Spark partitioning, and ``compact_to_parquet`` is the
-  recommended immediate next hop for anything at scale.
-- ``materialize_table``: CREATE OR REPLACE TABLE ... AS semantics
-  (transform_scd2.py:20) as an overwrite parquet/table write.
-- ``create_view``: CREATE VIEW over a scan (scd2_example.sql:10-14).
+  event time (``with_date_partitions``), gzipped JSON objects
+  (connectors/s3-sink.json:15-27, UTC daily partitioner). The
+  reference flushes every 3 records producing pathological tiny files
+  (SURVEY.md §7); here file count follows Spark partitioning, and a
+  parquet rewrite (``compact_small_files`` for an existing directory)
+  is the recommended next hop for anything at scale.
+- ``write_bucketed_table`` and ``write_sorted_layout``: layouts that
+  buy shuffle-free joins and min/max file pruning.
+- The reference's CREATE OR REPLACE TABLE ... AS (transform_scd2.py:20)
+  and CREATE VIEW (scd2_example.sql:10-14) are plain
+  ``df.write.mode("overwrite").parquet`` and
+  ``createOrReplaceTempView`` calls.
 """
 
 from __future__ import annotations
@@ -42,23 +46,6 @@ def write_partitioned_json(
     )
 
 
-def compact_to_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Tiny-file remedy: rewrite the JSON log columnar (zstd parquet)
-    so nested column pruning actually skips IO (SURVEY.md §4)."""
-    df.write.mode(mode).parquet(path)
-
-
-def materialize_table(df: DataFrame, path: str) -> None:
-    """CREATE OR REPLACE TABLE ... AS SELECT (full replace, the
-    reference's primary sink, transform_scd2.py:20)."""
-    df.write.mode("overwrite").parquet(path)
-
-
-def create_view(df: DataFrame, name: str) -> None:
-    """Logical view over any scan (S8)."""
-    df.createOrReplaceTempView(name)
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,
@@ -80,25 +67,6 @@ def write_bucketed_table(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(name)
-
-
-def write_csv(
-    df: DataFrame, path: str, header: bool = True, mode: str = "overwrite"
-) -> None:
-    """CSV sink (gzip) — the interchange format; lossy for nested/
-    binary columns, use parquet/ORC for engine-internal tables."""
-    (
-        df.write.mode(mode)
-        .option("header", str(header).lower())
-        .option("compression", "gzip")
-        .csv(path)
-    )
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (zstd) — columnar alternative sink with the same
-    pushdown contract as parquet."""
-    df.write.mode(mode).option("compression", "zstd").orc(path)
 
 
 def write_sorted_layout(

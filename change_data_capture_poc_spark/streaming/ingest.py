@@ -3,19 +3,20 @@ Streaming (SURVEY.md §2.8).
 
 Reference flow: Debezium → Kafka topic → S3 sink lands gzipped JSON
 under ``year=/month=/day=`` (connectors/s3-sink.json:15-27, flush every
-3 records, offsets committed every 10 s). Spark equivalents:
+3 records, offsets committed every 10 s). The engine replaces the
+Kafka hop with one replayable file source:
 
-- source: ``readStream`` over the landed NDJSON files (self-contained;
-  swap ``format("json")`` for ``format("kafka")`` + ``from_json`` on a
-  real deployment — same downstream plan either way);
+- source: ``readStream`` over the landed NDJSON files, typed by the
+  explicit envelope schema; a file source is replayable, which with an
+  idempotent sink gives end-to-end exactly-once (Structured Streaming,
+  SIGMOD 2018);
 - sink: ``writeStream`` with ``partitionBy(year, month, day)``;
   checkpointing replaces Kafka's offset topics (T1);
-- cadence: ``availableNow`` drains the backlog exactly once (used in
-  tests); ``processingTime`` mirrors the 10 s offset flush.
+- cadence: ``availableNow`` drains the backlog exactly once.
 
-At scale the landed JSON should be compacted to parquet immediately
-(SURVEY.md §7 tiny-file pathology) — ``foreachBatch`` +
-``compact_to_parquet`` gives that for free.
+At scale the landed JSON should be rewritten as parquet (SURVEY.md §7
+tiny-file pathology); ``streaming/scd2_stream.py`` lands each
+micro-batch's decoded events as parquet this way.
 """
 
 from __future__ import annotations
@@ -49,84 +50,16 @@ def stream_to_partitioned_json(
     df: DataFrame,
     path: str,
     checkpoint: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Land an envelope stream as gzipped JSON under year=/month=/day=
+    """Drain an envelope stream as gzipped JSON under year=/month=/day=
     (the S3 sink analogue, S3)."""
-    writer = (
+    return (
         with_date_partitions(df)
         .writeStream.format("json")
         .partitionBy("year", "month", "day")
         .option("compression", "gzip")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_envelope_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    row_fields: list[T.StructField],
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Kafka-source stream of typed envelope rows (S2).
-
-    The reference's topic layout: one topic per table, names
-    ``cdc.commerce.{products,users}`` (topic.prefix=cdc,
-    connectors/postgres-source.json:13-20), values schemaless JSON
-    (schemas.enable=false). Kafka value bytes -> string -> one
-    ``from_json`` with the explicit envelope schema — identical
-    downstream plan to the file-source path, so every SCD2/materialize
-    stage composes unchanged.
-
-    Needs the spark-sql-kafka package on the classpath; the live load()
-    is not exercised in this container (no broker) — but everything
-    around it IS: ``parse_kafka_envelope`` is pinned by a broker-less
-    contract test against a hand-built Kafka-shaped frame
-    (tests/test_sources.py::test_kafka_value_parse_contract), this
-    function's format/subscribe/startingOffsets wiring and post-source
-    from_json chain by tests/test_streaming.py::
-    test_kafka_source_option_wiring, and the missing-package raise by
-    test_kafka_source_without_package_raises.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return parse_kafka_envelope(raw, row_fields)
-
-
-def parse_kafka_envelope(
-    records: DataFrame, row_fields: list[T.StructField]
-) -> DataFrame:
-    """Kafka record frame → typed envelope payload rows.
-
-    ``records`` carries the Kafka source contract columns (binary
-    ``key``/``value`` plus topic/partition/offset/timestamp metadata);
-    only ``value`` is consumed — Debezium's value envelope is
-    self-contained and the key struct repeats payload.*.id
-    (connectors/postgres-source.json: schemaless JSON converters).
-    Works identically on a streaming or a static frame, which is what
-    lets the contract test pin the parse path without a broker.
-
-    Delegates to ``parse_envelope_json`` (cdc/envelope.py) so there is
-    exactly one envelope-parse plan in the package — this wrapper only
-    adds the binary→string cast the Kafka contract requires.
-    """
-    from pyspark.sql import functions as F
-
-    from change_data_capture_poc_spark.cdc.envelope import (
-        parse_envelope_json,
-    )
-
-    return parse_envelope_json(
-        records.select(F.col("value").cast("string").alias("value")),
-        row_fields,
+        .trigger(availableNow=True)
+        .start()
     )

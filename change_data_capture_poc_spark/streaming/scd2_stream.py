@@ -19,11 +19,30 @@ per micro-batch (three Spark jobs: log write, recompute, table write):
 Past 32 batch directories (``parallelPartitionDiscovery.threshold``)
 the log listing itself runs as a fourth, parallel-listing job.
 
+Merge backend. The reference applies updates in place
+(``init_duckdb.sh:56-68``: ``UPDATE dim_products SET valid_to=...,
+is_current=false``). Spark has no in-place UPDATE on parquet, so the
+stream computes the post-merge rows and ``ParquetOverwriteBackend``
+makes them durable:
+
+    apply(spark, path, rows, partition_col)
+
+replaces every ``partition_col`` partition that appears in ``rows``
+with exactly those rows and leaves all other partitions untouched.
+Replace-partitions is idempotent by construction — re-applying the
+same rows yields the same table — which is what makes the foreachBatch
+stream safely replayable after a checkpoint restart
+(tests/test_merge_backend.py pins idempotence and delete-tombstone
+preservation). It is copy-on-write at bucket granularity. On a
+lakehouse table the same contract is a transactional partition swap
+(Delta ``replaceWhere``, Iceberg ``overwritePartitions()``), or a
+merge-on-read MERGE INTO keyed on (bucket, id, version_number) —
+cheaper for small-delta batches at 100 TB (see SCALING.md).
+
 Why not ``applyInPandasWithState``: per-key SCD2 state is unbounded
 (every key lives forever — SURVEY.md §7 "streaming state at scale");
 keeping state in the table and re-deriving touched buckets keeps
-executor memory flat at 100 TB. With Delta/Iceberg, step 2 becomes a
-MERGE with the same join/pruning structure.
+executor memory flat at 100 TB.
 
 Cost model at scale: a micro-batch touching K distinct keys re-sorts
 the expected 1-(1-1/n)^K share of the table held in its buckets — about
@@ -42,19 +61,46 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from change_data_capture_poc_spark.cdc.envelope import decode_envelope
-from change_data_capture_poc_spark.cdc.merge_backend import (
-    get_merge_backend,
-)
 from change_data_capture_poc_spark.cdc.scd2 import scd2_recompute
+
+
+class ParquetOverwriteBackend:
+    """Replace-partitions by dynamic partition overwrite on plain
+    parquet.
+
+    The overwrite mode is scoped to this one write via the
+    DataFrameWriter option — setting it session-wide would silently
+    change overwrite semantics for every other write in the session.
+    """
+
+    name = "parquet"
+
+    def apply(
+        self,
+        spark: SparkSession,
+        path: str,
+        rows: DataFrame,
+        partition_col: str = "bucket",
+    ) -> None:
+        rows.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_col).parquet(path)
+
+
+def get_merge_backend() -> ParquetOverwriteBackend:
+    """The stream's merge backend. ``IncrementalScd2`` looks this name
+    up in the module on every construction, so a wrapper installed
+    here (perfbench/cdc_stream.py times ``apply`` this way) is used by
+    the next stream started."""
+    return ParquetOverwriteBackend()
 
 
 class IncrementalScd2:
     """State lives in two parquet tables, not in memory.
 
-    Durable writes go through the pluggable merge backend
-    (cdc/merge_backend.py): replace-partitions semantics, parquet
-    dynamic overwrite by default, Delta's transactional replaceWhere
-    when the deployment selects it via $SPARK_GRAFT_MERGE_BACKEND.
+    Durable SCD2 writes go through the merge backend that
+    ``get_merge_backend`` returns (replace-partitions semantics, see
+    the module docstring).
     """
 
     def __init__(
@@ -64,18 +110,28 @@ class IncrementalScd2:
         scd2_path: str,
         attr_fields: list[str] | None = None,
         n_buckets: int = 16,
-        merge_backend=None,
     ) -> None:
         self.spark = spark
         self.log_path = log_path
         self.scd2_path = scd2_path
         self.attr_fields = attr_fields
         self.n_buckets = n_buckets
-        self.backend = merge_backend or get_merge_backend()
+        self.backend = get_merge_backend()
 
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             "bucket", F.pmod(F.hash("id"), F.lit(self.n_buckets))
+        )
+
+    def _recompute_and_apply(self, log: DataFrame) -> None:
+        # Replace only the buckets present in ``log`` (Spark's
+        # replacement for UPDATE-in-place, SURVEY.md D2) —
+        # replace-partitions, so a replayed batch is a no-op rewrite.
+        out = scd2_recompute(
+            log.drop("bucket", "batch_id"), self.attr_fields
+        )
+        self.backend.apply(
+            self.spark, self.scd2_path, self._bucket(out), "bucket"
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -108,15 +164,7 @@ class IncrementalScd2:
         log = self.spark.read.schema(T.StructType(fields)).parquet(
             self.log_path
         ).where(F.col("bucket").isin(touched))
-        # Replace only the touched buckets (Spark's replacement for
-        # UPDATE-in-place, SURVEY.md D2) via the merge backend seam —
-        # replace-partitions, so the replayed batch is a no-op rewrite.
-        out = scd2_recompute(
-            log.drop("bucket", "batch_id"), self.attr_fields
-        )
-        self.backend.apply(
-            self.spark, self.scd2_path, self._bucket(out), "bucket"
-        )
+        self._recompute_and_apply(log)
 
     def result(self) -> DataFrame:
         return self.spark.read.parquet(self.scd2_path).drop("bucket")
@@ -131,13 +179,7 @@ class IncrementalScd2:
         invariant. Run after unclean shutdown or on a maintenance
         cadence; cost is one pass over the log, same as the batch
         path."""
-        log = self.spark.read.parquet(self.log_path)
-        out = scd2_recompute(
-            log.drop("bucket", "batch_id"), self.attr_fields
-        )
-        self.backend.apply(
-            self.spark, self.scd2_path, self._bucket(out), "bucket"
-        )
+        self._recompute_and_apply(self.spark.read.parquet(self.log_path))
 
 
 def run_incremental_scd2(

@@ -7,10 +7,10 @@ Postgres/Kafka, so this source synthesizes the same envelope shape on
 Spark's built-in ``rate`` source: every tick becomes a
 Debezium-flavored change event with rotating op codes, a monotonically
 increasing lsn (the rate source's ``value``), and payload fields
-derived deterministically from the sequence number. Swap
-``stream_envelope_kafka`` in for production; every operator downstream
-(decode → SCD2 merge, dedup, rollups) sees an identical schema either
-way.
+derived deterministically from the sequence number. It has the same
+schema as the landed-file stream (``streaming/ingest.py``
+``stream_envelope_log``), so every operator downstream (decode → SCD2
+merge, dedup, rollups) runs unchanged on either.
 
 Determinism note: field VALUES are pure functions of ``value``, but
 micro-batch boundaries depend on wall clock — use it for liveness and

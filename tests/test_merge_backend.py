@@ -1,21 +1,18 @@
-"""Merge-backend seam (cdc/merge_backend.py) — the contract every
-backend must meet so the SCD2 stream stays exactly-once replayable:
-replace exactly the partitions present in the applied rows, leave the
-rest untouched, and be idempotent under re-apply. Tombstone rows
-(delete after-images with NULL attributes — SURVEY.md T3,
-init_duckdb.sh:56-68 parity) must survive both."""
+"""Merge backend of the SCD2 stream (streaming/scd2_stream.py) — the
+contract that keeps the stream exactly-once replayable: replace exactly
+the partitions present in the applied rows, leave the rest untouched,
+and be idempotent under re-apply. Tombstone rows (delete after-images
+with NULL attributes — SURVEY.md T3, init_duckdb.sh:56-68 parity) must
+survive both."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.cdc.merge_backend import (
-    DeltaReplaceWhereBackend,
+from change_data_capture_poc_spark.streaming import scd2_stream
+from change_data_capture_poc_spark.streaming.scd2_stream import (
     ParquetOverwriteBackend,
     get_merge_backend,
-    replace_where_predicate,
 )
 
 
@@ -60,7 +57,7 @@ def test_backend_preserves_delete_tombstones(spark, tmp_path):
     the storage layer must round-trip it bit-for-bit through apply and
     re-apply (idempotent replay after a checkpoint restart)."""
     path = str(tmp_path / "scd2")
-    be = get_merge_backend()  # env default = parquet in this sandbox
+    be = get_merge_backend()
     rows = spark.createDataFrame(
         [
             (0, 10, "widget", "u", False),
@@ -78,84 +75,37 @@ def test_backend_preserves_delete_tombstones(spark, tmp_path):
     assert got.count() == 2
 
 
-def test_backend_selection_and_env_gate(monkeypatch):
-    assert isinstance(get_merge_backend(), ParquetOverwriteBackend)
-    assert isinstance(get_merge_backend("parquet"), ParquetOverwriteBackend)
-    monkeypatch.setenv("SPARK_GRAFT_MERGE_BACKEND", "parquet")
-    assert get_merge_backend().name == "parquet"
-    with pytest.raises(KeyError):
-        get_merge_backend("iceberg-typo")
-    # delta-spark is absent in this container: the Delta backend is an
-    # env-gated deployment tier and must fail loudly, not silently —
-    # and the raise must tell the operator both the cause and the
-    # tested fallback (contract: selection covered BOTH ways).
-    with pytest.raises(ImportError, match="delta-spark is not installed"):
-        DeltaReplaceWhereBackend()
-    with pytest.raises(
-        ImportError, match="SPARK_GRAFT_MERGE_BACKEND=parquet"
-    ):
-        DeltaReplaceWhereBackend()
-    # Env-var selection of the delta tier hits the same gate: the
-    # selection logic resolves 'delta' (not KeyError), then the
-    # constructor raises because the runtime lacks the dependency.
-    monkeypatch.setenv("SPARK_GRAFT_MERGE_BACKEND", "delta")
-    with pytest.raises(ImportError, match="delta-spark"):
-        get_merge_backend()
-
-
-def test_replace_where_predicate_contract():
-    """The Delta branch's partition-scoping predicate, pinned as a
-    pure function (delta-spark can't run here, but the replaceWhere
-    string it would commit is testable logic, not I/O)."""
-    assert replace_where_predicate("bucket", []) is None
-    assert replace_where_predicate("bucket", [3]) == "bucket IN (3)"
-    assert (
-        replace_where_predicate("bucket", [1, 2])
-        == "bucket IN (1, 2)"
-    )
-    # Strings single-quote with '' escaping (ANSI), never repr().
-    assert (
-        replace_where_predicate("day", ["2024-01-01", "o'brien"])
-        == "day IN ('2024-01-01', 'o''brien')"
-    )
-    # A NULL partition value needs IS NULL — IN () never matches NULL.
-    assert (
-        replace_where_predicate("bucket", [7, None])
-        == "bucket IN (7) OR bucket IS NULL"
-    )
-    assert replace_where_predicate("bucket", [None]) == "bucket IS NULL"
-    # Booleans render as SQL literals, not Python's True/False.
-    assert (
-        replace_where_predicate("flag", [True, False])
-        == "flag IN (true, false)"
-    )
-
-
-def test_incremental_scd2_uses_backend(spark, tmp_path):
+def test_incremental_scd2_uses_backend(spark, tmp_path, monkeypatch):
     """The stream materializer routes every durable SCD2 write through
-    the seam — swap in a recording backend, push a micro-batch through
-    process_batch, and require the write to have come via apply()."""
+    ``scd2_stream.get_merge_backend``, looked up when the materializer
+    is built: swap in a recording wrapper the way
+    perfbench/cdc_stream.py does, then require process_batch and
+    reconcile() to send one apply each through it."""
     from change_data_capture_poc_spark.cdc.generator import CdcGenerator
-    from change_data_capture_poc_spark.streaming.scd2_stream import (
-        IncrementalScd2,
-    )
 
     calls = []
 
-    class Recording(ParquetOverwriteBackend):
+    class Recording:
+        def __init__(self, inner):
+            self.inner = inner
+            self.name = inner.name
+
         def apply(self, spark_, path, rows, partition_col="bucket"):
             calls.append(path)
-            super().apply(spark_, path, rows, partition_col)
+            self.inner.apply(spark_, path, rows, partition_col)
+
+    real_get = scd2_stream.get_merge_backend
+    assert isinstance(real_get(), ParquetOverwriteBackend)
+    monkeypatch.setattr(
+        scd2_stream, "get_merge_backend", lambda: Recording(real_get())
+    )
 
     scd2_path = str(tmp_path / "scd2")
-    inc = IncrementalScd2(
-        spark,
-        str(tmp_path / "log"),
-        scd2_path,
-        n_buckets=4,
-        merge_backend=Recording(),
+    inc = scd2_stream.IncrementalScd2(
+        spark, str(tmp_path / "log"), scd2_path, n_buckets=4
     )
     assert isinstance(inc.backend, Recording)
+    assert inc.backend.name == "parquet"
 
     batch = CdcGenerator(seed=3).products_df(spark, num_records=40)
     inc.process_batch(batch, batch_id=0)
@@ -164,81 +114,3 @@ def test_incremental_scd2_uses_backend(spark, tmp_path):
 
     inc.reconcile()
     assert calls == [scd2_path, scd2_path]
-
-
-def test_sql_literal_quoting():
-    from change_data_capture_poc_spark.cdc.merge_backend import (
-        _sql_literal,
-    )
-
-    assert _sql_literal(7) == "7"
-    assert _sql_literal("abc") == "'abc'"
-    assert _sql_literal("it's") == "'it''s'"
-    assert _sql_literal(True) == "true"
-
-
-def test_delta_backend_write_path_contract(spark, monkeypatch, tmp_path):
-    """Exercise DeltaReplaceWhereBackend.apply itself (not just backend
-    selection): a fake `delta` module opens the env gate and a recording
-    DataFrameWriter double captures the write calls — the predicate must
-    cover exactly the batch's distinct partitions and the writer chain
-    must be format=delta / mode=overwrite / partitionBy(bucket) /
-    save(path). This is the strongest pin available in a container that
-    ships no delta-spark runtime."""
-    import sys
-    import types
-
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
-
-    calls = {"options": {}}
-
-    def rec_format(self, fmt):
-        calls["format"] = fmt
-        return self
-
-    def rec_mode(self, m):
-        calls["mode"] = m
-        return self
-
-    def rec_option(self, k, v):
-        calls["options"][k] = v
-        return self
-
-    def rec_partition_by(self, *cols):
-        calls["partitionBy"] = cols
-        return self
-
-    def rec_save(self, path=None):
-        calls["save"] = path
-
-    monkeypatch.setattr(DataFrameWriter, "format", rec_format)
-    monkeypatch.setattr(DataFrameWriter, "mode", rec_mode)
-    monkeypatch.setattr(DataFrameWriter, "option", rec_option)
-    monkeypatch.setattr(DataFrameWriter, "partitionBy", rec_partition_by)
-    monkeypatch.setattr(DataFrameWriter, "save", rec_save)
-
-    backend = DeltaReplaceWhereBackend()
-    rows = spark.createDataFrame(
-        [(0, 1, "a"), (2, 2, "b"), (2, 3, "c")], "bucket int, id int, val string"
-    )
-    target = str(tmp_path / "delta_table")
-    backend.apply(spark, target, rows, partition_col="bucket")
-
-    assert calls["format"] == "delta"
-    assert calls["mode"] == "overwrite"
-    assert calls["partitionBy"] == ("bucket",)
-    assert calls["save"] == target
-    # Predicate covers exactly the touched partitions {0, 2}.
-    assert calls["options"]["replaceWhere"] == "bucket IN (0, 2)"
-    # The persist taken inside apply must be released on exit.
-    assert not rows.is_cached
-
-    # Empty batch: contract says no-op — nothing written at all.
-    calls.clear()
-    calls["options"] = {}
-    backend.apply(
-        spark, target, rows.where(F.lit(False)), partition_col="bucket"
-    )
-    assert "save" not in calls

@@ -9,27 +9,21 @@ from change_data_capture_poc_spark.registry import all_queries
 
 
 def test_all_queries_build_and_have_stable_schemas(spark, sf_dir):
-    qs = all_queries()
-    assert len(qs) >= 71
-    for name, q in sorted(qs.items()):
-        df = q.fn(spark, sf_dir)
-        cols = [c.lower() for c in df.columns]
-        assert cols, name
-        assert len(cols) == len(set(cols)), f"{name}: duplicate column names"
-        # Schema must be resolvable (forces full analysis, not execution).
-        assert df.schema.fields, name
+    """One build of every registered query, checked two ways:
 
+    - a resolvable schema with lower-case-unique column names;
+    - no harness-hostile output types. This is the round-1 failure
+      class, pinned forever: result columns must never be
+      array/map/struct typed (the harness's pandas row hash dies on
+      unhashable cells) and never TIMESTAMP columns that can carry the
+      year-9999 SCD2 sentinels (datetime64[ns] overflow in the bridge)
+      — sentinel-bearing queries must emit epoch-millis BIGINT instead.
 
-def test_no_harness_hostile_output_types(spark, sf_dir):
-    """The round-1 failure class, pinned forever: result columns must
-    never be array/map/struct typed (the driver's pandas row hash dies
-    on unhashable cells) and never TIMESTAMP columns that can carry the
-    year-9999 SCD2 sentinels (datetime64[ns] overflow in the bridge) —
-    sentinel-bearing queries must emit epoch-millis BIGINT instead.
     Schema analysis only; costs no execution."""
     from pyspark.sql import types as T
 
     qs = all_queries()
+    assert len(qs) >= 71
     sentinel_emitters = {
         # Queries whose validity columns COULD hold 9999 sentinels; the
         # assertion below proves they emit them as integers.
@@ -42,15 +36,21 @@ def test_no_harness_hostile_output_types(spark, sf_dir):
     }
     for name, q in sorted(qs.items()):
         df = q.fn(spark, sf_dir)
-        for f in df.schema.fields:
+        cols = [c.lower() for c in df.columns]
+        assert cols, name
+        assert len(cols) == len(set(cols)), f"{name}: duplicate column names"
+        # Schema must be resolvable (forces full analysis, not execution).
+        fields = df.schema.fields
+        assert fields, name
+        for f in fields:
             assert not isinstance(
                 f.dataType, (T.ArrayType, T.MapType, T.StructType)
             ), f"{name}.{f.name}: complex type {f.dataType.simpleString()}"
         if name in sentinel_emitters:
-            got = {f.name for f in df.schema.fields}
+            got = {f.name for f in fields}
             missing = sentinel_emitters[name] - got
             assert not missing, f"{name}: sentinel columns not ms-bridged: {missing}"
-            for f in df.schema.fields:
+            for f in fields:
                 if f.name in sentinel_emitters[name]:
                     assert isinstance(f.dataType, T.LongType), (
                         f"{name}.{f.name} must be epoch-ms BIGINT"

@@ -489,91 +489,6 @@ def test_live_synthetic_cdc_to_scd2(spark, tmp_path):
     assert len(got) >= 300
 
 
-def test_kafka_source_option_wiring(spark, monkeypatch):
-    """Broker-less contract pin of stream_envelope_kafka (S2, the
-    reference's actual transport — connectors/postgres-source.json:
-    13-20): intercept DataStreamReader so the REAL code path records
-    its format and options, hand load() a Kafka-shaped static frame,
-    and assert the downstream plan is the same single from_json
-    envelope parse the tested file twin uses."""
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.readwriter import DataStreamReader
-
-    from change_data_capture_poc_spark.streaming.ingest import (
-        stream_envelope_kafka,
-    )
-
-    payload = (
-        b'{"payload":{"op":"c","ts_ms":1700000000000,'
-        b'"source":{"lsn":7},"before":null,'
-        b'"after":{"id":1,"name":"a","description":"d","price":1.5}}}'
-    )
-    fake_records = spark.createDataFrame(
-        [(b"k", payload, "cdc.commerce.products", 0, 0, None, 0)],
-        T.StructType([
-            T.StructField("key", T.BinaryType()),
-            T.StructField("value", T.BinaryType()),
-            T.StructField("topic", T.StringType()),
-            T.StructField("partition", T.IntegerType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("timestamp", T.TimestampType()),
-            T.StructField("timestampType", T.IntegerType()),
-        ]),
-    )
-    calls = {"options": {}}
-
-    def fake_format(self, fmt):
-        calls["format"] = fmt
-        return self
-
-    def fake_option(self, k, v):
-        calls["options"][k] = v
-        return self
-
-    monkeypatch.setattr(DataStreamReader, "format", fake_format)
-    monkeypatch.setattr(DataStreamReader, "option", fake_option)
-    monkeypatch.setattr(
-        DataStreamReader, "load", lambda self, path=None: fake_records
-    )
-
-    out = stream_envelope_kafka(
-        spark, "broker-1:9092,broker-2:9092", "cdc.commerce.products",
-        PRODUCT_FIELDS,
-    )
-    assert calls["format"] == "kafka"
-    assert calls["options"] == {
-        "kafka.bootstrap.servers": "broker-1:9092,broker-2:9092",
-        "subscribe": "cdc.commerce.products",
-        "startingOffsets": "earliest",
-    }
-    # Post-source chain: exactly one from_json envelope parse fed by
-    # the binary->string value cast, nothing else touching the Kafka
-    # metadata columns.
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert plan.count("from_json") == 1
-    assert "cast(value" in plan
-    # And it decodes: the downstream stage composes unchanged.
-    assert decode_envelope(out).count() == 1
-
-
-def test_kafka_source_without_package_raises(spark):
-    """The env gate: without spark-sql-kafka on the classpath the
-    source must fail at load() with the standard missing-data-source
-    message naming kafka — not a silent fallback."""
-    import pytest as _pytest
-
-    from change_data_capture_poc_spark.streaming.ingest import (
-        stream_envelope_kafka,
-    )
-
-    with _pytest.raises(Exception) as ei:
-        stream_envelope_kafka(
-            spark, "localhost:9092", "cdc.commerce.products",
-            PRODUCT_FIELDS,
-        )
-    assert "kafka" in str(ei.value).lower()
-
-
 def test_memory_sink_self_join_workaround_still_needed(spark, tmp_path):
     """CANARY for the localCheckpoint workaround in
     streaming_histogram_register_drain (queries/streaming_q.py):

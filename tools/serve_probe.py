@@ -18,9 +18,10 @@ serving cost — this tool measures them for real:
   loader builds the artifacts from the N-times self-unioned corpus,
   and the serve query (whose delta/request inputs are also scaled by
   the same loader) is timed against THOSE. This run's artifact dirs
-  are removed afterwards (snapshot diff of /tmp/spark_graft_* —
-  assumes no concurrent artifact-building harness, the repo's
-  standing no-concurrent-sweeps rule).
+  are removed afterwards: for each of its two namespaces, the
+  ``/tmp/spark_graft_*`` directories whose name ends in that
+  namespace's ``artifacts.artifact_key``. Other runs' directories and
+  the shared streaming directories are left alone.
 
 The ratio is therefore serve-vs-serve on honest 1x/Nx artifacts. The
 warm columns record the one-time build+serve pass for context (the
@@ -41,6 +42,7 @@ import sys
 import time
 
 import change_data_capture_poc_spark.queries  # noqa: F401 - registers all
+from change_data_capture_poc_spark.functions.artifacts import artifact_key
 from change_data_capture_poc_spark.registry import all_queries
 from change_data_capture_poc_spark.session import get_spark
 from change_data_capture_poc_spark.sources import tables as tables_mod
@@ -112,19 +114,15 @@ def run(
     # every run after the first record serve-only cost in the 'warm'
     # (build+serve) column — falsifying the offline-build readout the
     # column exists for (round-12 review finding). The pid nonce
-    # guarantees fresh builds; the snapshot diff below removes this
-    # run's artifacts afterwards so reruns neither reuse nor leak.
+    # guarantees fresh builds; the cleanup below removes this run's
+    # artifacts afterwards so reruns neither reuse nor leak.
     nonce = os.getpid()
-    pre_dirs = set(glob.glob("/tmp/spark_graft_*"))
+    namespaces = (f"serveprobe1x{nonce}", f"serveprobe{n}x{nonce}")
     rows = []
     try:
         for name in names:
-            w1, base, base_b = phase(
-                f"serveprobe1x{nonce}", real_load, name
-            )
-            wn, scaled, scaled_b = phase(
-                f"serveprobe{n}x{nonce}", scaled_load, name
-            )
+            w1, base, base_b = phase(namespaces[0], real_load, name)
+            wn, scaled, scaled_b = phase(namespaces[1], scaled_load, name)
             ratio = scaled / base if base > 0 else float("nan")
             rows.append(
                 (name, round(base, 2), round(scaled, 2), round(ratio, 1),
@@ -136,13 +134,18 @@ def run(
                 print(f"WARN super-linear serve shuffle bytes: {name} "
                       f"{mb(base_b)} MB -> {mb(scaled_b)} MB at {n}x")
     finally:
+        keys = []
+        for ns in namespaces:
+            os.environ["SPARK_GRAFT_TMP_NS"] = ns
+            keys.append(artifact_key(sf_dir))
         if prior_ns is None:
             os.environ.pop("SPARK_GRAFT_TMP_NS", None)
         else:
             os.environ["SPARK_GRAFT_TMP_NS"] = prior_ns
         set_loader(mods, real_load)
-        for d in set(glob.glob("/tmp/spark_graft_*")) - pre_dirs:
-            shutil.rmtree(d, ignore_errors=True)
+        for key in keys:
+            for d in glob.glob(f"/tmp/spark_graft_*_{key}"):
+                shutil.rmtree(d, ignore_errors=True)
 
     header = f"\n## Artifact-serving probe at {n}x (probe-local artifacts)\n"
     body = (
