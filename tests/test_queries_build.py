@@ -5,25 +5,38 @@ lower-case-unique schema — the cheap whole-surface regression gate
 
 from __future__ import annotations
 
+import pytest
+
 from change_data_capture_poc_spark.registry import all_queries
 
 
-def test_all_queries_build_and_have_stable_schemas(spark, sf_dir):
-    """One build of every registered query, checked two ways:
+@pytest.fixture(scope="module")
+def built_schemas(spark, sf_dir):
+    """Build every registered query once and keep its output schema;
+    both schema tests below read from this one build. Schema analysis
+    only; costs no execution."""
+    qs = all_queries()
+    return {name: q.fn(spark, sf_dir).schema for name, q in sorted(qs.items())}
 
-    - a resolvable schema with lower-case-unique column names;
-    - no harness-hostile output types. This is the round-1 failure
-      class, pinned forever: result columns must never be
-      array/map/struct typed (the harness's pandas row hash dies on
-      unhashable cells) and never TIMESTAMP columns that can carry the
-      year-9999 SCD2 sentinels (datetime64[ns] overflow in the bridge)
-      — sentinel-bearing queries must emit epoch-millis BIGINT instead.
 
-    Schema analysis only; costs no execution."""
+def test_all_queries_build_and_have_stable_schemas(built_schemas):
+    assert len(built_schemas) >= 71
+    for name, schema in built_schemas.items():
+        cols = [c.lower() for c in schema.names]
+        assert cols, name
+        assert len(cols) == len(set(cols)), f"{name}: duplicate column names"
+        # Schema must be resolvable (forces full analysis, not execution).
+        assert schema.fields, name
+
+
+def test_no_harness_hostile_output_types(built_schemas):
+    """The round-1 failure class, pinned forever: result columns must
+    never be array/map/struct typed (the harness's pandas row hash dies
+    on unhashable cells) and never TIMESTAMP columns that can carry the
+    year-9999 SCD2 sentinels (datetime64[ns] overflow in the bridge) —
+    sentinel-bearing queries must emit epoch-millis BIGINT instead."""
     from pyspark.sql import types as T
 
-    qs = all_queries()
-    assert len(qs) >= 71
     sentinel_emitters = {
         # Queries whose validity columns COULD hold 9999 sentinels; the
         # assertion below proves they emit them as integers.
@@ -34,23 +47,16 @@ def test_all_queries_build_and_have_stable_schemas(spark, sf_dir):
             "row_valid_expiration_ms",
         },
     }
-    for name, q in sorted(qs.items()):
-        df = q.fn(spark, sf_dir)
-        cols = [c.lower() for c in df.columns]
-        assert cols, name
-        assert len(cols) == len(set(cols)), f"{name}: duplicate column names"
-        # Schema must be resolvable (forces full analysis, not execution).
-        fields = df.schema.fields
-        assert fields, name
-        for f in fields:
+    for name, schema in built_schemas.items():
+        for f in schema.fields:
             assert not isinstance(
                 f.dataType, (T.ArrayType, T.MapType, T.StructType)
             ), f"{name}.{f.name}: complex type {f.dataType.simpleString()}"
         if name in sentinel_emitters:
-            got = {f.name for f in fields}
+            got = {f.name for f in schema.fields}
             missing = sentinel_emitters[name] - got
             assert not missing, f"{name}: sentinel columns not ms-bridged: {missing}"
-            for f in fields:
+            for f in schema.fields:
                 if f.name in sentinel_emitters[name]:
                     assert isinstance(f.dataType, T.LongType), (
                         f"{name}.{f.name} must be epoch-ms BIGINT"
