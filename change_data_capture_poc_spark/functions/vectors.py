@@ -77,6 +77,21 @@ def collect_centroids(ed, k: int, id_col: str = "vec_id",
     )
 
 
+def rounded_l2_sql(vec_sql: str, lits: list[float]) -> str:
+    """Squared L2 distance from an array<double> SQL expression to a
+    literal vector, 1e-6-rounded with the +1e-9 pre-round epsilon — the
+    SQL text every literal-codeword argmin and lookup table is built
+    from. One SQL string instead of column objects: the column form
+    costs one py4j round-trip per literal, which dominates wall clock
+    at 8 codewords x 64 dims. ``repr`` keeps every double exact."""
+    return (
+        f"round(aggregate(zip_with({vec_sql}, array("
+        + ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in lits)
+        + "), (x, y) -> (x - y) * (x - y)), 0D, (a, b) -> a + b)"
+        + " + 1e-9, 6)"
+    )
+
+
 def centroid_argmin_expr(
     centroids: list[tuple[int, list[float]]], vec_col: str = "e"
 ) -> Column:
@@ -86,15 +101,11 @@ def centroid_argmin_expr(
     ``least`` == ORDER BY dist, cid LIMIT 1 — the same 1e-6-rounded
     distance and lowest-cid tiebreak as the DuckDB oracles'
     ROW_NUMBER, with ZERO shuffles (the corpus never crosses the
-    network to be assigned). Built as ONE SQL string: the
-    column-object form costs k*dim py4j literal round-trips, which
-    dominates wall clock at k=8, dim=64.
+    network to be assigned).
     """
     cands = ", ".join(
-        f"struct(round(aggregate(zip_with({vec_col}, array("
-        + ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in c)
-        + "), (x, y) -> (x - y) * (x - y)), 0D, (a, b) -> a + b)"
-        + f" + 1e-9, 6) AS dist, CAST({cid} AS BIGINT) AS cid)"
+        f"struct({rounded_l2_sql(vec_col, c)} AS dist, "
+        f"CAST({cid} AS BIGINT) AS cid)"
         for cid, c in centroids
     )
     return F.expr(f"least({cands})")

@@ -14,7 +14,8 @@ Modules:
                     fuzzy join, EMA)
 - ``pipeline3_q`` — corpus curation (splits, budgets, spans, rerank,
                     kmeans/PCA, evals)
-- ``pipeline4_q`` — chunking, multiprobe IVF, backoff LM, winnowing,
+- ``pipeline4_q`` — chunking, multiprobe IVF recall (index and gate
+                    from operators/ann.py), backoff LM, winnowing,
                     heavy hitters, sampling
 - ``pipeline5_q`` — CCNet perplexity pruning, IVF hard negatives,
                     tokenizer fertility
@@ -22,7 +23,8 @@ Modules:
                     Kneser-Ney, portable HLL, bottom-k sampling,
                     filter funnel, kNN graph
 - ``pipeline7_q`` — portable Count-Min sketch + Bloom-with-FPR,
-                    PQ/ADC + composed IVF-PQ recall, semantic
+                    PQ/ADC + composed IVF-PQ recall (the PQ and
+                    IVF-PQ algorithms live in operators/ann.py), semantic
                     decontamination, bitext margin mining, DoReMi
                     reweighting, iterative BPE training, MAD/CUSUM
                     robust statistics, dup-graph triangles, A-Res
@@ -35,9 +37,10 @@ Modules:
                     Welch t-test, DP noisy counts + k-anonymity audit,
                     nearest as-of + video scene segmentation (in
                     operators_q)
-- ``pipeline9_q`` — corpus-scale BPE encode, persisted IVF-PQ index
-                    build/serve split, best-fit sequence packing,
-                    CDC quarantine report
+- ``pipeline9_q`` — corpus-scale BPE encode, sampled-truth multiprobe
+                    recall gate, persisted IVF-PQ index build/serve/
+                    compact lifecycle over operators/ann.py, best-fit
+                    sequence packing, CDC quarantine report
 - ``pipeline10_q`` — content-defined chunking (map-only fold) +
                     chunk dedup reports (batch/incremental), retrieval
                     quality (nDCG@10/MRR@100), RRF hybrid fusion,

@@ -21,6 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.ann import (
+    embeddings_and_queries,
+    recall_at_k,
+    rounded_cos,
+    variant_scores,
+    variant_tag,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.windows import (
@@ -476,33 +483,7 @@ _ANN_NQ = 8
         f"zero.",
 )
 def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
-        unit_normalize,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < _ANN_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("nv").alias("qnv"),
-    )
-    from change_data_capture_poc_spark.operators.topk import (
-        variant_topk_hits,
-    )
-
-    # 1e-6 rounding before ranking (float-portability rule): the engine
-    # computes normalize-then-dot, the oracle dot/(norm*norm) — the two
-    # differ in the last ulps, and an unrounded rank can flip at the
-    # k boundary. Ties after rounding break on neighbor_id both sides.
-    # +1e-9 pre-round epsilon: repo ANN-rank convention (a cosine an
-    # ulp from a 0.5e-6 boundary must round identically on both paths).
-    cos6 = F.round(dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9), 6)
+    _, en, q = embeddings_and_queries(spark, sf_dir, _ANN_NQ, True)
     # Fused dual ranking (r14): ground truth and IVF prediction rank
     # the SAME rounded cosine over subsets of the same candidate join —
     # the IVF candidates (label == q_label) are a subset of the exact
@@ -513,25 +494,11 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         en.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            cos6.alias("cos"),
-            F.explode(
-                F.when(
-                    F.col("label") == F.col("q_label"),
-                    F.array(F.lit(0), F.lit(1)),
-                ).otherwise(F.array(F.lit(0)))
-            ).alias("variant"),
+            rounded_cos("nv", "qnv").alias("cos"),
+            variant_tag(F.col("label") == F.col("q_label")),
         )
     )
-    res = variant_topk_hits(
-        scored, _ANN_K, [("cos", False), ("neighbor_id", True)]
-    )
-    return res.select(
-        "q_id",
-        "hits",
-        F.round(F.col("hits") * 1.0 / _ANN_K + 1e-9, 6).alias(
-            f"recall_at_{_ANN_K}"
-        ),
-    )
+    return recall_at_k(scored, _ANN_K, f"recall_at_{_ANN_K}")
 
 
 # --------------------------------------------------------------------
@@ -1281,24 +1248,11 @@ _RERANK_PROBE_K = 12
         f"emitted cosine is that same rounded value.",
 )
 def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
-        unit_normalize,
-    )
     from pyspark.sql.window import Window
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("nv").alias("qnv"),
-    )
     from change_data_capture_poc_spark.operators.topk import grouped_topk
+
+    _, en, q = embeddings_and_queries(spark, sf_dir, 8, True)
 
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
@@ -1315,14 +1269,7 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            # 1e-6-rounded BEFORE ranking (float-portability rule, same
-            # as eval_ann_recall/matryoshka): unrounded cosine computed
-            # via normalize-then-dot here vs dot/norms in the oracle
-            # can flip an epsilon-close rank at the k boundary. +1e-9
-            # pre-round epsilon per the repo ANN-rank convention.
-            F.round(
-                dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9), 6
-            ).alias("cos"),
+            rounded_cos("nv", "qnv").alias("cos"),
         ),
         ["q_id"],
         [("cos", False), ("neighbor_id", True)],
@@ -1546,7 +1493,6 @@ def eval_matryoshka_trunc_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
         unit_normalize,
     )
 
@@ -1564,56 +1510,20 @@ def eval_matryoshka_trunc_recall(
         F.col("nv").alias("qnv"),
         F.col("tnv").alias("qtnv"),
     )
-    from change_data_capture_poc_spark.operators.topk import (
-        variant_topk_hits,
-    )
-
-    # bounded: query set capped at _N_QUERIES rows
-    joined = en.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-    # Ranking cosine rounded at 1e-6 — mirrors the oracle's ROUND so
-    # different float paths can't flip epsilon-close ranks (same rule
-    # as MMR/kmeans).
     # Fused dual ranking (r14): full-dim truth and truncated-dim
     # prediction rank the same candidate pairs under different cosines
     # — one variant-tagged scan evaluates both dot folds per pair in a
     # single corpus pass instead of re-running the join per ranking
     # (guide §1.2/§4).
-    vc = F.explode(
-        F.array(
-            F.struct(
-                F.lit(0).alias("variant"),
-                F.round(
-                    dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9),
-                    6,
-                ).alias("cos"),
-            ),
-            F.struct(
-                F.lit(1).alias("variant"),
-                F.round(
-                    dot_product(F.col("tnv"), F.col("qtnv"))
-                    + F.lit(1e-9),
-                    6,
-                ).alias("cos"),
-            ),
-        )
+    scored = variant_scores(
+        # bounded: query set capped at _N_QUERIES rows
+        en.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")),
+        "cos",
+        rounded_cos("nv", "qnv"),
+        rounded_cos("tnv", "qtnv"),
     )
-    scored = joined.select(
-        "q_id", F.col("vec_id").alias("neighbor_id"), vc.alias("vc")
-    ).select(
-        "q_id",
-        "neighbor_id",
-        F.col("vc.cos").alias("cos"),
-        F.col("vc.variant").alias("variant"),
-    )
-    res = variant_topk_hits(
-        scored, _ANN_K, [("cos", False), ("neighbor_id", True)]
-    )
-    return res.select(
-        "q_id",
-        "hits",
-        F.round(F.col("hits") * 1.0 / _ANN_K + 1e-9, 6).alias(
-            f"recall_trunc{_TRUNC_DIM}_at_{_ANN_K}"
-        ),
+    return recall_at_k(
+        scored, _ANN_K, f"recall_trunc{_TRUNC_DIM}_at_{_ANN_K}"
     )
 
 
@@ -1702,25 +1612,12 @@ def ann_mmr_diversified_rerank(
 
     from pyspark.sql import types as T
 
-    from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
-        unit_normalize,
-    )
+    from change_data_capture_poc_spark.functions.vectors import dot_product
     from change_data_capture_poc_spark.operators.topk import grouped_topk
 
     lam = _MMR_LAMBDA
     om = round(1 - _MMR_LAMBDA, 6)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("nv").alias("qnv"),
-    )
+    _, en, q = embeddings_and_queries(spark, sf_dir, 8, True)
     # Pool: the only corpus-touching stage. The per-query cut is
     # two-phase grouped top-k (operators/topk.py) — a window over 8
     # constant q_ids would sort every label-matched candidate in 8 hot

@@ -24,6 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.ann import (
+    CENTROID_LIST_SQL,
+    MP_K,
+    MP_NQ,
+    MP_P,
+    embeddings_and_queries,
+    label_centroids,
+    probe_labels,
+    recall_at_k,
+    rounded_cos,
+    variant_tag,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -257,29 +269,14 @@ def text_heavy_hitters_misra_gries(
     )
 
 
-_MP_K = 5   # final top-k
-_MP_P = 2   # probed partitions per query
-_MP_NQ = 8  # query set size
-
-# Width of every ``embeddings.embedding`` vector; the engine's
-# per-dimension centroid columns and the oracles' SQL lists share it.
-EMBED_DIM = 64
-
-# Per-dimension mean as an inline SQL list constructor (one avg expr
-# per dimension).
-_CENTROID_LIST = (
-    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(EMBED_DIM)) + "]"
-)
-
-
 @register(
     "ann_ivf_multiprobe_recall",
     oracle=f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                FROM embeddings),
     q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv
-          FROM e WHERE vec_id < {_MP_NQ}),
-    cent AS (SELECT label, {_CENTROID_LIST} AS c FROM e GROUP BY label),
+          FROM e WHERE vec_id < {MP_NQ}),
+    cent AS (SELECT label, {CENTROID_LIST_SQL} AS c FROM e GROUP BY label),
     probed AS (
         SELECT q_id, label FROM (
             SELECT q.q_id, cent.label,
@@ -291,7 +288,7 @@ _CENTROID_LIST = (
                            + 1e-9, 6)
                            DESC, cent.label) AS rk
             FROM q, cent
-        ) WHERE rk <= {_MP_P}
+        ) WHERE rk <= {MP_P}
     ),
     mp AS (
         SELECT q_id, neighbor_id FROM (
@@ -306,7 +303,7 @@ _CENTROID_LIST = (
             FROM e
             JOIN probed p ON e.label = p.label
             JOIN q ON q.q_id = p.q_id AND e.vec_id != q.q_id
-        ) WHERE rk <= {_MP_K}
+        ) WHERE rk <= {MP_K}
     ),
     gt AS (
         SELECT q_id, neighbor_id FROM (
@@ -319,22 +316,23 @@ _CENTROID_LIST = (
                            + 1e-9, 6)
                            DESC, e.vec_id) AS rk
             FROM e, q WHERE e.vec_id != q.q_id
-        ) WHERE rk <= {_MP_K}
+        ) WHERE rk <= {MP_K}
     )
     SELECT gt.q_id,
            CAST(COUNT(mp.neighbor_id) AS BIGINT) AS hits,
-           ROUND(COUNT(mp.neighbor_id) * 1.0 / {_MP_K} + 1e-9, 6)
-               AS recall_at_{_MP_K}
+           ROUND(COUNT(mp.neighbor_id) * 1.0 / {MP_K} + 1e-9, 6)
+               AS recall_at_{MP_K}
     FROM gt LEFT JOIN mp USING (q_id, neighbor_id)
     GROUP BY gt.q_id
     """,
-    doc=f"Multiprobe IVF recall@{_MP_K}: each query probes its TOP-"
-        f"{_MP_P} nearest centroid partitions (per-label mean vectors) "
+    doc=f"Multiprobe IVF recall@{MP_K}: each query probes its TOP-"
+        f"{MP_P} nearest centroid partitions (per-label mean vectors) "
         f"instead of only its own label — the standard recall/latency "
         f"knob that recovers neighbors living just across a partition "
         f"boundary (compare eval_ann_recall's single-probe baseline). "
-        f"Scale shape: centroids come from one posexplode aggregation "
-        f"(n x dim rows, two keyed shuffles); the query-centroid "
+        f"Scale shape: centroids come from one map-side-partial "
+        f"aggregation (|labels| x dim partial sums cross the "
+        f"exchange, operators/ann.label_centroids); the query-centroid "
         f"ranking is |queries| x |labels| through grouped_topk (never "
         f"a corpus window); candidate scoring touches only the probed "
         f"partitions via a label equi-join. All ranks on 1e-6-rounded "
@@ -343,65 +341,19 @@ _CENTROID_LIST = (
 def ann_ivf_multiprobe_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
-        unit_normalize,
-    )
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < _MP_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("nv").alias("qnv"),
-    )
-
-    # Per-label centroid: ONE map-side-partial aggregation with 64
-    # per-dimension avg columns (r14 — the shape the sampled-truth twin
-    # already uses, and the oracle's own {_CENTROID_LIST} formulation).
-    # The old posexplode -> (label, pos) mean -> regroup decomposed the
-    # vectors into n x dim scalar rows and shuffled them TWICE; here
-    # only |labels| x dim partial sums cross the exchange (guide §2.3
-    # "aggregate before you shuffle").
-    cent = e.groupBy("label").agg(
-        F.array(*[F.avg(F.col("v")[i]) for i in range(EMBED_DIM)]).alias("c")
-    )
-    cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))
-
-    # Rank labels per query on rounded query-centroid cosine; the
-    # candidate set is |queries| x |labels| (grows with index size at
-    # 100 TB -> grouped_topk, not a window).
-    probed = grouped_topk(
-        q.crossJoin(cn).select(
-            "q_id",
-            "label",
-            F.round(
-                dot_product(F.col("qnv"), F.col("cn")) + F.lit(1e-9), 6
-            ).alias("cos"),
-        ),
-        ["q_id"],
-        [("cos", False), ("label", True)],
-        _MP_P,
-    ).select("q_id", "label")
+    e, en, q = embeddings_and_queries(spark, sf_dir, MP_NQ, False)
+    probed = probe_labels(q.crossJoin(label_centroids(e)), MP_P)
 
     # Fused dual ranking (r14): the multiprobe candidates (label in the
     # query's probe list) are a subset of the exact candidate set, so
     # one variant-tagged scan feeds both top-ks — the old shape joined
     # the corpus twice and evaluated the dot fold per ranking (guide
-    # §1.2/§4). The probe list is query-set x _MP_P rows — broadcast.
-    from change_data_capture_poc_spark.operators.topk import (
-        variant_topk_hits,
-    )
-
+    # §1.2/§4). The probe list is query-set x MP_P rows — broadcast.
     scored = (
         # bounded: query set capped at _N_QUERIES rows
         en.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .join(
-            # bounded: query set x _MP_P probe rows
+            # bounded: query set x MP_P probe rows
             F.broadcast(probed.withColumn("in_mp", F.lit(1))),
             ["q_id", "label"],
             "left",
@@ -409,26 +361,11 @@ def ann_ivf_multiprobe_recall(
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9), 6
-            ).alias("cos"),
-            F.explode(
-                F.when(
-                    F.col("in_mp") == 1, F.array(F.lit(0), F.lit(1))
-                ).otherwise(F.array(F.lit(0)))
-            ).alias("variant"),
+            rounded_cos("nv", "qnv").alias("cos"),
+            variant_tag(F.col("in_mp") == 1),
         )
     )
-    res = variant_topk_hits(
-        scored, _MP_K, [("cos", False), ("neighbor_id", True)]
-    )
-    return res.select(
-        "q_id",
-        "hits",
-        F.round(F.col("hits") * 1.0 / _MP_K + 1e-9, 6).alias(
-            f"recall_at_{_MP_K}"
-        ),
-    )
+    return recall_at_k(scored, MP_K, f"recall_at_{MP_K}")
 
 
 _SB_ALPHA = 0.4  # Stupid Backoff discount (Brants et al. 2007)

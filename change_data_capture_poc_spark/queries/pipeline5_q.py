@@ -28,7 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.queries.pipeline4_q import EMBED_DIM
+from change_data_capture_poc_spark.operators.ann import (
+    CENTROID_LIST_SQL,
+    embeddings_and_queries,
+    rounded_cos,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -192,13 +196,6 @@ _HN_CEIL = 0.95  # near-dup ceiling: candidates above this are assumed
                  # false negatives (mislabeled near-duplicates) and skipped
 _HN_P = 3        # IVF probes: nearest OTHER-label partitions mined per query
 
-# Per-dimension mean as an inline SQL list constructor (one avg expr
-# per dimension) — same centroid construction as
-# ann_ivf_multiprobe_recall's oracle.
-_HN_CENTROID_LIST = (
-    "[" + ", ".join(f"avg(v[{i + 1}])" for i in range(EMBED_DIM)) + "]"
-)
-
 
 @register(
     "ann_hard_negative_mining",
@@ -207,7 +204,7 @@ _HN_CENTROID_LIST = (
                FROM embeddings),
     q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv
           FROM e WHERE vec_id < {_HN_NQ}),
-    cent AS (SELECT label, {_HN_CENTROID_LIST} AS c FROM e GROUP BY label),
+    cent AS (SELECT label, {CENTROID_LIST_SQL} AS c FROM e GROUP BY label),
     probed AS (
         SELECT q_id, label FROM (
             SELECT q.q_id, cent.label,
@@ -266,22 +263,11 @@ _HN_CENTROID_LIST = (
 )
 def ann_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
         unit_normalize,
     )
     from change_data_capture_poc_spark.operators.topk import grouped_topk
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < _HN_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("nv").alias("qnv"),
-    )
+    e, en, q = embeddings_and_queries(spark, sf_dir, _HN_NQ, True)
 
     # Per-label centroid via posexplode -> (label, pos) mean -> regroup
     # (two keyed shuffles over n x dim scalar rows; the vectors cross
@@ -308,9 +294,7 @@ def ann_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.join(F.broadcast(cn), F.col("label") != F.col("q_label")).select(
             "q_id",
             "label",
-            F.round(
-                dot_product(F.col("qnv"), F.col("cn")) + F.lit(1e-9), 6
-            ).alias("ccos"),
+            rounded_cos("qnv", "cn").alias("ccos"),
         ),
         ["q_id"],
         [("ccos", False), ("label", True)],
@@ -327,9 +311,7 @@ def ann_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
             F.col("label").alias("neighbor_label"),
-            F.round(
-                dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9), 6
-            ).alias("cos"),
+            rounded_cos("nv", "qnv").alias("cos"),
         )
         .where(F.col("cos") <= _HN_CEIL)
     )

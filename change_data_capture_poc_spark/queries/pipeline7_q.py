@@ -81,6 +81,24 @@ from pyspark.sql import functions as F
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.caching import persist_once
+from change_data_capture_poc_spark.operators.ann import (
+    IVFPQ_PROBES,
+    PQ_C,
+    PQ_K,
+    PQ_M,
+    PQ_NQ,
+    PQ_SUB,
+    ivfpq_oracle,
+    ivfpq_qprobe,
+    pq_adc_parts,
+    pq_code_cols,
+    pq_codebook,
+    pq_embeddings,
+    pq_oracle,
+    pq_queries,
+    rounded_l2,
+    variant_scores,
+)
 
 # ---------------------------------------------------------------------------
 # agg_cms_portable — cross-engine-exact Count-Min sketch
@@ -315,226 +333,28 @@ def decontaminate_semantic_embedding(
 # ann_pq_adc_recall — product quantization + asymmetric distance
 # ---------------------------------------------------------------------------
 
-_PQ_M = 4     # subspaces
-_PQ_SUB = 16  # dims per subspace (4 x 16 = the 64-dim embeddings)
-_PQ_C = 8     # codewords per subspace (= slices of vectors id < 8)
-_PQ_NQ = 8    # queries: vec_id in [8, 16)
-_PQ_K = 5     # recall@k
-
-
-def _pq_l2_duck(a: str, b: str) -> str:
-    return (
-        f"ROUND(list_reduce(list_transform(list_zip({a}, {b}), "
-        f"p -> (p[1] - p[2]) * (p[1] - p[2])), (x, y) -> x + y) "
-        f"+ 1e-9, 6)"
-    )
-
-
-def _pq_oracle() -> str:
-    m_tbl = f"(SELECT unnest(range({_PQ_M})) AS m) mm"
-    sub = f"e.v[mm.m * {_PQ_SUB} + 1 : mm.m * {_PQ_SUB} + {_PQ_SUB}]"
-    return f"""
-    WITH e AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-    ),
-    sub AS (SELECT e.vec_id, mm.m, {sub} AS s FROM e, {m_tbl}),
-    cb AS (SELECT vec_id AS cid, m, s AS cs FROM sub
-           WHERE vec_id < {_PQ_C}),
-    enc AS (
-        SELECT vec_id, m, cid AS code FROM (
-            SELECT s.vec_id, s.m, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY s.vec_id, s.m
-                       ORDER BY {_pq_l2_duck('s.s', 'c.cs')}, c.cid
-                   ) AS rn
-            FROM sub s JOIN cb c USING (m)
-        ) WHERE rn = 1
-    ),
-    lut AS (
-        SELECT s.vec_id AS q_id, s.m, c.cid,
-               {_pq_l2_duck('s.s', 'c.cs')} AS pdist
-        FROM sub s JOIN cb c USING (m)
-        WHERE s.vec_id >= {_PQ_C} AND s.vec_id < {_PQ_C + _PQ_NQ}
-    ),
-    adc AS (
-        SELECT l.q_id, en.vec_id AS neighbor_id,
-               ROUND(SUM(l.pdist) + 1e-9, 6) AS adc_dist
-        FROM enc en JOIN lut l ON en.m = l.m AND en.code = l.cid
-        WHERE en.vec_id != l.q_id
-        GROUP BY l.q_id, en.vec_id
-    ),
-    pred AS (
-        SELECT q_id, neighbor_id FROM adc
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY adc_dist, neighbor_id)
-                <= {_PQ_K}
-    ),
-    truth AS (
-        SELECT q_id, neighbor_id FROM (
-            SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_pq_l2_duck('e.v', 'q.v')}, e.vec_id
-                   ) AS rn
-            FROM e, e q
-            WHERE q.vec_id >= {_PQ_C} AND q.vec_id < {_PQ_C + _PQ_NQ}
-              AND e.vec_id != q.vec_id
-        ) WHERE rn <= {_PQ_K}
-    ),
-    hits AS (
-        SELECT t.q_id,
-               CAST(COUNT(p.neighbor_id) AS BIGINT) AS n_hits
-        FROM truth t LEFT JOIN pred p
-            ON t.q_id = p.q_id AND t.neighbor_id = p.neighbor_id
-        GROUP BY t.q_id
-    )
-    SELECT q_id, n_hits,
-           ROUND(n_hits / {_PQ_K}.0 + 1e-9, 6) AS recall
-    FROM hits
-    """
-
-
-def _pq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-
-
-def _pq_codebook(e: DataFrame) -> list[tuple[int, list[float]]]:
-    """The _PQ_C codeword source vectors — bounded collect.
-
-    cids must be EXACTLY 0.._PQ_C-1: the oracle ties break on the raw
-    cid and _pq_adc_parts indexes its flat literal LUT by
-    ``(q_idx*M + m)*C + code``, which is only a position when the ids
-    are contiguous from 0. A dataset missing any of the first _PQ_C
-    vec_ids would otherwise surface as an opaque KeyError at
-    plan-build — fail with the actual gap instead."""
-    cb = sorted(
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in e.where(F.col("vec_id") < _PQ_C).collect()
-    )
-    got = [cid for cid, _ in cb]
-    if got != list(range(_PQ_C)):
-        raise ValueError(
-            f"PQ codebook needs contiguous vec_ids 0..{_PQ_C - 1} "
-            f"(they are both the codeword ids and the LUT positions); "
-            f"embeddings table has {got}"
-        )
-    return cb
-
-
-def _pq_sub_lits(vec: list[float], m: int) -> str:
-    return ", ".join(
-        f"CAST('{x!r}' AS DOUBLE)"
-        for x in vec[m * _PQ_SUB : (m + 1) * _PQ_SUB]
-    )
-
-
-def _pq_code_cols(cb: list[tuple[int, list[float]]]) -> list[F.Column]:
-    """Map-side PQ encoding: per-subspace argmin over literal
-    codewords (zero shuffles), 1e-6-rounded dist + lowest-cid tie."""
-
-    def code_expr(m: int) -> F.Column:
-        cands = ", ".join(
-            f"struct(round(aggregate(zip_with("
-            f"slice(v, {m * _PQ_SUB + 1}, {_PQ_SUB}), "
-            f"array({_pq_sub_lits(vec, m)}), "
-            f"(x, y) -> (x - y) * (x - y)), 0D, (a, b) -> a + b) "
-            f"+ 1e-9, 6) AS dist, {cid} AS cid)"
-            for cid, vec in cb
-        )
-        return F.expr(f"least({cands}).cid")
-
-    return [code_expr(m).alias(f"code_{m}") for m in range(_PQ_M)]
-
-
-def _pq_queries(e: DataFrame) -> DataFrame:
-    return e.where(
-        (F.col("vec_id") >= _PQ_C) & (F.col("vec_id") < _PQ_C + _PQ_NQ)
-    )
-
-
-def _pq_adc_parts(
-    qe: DataFrame, cb: list[tuple[int, list[float]]]
-) -> tuple[DataFrame, F.Column]:
-    """(q_meta frame, ADC distance column) for scoring coded vectors.
-
-    The LUT is computed IN-ENGINE (query-subvector x codeword
-    distances, same rounded arithmetic as encoding), then collected —
-    bounded at NQ*M*C rows by construction — and folded back in as a
-    literal array indexed by (q_idx, m, code)."""
-    lut_parts = []
-    for m in range(_PQ_M):
-        for cid, vec in cb:
-            lut_parts.append(
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.lit(cid).alias("cid"),
-                    F.expr(
-                        f"round(aggregate(zip_with("
-                        f"slice(v, {m * _PQ_SUB + 1}, {_PQ_SUB}), "
-                        f"array({_pq_sub_lits(vec, m)}), "
-                        f"(x, y) -> (x - y) * (x - y)), "
-                        f"0D, (a, b) -> a + b) + 1e-9, 6)"
-                    ).alias("pdist"),
-                )
-            )
-    lut_rows = (
-        qe.select("vec_id", F.explode(F.array(*lut_parts)).alias("p"))
-        .select("vec_id", "p.m", "p.cid", "p.pdist")
-        .collect()
-    )
-    lut = {(int(r["vec_id"]), int(r["m"]), int(r["cid"])): float(r["pdist"])
-           for r in lut_rows}
-    q_ids = sorted({k[0] for k in lut})
-    flat = [
-        lut[(q, m, c)]
-        for q in q_ids
-        for m in range(_PQ_M)
-        for c in range(_PQ_C)
-    ]
-    lut_sql = "array(" + ", ".join(
-        f"CAST('{x!r}' AS DOUBLE)" for x in flat
-    ) + ")"
-    q_meta = qe.sparkSession.createDataFrame(
-        [(q, i) for i, q in enumerate(q_ids)], "q_id bigint, q_idx int"
-    )
-    adc = F.expr(
-        "round("
-        + " + ".join(
-            f"element_at({lut_sql}, (q_idx * {_PQ_M} + {m}) * {_PQ_C} "
-            f"+ code_{m} + 1)"
-            for m in range(_PQ_M)
-        )
-        + " + 1e-9, 6)"
-    )
-    return q_meta, adc
-
-
 @register(
     "ann_pq_adc_recall",
-    oracle=_pq_oracle(),
+    oracle=pq_oracle(),
     doc=f"Product Quantization with asymmetric distance (Jegou et al. "
         f"2011 — the FAISS IVF-PQ scale path): each vector is encoded "
-        f"as {_PQ_M} small codes (argmin over {_PQ_C} codewords per "
-        f"{_PQ_SUB}-dim subspace, codewords = slices of the first "
-        f"{_PQ_C} vectors), a query scores ANY candidate via a "
-        f"{_PQ_M}x{_PQ_C} lookup table of precomputed subspace "
-        f"distances, and recall@{_PQ_K} is measured against exact "
+        f"as {PQ_M} small codes (argmin over {PQ_C} codewords per "
+        f"{PQ_SUB}-dim subspace, codewords = slices of the first "
+        f"{PQ_C} vectors), a query scores ANY candidate via a "
+        f"{PQ_M}x{PQ_C} lookup table of precomputed subspace "
+        f"distances, and recall@{PQ_K} is measured against exact "
         f"full-dim L2 truth — the compression-vs-recall readout run "
         f"before shipping a PQ index. Scale shape: encoding is "
         f"MAP-SIDE argmin over literal codewords (zero shuffles — the "
-        f"corpus crosses the network as {_PQ_M} bytes of codes, the "
-        f"whole point of PQ: 64 doubles -> {_PQ_M} codes is a 128x "
+        f"corpus crosses the network as {PQ_M} bytes of codes, the "
+        f"whole point of PQ: 64 doubles -> {PQ_M} codes is a 128x "
         f"store shrink); the ADC scan looks partial distances up in a "
-        f"{_PQ_NQ * _PQ_M * _PQ_C}-entry literal LUT (collected from "
-        f"an in-engine computed {_PQ_NQ * _PQ_M * _PQ_C}-row frame, "
+        f"{PQ_NQ * PQ_M * PQ_C}-entry literal LUT (collected from "
+        f"an in-engine computed {PQ_NQ * PQ_M * PQ_C}-row frame, "
         f"the blessed bounded collect) and cuts via grouped_topk; "
         f"the exact side is the deliberate eval-gate brute force. "
         f"All partial distances are 1e-6-rounded before the "
-        f"{_PQ_M}-term ADC sum so no cross-engine float order "
+        f"{PQ_M}-term ADC sum so no cross-engine float order "
         f"survives.",
 )
 def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,10 +362,10 @@ def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         variant_topk_hits,
     )
 
-    e = _pq_embeddings(spark, sf_dir)
-    cb = _pq_codebook(e)
-    qe = _pq_queries(e)
-    q_meta, adc = _pq_adc_parts(qe, cb)
+    e = pq_embeddings(spark, sf_dir)
+    cb = pq_codebook(e)
+    qe = pq_queries(e)
+    q_meta, adc = pq_adc_parts(qe, cb)
     # Fused dual ranking (r14): ADC prediction and exact truth rank the
     # SAME candidate pairs under different distances — one corpus scan
     # computes the PQ codes map-side AND carries the raw vector, joins
@@ -556,51 +376,22 @@ def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = qe.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     # bounded: per-query PQ metadata (query-set-capped)
     qside = q_meta.join(qv, "q_id")
-    exact_dist = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), F.col("qv"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-        + F.lit(1e-9),
-        6,
-    )
-    scored = (
-        e.select("vec_id", "v", *_pq_code_cols(cb))
+    pairs = (
+        e.select("vec_id", "v", *pq_code_cols(cb))
         # bounded: per-query PQ metadata + query vector (query-set-capped)
         .crossJoin(F.broadcast(qside))
         .where(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("variant"),
-                        exact_dist.alias("dist"),
-                    ),
-                    F.struct(
-                        F.lit(1).alias("variant"), adc.alias("dist")
-                    ),
-                )
-            ).alias("vc"),
-        )
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.col("vc.dist").alias("dist"),
-            F.col("vc.variant").alias("variant"),
-        )
+    )
+    scored = variant_scores(
+        pairs, "dist", rounded_l2(F.col("v"), F.col("qv")), adc
     )
     res = variant_topk_hits(
-        scored, _PQ_K, [("dist", True), ("neighbor_id", True)]
+        scored, PQ_K, [("dist", True), ("neighbor_id", True)]
     )
     return res.select(
         "q_id",
         F.col("hits").alias("n_hits"),
-        F.round(F.col("hits") / float(_PQ_K) + F.lit(1e-9), 6).alias(
+        F.round(F.col("hits") / float(PQ_K) + F.lit(1e-9), 6).alias(
             "recall"
         ),
     )
@@ -1719,156 +1510,24 @@ def dedup_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ann_ivf_pq_recall — the composed FAISS-style IVF-PQ index
 # ---------------------------------------------------------------------------
 
-_IVFPQ_PROBES = 2  # coarse partitions probed per query
-
-
-def _ivfpq_qprobe(qe: DataFrame, cents) -> DataFrame:
-    """Probe set: top-_IVFPQ_PROBES nearest coarse centroids per query
-    — ranked over an NQ x C frame (bounded by construction). Shared by
-    the composed recall query and the round-9 serve-from-index path
-    (where ``qe`` comes from the persisted request batch)."""
-    from pyspark.sql import Window
-
-    cand_structs = ", ".join(
-        f"struct(round(aggregate(zip_with(v, array("
-        + ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in cv)
-        + "), (x, y) -> (x - y) * (x - y)), 0D, (a, b) -> a + b)"
-        + f" + 1e-9, 6) AS dist, CAST({ccid} AS BIGINT) AS ccid)"
-        for ccid, cv in cents
-    )
-    wq = Window.partitionBy("q_id").orderBy("dist", "ccid")
-    return (
-        qe.select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(F.expr(f"array({cand_structs})")).alias("dc"),
-        )
-        .select("q_id", F.col("dc.dist").alias("dist"),
-                F.col("dc.ccid").alias("ccid"))
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= _IVFPQ_PROBES)
-        .select("q_id", "ccid")
-    )
-
-
-def _ivfpq_cte() -> str:
-    """Shared WITH-prefix through the ADC scores — reused by the
-    composed recall oracle (tail: pred/truth/hits) and the round-9
-    index build/serve oracles (tails: the persisted code table / the
-    ranked serving answer)."""
-    m_tbl = f"(SELECT unnest(range({_PQ_M})) AS m) mm"
-    sub = f"e.v[mm.m * {_PQ_SUB} + 1 : mm.m * {_PQ_SUB} + {_PQ_SUB}]"
-    cl2 = _pq_l2_duck("x.v", "c.cv")
-    return f"""
-    WITH e AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-    ),
-    sub AS (SELECT e.vec_id, mm.m, {sub} AS s FROM e, {m_tbl}),
-    cb AS (SELECT vec_id AS cid, m, s AS cs FROM sub
-           WHERE vec_id < {_PQ_C}),
-    enc AS (
-        SELECT vec_id, m, cid AS code FROM (
-            SELECT s.vec_id, s.m, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY s.vec_id, s.m
-                       ORDER BY {_pq_l2_duck('s.s', 'c.cs')}, c.cid
-                   ) AS rn
-            FROM sub s JOIN cb c USING (m)
-        ) WHERE rn = 1
-    ),
-    lut AS (
-        SELECT s.vec_id AS q_id, s.m, c.cid,
-               {_pq_l2_duck('s.s', 'c.cs')} AS pdist
-        FROM sub s JOIN cb c USING (m)
-        WHERE s.vec_id >= {_PQ_C} AND s.vec_id < {_PQ_C + _PQ_NQ}
-    ),
-    cent AS (SELECT vec_id AS ccid, v AS cv FROM e
-             WHERE vec_id < {_PQ_C}),
-    asgn AS (
-        SELECT vec_id, ccid FROM (
-            SELECT x.vec_id, c.ccid,
-                   ROW_NUMBER() OVER (PARTITION BY x.vec_id
-                                      ORDER BY {cl2}, c.ccid) AS rn
-            FROM e x, cent c
-        ) WHERE rn = 1
-    ),
-    qprobe AS (
-        SELECT q_id, ccid FROM (
-            SELECT x.vec_id AS q_id, c.ccid,
-                   ROW_NUMBER() OVER (PARTITION BY x.vec_id
-                                      ORDER BY {cl2}, c.ccid) AS rn
-            FROM e x, cent c
-            WHERE x.vec_id >= {_PQ_C} AND x.vec_id < {_PQ_C + _PQ_NQ}
-        ) WHERE rn <= {_IVFPQ_PROBES}
-    ),
-    cand AS (
-        SELECT p.q_id, a.vec_id AS neighbor_id
-        FROM qprobe p JOIN asgn a ON a.ccid = p.ccid
-        WHERE a.vec_id != p.q_id
-    ),
-    adc AS (
-        SELECT c.q_id, c.neighbor_id,
-               ROUND(SUM(l.pdist) + 1e-9, 6) AS adc_dist
-        FROM cand c
-        JOIN enc en ON en.vec_id = c.neighbor_id
-        JOIN lut l ON l.q_id = c.q_id AND en.m = l.m AND en.code = l.cid
-        GROUP BY c.q_id, c.neighbor_id
-    )"""
-
-
-def _ivfpq_oracle() -> str:
-    return _ivfpq_cte() + f""",
-    nc AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_candidates
-           FROM cand GROUP BY q_id),
-    pred AS (
-        SELECT q_id, neighbor_id FROM adc
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id
-                                   ORDER BY adc_dist, neighbor_id)
-                <= {_PQ_K}
-    ),
-    truth AS (
-        SELECT q_id, neighbor_id FROM (
-            SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_pq_l2_duck('e.v', 'q.v')}, e.vec_id
-                   ) AS rn
-            FROM e, e q
-            WHERE q.vec_id >= {_PQ_C} AND q.vec_id < {_PQ_C + _PQ_NQ}
-              AND e.vec_id != q.vec_id
-        ) WHERE rn <= {_PQ_K}
-    ),
-    hits AS (
-        SELECT t.q_id, CAST(COUNT(p.neighbor_id) AS BIGINT) AS n_hits
-        FROM truth t LEFT JOIN pred p
-            ON t.q_id = p.q_id AND t.neighbor_id = p.neighbor_id
-        GROUP BY t.q_id
-    )
-    SELECT h.q_id, nc.n_candidates, h.n_hits,
-           ROUND(h.n_hits / {_PQ_K}.0 + 1e-9, 6) AS recall
-    FROM hits h JOIN nc USING (q_id)
-    """
-
-
 @register(
     "ann_ivf_pq_recall",
-    oracle=_ivfpq_oracle(),
+    oracle=ivfpq_oracle(),
     doc=f"The COMPOSED FAISS-style IVF-PQ index (Jegou et al. 2011): "
-        f"a coarse quantizer ({_PQ_C} centroids, map-side argmin — "
+        f"a coarse quantizer ({PQ_C} centroids, map-side argmin — "
         f"the kmeans_multi_iter machinery) partitions the corpus; a "
-        f"query probes its {_IVFPQ_PROBES} nearest partitions "
+        f"query probes its {IVFPQ_PROBES} nearest partitions "
         f"(recall/latency knob, same as ann_ivf_multiprobe_recall) "
         f"and scores ONLY those candidates by PQ asymmetric distance "
         f"(the ann_pq_adc_recall machinery, non-residual codebooks "
         f"noted — FAISS's default encodes residuals for extra "
-        f"precision); recall@{_PQ_K} and candidate counts vs exact "
+        f"precision); recall@{PQ_K} and candidate counts vs exact "
         f"truth quantify the full compounding: IVF cuts candidates "
-        f"~{_PQ_C}/{_IVFPQ_PROBES}x, PQ cuts bytes-per-candidate "
-        f"128x, so the serving scan touches ~1/{_PQ_C * 64}th the "
+        f"~{PQ_C}/{IVFPQ_PROBES}x, PQ cuts bytes-per-candidate "
+        f"128x, so the serving scan touches ~1/{PQ_C * 64}th the "
         f"data of brute force. Scale shape: assignment and encoding "
         f"are both map-side literal argmins (zero shuffles); the "
-        f"probe join broadcasts {_PQ_NQ * _IVFPQ_PROBES} (q_id, "
+        f"probe join broadcasts {PQ_NQ * IVFPQ_PROBES} (q_id, "
         f"partition) rows; ADC reads the literal LUT; all cuts via "
         f"grouped_topk.",
 )
@@ -1880,16 +1539,16 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         variant_topk_hits,
     )
 
-    e = _pq_embeddings(spark, sf_dir)
-    cb = _pq_codebook(e)
+    e = pq_embeddings(spark, sf_dir)
+    cb = pq_codebook(e)
     # The coarse centroids ARE the codeword source vectors (vec_id <
-    # _PQ_C) — reuse the collected codebook instead of a second
+    # PQ_C) — reuse the collected codebook instead of a second
     # driver collect job over the same rows.
     cents = cb
 
-    qe = _pq_queries(e)
-    qprobe = _ivfpq_qprobe(qe, cents)
-    q_meta, adc = _pq_adc_parts(qe, cb)
+    qe = pq_queries(e)
+    qprobe = ivfpq_qprobe(qe, cents)
+    q_meta, adc = pq_adc_parts(qe, cb)
     # Fused dual ranking (r14): the ADC prediction candidates (coarse
     # partition in the query's probe list) are a subset of the exact
     # truth's all-pairs candidates — one corpus scan computes the
@@ -1903,24 +1562,13 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = qe.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     # bounded: per-query PQ metadata + query vector (query-set-capped)
     qside = q_meta.join(qv, "q_id")
-    exact_dist = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), F.col("qv"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-        + F.lit(1e-9),
-        6,
-    )
     coded = e.select(
         "vec_id",
         "v",
         centroid_argmin_expr(cents, "v").getField("cid").alias("ccid"),
-        *_pq_code_cols(cb),
+        *pq_code_cols(cb),
     )
-    scored = (
+    pairs = (
         # bounded: per-query PQ metadata + query vector (query-set-capped)
         coded.crossJoin(F.broadcast(qside))
         .where(F.col("vec_id") != F.col("q_id"))
@@ -1930,40 +1578,16 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["q_id", "ccid"],
             "left",
         )
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.explode(
-                F.when(
-                    F.col("in_pred") == 1,
-                    F.array(
-                        F.struct(
-                            F.lit(0).alias("variant"),
-                            exact_dist.alias("dist"),
-                        ),
-                        F.struct(
-                            F.lit(1).alias("variant"), adc.alias("dist")
-                        ),
-                    ),
-                ).otherwise(
-                    F.array(
-                        F.struct(
-                            F.lit(0).alias("variant"),
-                            exact_dist.alias("dist"),
-                        )
-                    )
-                )
-            ).alias("vc"),
-        )
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.col("vc.dist").alias("dist"),
-            F.col("vc.variant").alias("variant"),
-        )
+    )
+    scored = variant_scores(
+        pairs,
+        "dist",
+        rounded_l2(F.col("v"), F.col("qv")),
+        adc,
+        F.col("in_pred") == 1,
     )
     res = variant_topk_hits(
-        scored, _PQ_K, [("dist", True), ("neighbor_id", True)]
+        scored, PQ_K, [("dist", True), ("neighbor_id", True)]
     )
 
     # Candidate counts without replaying the candidate join: the count
@@ -1999,7 +1623,7 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_id",
         "n_candidates",
         F.col("hits").alias("n_hits"),
-        F.round(F.col("hits") / float(_PQ_K) + F.lit(1e-9), 6).alias(
+        F.round(F.col("hits") / float(PQ_K) + F.lit(1e-9), 6).alias(
             "recall"
         ),
     )

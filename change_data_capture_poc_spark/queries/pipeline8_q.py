@@ -33,6 +33,16 @@ from pyspark.sql import functions as F
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.caching import persist_once
+from change_data_capture_poc_spark.operators.ann import (
+    SAMPLE_MOD,
+    SAMPLE_Z,
+    embeddings_and_queries,
+    rounded_cos,
+    sample_pred_duck,
+    sample_pred_spark,
+    sampled_recall,
+    variant_tag,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -277,32 +287,6 @@ def agg_histogram_quantile_portable(
 
 _AST_K = 5    # recall@k (matches eval_ann_recall's _ANN_K)
 _AST_NQ = 8   # query set (vec_id < 8, the repo's bounded query ids)
-_AST_MOD = 2  # keep vec_ids whose md5 prefix is even -> ~50% sample
-_AST_Z = 1.96  # 95% normal-approx CI
-
-
-def _ast_hash_pred_duck(col: str) -> str:
-    return (
-        f"('0x' || substring(md5(CAST({col} AS VARCHAR)), 1, 8))"
-        f"::BIGINT % {_AST_MOD} = 0"
-    )
-
-
-def _ast_hash_pred_spark(col: str) -> F.Column:
-    """Spark twin of ``_ast_hash_pred_duck`` — the consistent md5
-    bottom-sample predicate (shared with the round-9 multiprobe gate
-    so both gates sample the identical truth pool)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.col(col).cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _AST_MOD
-        == 0
-    )
 
 
 @register(
@@ -313,7 +297,7 @@ def _ast_hash_pred_spark(col: str) -> F.Column:
     q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv
           FROM e WHERE vec_id < {_AST_NQ}),
     s AS (SELECT * FROM e
-          WHERE {_ast_hash_pred_duck('vec_id')}),
+          WHERE {sample_pred_duck('vec_id')}),
     gt AS (
         SELECT q_id, neighbor_id FROM (
             SELECT q.q_id, s.vec_id AS neighbor_id,
@@ -347,7 +331,7 @@ def _ast_hash_pred_spark(col: str) -> F.Column:
     )
     SELECT q_id, n_truth, hits,
            ROUND(hits * 1.0 / n_truth + 1e-9, 6) AS recall_sampled,
-           ROUND({_AST_Z} * sqrt((hits * 1.0 / n_truth)
+           ROUND({SAMPLE_Z} * sqrt((hits * 1.0 / n_truth)
                      * (1 - hits * 1.0 / n_truth) / n_truth)
                  + 1e-9, 6) AS ci95_halfwidth
     FROM agg
@@ -357,50 +341,26 @@ def _ast_hash_pred_spark(col: str) -> F.Column:
         f"FULL corpus per query, which at 100 TB makes the evaluation "
         f"itself the biggest job in the pipeline. Here the truth pool "
         f"is a consistent md5 bottom-sample of the corpus (~1/"
-        f"{_AST_MOD} of vectors, the same deterministic-hash device "
+        f"{SAMPLE_MOD} of vectors, the same deterministic-hash device "
         f"as corpus_bottomk_consistent_sample — NOT rand(): the "
         f"sample is reproducible across engines and runs), exact "
         f"top-{_AST_K} runs only within the sample, and the IVF "
-        f"prediction is scored against it with a {_AST_Z}-sigma "
+        f"prediction is scored against it with a {SAMPLE_Z}-sigma "
         f"normal-approx CI half-width quantifying what sampling cost "
         f"in confidence (sqrt is IEEE correctly-rounded, so the CI is "
         f"cross-engine exact). tests/test_pipeline8.py pins that "
         f"sampled and exact recall agree at test scale — the "
         f"calibration that licenses the cheap gate. Scale shape: the "
         f"sample predicate is map-side; the truth scan touches "
-        f"1/{_AST_MOD} of the corpus (tune the modulus to budget); "
+        f"1/{SAMPLE_MOD} of the corpus (tune the modulus to budget); "
         f"cuts via grouped_topk, comparison join {_AST_NQ}x{_AST_K} "
         f"rows.",
 )
 def eval_ann_recall_sampled_truth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
-        unit_normalize,
-    )
-    from change_data_capture_poc_spark.operators.topk import (
-        variant_topk_hits,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < _AST_NQ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("nv").alias("qnv"),
-    )
-    s = en.where(_ast_hash_pred_spark("vec_id"))
-
-    cos6 = F.round(
-        dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9), 6
-    )
+    _, en, q = embeddings_and_queries(spark, sf_dir, _AST_NQ, True)
+    s = en.where(sample_pred_spark("vec_id"))
     # Fused dual ranking (r14): within the sampled pool the IVF
     # candidates (label == q_label) are a subset of the exact
     # candidates — one variant-tagged scan feeds both top-ks instead of
@@ -410,33 +370,11 @@ def eval_ann_recall_sampled_truth(
         s.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            cos6.alias("cos"),
-            F.explode(
-                F.when(
-                    F.col("label") == F.col("q_label"),
-                    F.array(F.lit(0), F.lit(1)),
-                ).otherwise(F.array(F.lit(0)))
-            ).alias("variant"),
+            rounded_cos("nv", "qnv").alias("cos"),
+            variant_tag(F.col("label") == F.col("q_label")),
         )
     )
-    p = F.col("hits") * 1.0 / F.col("n_truth")
-    return (
-        variant_topk_hits(
-            scored, _AST_K, [("cos", False), ("neighbor_id", True)]
-        )
-        .select(
-            "q_id",
-            "n_truth",
-            "hits",
-            F.round(p + F.lit(1e-9), 6).alias("recall_sampled"),
-            F.round(
-                F.lit(_AST_Z)
-                * F.sqrt(p * (1 - p) / F.col("n_truth"))
-                + F.lit(1e-9),
-                6,
-            ).alias("ci95_halfwidth"),
-        )
-    )
+    return sampled_recall(scored, _AST_K)
 
 
 # ---------------------------------------------------------------------------

@@ -60,6 +60,32 @@ from pyspark.sql import functions as F
 from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
+from change_data_capture_poc_spark.operators.ann import (
+    CENTROID_LIST_SQL,
+    IVFPQ_PROBES,
+    MP_K,
+    MP_NQ,
+    MP_P,
+    PQ_C,
+    PQ_K,
+    PQ_M,
+    SAMPLE_Z,
+    embeddings_and_queries,
+    ivfpq_cte,
+    ivfpq_qprobe,
+    label_centroids,
+    pq_adc_parts,
+    pq_code_cols,
+    pq_codebook,
+    pq_embeddings,
+    pq_queries,
+    probe_labels,
+    rounded_cos,
+    sample_pred_duck,
+    sample_pred_spark,
+    sampled_recall,
+    variant_tag,
+)
 from change_data_capture_poc_spark.queries.pipeline7_q import (
     _BPE_ROUNDS,
     _bpe_rounds_cte,
@@ -163,29 +189,15 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ann_multiprobe_recall_sampled_truth — the multiprobe gate that scales
 # ---------------------------------------------------------------------------
 
-from change_data_capture_poc_spark.queries.pipeline4_q import (  # noqa: E402
-    EMBED_DIM,
-    _CENTROID_LIST,
-    _MP_K,
-    _MP_NQ,
-    _MP_P,
-)
-from change_data_capture_poc_spark.queries.pipeline8_q import (  # noqa: E402
-    _AST_Z,
-    _ast_hash_pred_duck,
-    _ast_hash_pred_spark,
-)
-
-
 @register(
     "ann_multiprobe_recall_sampled_truth",
     oracle=f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                FROM embeddings),
     q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv
-          FROM e WHERE vec_id < {_MP_NQ}),
-    cent AS (SELECT label, {_CENTROID_LIST} AS c FROM e GROUP BY label),
-    s AS (SELECT * FROM e WHERE {_ast_hash_pred_duck('vec_id')}),
+          FROM e WHERE vec_id < {MP_NQ}),
+    cent AS (SELECT label, {CENTROID_LIST_SQL} AS c FROM e GROUP BY label),
+    s AS (SELECT * FROM e WHERE {sample_pred_duck('vec_id')}),
     probed AS (
         SELECT q_id, label FROM (
             SELECT q.q_id, cent.label,
@@ -197,7 +209,7 @@ from change_data_capture_poc_spark.queries.pipeline8_q import (  # noqa: E402
                            + 1e-9, 6)
                            DESC, cent.label) AS rk
             FROM q, cent
-        ) WHERE rk <= {_MP_P}
+        ) WHERE rk <= {MP_P}
     ),
     mp AS (
         SELECT q_id, neighbor_id FROM (
@@ -212,7 +224,7 @@ from change_data_capture_poc_spark.queries.pipeline8_q import (  # noqa: E402
             FROM s
             JOIN probed p ON s.label = p.label
             JOIN q ON q.q_id = p.q_id AND s.vec_id != q.q_id
-        ) WHERE rk <= {_MP_K}
+        ) WHERE rk <= {MP_K}
     ),
     gt AS (
         SELECT q_id, neighbor_id FROM (
@@ -225,7 +237,7 @@ from change_data_capture_poc_spark.queries.pipeline8_q import (  # noqa: E402
                            + 1e-9, 6)
                            DESC, s.vec_id) AS rk
             FROM s, q WHERE s.vec_id != q.q_id
-        ) WHERE rk <= {_MP_K}
+        ) WHERE rk <= {MP_K}
     ),
     agg AS (
         SELECT gt.q_id,
@@ -236,12 +248,12 @@ from change_data_capture_poc_spark.queries.pipeline8_q import (  # noqa: E402
     )
     SELECT q_id, n_truth, hits,
            ROUND(hits * 1.0 / n_truth + 1e-9, 6) AS recall_sampled,
-           ROUND({_AST_Z} * sqrt((hits * 1.0 / n_truth)
+           ROUND({SAMPLE_Z} * sqrt((hits * 1.0 / n_truth)
                      * (1 - hits * 1.0 / n_truth) / n_truth)
                  + 1e-9, 6) AS ci95_halfwidth
     FROM agg
     """,
-    doc=f"Multiprobe IVF recall@{_MP_K} against a HASH-SAMPLED truth "
+    doc=f"Multiprobe IVF recall@{MP_K} against a HASH-SAMPLED truth "
         f"pool — closes the last near-linearity-bound row in "
         f"SCALING.md: ann_ivf_multiprobe_recall's exact side "
         f"brute-forces the full corpus per query (8x probe 6.9, the "
@@ -249,79 +261,36 @@ from change_data_capture_poc_spark.queries.pipeline8_q import (  # noqa: E402
         f"index. Same device as eval_ann_recall_sampled_truth: truth "
         f"pool = consistent md5 bottom-sample of the corpus (NOT "
         f"rand() — reproducible across engines and runs), exact "
-        f"top-{_MP_K} only within the sample, multiprobe prediction "
-        f"(top-{_MP_P} centroid partitions, centroids still from the "
+        f"top-{MP_K} only within the sample, multiprobe prediction "
+        f"(top-{MP_P} centroid partitions, centroids still from the "
         f"FULL corpus — one linear pass, they are the index, not the "
         f"bottleneck) scored against it inside the same pool, with "
-        f"the {_AST_Z}-sigma binomial CI pricing the sampling. Scale "
+        f"the {SAMPLE_Z}-sigma binomial CI pricing the sampling. Scale "
         f"shape: sample predicate map-side; all cuts via grouped_topk;"
         f" the only corpus-sized work is the linear centroid pass.",
 )
 def ann_multiprobe_recall_sampled_truth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.functions.vectors import (
-        dot_product,
-        unit_normalize,
-    )
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
+    e, en, q = embeddings_and_queries(spark, sf_dir, MP_NQ, False)
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    en = e.select(
-        "vec_id", "label", unit_normalize(F.col("v")).alias("nv")
-    )
-    q = en.where(F.col("vec_id") < _MP_NQ).select(
-        F.col("vec_id").alias("q_id"), F.col("nv").alias("qnv")
-    )
-
-    # Index side: per-label centroids over the FULL corpus — one
-    # map-side-partial shuffle (64 per-dimension avg columns, the
-    # oracle's own formulation) instead of the posexplode regroup
-    # (n x 64 rows, two shuffles): the centroid pass is this gate's
-    # only corpus-sized job, so its constant sets the 8x ratio.
-    cent = e.groupBy("label").agg(
-        F.array(
-            *[F.avg(F.col("v")[i]) for i in range(EMBED_DIM)]
-        ).alias("c")
-    )
-    cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))
-    probed = grouped_topk(
-        q.crossJoin(cn).select(
-            "q_id",
-            "label",
-            F.round(
-                dot_product(F.col("qnv"), F.col("cn")) + F.lit(1e-9), 6
-            ).alias("cos"),
-        ),
-        ["q_id"],
-        [("cos", False), ("label", True)],
-        _MP_P,
-    ).select("q_id", "label")
+    # Index side: per-label centroids over the FULL corpus — the
+    # centroid pass is this gate's only corpus-sized job, so its
+    # constant sets the 8x ratio.
+    probed = probe_labels(q.crossJoin(label_centroids(e)), MP_P)
 
     # Eval side: everything below runs inside the sampled pool.
-    s = en.where(_ast_hash_pred_spark("vec_id"))
-    cos6 = F.round(
-        dot_product(F.col("nv"), F.col("qnv")) + F.lit(1e-9), 6
-    )
-
-    from change_data_capture_poc_spark.operators.topk import (
-        variant_topk_hits,
-    )
-
+    s = en.where(sample_pred_spark("vec_id"))
     # Fused dual ranking (r14): the multiprobe candidates (label in the
     # query's probe list) are a subset of the pool's exact candidates —
     # one variant-tagged scan of the sampled pool feeds both top-ks
     # instead of two pool joins each re-evaluating the dot fold (guide
-    # §1.2/§4). The probe list is query-set x _MP_P rows — broadcast.
+    # §1.2/§4). The probe list is query-set x MP_P rows — broadcast.
     scored = (
         # bounded: query set capped at _N_QUERIES rows
         s.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .join(
-            # bounded: query set x _MP_P probe rows
+            # bounded: query set x MP_P probe rows
             F.broadcast(probed.withColumn("in_mp", F.lit(1))),
             ["q_id", "label"],
             "left",
@@ -329,52 +298,17 @@ def ann_multiprobe_recall_sampled_truth(
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            cos6.alias("cos"),
-            F.explode(
-                F.when(
-                    F.col("in_mp") == 1, F.array(F.lit(0), F.lit(1))
-                ).otherwise(F.array(F.lit(0)))
-            ).alias("variant"),
+            rounded_cos("nv", "qnv").alias("cos"),
+            variant_tag(F.col("in_mp") == 1),
         )
     )
-    p = F.col("hits") * 1.0 / F.col("n_truth")
-    return (
-        variant_topk_hits(
-            scored, _MP_K, [("cos", False), ("neighbor_id", True)]
-        )
-        .select(
-            "q_id",
-            "n_truth",
-            "hits",
-            F.round(p + F.lit(1e-9), 6).alias("recall_sampled"),
-            F.round(
-                F.lit(_AST_Z)
-                * F.sqrt(p * (1 - p) / F.col("n_truth"))
-                + F.lit(1e-9),
-                6,
-            ).alias("ci95_halfwidth"),
-        )
-    )
+    return sampled_recall(scored, MP_K)
 
 
 # ---------------------------------------------------------------------------
 # ann_index_build / ann_serve_from_index — the production split
 # ---------------------------------------------------------------------------
 
-from change_data_capture_poc_spark.queries.pipeline7_q import (  # noqa: E402
-    _IVFPQ_PROBES,
-    _PQ_C,
-    _PQ_K,
-    _PQ_M,
-    _PQ_NQ,
-    _ivfpq_cte,
-    _ivfpq_qprobe,
-    _pq_adc_parts,
-    _pq_code_cols,
-    _pq_codebook,
-    _pq_embeddings,
-    _pq_queries,
-)
 
 
 def _source_fingerprint(sf_dir: str, table: str) -> list[int]:
@@ -406,7 +340,7 @@ def ensure_ann_index(
     """Build the persisted IVF-PQ index iff absent (FAISS's offline
     build): writes three parquet tables under the index dir —
 
-    - ``codebook.parquet`` (cid, v): the _PQ_C codeword/centroid
+    - ``codebook.parquet`` (cid, v): the PQ_C codeword/centroid
       source vectors (they double as coarse centroids, as in
       ann_ivf_pq_recall);
     - ``codes.parquet`` (vec_id, ccid, code_0.._{M-1}): the whole
@@ -446,8 +380,8 @@ def ensure_ann_index(
         centroid_argmin_expr,
     )
 
-    e = _pq_embeddings(spark, sf_dir)
-    cb = _pq_codebook(e)
+    e = pq_embeddings(spark, sf_dir)
+    cb = pq_codebook(e)
     spark.createDataFrame(
         [(cid, vec) for cid, vec in cb], "cid int, v array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
@@ -456,9 +390,9 @@ def ensure_ann_index(
     e.select(
         "vec_id",
         centroid_argmin_expr(cb, "v").getField("cid").alias("ccid"),
-        *_pq_code_cols(cb),
+        *pq_code_cols(cb),
     ).write.mode("overwrite").parquet(os.path.join(d, "codes.parquet"))
-    _pq_queries(e).coalesce(1).write.mode("overwrite").parquet(
+    pq_queries(e).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(d, "queries.parquet")
     )
     # max_vec_id = the build's id watermark, recorded so incremental
@@ -470,23 +404,83 @@ def ensure_ann_index(
     return d
 
 
-_CODE_COLS = [f"code_{m}" for m in range(_PQ_M)]
+_CODE_COLS = [f"code_{m}" for m in range(PQ_M)]
+
+# Build + serve restated from the raw embeddings: the answer every
+# serving path must give, whatever mix of persisted and fresh codes it
+# scans.
+_SERVE_ORACLE = ivfpq_cte() + f"""
+    SELECT q_id, CAST(rn AS INT) AS rk, neighbor_id, adc_dist FROM (
+        SELECT q_id, neighbor_id, adc_dist,
+               ROW_NUMBER() OVER (PARTITION BY q_id
+                                  ORDER BY adc_dist, neighbor_id) AS rn
+        FROM adc
+    ) WHERE rn <= {PQ_K}
+    """
+
+
+def _index_codebook(spark: SparkSession, d: str) -> list[tuple[int, list[float]]]:
+    """The persisted PQ_C-row codebook — bounded collect."""
+    import os
+
+    return sorted(
+        (int(r["cid"]), [float(x) for x in r["v"]])
+        for r in spark.read.parquet(
+            os.path.join(d, "codebook.parquet")
+        ).collect()
+    )
+
+
+def _serve_top_k(
+    codes: DataFrame, qe: DataFrame, cb: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """The ranked top-PQ_K answer (q_id, rk, neighbor_id, adc_dist) of
+    request batch ``qe`` over the code table ``codes``: probe the
+    IVFPQ_PROBES nearest coarse partitions, ADC-score only their
+    codes, cut per query with grouped_topk."""
+    from pyspark.sql import Window
+
+    from change_data_capture_poc_spark.operators.topk import grouped_topk
+
+    qprobe = ivfpq_qprobe(qe, cb)
+    q_meta, adc = pq_adc_parts(qe, cb)
+    scored = (
+        # bounded: query x probe-list rows (query-set-capped)
+        codes.join(F.broadcast(qprobe), "ccid")
+        .where(F.col("vec_id") != F.col("q_id"))
+        # bounded: per-query PQ metadata (query-set-capped)
+        .join(F.broadcast(q_meta), "q_id")
+        .select(
+            "q_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc_dist")
+        )
+    )
+    top = grouped_topk(
+        scored, ["q_id"], [("adc_dist", True), ("neighbor_id", True)], PQ_K
+    )
+    # Rank the k-bounded answer (NQ x K rows) for the serving API.
+    wr = Window.partitionBy("q_id").orderBy("adc_dist", "neighbor_id")
+    return top.select(
+        "q_id",
+        F.row_number().over(wr).alias("rk"),
+        "neighbor_id",
+        "adc_dist",
+    )
 
 
 def _codes_oracle() -> str:
     """The full-corpus code table restated from raw embeddings — the
     oracle for every query whose answer IS the persisted index state
     (build, and compaction, which must reproduce it exactly)."""
-    return _ivfpq_cte() + f""",
+    return ivfpq_cte() + f""",
     pcodes AS (
         SELECT vec_id,
                {", ".join(
                    f"MAX(CASE WHEN m = {m} THEN CAST(code AS INT) END)"
-                   f" AS code_{m}" for m in range(_PQ_M))}
+                   f" AS code_{m}" for m in range(PQ_M))}
         FROM enc GROUP BY vec_id
     )
     SELECT a.vec_id, CAST(a.ccid AS BIGINT) AS ccid,
-           {", ".join(f"p.code_{m}" for m in range(_PQ_M))}
+           {", ".join(f"p.code_{m}" for m in range(PQ_M))}
     FROM asgn a JOIN pcodes p USING (vec_id)
     """
 
@@ -496,10 +490,10 @@ def _codes_oracle() -> str:
     oracle=_codes_oracle(),
     doc=f"IVF-PQ index BUILD — the offline half of the production "
         f"build/serve split (FAISS builds the index once; serving "
-        f"never re-reads raw vectors). Writes codebook ({_PQ_C} "
+        f"never re-reads raw vectors). Writes codebook ({PQ_C} "
         f"centroid/codeword vectors), the corpus code table (coarse "
-        f"assignment + {_PQ_M} PQ codes per vector — the whole index "
-        f"state, 64 doubles -> ~{_PQ_M + 1} small ints), and the "
+        f"assignment + {PQ_M} PQ codes per vector — the whole index "
+        f"state, 64 doubles -> ~{PQ_M + 1} small ints), and the "
         f"request batch, then RETURNS the code table read back FROM "
         f"DISK so the oracle certifies the persisted bytes, not the "
         f"in-flight plan. Scale shape: assignment and encoding are "
@@ -518,70 +512,31 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_serve_from_index",
-    oracle=_ivfpq_cte() + f"""
-    SELECT q_id, CAST(rn AS INT) AS rk, neighbor_id, adc_dist FROM (
-        SELECT q_id, neighbor_id, adc_dist,
-               ROW_NUMBER() OVER (PARTITION BY q_id
-                                  ORDER BY adc_dist, neighbor_id) AS rn
-        FROM adc
-    ) WHERE rn <= {_PQ_K}
-    """,
+    oracle=_SERVE_ORACLE,
     doc=f"IVF-PQ SERVE — the online half: answer the request batch "
         f"reading ONLY the persisted index tables (codebook + codes + "
         f"the request batch itself; tests/test_pipeline9.py pins that "
         f"no embeddings scan appears in the executed plan). Per "
-        f"query: probe the {_IVFPQ_PROBES} nearest coarse partitions "
-        f"(query vs the {_PQ_C}-row codebook), ADC-score only those "
+        f"query: probe the {IVFPQ_PROBES} nearest coarse partitions "
+        f"(query vs the {PQ_C}-row codebook), ADC-score only those "
         f"partitions' codes via the literal LUT, return the top-"
-        f"{_PQ_K} (q_id, rank, neighbor, distance) answer rows — "
+        f"{PQ_K} (q_id, rank, neighbor, distance) answer rows — "
         f"semantically the prediction half of ann_ivf_pq_recall, now "
         f"decoupled from the build. The oracle recomputes build+serve "
         f"from the raw embeddings, certifying the round trip through "
         f"parquet. Scale shape: the served scan reads the ~128x-"
         f"compressed code table partition-pruned by the broadcast "
-        f"probe set; the only bounded collects are the {_PQ_C}-row "
+        f"probe set; the only bounded collects are the {PQ_C}-row "
         f"codebook and the request batch LUT.",
 )
 def ann_serve_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from pyspark.sql import Window
-
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
-
     d = ensure_ann_index(spark, sf_dir)
-    cb = sorted(
-        (int(r["cid"]), [float(x) for x in r["v"]])
-        for r in spark.read.parquet(
-            os.path.join(d, "codebook.parquet")
-        ).collect()
-    )
+    cb = _index_codebook(spark, d)
     qe = spark.read.parquet(os.path.join(d, "queries.parquet"))
     codes = spark.read.parquet(os.path.join(d, "codes.parquet"))
-
-    qprobe = _ivfpq_qprobe(qe, cb)
-    q_meta, adc = _pq_adc_parts(qe, cb)
-    scored = (
-        # bounded: query x probe-list rows (query-set-capped)
-        codes.join(F.broadcast(qprobe), "ccid")
-        .where(F.col("vec_id") != F.col("q_id"))
-        # bounded: per-query PQ metadata (query-set-capped)
-        .join(F.broadcast(q_meta), "q_id")
-        .select(
-            "q_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc_dist")
-        )
-    )
-    top = grouped_topk(
-        scored, ["q_id"], [("adc_dist", True), ("neighbor_id", True)], _PQ_K
-    )
-    # Rank the k-bounded answer (NQ x K rows) for the serving API.
-    wr = Window.partitionBy("q_id").orderBy("adc_dist", "neighbor_id")
-    return top.select(
-        "q_id",
-        F.row_number().over(wr).alias("rk"),
-        "neighbor_id",
-        "adc_dist",
-    )
+    return _serve_top_k(codes, qe, cb)
 
 
 # ---------------------------------------------------------------------------
@@ -1005,16 +960,45 @@ def _delta_watermark(spark: SparkSession, sf_dir: str) -> int:
     return hi * 9 // 10
 
 
+def _merged_codes(
+    spark: SparkSession,
+    sf_dir: str,
+    d: str,
+    cb: list[tuple[int, list[float]]],
+) -> DataFrame:
+    """Persisted base codes up to the build watermark (range pushed
+    into the scan) ∪ the post-watermark delta encoded in-plan against
+    the persisted codebook ``cb`` — equal to a from-scratch build."""
+    import os
+
+    from change_data_capture_poc_spark.functions.vectors import (
+        centroid_argmin_expr,
+    )
+
+    wm = _delta_watermark(spark, sf_dir)
+    base = (
+        spark.read.parquet(os.path.join(d, "codes.parquet"))
+        .where(F.col("vec_id") <= wm)
+        .select("vec_id", "ccid", *_CODE_COLS)
+    )
+    delta = (
+        pq_embeddings(spark, sf_dir)
+        .where(F.col("vec_id") > wm)
+        .select(
+            "vec_id",
+            centroid_argmin_expr(cb, "v").getField("cid")
+            .cast("long")
+            .alias("ccid"),
+            *pq_code_cols(cb),
+        )
+        .select("vec_id", "ccid", *_CODE_COLS)
+    )
+    return base.unionByName(delta)
+
+
 @register(
     "ann_index_delta_serve",
-    oracle=_ivfpq_cte() + f"""
-    SELECT q_id, CAST(rn AS INT) AS rk, neighbor_id, adc_dist FROM (
-        SELECT q_id, neighbor_id, adc_dist,
-               ROW_NUMBER() OVER (PARTITION BY q_id
-                                  ORDER BY adc_dist, neighbor_id) AS rn
-        FROM adc
-    ) WHERE rn <= {_PQ_K}
-    """,
+    oracle=_SERVE_ORACLE,
     doc=f"IVF-PQ INCREMENTAL SERVE — answer the request batch across "
         f"the persisted index PLUS vectors inserted since the last "
         f"build (ids above the build watermark): base codes come from "
@@ -1022,7 +1006,7 @@ def _delta_watermark(spark: SparkSession, sf_dir: str) -> int:
         f"INTO the parquet scan, the delta is encoded in-plan against "
         f"the persisted codebook (map-side literal argmin, zero "
         f"shuffles, no retrain — FAISS add() semantics), and the "
-        f"union feeds the identical probe/ADC/top-{_PQ_K} tail. PQ "
+        f"union feeds the identical probe/ADC/top-{PQ_K} tail. PQ "
         f"codes are deterministic in (codebook, vector), so the "
         f"merged table equals the full build exactly — the unchanged "
         f"serve oracle certifies merge transparency end to end. "
@@ -1032,65 +1016,11 @@ def _delta_watermark(spark: SparkSession, sf_dir: str) -> int:
 def ann_index_delta_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from pyspark.sql import Window
-
-    from change_data_capture_poc_spark.functions.vectors import (
-        centroid_argmin_expr,
-    )
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
-
     d = ensure_ann_index(spark, sf_dir)
-    cb = sorted(
-        (int(r["cid"]), [float(x) for x in r["v"]])
-        for r in spark.read.parquet(
-            os.path.join(d, "codebook.parquet")
-        ).collect()
-    )
+    cb = _index_codebook(spark, d)
     qe = spark.read.parquet(os.path.join(d, "queries.parquet"))
-    wm = _delta_watermark(spark, sf_dir)
-
-    base = spark.read.parquet(os.path.join(d, "codes.parquet")).where(
-        F.col("vec_id") <= wm
-    )
-    delta = (
-        _pq_embeddings(spark, sf_dir)
-        .where(F.col("vec_id") > wm)
-        .select(
-            "vec_id",
-            centroid_argmin_expr(cb, "v").getField("cid")
-            .cast("long")
-            .alias("ccid"),
-            *_pq_code_cols(cb),
-        )
-    )
-    codes = base.select("vec_id", "ccid", *_CODE_COLS).unionByName(
-        delta.select("vec_id", "ccid", *_CODE_COLS)
-    )
-
-    qprobe = _ivfpq_qprobe(qe, cb)
-    q_meta, adc = _pq_adc_parts(qe, cb)
-    scored = (
-        # bounded: query x probe-list rows (query-set-capped)
-        codes.join(F.broadcast(qprobe), "ccid")
-        .where(F.col("vec_id") != F.col("q_id"))
-        # bounded: per-query PQ metadata (query-set-capped)
-        .join(F.broadcast(q_meta), "q_id")
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("adc_dist"),
-        )
-    )
-    top = grouped_topk(
-        scored, ["q_id"], [("adc_dist", True), ("neighbor_id", True)], _PQ_K
-    )
-    wr = Window.partitionBy("q_id").orderBy("adc_dist", "neighbor_id")
-    return top.select(
-        "q_id",
-        F.row_number().over(wr).alias("rk"),
-        "neighbor_id",
-        "adc_dist",
-    )
+    codes = _merged_codes(spark, sf_dir, d, cb)
+    return _serve_top_k(codes, qe, cb)
 
 
 # ---------------------------------------------------------------------------
@@ -1765,7 +1695,7 @@ def cdc_incremental_agg_maintenance(
         f"a new code-table generation: base codes come off the "
         f"persisted table with the watermark range PUSHED into the "
         f"scan, the delta is encoded in-plan against the persisted "
-        f"{_PQ_C}-codeword codebook (map-side argmin, no retrain), and "
+        f"{PQ_C}-codeword codebook (map-side argmin, no retrain), and "
         f"the union is written as generation 2 and read back — the "
         f"oracle (shared with ann_index_build) certifies the persisted "
         f"bytes equal a from-scratch build, because PQ encoding is "
@@ -1779,37 +1709,10 @@ def cdc_incremental_agg_maintenance(
 def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from change_data_capture_poc_spark.functions.vectors import (
-        centroid_argmin_expr,
-    )
-
     d = ensure_ann_index(spark, sf_dir)
-    wm = _delta_watermark(spark, sf_dir)
-    cb = sorted(
-        (int(r["cid"]), [float(x) for x in r["v"]])
-        for r in spark.read.parquet(
-            os.path.join(d, "codebook.parquet")
-        ).collect()
-    )
-    base = (
-        spark.read.parquet(os.path.join(d, "codes.parquet"))
-        .where(F.col("vec_id") <= wm)
-        .select("vec_id", "ccid", *_CODE_COLS)
-    )
-    delta = (
-        _pq_embeddings(spark, sf_dir)
-        .where(F.col("vec_id") > wm)
-        .select(
-            "vec_id",
-            centroid_argmin_expr(cb, "v").getField("cid")
-            .cast("long")
-            .alias("ccid"),
-            *_pq_code_cols(cb),
-        )
-        .select("vec_id", "ccid", *_CODE_COLS)
-    )
+    merged = _merged_codes(spark, sf_dir, d, _index_codebook(spark, d))
     g2 = os.path.join(d, "codes_g2.parquet")
-    base.unionByName(delta).write.mode("overwrite").parquet(g2)
+    merged.write.mode("overwrite").parquet(g2)
     return spark.read.parquet(g2).select("vec_id", "ccid", *_CODE_COLS)
 
 

@@ -92,17 +92,17 @@ def test_streaming_cms_equals_batch(spark, sf_dir):
 def test_pq_recall_bounds_and_code_range(spark, sf_dir):
     """Recall@k lies in [0, 1] with n_hits consistent; every emitted
     query appears exactly once; PQ codes stay within the codebook."""
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _PQ_K,
-        _PQ_NQ,
+    from change_data_capture_poc_spark.operators.ann import (
+        PQ_K,
+        PQ_NQ,
     )
 
     out = all_queries()["ann_pq_adc_recall"].fn(spark, sf_dir).collect()
-    assert len(out) == _PQ_NQ
-    assert len({r.q_id for r in out}) == _PQ_NQ
+    assert len(out) == PQ_NQ
+    assert len({r.q_id for r in out}) == PQ_NQ
     for r in out:
-        assert 0 <= r.n_hits <= _PQ_K
-        assert abs(r.recall - r.n_hits / _PQ_K) < 2e-6
+        assert 0 <= r.n_hits <= PQ_K
+        assert abs(r.recall - r.n_hits / PQ_K) < 2e-6
     # The synthetic embeddings cluster by label, so ADC over 4x16
     # subspaces should recover a nonzero share of true neighbors
     # overall — a PQ wired to garbage codes would sit at ~0.
@@ -113,10 +113,10 @@ def test_pq_codebook_vector_encodes_to_itself(spark, sf_dir):
     """A vector that IS codeword c in every subspace must encode to
     codes with zero subspace distance — i.e. the argmin picks a
     codeword whose subvector is identical (distance 0)."""
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _PQ_C,
-        _PQ_M,
-        _PQ_SUB,
+    from change_data_capture_poc_spark.operators.ann import (
+        PQ_C,
+        PQ_M,
+        PQ_SUB,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -124,22 +124,38 @@ def test_pq_codebook_vector_encodes_to_itself(spark, sf_dir):
     )
     cb = {
         int(r.vec_id): [float(x) for x in r.v]
-        for r in e.where(F.col("vec_id") < _PQ_C).collect()
+        for r in e.where(F.col("vec_id") < PQ_C).collect()
     }
     cands = sorted(cb.items())
     for _vid, vec in cands:
-        for m in range(_PQ_M):
-            own = vec[m * _PQ_SUB : (m + 1) * _PQ_SUB]
+        for m in range(PQ_M):
+            own = vec[m * PQ_SUB : (m + 1) * PQ_SUB]
             # distance to the argmin codeword must be 0 (its own
             # subvector, or an identical one with a lower cid)
             best = min(
                 (
-                    sum((x - y) * (x - y) for x, y in zip(own, c[m * _PQ_SUB : (m + 1) * _PQ_SUB])),
+                    sum((x - y) * (x - y) for x, y in zip(own, c[m * PQ_SUB : (m + 1) * PQ_SUB])),
                     cid,
                 )
                 for cid, c in cands
             )
             assert best[0] == 0.0
+
+
+def test_pq_codebook_rejects_id_gap(spark):
+    """The codeword ids double as LUT positions, so a table missing one
+    of vec_ids 0..PQ_C-1 must fail at codebook build, naming the gap."""
+    import pytest
+
+    from change_data_capture_poc_spark.operators.ann import PQ_C, pq_codebook
+
+    gap = 3
+    e = spark.createDataFrame(
+        [(i, [float(i)] * 4) for i in range(PQ_C + 2) if i != gap],
+        "vec_id bigint, v array<double>",
+    )
+    with pytest.raises(ValueError, match=rf"missing \[{gap}\]"):
+        pq_codebook(e)
 
 
 def test_semantic_decontamination_matches_model(spark, sf_dir):
@@ -443,19 +459,19 @@ def test_bloom_no_false_negatives_and_stream_twin(spark, sf_dir):
 def test_ivf_pq_recall_bounds(spark, sf_dir):
     """Composed IVF-PQ: one row per query, candidates strictly fewer
     than brute force, recall consistent with hits."""
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _PQ_K,
-        _PQ_NQ,
+    from change_data_capture_poc_spark.operators.ann import (
+        PQ_K,
+        PQ_NQ,
     )
 
     n_corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     out = all_queries()["ann_ivf_pq_recall"].fn(spark, sf_dir).collect()
-    assert len(out) == _PQ_NQ
-    assert len({r.q_id for r in out}) == _PQ_NQ
+    assert len(out) == PQ_NQ
+    assert len({r.q_id for r in out}) == PQ_NQ
     for r in out:
         assert 0 < r.n_candidates < n_corpus - 1
-        assert 0 <= r.n_hits <= _PQ_K
-        assert abs(r.recall - r.n_hits / _PQ_K) < 2e-6
+        assert 0 <= r.n_hits <= PQ_K
+        assert abs(r.recall - r.n_hits / PQ_K) < 2e-6
 
 
 def test_streaming_reservoir_equals_batch_sample(spark, sf_dir):

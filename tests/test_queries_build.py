@@ -114,3 +114,71 @@ def test_representative_queries_deterministic(spark, sf_dir):
         assert a == b, f"{name} not deterministic across runs"
         assert a, f"{name} returned no rows at smoke SF"
         spark.catalog.clearCache()
+
+
+# Private helpers one query module still imports from another, as
+# (module, name). This list may only shrink: a shared algorithm belongs
+# in operators/ or functions/ (as the ANN index and recall gates now
+# live in operators/ann.py), not behind another query module's
+# underscore.
+_CROSS_QUERY_PRIVATE_IMPORTS = {
+    "datapipe": {
+        "_BANDS", "_BM25_TERMS_SQL", "_JL", "_MH_HX_SQL", "_MH_MINS_SQL",
+        "_MINHASH_K", "_MINHASH_PAIRS_SQL", "_NGRAM_SQL", "_QCLS_SCORE_SQL",
+        "_QF_RULE_SQL", "_SEED_ASSIGN_SQL", "_qcls_cols", "_spark_bands",
+        "_spark_grams", "_spark_sigs",
+    },
+    "pipeline3_q": {"_md5_mod"},
+    "pipeline4_q": {"_CHUNK_ORACLE", "_MG_K"},
+    "pipeline6_q": {"_HLL_ALPHA", "_HLL_M", "_HLL_WBITS", "_SS_K"},
+    "pipeline7_q": {
+        "_BLM_H", "_BLM_K", "_BLM_M", "_BPE_ROUNDS", "_CMS_D", "_WPS_K",
+        "_blm_bit_exprs", "_blm_gram_explode", "_blm_oracle",
+        "_blm_readout", "_blm_split_grams", "_blm_split_hash",
+        "_bpe_rounds_cte", "_bpe_train_state", "_cms_bucket_sql",
+        "_wps_pri_sql", "_wps_priority",
+    },
+    "pipeline8_q": {
+        "_QSK_ORACLE_CORE", "_qsk_quantile_readout", "_qsk_register_exprs",
+    },
+    "pipeline9_q": {"_QUAR_REPORT_ORACLE", "_source_fingerprint"},
+    "pipeline10_q": {"_cdc_chunk_ctes", "_cdc_chunks", "_cdc_chunks_from"},
+    "pipeline12_q": {
+        "_URL_CANON_CTE_SQL", "_canonical_url_col", "_raw_url_col",
+    },
+}
+
+
+def test_no_new_cross_query_private_imports():
+    """Every ``from ...queries.<mod> import _name`` inside queries/ must
+    be on the allowlist above, and every allowlisted pair must still be
+    imported somewhere (drop it from the list when its last import goes)."""
+    import ast
+    import pathlib
+
+    import change_data_capture_poc_spark.queries as pkg
+
+    prefix = "change_data_capture_poc_spark.queries."
+    found = set()
+    for path in pathlib.Path(pkg.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).startswith(prefix):
+                mod = node.module[len(prefix):]
+                found |= {
+                    (mod, a.name) for a in node.names if a.name.startswith("_")
+                }
+    allowed = {
+        (mod, name)
+        for mod, names in _CROSS_QUERY_PRIVATE_IMPORTS.items()
+        for name in names
+    }
+    assert not found - allowed, (
+        f"new cross-query private imports {sorted(found - allowed)}: move "
+        f"the shared helper to operators/ or functions/ instead"
+    )
+    assert not allowed - found, (
+        f"allowlisted pairs no longer imported {sorted(allowed - found)}: "
+        f"remove them from _CROSS_QUERY_PRIVATE_IMPORTS"
+    )
