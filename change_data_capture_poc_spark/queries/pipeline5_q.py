@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from change_data_capture_poc_spark.operators.ann import (
     CENTROID_LIST_SQL,
     embeddings_and_queries,
+    label_centroids,
+    probe_labels,
     rounded_cos,
 )
 from change_data_capture_poc_spark.registry import register
@@ -252,7 +254,7 @@ _HN_P = 3        # IVF probes: nearest OTHER-label partitions mined per query
         f"production hard-negative mining runs (a full scan per "
         f"mining run does not survive 100 TB — the round-5 review's "
         f"one measured scale-killer, replaced here). Scale shape: "
-        f"centroids from one posexplode aggregation; the query-"
+        f"centroids from one map-side-partial aggregation; the query-"
         f"centroid ranking is |queries| x |labels| through "
         f"grouped_topk; candidate scoring touches ONLY the probed "
         f"partitions via a label equi-join (candidates shrink by "
@@ -262,44 +264,18 @@ _HN_P = 3        # IVF probes: nearest OTHER-label partitions mined per query
         f"tie-breaks (float-portability rule).",
 )
 def ann_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.functions.vectors import (
-        unit_normalize,
-    )
     from change_data_capture_poc_spark.operators.topk import grouped_topk
 
     e, en, q = embeddings_and_queries(spark, sf_dir, _HN_NQ, True)
-
-    # Per-label centroid via posexplode -> (label, pos) mean -> regroup
-    # (two keyed shuffles over n x dim scalar rows; the vectors cross
-    # the network once, decomposed) — shared shape with
-    # ann_ivf_multiprobe_recall (queries/pipeline4_q.py).
-    cent = (
-        e.select("label", F.posexplode("v").alias("pos", "x"))
-        .groupBy("label", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.getField("m"),
-            ).alias("c")
-        )
-    )
-    cn = cent.select("label", unit_normalize(F.col("c")).alias("cn"))
-
-    # Rank OTHER labels per query on rounded query-centroid cosine;
-    # |queries| x |labels| rows (grows with index size) -> grouped_topk.
-    probed = grouped_topk(
+    # Rank OTHER labels per query on rounded query-centroid cosine.
+    probed = probe_labels(
         # bounded: |labels| centroid rows
-        q.join(F.broadcast(cn), F.col("label") != F.col("q_label")).select(
-            "q_id",
-            "label",
-            rounded_cos("qnv", "cn").alias("ccos"),
+        q.join(
+            F.broadcast(label_centroids(e)),
+            F.col("label") != F.col("q_label"),
         ),
-        ["q_id"],
-        [("ccos", False), ("label", True)],
         _HN_P,
-    ).select("q_id", "label")
+    )
 
     # Candidates = rows of the probed partitions only (label equi-join;
     # the corpus never meets queries it wasn't probed for).
