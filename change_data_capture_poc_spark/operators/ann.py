@@ -26,8 +26,6 @@ share.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -172,7 +170,9 @@ def variant_scores(
             F.array(F.struct(F.lit(0).alias("variant"), truth.alias(metric)))
         )
     return pairs.select(
-        "q_id", F.col("vec_id").alias("neighbor_id"), F.explode(both).alias("vc")
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.explode(both).alias("vc"),
     ).select(
         "q_id",
         "neighbor_id",
@@ -257,12 +257,12 @@ def pq_l2_duck(a: str, b: str) -> str:
     )
 
 
-def rounded_l2(a: Column, b: Column) -> Column:
+def rounded_l2(a: str, b: str) -> Column:
     """Exact squared L2 distance, 1e-6-rounded (+1e-9 pre-round) — the
     truth side of the PQ gates, matching ``pq_l2_duck``."""
     return F.round(
         F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
@@ -446,7 +446,7 @@ def pq_adc_parts(
 
 
 def ivfpq_qprobe(
-    qe: DataFrame, cents: Sequence[tuple[int, list[float]]]
+    qe: DataFrame, cents: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Probe set: top-IVFPQ_PROBES nearest coarse centroids per query
     — ranked over an NQ x C frame (bounded by construction). Shared by

@@ -382,9 +382,7 @@ def ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qside))
         .where(F.col("vec_id") != F.col("q_id"))
     )
-    scored = variant_scores(
-        pairs, "dist", rounded_l2(F.col("v"), F.col("qv")), adc
-    )
+    scored = variant_scores(pairs, "dist", rounded_l2("v", "qv"), adc)
     res = variant_topk_hits(
         scored, PQ_K, [("dist", True), ("neighbor_id", True)]
     )
@@ -1582,7 +1580,7 @@ def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = variant_scores(
         pairs,
         "dist",
-        rounded_l2(F.col("v"), F.col("qv")),
+        rounded_l2("v", "qv"),
         adc,
         F.col("in_pred") == 1,
     )

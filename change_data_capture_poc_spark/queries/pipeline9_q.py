@@ -419,7 +419,9 @@ _SERVE_ORACLE = ivfpq_cte() + f"""
     """
 
 
-def _index_codebook(spark: SparkSession, d: str) -> list[tuple[int, list[float]]]:
+def _index_codebook(
+    spark: SparkSession, d: str
+) -> list[tuple[int, list[float]]]:
     """The persisted PQ_C-row codebook — bounded collect."""
     import os
 
