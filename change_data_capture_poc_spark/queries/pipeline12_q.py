@@ -36,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.sketch import (
+    BLOOM_H,
+    BLOOM_M,
+    bloom_bits,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -292,18 +297,13 @@ def _para_gh_expr() -> str:
 
 
 def _para_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _BLM_H,
-        _BLM_M,
-    )
-
-    # _blm_bit_sql bakes the salt literal per hash function; restate
+    # bloom_bit_sql bakes the salt literal per hash function; restate
     # the identical md5('h:' || gh) recipe generically over the
-    # unnested h (pipeline7_q._blm_bit_sql is the portability
+    # unnested h (operators/sketch.bloom_bit_sql is the portability
     # reference both engines already agree on).
     bit = (
         "('0x' || substring(md5(b.h || ':' || f.gh), 1, 8))::BIGINT"
-        f" % {_BLM_M}"
+        f" % {BLOOM_M}"
     )
     return f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -322,7 +322,7 @@ def _para_oracle() -> str:
     gbits AS (
         SELECT f.gh, f.fkey, {bit} AS bit
         FROM first_occ f, LATERAL (
-            SELECT unnest(range({_BLM_H})) AS h
+            SELECT unnest(range({BLOOM_H})) AS h
         ) b
         GROUP BY ALL
     ),
@@ -379,10 +379,6 @@ def _para_oracle() -> str:
         "skinny-key, all map-side-combinable.",
 )
 def dedup_bloom_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _blm_bit_exprs,
-    )
-
     d = load_table(spark, sf_dir, "documents")
     spans = (
         d.select("doc_id", F.split("text", " ").alias("w"))
@@ -397,18 +393,18 @@ def dedup_bloom_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     first_occ = spans.groupBy("gh").agg(F.min("k").alias("fkey"))
-    # Distinct bits per distinct paragraph (the _blm_readout
+    # Distinct bits per distinct paragraph (the bloom_readout
     # distinct-bit rule: colliding hash functions probe ONE bit).
     gbits = first_occ.select(
         "gh",
         "fkey",
         F.explode(
-            F.array_distinct(F.array(*_blm_bit_exprs()))
+            F.array_distinct(F.array(*bloom_bits()))
         ).alias("bit"),
     )
     bit_min = gbits.groupBy("bit").agg(F.min("fkey").alias("bmin"))
     fp = (
-        # bounded: Bloom bit table capped at _BLM_M rows
+        # bounded: Bloom bit table capped at BLOOM_M rows
         gbits.join(F.broadcast(bit_min), "bit")
         .groupBy("gh", "fkey")
         .agg(

@@ -35,20 +35,7 @@ from change_data_capture_poc_spark.functions.windows import (
     global_window,
 )
 from change_data_capture_poc_spark.functions.caching import persist_once
-
-
-def _md5_mod(col, mod: int):
-    """First 8 hex digits of md5(col-as-string) as an integer in
-    [0, mod) — the engine side of DuckDB's
-    ``('0x' || substring(md5(x), 1, 8))::BIGINT % mod``."""
-    return (
-        F.conv(
-            F.substring(F.md5(col.cast("string").cast("binary")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % mod
-    )
+from change_data_capture_poc_spark.functions.hashing import md5_mod
 
 
 # --------------------------------------------------------------------
@@ -90,7 +77,7 @@ def split_assignment(doc_id):
     datacard rows) instead of joining the corpus-sized registered
     plan back on doc_id (r13: each such join replayed a corpus
     scan)."""
-    h = _md5_mod(doc_id, 100)
+    h = md5_mod(doc_id, 100)
     return (
         F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
         .alias("split")
@@ -133,7 +120,7 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         # bounded: |sources| rate rows
         d.join(F.broadcast(rates), "source")
-        .where(_md5_mod(F.col("doc_id"), 1000) < F.col("keep_permille"))
+        .where(md5_mod(F.col("doc_id"), 1000) < F.col("keep_permille"))
         .select("doc_id", "source", "keep_permille")
     )
 

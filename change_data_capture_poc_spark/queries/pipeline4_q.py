@@ -36,6 +36,8 @@ from change_data_capture_poc_spark.operators.ann import (
     rounded_cos,
     variant_tag,
 )
+from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.operators.sketch import MG_K
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -198,9 +200,6 @@ def corpus_chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MG_K = 64  # Misra-Gries counter budget => finds tokens with freq > N/64
-
-
 @register(
     "text_heavy_hitters_misra_gries",
     oracle=f"""
@@ -211,16 +210,16 @@ _MG_K = 64  # Misra-Gries counter budget => finds tokens with freq > N/64
     SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM toks, n
     GROUP BY tok, n.n
-    HAVING COUNT(*) > n.n / {_MG_K}
+    HAVING COUNT(*) > n.n / {MG_K}
     """,
-    doc=f"Exact heavy hitters (tokens with frequency > N/{_MG_K}) via "
+    doc=f"Exact heavy hitters (tokens with frequency > N/{MG_K}) via "
         f"the two-pass sketch pattern: phase 1 folds each partition "
-        f"through a {_MG_K}-counter Misra-Gries summary (Arrow "
+        f"through a {MG_K}-counter Misra-Gries summary (Arrow "
         f"mapInPandas, bounded state, zero shuffle) whose survivors "
         f"are a GUARANTEED superset of the true heavy hitters "
         f"(pigeonhole: a token over-threshold globally is "
         f"over-threshold in some partition); phase 2 rescans with an "
-        f"exact count restricted to the <= {_MG_K} x partitions "
+        f"exact count restricted to the <= {MG_K} x partitions "
         f"candidates (broadcast semi-join) and applies the threshold "
         f"on exact counts. Output is therefore EXACT and "
         f"partitioning-independent — the oracle is the plain "
@@ -243,7 +242,7 @@ def text_heavy_hitters_misra_gries(
             for tok in pdf["tok"]:
                 if tok in counters:
                     counters[tok] += 1
-                elif len(counters) < _MG_K:
+                elif len(counters) < MG_K:
                     counters[tok] = 1
                 else:
                     dead = []
@@ -264,7 +263,7 @@ def text_heavy_hitters_misra_gries(
     return (
         # bounded: 1-row corpus count
         exact.crossJoin(F.broadcast(n))
-        .where(F.col("cnt") > F.col("n") / _MG_K)
+        .where(F.col("cnt") > F.col("n") / MG_K)
         .select("tok", "cnt")
     )
 
@@ -434,10 +433,8 @@ _SB_ALPHA = 0.4  # Stupid Backoff discount (Brants et al. 2007)
         f"broadcast); only the 1-row (T, V) aggregate broadcasts.",
 )
 def text_stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline3_q import _md5_mod
-
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", _md5_mod(F.col("doc_id"), 100).alias("h")
+        "doc_id", "text", md5_mod(F.col("doc_id"), 100).alias("h")
     )
 
     def bigrams(df):

@@ -46,15 +46,17 @@ from pyspark.sql import functions as F
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.caching import persist_once
+from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.operators import sketch
+from change_data_capture_poc_spark.operators.sketch import (
+    HLL_ALPHA,
+    HLL_M,
+    HLL_WBITS,
+)
 
 # ---------------------------------------------------------------------------
 # dedup_substring_suffix_runs
 # ---------------------------------------------------------------------------
-
-_SS_K = 8  # minimum duplicated-substring length in tokens (Lee et al.
-           # use 50 BPE tokens; the synthetic corpus's ~40-word
-           # vocabulary needs a shorter window for real collisions)
-
 
 @register(
     "dedup_substring_suffix_runs",
@@ -62,12 +64,12 @@ _SS_K = 8  # minimum duplicated-substring length in tokens (Lee et al.
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     g AS (
         SELECT doc_id, s.pos,
-               md5(array_to_string(w[s.pos + 1 : s.pos + {_SS_K}], ' '))
+               md5(array_to_string(w[s.pos + 1 : s.pos + {sketch.SPAN_K}], ' '))
                    AS gh
         FROM t, LATERAL (
-            SELECT unnest(range(len(w) - {_SS_K} + 1)) AS pos
+            SELECT unnest(range(len(w) - {sketch.SPAN_K} + 1)) AS pos
         ) s
-        WHERE len(w) >= {_SS_K}
+        WHERE len(w) >= {sketch.SPAN_K}
     ),
     dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) > 1),
     d AS (SELECT g.doc_id, g.pos FROM g JOIN dup USING (gh)),
@@ -90,18 +92,18 @@ _SS_K = 8  # minimum duplicated-substring length in tokens (Lee et al.
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_dup_runs,
-           CAST(SUM(p1 - p0 + {_SS_K}) AS BIGINT) AS dup_tokens,
-           CAST(MAX(p1 - p0 + {_SS_K}) AS BIGINT) AS max_run_tokens
+           CAST(SUM(p1 - p0 + {sketch.SPAN_K}) AS BIGINT) AS dup_tokens,
+           CAST(MAX(p1 - p0 + {sketch.SPAN_K}) AS BIGINT) AS max_run_tokens
     FROM agg GROUP BY doc_id
     """,
     doc=f"Exact-substring dedup semantics (Lee et al. 2022's "
-        f"ExactSubstr): every OVERLAPPING {_SS_K}-token window "
+        f"ExactSubstr): every OVERLAPPING {sketch.SPAN_K}-token window "
         f"(suffix-gram, stride 1) that occurs more than once anywhere "
         f"in the corpus marks its start position as duplicated; "
         f"consecutive duplicated positions in a document merge into "
         f"maximal runs (gaps-and-islands), so a duplicated substring "
-        f"of any length >= {_SS_K} is reported ONCE with its true "
-        f"token extent (run span + {_SS_K} - 1) — the suffix-array "
+        f"of any length >= {sketch.SPAN_K} is reported ONCE with its true "
+        f"token extent (run span + {sketch.SPAN_K} - 1) — the suffix-array "
         f"result re-expressed relationally. Per-doc readout: run "
         f"count, duplicated-token total, longest duplicated "
         f"substring. Scale shape: gram TEXT never travels — the "
@@ -118,15 +120,15 @@ def dedup_substring_suffix_runs(
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("w")).where(
-        F.size("w") >= _SS_K
+        F.size("w") >= sketch.SPAN_K
     )
     # Overlapping K-grams, hashed in the map stage: (doc_id, pos, gh).
     grams = toks.select(
         "doc_id",
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, size(w) - {_SS_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {_SS_K}), ' ')))"
+                f"transform(sequence(0, size(w) - {sketch.SPAN_K}),"
+                f"  p -> md5(array_join(slice(w, p + 1, {sketch.SPAN_K}), ' ')))"
             )
         ).alias("pos", "gh"),
     )
@@ -161,10 +163,10 @@ def dedup_substring_suffix_runs(
     )
     return agg.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_dup_runs"),
-        F.sum(F.col("p1") - F.col("p0") + _SS_K)
+        F.sum(F.col("p1") - F.col("p0") + sketch.SPAN_K)
         .cast("long")
         .alias("dup_tokens"),
-        F.max(F.col("p1") - F.col("p0") + _SS_K)
+        F.max(F.col("p1") - F.col("p0") + sketch.SPAN_K)
         .cast("long")
         .alias("max_run_tokens"),
     )
@@ -369,10 +371,8 @@ _KN_D = 0.75  # absolute discount (the standard KN default)
 def text_kneser_ney_bigram_score(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline3_q import _md5_mod
-
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", _md5_mod(F.col("doc_id"), 100).alias("h")
+        "doc_id", "text", md5_mod(F.col("doc_id"), 100).alias("h")
     )
 
     def bigrams(df):
@@ -445,11 +445,6 @@ def text_kneser_ney_bigram_score(
 # agg_hll_portable — cross-engine-exact HyperLogLog
 # ---------------------------------------------------------------------------
 
-_HLL_M = 64          # registers (b = 6 index bits)
-_HLL_WBITS = 26      # 32-bit md5-prefix hash minus 6 index bits
-_HLL_ALPHA = 0.709   # canonical alpha_64
-
-
 @register(
     "agg_hll_portable",
     oracle=f"""
@@ -460,12 +455,12 @@ _HLL_ALPHA = 0.709   # canonical alpha_64
         FROM events WHERE user_id IS NOT NULL
     ),
     r AS (
-        SELECT event_type, hv % {_HLL_M} AS j,
-               CASE WHEN instr(lpad(bin(hv // {_HLL_M}),
-                                    {_HLL_WBITS}, '0'), '1') = 0
-                    THEN {_HLL_WBITS + 1}
-                    ELSE instr(lpad(bin(hv // {_HLL_M}),
-                                    {_HLL_WBITS}, '0'), '1') END AS rho
+        SELECT event_type, hv % {HLL_M} AS j,
+               CASE WHEN instr(lpad(bin(hv // {HLL_M}),
+                                    {HLL_WBITS}, '0'), '1') = 0
+                    THEN {HLL_WBITS + 1}
+                    ELSE instr(lpad(bin(hv // {HLL_M}),
+                                    {HLL_WBITS}, '0'), '1') END AS rho
         FROM h
     ),
     reg AS (SELECT event_type, j, MAX(rho) AS m FROM r
@@ -473,7 +468,7 @@ _HLL_ALPHA = 0.709   # canonical alpha_64
     s AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS hit,
-               SUM(CAST(1 << ({_HLL_WBITS + 1} - m) AS BIGINT)) AS isum
+               SUM(CAST(1 << ({HLL_WBITS + 1} - m) AS BIGINT)) AS isum
         FROM reg GROUP BY event_type
     ),
     ex AS (SELECT event_type,
@@ -481,17 +476,17 @@ _HLL_ALPHA = 0.709   # canonical alpha_64
            FROM events WHERE user_id IS NOT NULL GROUP BY event_type),
     est AS (
         SELECT s.event_type, s.hit,
-               CAST({_HLL_M} - s.hit AS BIGINT) AS zero_regs,
-               {_HLL_ALPHA} * {_HLL_M} * {_HLL_M}
-                   * CAST(1 << {_HLL_WBITS + 1} AS DOUBLE)
-                   / (s.isum + ({_HLL_M} - s.hit)
-                      * CAST(1 << {_HLL_WBITS + 1} AS BIGINT)) AS e_raw
+               CAST({HLL_M} - s.hit AS BIGINT) AS zero_regs,
+               {HLL_ALPHA} * {HLL_M} * {HLL_M}
+                   * CAST(1 << {HLL_WBITS + 1} AS DOUBLE)
+                   / (s.isum + ({HLL_M} - s.hit)
+                      * CAST(1 << {HLL_WBITS + 1} AS BIGINT)) AS e_raw
         FROM s
     ),
     fin AS (
         SELECT event_type, hit, zero_regs,
-               CASE WHEN e_raw <= 2.5 * {_HLL_M} AND zero_regs > 0
-                    THEN {_HLL_M} * ln({_HLL_M} * 1.0 / zero_regs)
+               CASE WHEN e_raw <= 2.5 * {HLL_M} AND zero_regs > 0
+                    THEN {HLL_M} * ln({HLL_M} * 1.0 / zero_regs)
                     ELSE e_raw END AS e
         FROM est
     )
@@ -502,15 +497,15 @@ _HLL_ALPHA = 0.709   # canonical alpha_64
                  / ex.exact_distinct + 1e-9, 6) AS rel_error
     FROM fin JOIN ex USING (event_type)
     """,
-    doc=f"PORTABLE HyperLogLog ({_HLL_M} registers, Flajolet et al. "
+    doc=f"PORTABLE HyperLogLog ({HLL_M} registers, Flajolet et al. "
         f"2007 formula incl. the linear-counting small-range "
         f"correction): unlike agg_approx_sketches (engine-native "
         f"HLL++/t-digest, whose internals legitimately differ across "
         f"engines — rows-only check), this sketch is built from the "
         f"md5-prefix hash BOTH engines compute identically, so the "
         f"ESTIMATE itself is oracle-exact: register index = h mod "
-        f"{_HLL_M}, rank = first-1-bit position of the remaining "
-        f"{_HLL_WBITS} bits via lpad(bin(w)) string search (pure "
+        f"{HLL_M}, rank = first-1-bit position of the remaining "
+        f"{HLL_WBITS} bits via lpad(bin(w)) string search (pure "
         f"integer — no float log2 boundary risk), and the register "
         f"sum is kept in scaled INTEGERS (sum of 2^(27-rho), one "
         f"division at the end) so no cross-engine float summation "
@@ -518,14 +513,14 @@ _HLL_ALPHA = 0.709   # canonical alpha_64
         f"relative error per event_type — the calibration readout "
         f"that justifies replacing exact distinct at 100 TB. Scale "
         f"shape: one (event_type, register) shuffle over "
-        f"{_HLL_M}-bounded keys per group; registers merge "
+        f"{HLL_M}-bounded keys per group; registers merge "
         f"associatively (MAX), the distributed-sketch property.",
 )
 def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    wb, m = _HLL_WBITS, _HLL_M
+    wb, m = HLL_WBITS, HLL_M
     h = ev.select(
         "event_type",
         F.conv(
@@ -556,7 +551,7 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scale = 1 << (wb + 1)
     e_raw = (
-        F.lit(_HLL_ALPHA * m * m * float(scale))
+        F.lit(HLL_ALPHA * m * m * float(scale))
         / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
     )
     est = s.select(
@@ -670,12 +665,12 @@ def corpus_bottomk_consistent_sample(
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     g AS (
         SELECT doc_id, s.pos,
-               md5(array_to_string(w[s.pos + 1 : s.pos + {_SS_K}], ' '))
+               md5(array_to_string(w[s.pos + 1 : s.pos + {sketch.SPAN_K}], ' '))
                    AS gh
         FROM t, LATERAL (
-            SELECT unnest(range(len(w) - {_SS_K} + 1)) AS pos
+            SELECT unnest(range(len(w) - {sketch.SPAN_K} + 1)) AS pos
         ) s
-        WHERE len(w) >= {_SS_K}
+        WHERE len(w) >= {sketch.SPAN_K}
     ),
     keeper AS (
         SELECT gh, MIN(doc_id * 1000000 + pos) AS keep_key,
@@ -687,7 +682,7 @@ def corpus_bottomk_consistent_sample(
         SELECT DISTINCT g.doc_id, g.pos + o.i AS tok_pos
         FROM g
         JOIN keeper k USING (gh),
-             LATERAL (SELECT unnest(range({_SS_K})) AS i) o
+             LATERAL (SELECT unnest(range({sketch.SPAN_K})) AS i) o
         WHERE k.occ > 1
           AND g.doc_id * 1000000 + g.pos != k.keep_key
     ),
@@ -713,7 +708,7 @@ def corpus_bottomk_consistent_sample(
     """,
     doc=f"ExactSubstr REMOVAL (Lee et al. 2022 §4: 'remove all but one "
         f"occurrence'): a token is dropped iff some duplicated "
-        f"{_SS_K}-gram occurrence covering it is NOT that gram's "
+        f"{sketch.SPAN_K}-gram occurrence covering it is NOT that gram's "
         f"global first occurrence (min (doc_id, pos)) — the first "
         f"copy of any repeated passage survives intact, every later "
         f"copy loses exactly the repeated tokens, and unique text is "
@@ -731,12 +726,12 @@ def dedup_substring_removal(
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", F.split("text", " ").alias("w"))
-    grams = t.where(F.size("w") >= _SS_K).select(
+    grams = t.where(F.size("w") >= sketch.SPAN_K).select(
         "doc_id",
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, size(w) - {_SS_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {_SS_K}), ' ')))"
+                f"transform(sequence(0, size(w) - {sketch.SPAN_K}),"
+                f"  p -> md5(array_join(slice(w, p + 1, {sketch.SPAN_K}), ' ')))"
             )
         ).alias("pos", "gh"),
     )
@@ -764,7 +759,7 @@ def dedup_substring_removal(
         .select(
             "doc_id",
             F.explode(
-                F.expr(f"transform(sequence(0, {_SS_K - 1}),"
+                F.expr(f"transform(sequence(0, {sketch.SPAN_K - 1}),"
                        f" i -> pos + i)")
             ).alias("tok_pos"),
         )

@@ -78,6 +78,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.sketch import (
+    BLOOM_H,
+    BLOOM_M,
+    CMS_D,
+    CMS_W,
+    SPAN_K,
+    bloom_bits,
+    bloom_oracle,
+    bloom_readout,
+    bloom_split_grams,
+    cms_bucket_sql,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.caching import persist_once
@@ -104,29 +116,6 @@ from change_data_capture_poc_spark.operators.ann import (
 # agg_cms_portable — cross-engine-exact Count-Min sketch
 # ---------------------------------------------------------------------------
 
-_CMS_D = 4   # hash rows (independent via row-salted md5)
-_CMS_W = 32  # buckets per row (small on purpose: the synthetic
-             # ~40-word vocabulary needs real collisions for the
-             # estimate-vs-exact readout to be informative)
-
-
-def _cms_bucket_sql(row: int, word_expr: str, engine: str) -> str:
-    """Bucket index for one hash row, as an engine-specific SQL string.
-
-    Same md5-prefix integer both engines compute: row salt || ':' ||
-    token, first 8 hex chars as a BIGINT, mod width.
-    """
-    if engine == "spark":
-        return (
-            f"CAST(conv(substring(md5(CAST(concat('{row}:', {word_expr}) "
-            f"AS BINARY)), 1, 8), 16, 10) AS BIGINT) % {_CMS_W}"
-        )
-    return (
-        f"('0x' || substring(md5('{row}:' || {word_expr}), 1, 8))"
-        f"::BIGINT % {_CMS_W}"
-    )
-
-
 @register(
     "agg_cms_portable",
     oracle=f"""
@@ -135,19 +124,19 @@ def _cms_bucket_sql(row: int, word_expr: str, engine: str) -> str:
     ),
     t AS (SELECT word FROM tok WHERE word != ''),
     reg AS (
-        SELECT r.j, {_cms_bucket_sql(0, 'word', 'duck')
+        SELECT r.j, {cms_bucket_sql(0, 'word', 'duck')
                      .replace("'0:'", "CAST(r.j AS VARCHAR) || ':'")} AS b,
                CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t, (SELECT unnest(range({_CMS_D})) AS j) r
+        FROM t, (SELECT unnest(range({CMS_D})) AS j) r
         GROUP BY r.j, b
     ),
     ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
            FROM t GROUP BY word),
     wb AS (
         SELECT ex.word, ex.exact_count, r.j,
-               {_cms_bucket_sql(0, 'ex.word', 'duck')
+               {cms_bucket_sql(0, 'ex.word', 'duck')
                 .replace("'0:'", "CAST(r.j AS VARCHAR) || ':'")} AS b
-        FROM ex, (SELECT unnest(range({_CMS_D})) AS j) r
+        FROM ex, (SELECT unnest(range({CMS_D})) AS j) r
     )
     SELECT wb.word, wb.exact_count,
            CAST(MIN(reg.cnt) AS BIGINT) AS cms_estimate,
@@ -155,23 +144,23 @@ def _cms_bucket_sql(row: int, word_expr: str, engine: str) -> str:
     FROM wb JOIN reg ON wb.j = reg.j AND wb.b = reg.b
     GROUP BY wb.word, wb.exact_count
     """,
-    doc=f"PORTABLE Count-Min sketch ({_CMS_D} rows x {_CMS_W} buckets, "
+    doc=f"PORTABLE Count-Min sketch ({CMS_D} rows x {CMS_W} buckets, "
         f"Cormode & Muthukrishnan 2005) over the document token "
         f"stream: each token increments one bucket per hash row "
         f"(row-salted md5-prefix integers both engines compute "
         f"identically), and a word's frequency estimate is the MIN of "
-        f"its {_CMS_D} bucket counts — so, like agg_hll_portable, the "
+        f"its {CMS_D} bucket counts — so, like agg_hll_portable, the "
         f"ESTIMATE itself is oracle-exact, not just the input rows. "
         f"Emits estimate vs exact count and the overcount per word "
         f"(never negative — the CMS one-sided-error guarantee, pinned "
         f"by pytest along with register-merge associativity: SUM "
         f"commutes with sharding, the distributed-sketch property). "
         f"Scale shape: the sketch is ONE shuffle over "
-        f"{_CMS_D}x{_CMS_W} = {_CMS_D * _CMS_W} bounded keys with "
+        f"{CMS_D}x{CMS_W} = {CMS_D * CMS_W} bounded keys with "
         f"map-side combine — at 100 TB the registers stay "
-        f"{_CMS_D * _CMS_W} rows while exact per-word counting grows "
+        f"{CMS_D * CMS_W} rows while exact per-word counting grows "
         f"with the vocabulary; the estimate join broadcasts the "
-        f"{_CMS_D * _CMS_W}-row register table onto the vocab frame.",
+        f"{CMS_D * CMS_W}-row register table onto the vocab frame.",
 )
 def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -185,9 +174,9 @@ def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[
                 F.struct(
                     F.lit(j).alias("j"),
-                    F.expr(_cms_bucket_sql(j, "word", "spark")).alias("b"),
+                    F.expr(cms_bucket_sql(j, "word", "spark")).alias("b"),
                 )
-                for j in range(_CMS_D)
+                for j in range(CMS_D)
             ]
         )
     )
@@ -206,7 +195,7 @@ def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         jb.alias("jb"),
     ).select("word", "exact_count", "jb.j", "jb.b")
     est = (
-        # bounded: CMS register grid, _CMS_D x _CMS_W rows
+        # bounded: CMS register grid, CMS_D x CMS_W rows
         wb.join(F.broadcast(reg), ["j", "b"])
         .groupBy("word", "exact_count")
         .agg(F.min("cnt").cast("long").alias("cms_estimate"))
@@ -1276,212 +1265,21 @@ def corpus_weighted_priority_sample(
 # dedup_bloom_portable — Bloom-filter span dedup with measured FPR
 # ---------------------------------------------------------------------------
 
-_BLM_K = 8        # span length in tokens (the ExactSubstr window)
-_BLM_M = 65536    # filter bits (the join_bloom_prefiltered magnitude)
-_BLM_H = 3        # hash functions (row-salted md5, CMS-style)
-
-
-def _blm_bit_sql(h: int, gh_expr: str, engine: str) -> str:
-    if engine == "spark":
-        return (
-            f"CAST(conv(substring(md5(CAST(concat('{h}:', {gh_expr}) "
-            f"AS BINARY)), 1, 8), 16, 10) AS BIGINT) % {_BLM_M}"
-        )
-    return (
-        f"('0x' || substring(md5('{h}:' || {gh_expr}), 1, 8))"
-        f"::BIGINT % {_BLM_M}"
-    )
-
-
-def _blm_split_hash():
-    """doc_id -> 0..99 split hash (the text_stupid_backoff split)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-
-
-def _blm_gram_explode():
-    """Overlapping span fingerprints (md5) from a `w` token array."""
-    return F.explode(
-        F.expr(
-            f"transform(sequence(0, size(w) - {_BLM_K}),"
-            f"  p -> md5(array_join(slice(w, p + 1, {_BLM_K}), ' ')))"
-        )
-    )
-
-
-def _blm_bit_exprs():
-    return [F.expr(_blm_bit_sql(h, "gh", "spark")) for h in range(_BLM_H)]
-
-
-def _blm_split_grams(d: DataFrame) -> DataFrame:
-    """Distinct (is_train, gh) span fingerprints from a documents
-    frame, persisted — the bit-build, probe, and exact-truth branches
-    all consume it (MEMORY_AND_DISK: spills, never OOMs)."""
-    s = d.select(
-        "doc_id", F.split("text", " ").alias("w"),
-        _blm_split_hash().alias("h"),
-    ).where(F.size("w") >= _BLM_K)
-    return (
-        s.select(
-            (F.col("h") < 80).alias("is_train"),
-            _blm_gram_explode().alias("gh"),
-        )
-        .distinct()
-        .transform(persist_once)
-    )
-
-
-def _blm_readout(te: DataFrame, tr: DataFrame, bits: DataFrame) -> DataFrame:
-    """Probe the test-split span set against a Bloom bit set and grade
-    the flags against exact membership — SHARED by the batch query and
-    the streaming drain so the flag semantics cannot drift (the
-    distinct-bit fix had to land in two copies once; never again).
-
-    Distinct-bit semantics: when two hash functions collide onto one
-    bit, the gram probes fewer than _BLM_H DISTINCT bits and is
-    flagged iff every one of THOSE is set (counting matched probe rows
-    instead would diverge from the set-membership oracle).
-    """
-    te_b = te.select(
-        "gh", F.array_distinct(F.array(*_blm_bit_exprs())).alias("gbits")
-    ).withColumn("n_bits", F.size("gbits"))
-    probe_bits = te_b.select("gh", "n_bits", F.explode("gbits").alias("bit"))
-    hits = (
-        # bounded: Bloom bitset capped at _BLM_M rows
-        probe_bits.join(F.broadcast(bits), "bit")
-        .groupBy("gh", "n_bits")
-        .agg(F.count(F.lit(1)).alias("n_set"))
-    )
-    flagged = te_b.join(hits.select("gh", "n_set"), "gh", "left").select(
-        "gh",
-        (F.coalesce(F.col("n_set"), F.lit(0)) == F.col("n_bits")).alias(
-            "flagged"
-        ),
-    )
-    truth = flagged.join(
-        tr.select(F.col("gh"), F.lit(True).alias("is_dup")), "gh", "left"
-    ).select(
-        "gh",
-        "flagged",
-        F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"),
-    )
-    bcount = bits.agg(
-        F.count(F.lit(1)).cast("long").alias("bits_set")
-    ).select(
-        "bits_set",
-        F.round(
-            F.col("bits_set") * 1.0 / _BLM_M + F.lit(1e-9), 6
-        ).alias("fill_ratio"),
-    )
-    stats = truth.agg(
-        F.count(F.lit(1)).cast("long").alias("n_test_spans"),
-        F.sum(F.when(F.col("flagged"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_flagged"),
-        F.sum(F.when(F.col("is_dup"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_true_dup"),
-        F.sum(F.when(F.col("flagged") & ~F.col("is_dup"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_false_pos"),
-    ).withColumn(
-        "fp_rate",
-        F.round(
-            F.col("n_false_pos")
-            * 1.0
-            / F.greatest(
-                F.col("n_test_spans") - F.col("n_true_dup"), F.lit(1)
-            )
-            + F.lit(1e-9),
-            6,
-        ),
-    )
-    # bounded: 1-row bit count x 1-row stats
-    return F.broadcast(bcount).crossJoin(stats).select(
-        "bits_set",
-        "fill_ratio",
-        "n_test_spans",
-        "n_flagged",
-        "n_true_dup",
-        "n_false_pos",
-        "fp_rate",
-    )
-
-
-def _blm_oracle() -> str:
-    tr_bits = ", ".join(
-        _blm_bit_sql(h, "gh", "duck") for h in range(_BLM_H)
-    )
-    return f"""
-    WITH s AS (
-        SELECT doc_id, string_split(text, ' ') AS w,
-               ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                   ::BIGINT % 100 AS h
-        FROM documents
-    ),
-    g AS (
-        SELECT DISTINCT s.h < 80 AS is_train,
-               md5(array_to_string(w[u.i + 1 : u.i + {_BLM_K}], ' '))
-                   AS gh
-        FROM s, LATERAL (
-            SELECT unnest(range(len(w) - {_BLM_K} + 1)) AS i
-        ) u
-        WHERE len(w) >= {_BLM_K}
-    ),
-    tr AS (SELECT DISTINCT gh FROM g WHERE is_train),
-    te AS (SELECT DISTINCT gh FROM g WHERE NOT is_train),
-    bits AS (
-        SELECT DISTINCT unnest([{tr_bits}]) AS bit FROM tr
-    ),
-    probe AS (
-        -- distinct-bit semantics: a gram whose hash functions collide
-        -- onto the same bit probes fewer than {_BLM_H} DISTINCT bits,
-        -- and is flagged iff every one of those is set
-        SELECT te.gh,
-               (SELECT COUNT(*) FROM bits
-                WHERE bit IN ({tr_bits}))
-                   = len(list_distinct([{tr_bits}])) AS flagged,
-               te.gh IN (SELECT gh FROM tr) AS is_dup
-        FROM te
-    )
-    SELECT CAST((SELECT COUNT(*) FROM bits) AS BIGINT) AS bits_set,
-           ROUND((SELECT COUNT(*) FROM bits) * 1.0 / {_BLM_M}
-                 + 1e-9, 6) AS fill_ratio,
-           CAST(COUNT(*) AS BIGINT) AS n_test_spans,
-           CAST(COUNT(*) FILTER (WHERE flagged) AS BIGINT) AS n_flagged,
-           CAST(COUNT(*) FILTER (WHERE is_dup) AS BIGINT) AS n_true_dup,
-           CAST(COUNT(*) FILTER (WHERE flagged AND NOT is_dup) AS BIGINT)
-               AS n_false_pos,
-           ROUND(COUNT(*) FILTER (WHERE flagged AND NOT is_dup) * 1.0
-                 / GREATEST(COUNT(*) FILTER (WHERE NOT is_dup), 1)
-                 + 1e-9, 6) AS fp_rate
-    FROM probe
-    """
-
-
 @register(
     "dedup_bloom_portable",
-    oracle=_blm_oracle(),
+    oracle=bloom_oracle(),
     doc=f"PORTABLE Bloom-filter span dedup with MEASURED false-"
         f"positive rate (the Dolma-style dedup front line): the "
-        f"train-split's distinct {_BLM_K}-token span fingerprints set "
-        f"{_BLM_H} row-salted md5 bits each in a {_BLM_M}-bit filter; "
-        f"test-split spans are flagged iff all {_BLM_H} bits are set, "
+        f"train-split's distinct {SPAN_K}-token span fingerprints set "
+        f"{BLOOM_H} row-salted md5 bits each in a {BLOOM_M}-bit filter; "
+        f"test-split spans are flagged iff all {BLOOM_H} bits are set, "
         f"and the flags are compared against EXACT membership (the "
         f"semi-join truth) to report the realized FPR next to the "
         f"fill ratio — the calibration that decides whether a Bloom "
         f"pre-filter can replace the exact dedup shuffle at 100 TB. "
         f"Third portable sketch alongside agg_hll_portable (distinct "
         f"count) and agg_cms_portable (frequency): membership. Scale "
-        f"shape: the bit set is bounded at {_BLM_M} rows FOREVER "
+        f"shape: the bit set is bounded at {BLOOM_M} rows FOREVER "
         f"(bits merge by OR/distinct — the same associativity as the "
         f"other sketches, pinned by the stream twin); probing "
         f"broadcasts the bit table; only the exact-truth check "
@@ -1489,19 +1287,19 @@ def _blm_oracle() -> str:
         f"sketch that would replace it.",
 )
 def dedup_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _blm_split_grams(load_table(spark, sf_dir, "documents"))
+    g = bloom_split_grams(load_table(spark, sf_dir, "documents"))
     tr = g.where("is_train").select("gh").distinct()
     te = g.where(~F.col("is_train")).select("gh").distinct()
     # persist_once (r14): the bit set is consumed twice (broadcast
     # probe side + the bits_set count) and each build re-runs the
-    # train split's _BLM_H-md5 bit explode over the whole gram table;
-    # the pinned frame is bounded at _BLM_M rows forever (guide §5).
+    # train split's BLOOM_H-md5 bit explode over the whole gram table;
+    # the pinned frame is bounded at BLOOM_M rows forever (guide §5).
     bits = (
-        tr.select(F.explode(F.array(*_blm_bit_exprs())).alias("bit"))
+        tr.select(F.explode(F.array(*bloom_bits())).alias("bit"))
         .distinct()
         .transform(persist_once)
     )
-    return _blm_readout(te, tr, bits)
+    return bloom_readout(te, tr, bits)
 
 
 # ---------------------------------------------------------------------------

@@ -30,6 +30,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.sketch import (
+    HIST_B,
+    HIST_ORACLE_CORE,
+    HIST_QS,
+    HIST_W,
+    HLL_ALPHA,
+    HLL_M,
+    HLL_WBITS,
+    hist_quantile_readout,
+    hist_register_exprs,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.caching import persist_once
@@ -49,150 +60,14 @@ from change_data_capture_poc_spark.operators.ann import (
 # agg_histogram_quantile_portable — cross-engine-exact quantile sketch
 # ---------------------------------------------------------------------------
 
-_QSK_B = 512      # fixed grid buckets
-_QSK_W = 2.0      # bucket width -> domain [0, 1024), clipped at edges
-_QSK_QS = (0.25, 0.5, 0.75, 0.9, 0.99)
-
-
-def _qsk_register_exprs() -> tuple[F.Column, F.Column]:
-    """(bucket, clipped) columns for a non-null ``value`` row — the
-    ONLY data-dependent step of the sketch, shared verbatim by the
-    batch query and the streaming twin so their register tables are
-    the same table."""
-    raw = F.floor(F.col("value") / F.lit(_QSK_W)).cast("int")
-    bucket = F.least(
-        F.lit(_QSK_B - 1), F.greatest(F.lit(0), raw)
-    ).alias("bucket")
-    clipped = (
-        (F.col("value") < 0) | (F.col("value") >= _QSK_B * _QSK_W)
-    ).cast("int").alias("clipped")
-    return bucket, clipped
-
-
-def _qsk_quantile_readout(
-    reg: DataFrame,
-    clip: DataFrame,
-    group_cols: tuple[str, ...] = ("event_type",),
-    quantiles: tuple[float, ...] = _QSK_QS,
-) -> DataFrame:
-    """Registers (group_cols..., bucket, cnt) + clip totals →
-    interpolated quantile estimates at the ``_QSK_QS`` targets.
-
-    All-window frames are <= _QSK_B rows keyed by ``group_cols`` (the
-    bounded-summary readout, not a data-sized window) — per category,
-    per event-time window, or any other register keying. target rank =
-    ceil(q*n) in integers; estimate = (bucket + in-bucket rank
-    fraction) * W with exactly ONE division, so both engines agree to
-    the bit before the 1e-6 rounding.
-    """
-    from pyspark.sql.window import Window
-
-    gc = list(group_cols)
-    wcum = (
-        Window.partitionBy(*gc)
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy(*gc)
-    cum = reg.select(
-        *gc,
-        "bucket",
-        "cnt",
-        F.sum("cnt").over(wcum).cast("long").alias("cum"),
-        F.sum("cnt").over(wall).cast("long").alias("n"),
-        F.count(F.lit(1)).over(wall).cast("long").alias("registers_hit"),
-    )
-    spark = reg.sparkSession
-    qs = spark.createDataFrame([(q,) for q in quantiles], "q double")
-    target = F.ceil(F.col("q") * F.col("n")).cast("long")
-    sel = (
-        # bounded: literal quantile table
-        cum.crossJoin(F.broadcast(qs))
-        .withColumn("target", target)
-        .where(
-            (F.col("cum") >= F.col("target"))
-            & (F.col("cum") - F.col("cnt") < F.col("target"))
-        )
-    )
-    est = (
-        (
-            F.col("bucket")
-            + (F.col("target") - (F.col("cum") - F.col("cnt")))
-            * 1.0
-            / F.col("cnt")
-        )
-        * F.lit(_QSK_W)
-    )
-    return sel.join(clip, gc).select(
-        *gc,
-        "q",
-        F.col("n").alias("n_rows"),
-        "n_clipped",
-        "registers_hit",
-        F.round(est + F.lit(1e-9), 6).alias("hist_estimate"),
-    )
-
-
-_QSK_ORACLE_CORE = f"""
-    e AS (
-        SELECT event_type, value FROM events WHERE value IS NOT NULL
-    ),
-    r AS (
-        SELECT event_type,
-               LEAST({_QSK_B - 1},
-                     GREATEST(0, CAST(floor(value / {_QSK_W}) AS INTEGER)))
-                   AS bucket
-        FROM e
-    ),
-    reg AS (
-        SELECT event_type, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM r GROUP BY event_type, bucket
-    ),
-    clip AS (
-        SELECT event_type,
-               CAST(COUNT(*) FILTER (WHERE value < 0
-                    OR value >= {_QSK_B * _QSK_W}) AS BIGINT) AS n_clipped
-        FROM e GROUP BY event_type
-    ),
-    cum AS (
-        SELECT event_type, bucket, cnt,
-               CAST(SUM(cnt) OVER (PARTITION BY event_type
-                                   ORDER BY bucket) AS BIGINT) AS cum,
-               CAST(SUM(cnt) OVER (PARTITION BY event_type)
-                    AS BIGINT) AS n,
-               CAST(COUNT(*) OVER (PARTITION BY event_type)
-                    AS BIGINT) AS registers_hit
-        FROM reg
-    ),
-    qs AS (SELECT CAST(unnest([{", ".join(str(q) for q in _QSK_QS)}])
-                       AS DOUBLE) AS q),
-    sel AS (
-        SELECT c.event_type, qs.q, c.n, c.registers_hit, c.bucket,
-               c.cnt, c.cum,
-               CAST(ceil(qs.q * c.n) AS BIGINT) AS target
-        FROM cum c, qs
-        WHERE c.cum >= CAST(ceil(qs.q * c.n) AS BIGINT)
-          AND c.cum - c.cnt < CAST(ceil(qs.q * c.n) AS BIGINT)
-    ),
-    readout AS (
-        SELECT s.event_type, s.q, s.n AS n_rows, cl.n_clipped,
-               s.registers_hit,
-               ROUND((s.bucket
-                      + (s.target - (s.cum - s.cnt)) * 1.0 / s.cnt)
-                     * {_QSK_W} + 1e-9, 6) AS hist_estimate
-        FROM sel s JOIN clip cl USING (event_type)
-    )
-"""
-
-
 @register(
     "agg_histogram_quantile_portable",
     oracle=f"""
-    WITH {_QSK_ORACLE_CORE},
+    WITH {HIST_ORACLE_CORE},
     ex AS (
         SELECT event_type,
                quantile_cont(value,
-                   [{", ".join(str(q) for q in _QSK_QS)}]) AS xs
+                   [{", ".join(str(q) for q in HIST_QS)}]) AS xs
         FROM e GROUP BY event_type
     ),
     exu AS (
@@ -203,7 +78,7 @@ _QSK_ORACLE_CORE = f"""
     ),
     exq AS (
         SELECT event_type,
-               CAST([{", ".join(str(q) for q in _QSK_QS)}][qi]
+               CAST([{", ".join(str(q) for q in HIST_QS)}][qi]
                     AS DOUBLE) AS q,
                exact_raw
         FROM exu
@@ -218,7 +93,7 @@ _QSK_ORACLE_CORE = f"""
     """,
     doc=f"PORTABLE QUANTILE SKETCH — the quantile member completing "
         f"the portable-sketch family (HLL=distinct, CMS=frequency, "
-        f"Bloom=membership): a fixed {_QSK_B}-bucket width-{_QSK_W} "
+        f"Bloom=membership): a fixed {HIST_B}-bucket width-{HIST_W} "
         f"histogram whose integer bucket counts are the entire "
         f"summary. Unlike agg_approx_sketches' engine-native t-digest "
         f"(internals legitimately differ across engines — rows-only "
@@ -230,11 +105,11 @@ _QSK_ORACLE_CORE = f"""
         f"(pytest-pinned; a KLL/t-digest needs compaction logic for "
         f"the same bound — the fixed grid buys mergeability with a "
         f"known width/2 max error instead). Emits estimate vs exact "
-        f"quantile_cont + abs error at q in {_QSK_QS}, plus the "
+        f"quantile_cont + abs error at q in {HIST_QS}, plus the "
         f"clip count that tells an operator the grid domain was "
         f"adequate. Scale shape: one (event_type, bucket) shuffle "
-        f"over {_QSK_B}-bounded keys per group; readout windows run "
-        f"over <= {_QSK_B}-row summary frames; the exact side is the "
+        f"over {HIST_B}-bounded keys per group; readout windows run "
+        f"over <= {HIST_B}-row summary frames; the exact side is the "
         f"eval gate this sketch exists to replace at 100 TB.",
 )
 def agg_histogram_quantile_portable(
@@ -243,7 +118,7 @@ def agg_histogram_quantile_portable(
     ev = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull()
     )
-    bucket, clipped = _qsk_register_exprs()
+    bucket, clipped = hist_register_exprs()
     marked = ev.select("event_type", "value", bucket, clipped)
     reg = marked.groupBy("event_type", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -251,9 +126,9 @@ def agg_histogram_quantile_portable(
     clip = marked.groupBy("event_type").agg(
         F.sum("clipped").cast("long").alias("n_clipped")
     )
-    readout = _qsk_quantile_readout(reg, clip)
+    readout = hist_quantile_readout(reg, clip)
 
-    q_lits = ", ".join(str(q) for q in _QSK_QS)
+    q_lits = ", ".join(str(q) for q in HIST_QS)
     ex = ev.groupBy("event_type").agg(
         F.expr(f"percentile(value, array({q_lits}))").alias("xs")
     )
@@ -595,13 +470,7 @@ def _hso_est_sql(src: str) -> str:
     the same scaled-integer arithmetic as agg_hll_portable's oracle
     (pipeline6_q.py), parameterized so A / B / union share it
     verbatim."""
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_ALPHA,
-        _HLL_M,
-        _HLL_WBITS,
-    )
-
-    m, wb, alpha = _HLL_M, _HLL_WBITS, _HLL_ALPHA
+    m, wb, alpha = HLL_M, HLL_WBITS, HLL_ALPHA
     return f"""(
         SELECT CASE WHEN e_raw <= 2.5 * {m} AND zero_regs > 0
                     THEN {m} * ln({m} * 1.0 / zero_regs)
@@ -619,12 +488,7 @@ def _hso_est_sql(src: str) -> str:
 
 
 def _hso_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_M,
-        _HLL_WBITS,
-    )
-
-    m, wb = _HLL_M, _HLL_WBITS
+    m, wb = HLL_M, HLL_WBITS
     return f"""
     WITH h AS (
         SELECT event_type, user_id,
@@ -698,12 +562,7 @@ def _hso_oracle() -> str:
         f"the entire point of sketch set algebra.",
 )
 def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_M,
-        _HLL_WBITS,
-    )
-
-    m, wb = _HLL_M, _HLL_WBITS
+    m, wb = HLL_M, HLL_WBITS
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
         & F.col("event_type").isin(_HSO_A, _HSO_B)
@@ -742,12 +601,7 @@ def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # estimates (a / b / union) — the old three _hso_estimate branches
     # each ran their own aggregation + broadcast build. Same per-tag
     # integer (hit, isum) pairs, same estimator expression.
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_ALPHA,
-        _HLL_WBITS as _WB,
-    )
-
-    scale = 1 << (_WB + 1)
+    scale = 1 << (HLL_WBITS + 1)
     tagged = (
         rega.select(F.lit("a").alias("t"), "m")
         .unionByName(regb.select(F.lit("b").alias("t"), "m"))
@@ -756,11 +610,11 @@ def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3 = tagged.groupBy("t").agg(
         F.count(F.lit(1)).cast("long").alias("hit"),
         F.sum(
-            F.expr(f"CAST(shiftleft(1L, {_WB + 1} - m) AS BIGINT)")
+            F.expr(f"CAST(shiftleft(1L, {HLL_WBITS + 1} - m) AS BIGINT)")
         ).alias("isum"),
     )
     e_raw = (
-        F.lit(_HLL_ALPHA * m * m * float(scale))
+        F.lit(HLL_ALPHA * m * m * float(scale))
         / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
     )
     zero = (F.lit(m) - F.col("hit")).cast("long")
@@ -1439,8 +1293,8 @@ def cdc_envelope_key_census(
     ),
     r AS (
         SELECT hour,
-               LEAST({_QSK_B - 1},
-                     GREATEST(0, CAST(floor(value / {_QSK_W}) AS INTEGER)))
+               LEAST({HIST_B - 1},
+                     GREATEST(0, CAST(floor(value / {HIST_W}) AS INTEGER)))
                    AS bucket
         FROM e
     ),
@@ -1468,28 +1322,28 @@ def cdc_envelope_key_census(
     )
     SELECT s.hour, s.n AS n_rows,
            ROUND((s.bucket + (s.target - (s.cum - s.cnt)) * 1.0 / s.cnt)
-                 * {_QSK_W} + 1e-9, 6) AS p95_estimate,
+                 * {HIST_W} + 1e-9, 6) AS p95_estimate,
            ROUND(x.exact_raw + 1e-9, 6) AS p95_exact,
            ROUND(ABS((s.bucket
                       + (s.target - (s.cum - s.cnt)) * 1.0 / s.cnt)
-                     * {_QSK_W} - x.exact_raw) + 1e-9, 6) AS abs_error
+                     * {HIST_W} - x.exact_raw) + 1e-9, 6) AS abs_error
     FROM sel s JOIN ex x USING (hour)
     """,
     doc=f"TIME-WINDOWED p95 from the fixed-grid histogram sketch — the "
         f"operations-dashboard shape (per-hour latency/value p95): the "
-        f"same {_QSK_B}x{_QSK_W} registers as "
+        f"same {HIST_B}x{HIST_W} registers as "
         f"agg_histogram_quantile_portable, keyed by event-time hour "
         f"instead of category. This is what the sketch's mergeability "
         f"buys at 100 TB: per-window register tables are additive, so "
         f"late data folds in by SUM, hourly tables roll up to daily by "
         f"re-summing registers (no raw re-scan), and a streaming "
-        f"deployment keeps windows x {_QSK_B} counts of state — "
+        f"deployment keeps windows x {HIST_B} counts of state — "
         f"exactly the streaming_histogram_register_drain state keyed "
         f"by window. Estimate arithmetic identical to the portable "
         f"sketch (integer ranks, one division); exact quantile_cont "
         f"sits beside it as the per-window calibration. Scale shape: "
         f"one (hour, bucket) register shuffle; readout windows run "
-        f"over <= {_QSK_B}-row frames per hour (hour cardinality = "
+        f"over <= {HIST_B}-row frames per hour (hour cardinality = "
         f"parallelism, grows with time not data rate).",
 )
 def agg_histogram_quantile_hourly(
@@ -1502,14 +1356,14 @@ def agg_histogram_quantile_hourly(
             F.date_trunc("hour", F.col("ts")).alias("hour"), "value"
         )
     )
-    bucket, _clipped = _qsk_register_exprs()
+    bucket, _clipped = hist_register_exprs()
     reg = ev.select("hour", bucket).groupBy("hour", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
     clip = ev.groupBy("hour").agg(
         F.lit(0).cast("long").alias("n_clipped")
     )
-    readout = _qsk_quantile_readout(
+    readout = hist_quantile_readout(
         reg, clip, group_cols=("hour",), quantiles=(0.95,)
     )
     p95 = readout.select(

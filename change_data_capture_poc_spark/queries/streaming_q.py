@@ -25,6 +25,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.sketch import (
+    CMS_D,
+    HIST_ORACLE_CORE,
+    HLL_ALPHA,
+    HLL_M,
+    HLL_WBITS,
+    MG_K,
+    SPAN_K,
+    bloom_bits,
+    bloom_gram_explode,
+    bloom_oracle,
+    bloom_readout,
+    bloom_split_grams,
+    bloom_split_hash,
+    cms_bucket_sql,
+    hist_quantile_readout,
+    hist_register_exprs,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
 from change_data_capture_poc_spark.sources.tables import read_events_raw
@@ -1018,18 +1036,16 @@ def streaming_semdedup_assign_drain(
 
 
 def _suffixgram_dup_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline6_q import _SS_K
-
     return f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     g AS (
         SELECT doc_id,
-               md5(array_to_string(w[s.pos + 1 : s.pos + {_SS_K}], ' '))
+               md5(array_to_string(w[s.pos + 1 : s.pos + {SPAN_K}], ' '))
                    AS gh
         FROM t, LATERAL (
-            SELECT unnest(range(len(w) - {_SS_K} + 1)) AS pos
+            SELECT unnest(range(len(w) - {SPAN_K} + 1)) AS pos
         ) s
-        WHERE len(w) >= {_SS_K}
+        WHERE len(w) >= {SPAN_K}
     )
     SELECT gh AS gram_hash,
            CAST(COUNT(*) AS BIGINT) AS n_occurrences,
@@ -1057,20 +1073,18 @@ def _suffixgram_dup_oracle() -> str:
 def streaming_suffixgram_dup_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline6_q import _SS_K
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
     )
     grams = stream.select(
         "doc_id", F.split("text", " ").alias("w")
-    ).where(F.size("w") >= _SS_K).select(
+    ).where(F.size("w") >= SPAN_K).select(
         "doc_id",
         F.explode(
             F.expr(
-                f"transform(sequence(0, size(w) - {_SS_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {_SS_K}), ' ')))"
+                f"transform(sequence(0, size(w) - {SPAN_K}),"
+                f"  p -> md5(array_join(slice(w, p + 1, {SPAN_K}), ' ')))"
             )
         ).alias("gram_hash"),
     )
@@ -1086,12 +1100,6 @@ def streaming_suffixgram_dup_drain(
 
 
 def _hll_register_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_ALPHA,
-        _HLL_M,
-        _HLL_WBITS,
-    )
-
     return f"""
     WITH h AS (
         SELECT event_type,
@@ -1100,12 +1108,12 @@ def _hll_register_oracle() -> str:
         FROM events WHERE user_id IS NOT NULL
     ),
     r AS (
-        SELECT event_type, hv % {_HLL_M} AS j,
-               CASE WHEN instr(lpad(bin(hv // {_HLL_M}),
-                                    {_HLL_WBITS}, '0'), '1') = 0
-                    THEN {_HLL_WBITS + 1}
-                    ELSE instr(lpad(bin(hv // {_HLL_M}),
-                                    {_HLL_WBITS}, '0'), '1') END AS rho
+        SELECT event_type, hv % {HLL_M} AS j,
+               CASE WHEN instr(lpad(bin(hv // {HLL_M}),
+                                    {HLL_WBITS}, '0'), '1') = 0
+                    THEN {HLL_WBITS + 1}
+                    ELSE instr(lpad(bin(hv // {HLL_M}),
+                                    {HLL_WBITS}, '0'), '1') END AS rho
         FROM h
     ),
     reg AS (SELECT event_type, j, MAX(rho) AS m FROM r
@@ -1113,21 +1121,21 @@ def _hll_register_oracle() -> str:
     s AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS hit,
-               SUM(CAST(1 << ({_HLL_WBITS + 1} - m) AS BIGINT)) AS isum
+               SUM(CAST(1 << ({HLL_WBITS + 1} - m) AS BIGINT)) AS isum
         FROM reg GROUP BY event_type
     ),
     est AS (
         SELECT event_type, hit,
-               CAST({_HLL_M} - hit AS BIGINT) AS zero_regs,
-               {_HLL_ALPHA} * {_HLL_M} * {_HLL_M}
-                   * CAST(1 << {_HLL_WBITS + 1} AS DOUBLE)
-                   / (isum + ({_HLL_M} - hit)
-                      * CAST(1 << {_HLL_WBITS + 1} AS BIGINT)) AS e_raw
+               CAST({HLL_M} - hit AS BIGINT) AS zero_regs,
+               {HLL_ALPHA} * {HLL_M} * {HLL_M}
+                   * CAST(1 << {HLL_WBITS + 1} AS DOUBLE)
+                   / (isum + ({HLL_M} - hit)
+                      * CAST(1 << {HLL_WBITS + 1} AS BIGINT)) AS e_raw
         FROM s
     )
     SELECT event_type, hit AS registers_hit, zero_regs,
-           ROUND(CASE WHEN e_raw <= 2.5 * {_HLL_M} AND zero_regs > 0
-                      THEN {_HLL_M} * ln({_HLL_M} * 1.0 / zero_regs)
+           ROUND(CASE WHEN e_raw <= 2.5 * {HLL_M} AND zero_regs > 0
+                      THEN {HLL_M} * ln({HLL_M} * 1.0 / zero_regs)
                       ELSE e_raw END + 1e-9, 6) AS hll_estimate
     FROM est
     """
@@ -1152,13 +1160,7 @@ def _hll_register_oracle() -> str:
 def streaming_hll_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_ALPHA,
-        _HLL_M,
-        _HLL_WBITS,
-    )
-
-    wb, m = _HLL_WBITS, _HLL_M
+    wb, m = HLL_WBITS, HLL_M
     ev = _stream_events(spark, sf_dir).where(F.col("user_id").isNotNull())
     h = ev.select(
         "event_type",
@@ -1189,7 +1191,7 @@ def streaming_hll_register_drain(
     )
     scale = 1 << (wb + 1)
     e_raw = (
-        F.lit(_HLL_ALPHA * m * m * float(scale))
+        F.lit(HLL_ALPHA * m * m * float(scale))
         / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
     )
     est = s.select(
@@ -1211,15 +1213,10 @@ def streaming_hll_register_drain(
 
 
 def _cms_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _CMS_D,
-        _cms_bucket_sql,
-    )
-
-    bucket = _cms_bucket_sql(0, "word", "duck").replace(
+    bucket = cms_bucket_sql(0, "word", "duck").replace(
         "'0:'", "CAST(r.j AS VARCHAR) || ':'"
     )
-    bucket_w = _cms_bucket_sql(0, "ex.word", "duck").replace(
+    bucket_w = cms_bucket_sql(0, "ex.word", "duck").replace(
         "'0:'", "CAST(r.j AS VARCHAR) || ':'"
     )
     return f"""
@@ -1230,14 +1227,14 @@ def _cms_oracle() -> str:
     reg AS (
         SELECT r.j, {bucket} AS b,
                CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t, (SELECT unnest(range({_CMS_D})) AS j) r
+        FROM t, (SELECT unnest(range({CMS_D})) AS j) r
         GROUP BY r.j, b
     ),
     ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
            FROM t GROUP BY word),
     wb AS (
         SELECT ex.word, r.j, {bucket_w} AS b
-        FROM ex, (SELECT unnest(range({_CMS_D})) AS j) r
+        FROM ex, (SELECT unnest(range({CMS_D})) AS j) r
     )
     SELECT wb.word, CAST(MIN(reg.cnt) AS BIGINT) AS cms_estimate
     FROM wb JOIN reg ON wb.j = reg.j AND wb.b = reg.b
@@ -1264,11 +1261,6 @@ def _cms_oracle() -> str:
 def streaming_cms_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _cms_bucket_sql,
-        _CMS_D,
-    )
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
@@ -1281,9 +1273,9 @@ def streaming_cms_register_drain(
             *[
                 F.struct(
                     F.lit(j).alias("j"),
-                    F.expr(_cms_bucket_sql(j, "word", "spark")).alias("b"),
+                    F.expr(cms_bucket_sql(j, "word", "spark")).alias("b"),
                 )
-                for j in range(_CMS_D)
+                for j in range(CMS_D)
             ]
         )
     )
@@ -1318,11 +1310,7 @@ def streaming_cms_register_drain(
 
 
 def _bloom_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _blm_oracle,
-    )
-
-    return _blm_oracle()
+    return bloom_oracle()
 
 
 @register(
@@ -1343,14 +1331,6 @@ def _bloom_oracle() -> str:
 def streaming_bloom_bitset_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _BLM_K,
-        _blm_bit_exprs,
-        _blm_gram_explode,
-        _blm_readout,
-        _blm_split_grams,
-        _blm_split_hash,
-    )
     from change_data_capture_poc_spark.sources.tables import load_table
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
@@ -1358,14 +1338,14 @@ def streaming_bloom_bitset_drain(
         _documents_stream_dir(sf_dir)
     )
     tr_grams = (
-        stream.withColumn("h", _blm_split_hash())
+        stream.withColumn("h", bloom_split_hash())
         .where(F.col("h") < 80)
         .select(F.split("text", " ").alias("w"))
-        .where(F.size("w") >= _BLM_K)
-        .select(_blm_gram_explode().alias("gh"))
+        .where(F.size("w") >= SPAN_K)
+        .select(bloom_gram_explode().alias("gh"))
     )
     bit_stream = (
-        tr_grams.select(F.explode(F.array(*_blm_bit_exprs())).alias("bit"))
+        tr_grams.select(F.explode(F.array(*bloom_bits())).alias("bit"))
         .groupBy("bit")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
@@ -1374,12 +1354,12 @@ def streaming_bloom_bitset_drain(
     ).select("bit")
 
     # Batch readout over the drained bit set (the stream's only
-    # state): SHARED _blm_readout, so the flag semantics cannot drift
+    # state): SHARED bloom_readout, so the flag semantics cannot drift
     # from dedup_bloom_portable's.
-    g = _blm_split_grams(load_table(spark, sf_dir, "documents"))
+    g = bloom_split_grams(load_table(spark, sf_dir, "documents"))
     tr = g.where("is_train").select("gh").distinct()
     te = g.where(~F.col("is_train")).select("gh").distinct()
-    return _blm_readout(te, tr, bits)
+    return bloom_readout(te, tr, bits)
 
 
 def _wps_oracle() -> str:
@@ -1447,12 +1427,8 @@ def streaming_weighted_reservoir_drain(
 
 
 def _qsk_stream_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline8_q import (
-        _QSK_ORACLE_CORE,
-    )
-
     return (
-        f"WITH {_QSK_ORACLE_CORE} "
+        f"WITH {HIST_ORACLE_CORE} "
         "SELECT event_type, q, n_rows, n_clipped, registers_hit, "
         "hist_estimate FROM readout"
     )
@@ -1478,13 +1454,8 @@ def _qsk_stream_oracle() -> str:
 def streaming_histogram_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline8_q import (
-        _qsk_quantile_readout,
-        _qsk_register_exprs,
-    )
-
     ev = _stream_events(spark, sf_dir).where(F.col("value").isNotNull())
-    bucket, clipped = _qsk_register_exprs()
+    bucket, clipped = hist_register_exprs()
     marked = ev.select("event_type", "value", bucket, clipped)
     reg_stream = marked.groupBy("event_type", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
@@ -1506,7 +1477,7 @@ def streaming_histogram_register_drain(
     clip = regs.groupBy("event_type").agg(
         F.sum("clip_cnt").cast("long").alias("n_clipped")
     )
-    return _qsk_quantile_readout(
+    return hist_quantile_readout(
         regs.select("event_type", "bucket", "cnt"), clip
     )
 
@@ -1640,8 +1611,6 @@ def streaming_dedup_ttl_drain(
 
 
 def _mg_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline4_q import _MG_K
-
     return f"""
     WITH toks AS (
         SELECT unnest(string_split(text, ' ')) AS tok FROM documents
@@ -1650,7 +1619,7 @@ def _mg_oracle() -> str:
     SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM toks, n
     GROUP BY tok, n.n
-    HAVING COUNT(*) > n.n / {_MG_K}
+    HAVING COUNT(*) > n.n / {MG_K}
     """
 
 
@@ -1678,7 +1647,6 @@ def streaming_heavy_hitters_drain(
 ) -> DataFrame:
     import pandas as pd
 
-    from change_data_capture_poc_spark.queries.pipeline4_q import _MG_K
     from change_data_capture_poc_spark.sources.tables import load_table
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
@@ -1697,7 +1665,7 @@ def streaming_heavy_hitters_drain(
             for tok in pdf["tok"]:
                 if tok in counters:
                     counters[tok] += 1
-                elif len(counters) < _MG_K:
+                elif len(counters) < MG_K:
                     counters[tok] = 1
                 else:
                     dead = []
@@ -1733,7 +1701,7 @@ def streaming_heavy_hitters_drain(
     return (
         # bounded: 1-row token total
         exact.crossJoin(F.broadcast(n))
-        .where(F.col("cnt") > F.col("n") / _MG_K)
+        .where(F.col("cnt") > F.col("n") / MG_K)
         .select("tok", "cnt")
     )
 

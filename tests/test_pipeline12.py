@@ -97,9 +97,9 @@ def test_bloom_paragraph_equals_sequential_stream(spark, sf_dir):
     from change_data_capture_poc_spark.queries.pipeline12_q import (
         _PARA_N,
     )
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _BLM_H,
-        _BLM_M,
+    from change_data_capture_poc_spark.operators.sketch import (
+        BLOOM_H,
+        BLOOM_M,
     )
     from change_data_capture_poc_spark.registry import all_queries
 
@@ -110,8 +110,8 @@ def test_bloom_paragraph_equals_sequential_stream(spark, sf_dir):
     def bits_of(gh: str):
         return {
             int(hashlib.md5(f"{h}:{gh}".encode()).hexdigest()[:8], 16)
-            % _BLM_M
-            for h in range(_BLM_H)
+            % BLOOM_M
+            for h in range(BLOOM_H)
         }
 
     spans = []

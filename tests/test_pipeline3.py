@@ -790,7 +790,7 @@ def test_misra_gries_partitioning_independent(spark, sf_dir):
 
     # Same computation with the token stream forced through different
     # partitionings.
-    import change_data_capture_poc_spark.queries.pipeline4_q as p4
+    from change_data_capture_poc_spark.operators.sketch import MG_K
     from pyspark.sql import functions as F
 
     toks = (
@@ -808,7 +808,7 @@ def test_misra_gries_partitioning_independent(spark, sf_dir):
                 for tok in pdf["tok"]:
                     if tok in counters:
                         counters[tok] += 1
-                    elif len(counters) < p4._MG_K:
+                    elif len(counters) < MG_K:
                         counters[tok] = 1
                     else:
                         dead = []
@@ -828,7 +828,7 @@ def test_misra_gries_partitioning_independent(spark, sf_dir):
         got = {
             (r.tok, r.cnt)
             for r in exact.crossJoin(F.broadcast(n))
-            .where(F.col("cnt") > F.col("n") / p4._MG_K)
+            .where(F.col("cnt") > F.col("n") / MG_K)
             .select("tok", "cnt")
             .collect()
         }

@@ -16,7 +16,7 @@ def test_substring_runs_invariants(spark, sf_dir):
     """Every reported duplicated run spans >= K tokens, per-doc totals
     are consistent (sum >= max >= K), and no doc reports more
     duplicated tokens than it has."""
-    from change_data_capture_poc_spark.queries.pipeline6_q import _SS_K
+    from change_data_capture_poc_spark.operators.sketch import SPAN_K
 
     out = all_queries()["dedup_substring_suffix_runs"].fn(spark, sf_dir)
     rows = out.collect()
@@ -29,13 +29,13 @@ def test_substring_runs_invariants(spark, sf_dir):
     }
     for r in rows:
         assert r.n_dup_runs >= 1
-        assert r.max_run_tokens >= _SS_K
+        assert r.max_run_tokens >= SPAN_K
         assert r.dup_tokens >= r.max_run_tokens
         # Runs are disjoint maximal islands, so their token extents
         # can overlap each other only through the K-1 tail — but
         # never exceed the document itself.
         assert r.dup_tokens <= doc_tokens[r.doc_id] + (
-            r.n_dup_runs * (_SS_K - 1)
+            r.n_dup_runs * (SPAN_K - 1)
         )
 
 

@@ -30,9 +30,9 @@ def test_cms_register_merge_associativity(spark, sf_dir):
     """Registers built on two disjoint shards and SUMMED equal the
     registers built on the whole corpus — the property that lets the
     sketch be maintained per-partition / per-stream-batch and merged."""
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _CMS_D,
-        _cms_bucket_sql,
+    from change_data_capture_poc_spark.operators.sketch import (
+        CMS_D,
+        cms_bucket_sql,
     )
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -46,11 +46,11 @@ def test_cms_register_merge_associativity(spark, sf_dir):
                 *[
                     F.struct(
                         F.lit(j).alias("j"),
-                        F.expr(_cms_bucket_sql(j, "word", "spark")).alias(
+                        F.expr(cms_bucket_sql(j, "word", "spark")).alias(
                             "b"
                         ),
                     )
-                    for j in range(_CMS_D)
+                    for j in range(CMS_D)
                 ]
             )
         )

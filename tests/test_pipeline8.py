@@ -6,10 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.queries.pipeline8_q import (
-    _QSK_B,
-    _QSK_W,
-    _qsk_register_exprs,
+from change_data_capture_poc_spark.operators.sketch import (
+    HIST_B,
+    HIST_W,
+    hist_register_exprs,
 )
 from change_data_capture_poc_spark.registry import all_queries
 
@@ -17,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _registers(df):
-    bucket, _ = _qsk_register_exprs()
+    bucket, _ = hist_register_exprs()
     return (
         df.select("event_type", "value", bucket)
         .groupBy("event_type", "bucket")
@@ -80,11 +80,11 @@ def test_histogram_quantile_accuracy_bound(spark):
 
     for r in rows:
         assert r.n_clipped == 0
-        assert 1 <= r.registers_hit <= _QSK_B
+        assert 1 <= r.registers_hit <= HIST_B
         order_stat = vals[r.event_type][
             math.ceil(r.q * len(vals[r.event_type])) - 1
         ]
-        assert abs(r.hist_estimate - order_stat) <= _QSK_W, (
+        assert abs(r.hist_estimate - order_stat) <= HIST_W, (
             r.event_type, r.q, r.hist_estimate, order_stat,
         )
 

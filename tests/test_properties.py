@@ -580,6 +580,7 @@ def test_substring_runs_match_model(spark, docs):
     docs actually collide."""
     import collections
 
+    from change_data_capture_poc_spark.operators import sketch
     from change_data_capture_poc_spark.queries import pipeline6_q
 
     K = 4
@@ -617,8 +618,8 @@ def test_substring_runs_match_model(spark, docs):
     import tempfile
 
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    orig_k = pipeline6_q._SS_K
-    pipeline6_q._SS_K = K
+    orig_k = sketch.SPAN_K
+    sketch.SPAN_K = K
     try:
         with tempfile.TemporaryDirectory() as td:
             df.write.parquet(f"{td}/documents.parquet")
@@ -629,7 +630,7 @@ def test_substring_runs_match_model(spark, docs):
                 ).collect()
             }
     finally:
-        pipeline6_q._SS_K = orig_k
+        sketch.SPAN_K = orig_k
     assert got == expected
 
 
@@ -639,27 +640,27 @@ def test_hll_rho_matches_python_model(spark, hvs):
     """The portable HLL's first-1-bit rank trick (lpad(bin(w)) string
     search) vs a direct Python bit scan, over adversarial 32-bit
     hashes (0, powers of two, all-ones)."""
-    from change_data_capture_poc_spark.queries.pipeline6_q import (
-        _HLL_M,
-        _HLL_WBITS,
+    from change_data_capture_poc_spark.operators.sketch import (
+        HLL_M,
+        HLL_WBITS,
     )
 
     def model_rho(hv: int) -> int:
-        w = hv // _HLL_M
-        for i in range(_HLL_WBITS):
-            if w & (1 << (_HLL_WBITS - 1 - i)):
+        w = hv // HLL_M
+        for i in range(HLL_WBITS):
+            if w & (1 << (HLL_WBITS - 1 - i)):
                 return i + 1
-        return _HLL_WBITS + 1
+        return HLL_WBITS + 1
 
     df = spark.createDataFrame([(h,) for h in hvs], "hv bigint")
     pos = F.expr(
-        f"instr(lpad(bin(hv div {_HLL_M}), {_HLL_WBITS}, '0'), '1')"
+        f"instr(lpad(bin(hv div {HLL_M}), {HLL_WBITS}, '0'), '1')"
     )
     got = {
         r.hv: r.rho
         for r in df.select(
             "hv",
-            F.when(pos == 0, F.lit(_HLL_WBITS + 1))
+            F.when(pos == 0, F.lit(HLL_WBITS + 1))
             .otherwise(pos)
             .alias("rho"),
         ).collect()

@@ -128,18 +128,10 @@ _CROSS_QUERY_PRIVATE_IMPORTS = {
         "_QF_RULE_SQL", "_SEED_ASSIGN_SQL", "_qcls_cols", "_spark_bands",
         "_spark_grams", "_spark_sigs",
     },
-    "pipeline3_q": {"_md5_mod"},
-    "pipeline4_q": {"_CHUNK_ORACLE", "_MG_K"},
-    "pipeline6_q": {"_HLL_ALPHA", "_HLL_M", "_HLL_WBITS", "_SS_K"},
+    "pipeline4_q": {"_CHUNK_ORACLE"},
     "pipeline7_q": {
-        "_BLM_H", "_BLM_K", "_BLM_M", "_BPE_ROUNDS", "_CMS_D", "_WPS_K",
-        "_blm_bit_exprs", "_blm_gram_explode", "_blm_oracle",
-        "_blm_readout", "_blm_split_grams", "_blm_split_hash",
-        "_bpe_rounds_cte", "_bpe_train_state", "_cms_bucket_sql",
+        "_BPE_ROUNDS", "_WPS_K", "_bpe_rounds_cte", "_bpe_train_state",
         "_wps_pri_sql", "_wps_priority",
-    },
-    "pipeline8_q": {
-        "_QSK_ORACLE_CORE", "_qsk_quantile_readout", "_qsk_register_exprs",
     },
     "pipeline9_q": {"_QUAR_REPORT_ORACLE", "_source_fingerprint"},
     "pipeline10_q": {"_cdc_chunk_ctes", "_cdc_chunks", "_cdc_chunks_from"},
