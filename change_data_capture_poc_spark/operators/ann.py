@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.functions.vectors import (
     dot_product,
     rounded_l2_sql,
@@ -224,17 +225,7 @@ def sample_pred_spark(col: str) -> Column:
     """The consistent md5 sample predicate that draws the sampled
     gates' truth pool — deterministic, so every gate and both engines
     sample the identical pool."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.col(col).cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % SAMPLE_MOD
-        == 0
-    )
+    return md5_mod(F.col(col), SAMPLE_MOD) == 0
 
 
 # ---------------------------------------------------------------------------

@@ -22,10 +22,15 @@ finish with the batch query's readout.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.caching import persist_once
+from change_data_capture_poc_spark.functions.hashing import (
+    md5_bucket_sql,
+    md5_mod,
+    md5_prefix,
+)
 
 # ---------------------------------------------------------------------------
 # K-token span fingerprints (ExactSubstr)
@@ -35,6 +40,23 @@ SPAN_K = 8  # duplicated-substring span length in tokens (Lee et al.
             # use 50 BPE tokens; the synthetic corpus's ~40-word
             # vocabulary needs a shorter window for real collisions)
 
+
+def span_hashes(k: int) -> Column:
+    """md5 fingerprints of every overlapping ``k``-token span (stride
+    1) of a ``w`` token array, in start-position order. Only the
+    32-char digest leaves the map stage, never span text."""
+    return F.expr(
+        f"transform(sequence(0, size(w) - {k}),"
+        f"  p -> md5(array_join(slice(w, p + 1, {k}), ' ')))"
+    )
+
+
+def span_hash_sql(pos: str, k: int) -> str:
+    """DuckDB twin of ``span_hashes``: the fingerprint of the
+    ``k``-token span of ``w`` starting at 0-based position ``pos``."""
+    return f"md5(array_to_string(w[{pos} + 1 : {pos} + {k}], ' '))"
+
+
 # ---------------------------------------------------------------------------
 # HyperLogLog
 # ---------------------------------------------------------------------------
@@ -42,6 +64,101 @@ SPAN_K = 8  # duplicated-substring span length in tokens (Lee et al.
 HLL_M = 64          # registers (b = 6 index bits)
 HLL_WBITS = 26      # 32-bit md5-prefix hash minus 6 index bits
 HLL_ALPHA = 0.709   # canonical alpha_64
+_HLL_SCALE = 1 << (HLL_WBITS + 1)  # register sums are kept x 2^27
+
+
+def hll_rho() -> Column:
+    """Rank of an ``hv`` md5-prefix hash: the 1-based position of the
+    first 1 bit in its top ``HLL_WBITS`` bits, found by string search
+    over ``lpad(bin(hv div HLL_M))`` (pure integer — no float log2
+    boundary risk), ``HLL_WBITS + 1`` when they are all zero."""
+    pos = F.expr(f"instr(lpad(bin(hv div {HLL_M}), {HLL_WBITS}, '0'), '1')")
+    return F.when(pos == 0, F.lit(HLL_WBITS + 1)).otherwise(pos)
+
+
+def hll_registers(ev: DataFrame) -> DataFrame:
+    """(event_type, j, m) registers over ``ev``'s non-null
+    ``user_id``s: register index ``j = hv mod HLL_M``, ``m`` = max rank.
+    Registers merge associatively by MAX."""
+    h = ev.select("event_type", md5_prefix(F.col("user_id")).alias("hv"))
+    r = h.select(
+        "event_type",
+        (F.col("hv") % HLL_M).alias("j"),
+        hll_rho().alias("rho"),
+    )
+    return r.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
+
+
+def hll_sums(reg: DataFrame, key: str) -> DataFrame:
+    """(key, hit, isum) per register set: registers hit and the
+    register sum kept in scaled INTEGERS (sum of 2^(27 - m)), so no
+    cross-engine float summation order can perturb the estimate."""
+    return reg.groupBy(key).agg(
+        F.count(F.lit(1)).cast("long").alias("hit"),
+        F.sum(
+            F.expr(f"CAST(shiftleft(1L, {HLL_WBITS + 1} - m) AS BIGINT)")
+        ).alias("isum"),
+    )
+
+
+def hll_raw_estimate(hit: Column, isum: Column) -> tuple[Column, Column]:
+    """(zero_regs, e_raw): empty registers and the raw Flajolet et al.
+    estimate, with its one division at the end."""
+    m = HLL_M
+    zero_regs = (F.lit(m) - hit).cast("long")
+    e_raw = F.lit(HLL_ALPHA * m * m * float(_HLL_SCALE)) / (
+        isum + (F.lit(m) - hit) * F.lit(_HLL_SCALE)
+    )
+    return zero_regs, e_raw
+
+
+def hll_estimate(zero_regs: Column, e_raw: Column) -> Column:
+    """The estimate with the linear-counting small-range correction."""
+    m = HLL_M
+    return F.when(
+        (e_raw <= 2.5 * m) & (zero_regs > 0),
+        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / zero_regs),
+    ).otherwise(e_raw)
+
+
+_HLL_RANK_SQL = f"instr(lpad(bin(hv // {HLL_M}), {HLL_WBITS}, '0'), '1')"
+
+# DuckDB twin of hll_registers over the whole events table.
+HLL_REGISTERS_SQL = f"""
+        SELECT event_type, hv % {HLL_M} AS j,
+               MAX(CASE WHEN {_HLL_RANK_SQL} = 0 THEN {HLL_WBITS + 1}
+                        ELSE {_HLL_RANK_SQL} END) AS m
+        FROM (
+            SELECT event_type,
+                   ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))
+                       ::BIGINT AS hv
+            FROM events WHERE user_id IS NOT NULL
+        )
+        GROUP BY event_type, j"""
+
+
+def hll_estimate_sql(reg: str, key: str) -> str:
+    """DuckDB (key, hit, zero_regs, e) over a register relation
+    ``reg(key, j, m)`` — the same scaled-integer arithmetic as
+    ``hll_sums`` / ``hll_raw_estimate`` / ``hll_estimate``."""
+    m, scale = HLL_M, HLL_WBITS + 1
+    return f"""
+        SELECT {key}, hit, zero_regs,
+               CASE WHEN e_raw <= 2.5 * {m} AND zero_regs > 0
+                    THEN {m} * ln({m} * 1.0 / zero_regs)
+                    ELSE e_raw END AS e
+        FROM (
+            SELECT {key}, hit, CAST({m} - hit AS BIGINT) AS zero_regs,
+                   {HLL_ALPHA} * {m} * {m} * CAST(1 << {scale} AS DOUBLE)
+                       / (isum + ({m} - hit) * CAST(1 << {scale} AS BIGINT))
+                       AS e_raw
+            FROM (
+                SELECT {key}, CAST(COUNT(*) AS BIGINT) AS hit,
+                       SUM(CAST(1 << ({scale} - m) AS BIGINT)) AS isum
+                FROM {reg} GROUP BY {key}
+            )
+        )"""
+
 
 # ---------------------------------------------------------------------------
 # Count-Min
@@ -53,21 +170,71 @@ CMS_W = 32  # buckets per row (small on purpose: the synthetic
             # estimate-vs-exact readout to be informative)
 
 
-def cms_bucket_sql(row: int, word_expr: str, engine: str) -> str:
-    """Bucket index for one hash row, as an engine-specific SQL string.
-
-    Same md5-prefix integer both engines compute: row salt || ':' ||
-    token, first 8 hex chars as a BIGINT, mod width.
-    """
-    if engine == "spark":
-        return (
-            f"CAST(conv(substring(md5(CAST(concat('{row}:', {word_expr}) "
-            f"AS BINARY)), 1, 8), 16, 10) AS BIGINT) % {CMS_W}"
+def cms_row_buckets() -> Column:
+    """Explode a ``word`` column into its ``CMS_D`` (j, b) register
+    keys, one row-salted md5 bucket per hash row."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("j"),
+                    F.expr(
+                        md5_bucket_sql(f"'{j}:'", "word", CMS_W, "spark")
+                    ).alias("b"),
+                )
+                for j in range(CMS_D)
+            ]
         )
-    return (
-        f"('0x' || substring(md5('{row}:' || {word_expr}), 1, 8))"
-        f"::BIGINT % {CMS_W}"
     )
+
+
+def cms_registers(t: DataFrame) -> DataFrame:
+    """(j, b, cnt) registers of a ``word`` token frame. Counts merge
+    by SUM, so shards and stream batches build their own and add."""
+    return (
+        t.select(cms_row_buckets().alias("jb"))
+        .select("jb.j", "jb.b")
+        .groupBy("j", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
+def cms_estimates(
+    words: DataFrame, reg: DataFrame, cols: list[str]
+) -> DataFrame:
+    """Point estimates: each ``words`` row's ``cms_estimate`` is the MIN
+    of its ``CMS_D`` register counts (``cols`` name the carried
+    columns, ``word`` among them)."""
+    wb = words.select(*cols, cms_row_buckets().alias("jb")).select(
+        *cols, "jb.j", "jb.b"
+    )
+    return (
+        # bounded: CMS register grid, CMS_D x CMS_W rows
+        wb.join(F.broadcast(reg), ["j", "b"])
+        .groupBy(*cols)
+        .agg(F.min("cnt").cast("long").alias("cms_estimate"))
+    )
+
+
+def cms_bucket_sql(word: str) -> str:
+    """DuckDB bucket of ``word`` in hash row ``r.j``."""
+    return md5_bucket_sql("CAST(r.j AS VARCHAR) || ':'", word, CMS_W, "duck")
+
+
+# DuckDB twin of cms_registers (reg) plus exact word counts (ex) over
+# the document tokens: the CTEs both CMS oracles start from.
+CMS_ORACLE_CORE = f"""WITH tok AS (
+        SELECT unnest(string_split(text, ' ')) AS word FROM documents
+    ),
+    t AS (SELECT word FROM tok WHERE word != ''),
+    reg AS (
+        SELECT r.j, {cms_bucket_sql('word')} AS b,
+               CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM t, (SELECT unnest(range({CMS_D})) AS j) r
+        GROUP BY r.j, b
+    ),
+    ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
+           FROM t GROUP BY word),"""
 
 
 # ---------------------------------------------------------------------------
@@ -78,61 +245,35 @@ BLOOM_M = 65536    # filter bits (the join_bloom_prefiltered magnitude)
 BLOOM_H = 3        # hash functions (row-salted md5, CMS-style)
 
 
-def bloom_bit_sql(h: int, gh_expr: str, engine: str) -> str:
-    if engine == "spark":
-        return (
-            f"CAST(conv(substring(md5(CAST(concat('{h}:', {gh_expr}) "
-            f"AS BINARY)), 1, 8), 16, 10) AS BIGINT) % {BLOOM_M}"
-        )
-    return (
-        f"('0x' || substring(md5('{h}:' || {gh_expr}), 1, 8))"
-        f"::BIGINT % {BLOOM_M}"
-    )
+def bloom_bits() -> list[Column]:
+    """The ``BLOOM_H`` row-salted md5 bits of a ``gh`` fingerprint."""
+    return [
+        F.expr(md5_bucket_sql(f"'{h}:'", "gh", BLOOM_M, "spark"))
+        for h in range(BLOOM_H)
+    ]
 
 
-def bloom_split_hash():
-    """doc_id -> 0..99 split hash (the text_stupid_backoff split)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-
-
-def bloom_gram_explode():
-    """Overlapping span fingerprints (md5) from a `w` token array."""
-    return F.explode(
-        F.expr(
-            f"transform(sequence(0, size(w) - {SPAN_K}),"
-            f"  p -> md5(array_join(slice(w, p + 1, {SPAN_K}), ' ')))"
-        )
-    )
-
-
-def bloom_bits():
-    return [F.expr(bloom_bit_sql(h, "gh", "spark")) for h in range(BLOOM_H)]
-
-
-def bloom_split_grams(d: DataFrame) -> DataFrame:
-    """Distinct (is_train, gh) span fingerprints from a documents
-    frame, persisted — the bit-build, probe, and exact-truth branches
-    all consume it (MEMORY_AND_DISK: spills, never OOMs)."""
+def bloom_split_spans(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(train, test) distinct span fingerprint sets of a documents
+    frame, split by ``md5_mod(doc_id, 100) < 80`` (the
+    text_stupid_backoff split). The (is_train, gh) table under both is
+    persisted — the bit-build, probe, and exact-truth branches all
+    consume it (MEMORY_AND_DISK: spills, never OOMs)."""
     s = d.select(
         "doc_id", F.split("text", " ").alias("w"),
-        bloom_split_hash().alias("h"),
+        md5_mod(F.col("doc_id"), 100).alias("h"),
     ).where(F.size("w") >= SPAN_K)
-    return (
+    g = (
         s.select(
             (F.col("h") < 80).alias("is_train"),
-            bloom_gram_explode().alias("gh"),
+            F.explode(span_hashes(SPAN_K)).alias("gh"),
         )
         .distinct()
         .transform(persist_once)
+    )
+    return (
+        g.where("is_train").select("gh").distinct(),
+        g.where(~F.col("is_train")).select("gh").distinct(),
     )
 
 
@@ -215,7 +356,8 @@ def bloom_readout(te: DataFrame, tr: DataFrame, bits: DataFrame) -> DataFrame:
 
 def bloom_oracle() -> str:
     tr_bits = ", ".join(
-        bloom_bit_sql(h, "gh", "duck") for h in range(BLOOM_H)
+        md5_bucket_sql(f"'{h}:'", "gh", BLOOM_M, "duck")
+        for h in range(BLOOM_H)
     )
     return f"""
     WITH s AS (
@@ -226,7 +368,7 @@ def bloom_oracle() -> str:
     ),
     g AS (
         SELECT DISTINCT s.h < 80 AS is_train,
-               md5(array_to_string(w[u.i + 1 : u.i + {SPAN_K}], ' '))
+               {span_hash_sql('u.i', SPAN_K)}
                    AS gh
         FROM s, LATERAL (
             SELECT unnest(range(len(w) - {SPAN_K} + 1)) AS i
@@ -304,8 +446,6 @@ def hist_quantile_readout(
     fraction) * W with exactly ONE division, so both engines agree to
     the bit before the 1e-6 rounding.
     """
-    from pyspark.sql.window import Window
-
     gc = list(group_cols)
     wcum = (
         Window.partitionBy(*gc)
@@ -408,3 +548,63 @@ HIST_ORACLE_CORE = f"""
 # ---------------------------------------------------------------------------
 
 MG_K = 64  # Misra-Gries counter budget => finds tokens with freq > N/64
+
+MG_ORACLE = f"""
+    WITH toks AS (
+        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+    ),
+    n AS (SELECT COUNT(*) AS n FROM toks)
+    SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
+    FROM toks, n
+    GROUP BY tok, n.n
+    HAVING COUNT(*) > n.n / {MG_K}
+    """
+
+
+def mg_candidates(toks: DataFrame) -> DataFrame:
+    """Phase 1: fold each partition of a ``tok`` frame through an
+    ``MG_K``-counter Misra-Gries summary (Arrow mapInPandas, bounded
+    state, zero shuffle). The survivors are a GUARANTEED superset of
+    the tokens with frequency > N/MG_K: a token over threshold overall
+    is over threshold in some partition (pigeonhole)."""
+    import pandas as pd
+
+    def mg(batches):
+        counters: dict[str, int] = {}
+        for pdf in batches:
+            for tok in pdf["tok"]:
+                if tok in counters:
+                    counters[tok] += 1
+                elif len(counters) < MG_K:
+                    counters[tok] = 1
+                else:
+                    dead = []
+                    for t in counters:
+                        counters[t] -= 1
+                        if counters[t] == 0:
+                            dead.append(t)
+                    for t in dead:
+                        del counters[t]
+        if counters:
+            yield pd.DataFrame({"tok": list(counters)})
+
+    return toks.mapInPandas(mg, "tok string")
+
+
+def mg_heavy_hitters(toks: DataFrame, cand: DataFrame) -> DataFrame:
+    """Phase 2: exact counts of ``toks`` restricted to the candidates
+    (broadcast semi-join), thresholded at N/MG_K — so the output is
+    EXACT and independent of how phase 1 was partitioned."""
+    n = toks.agg(F.count("*").alias("n"))
+    exact = (
+        # bounded: Misra-Gries heavy hitters, counter-capacity-capped
+        toks.join(F.broadcast(cand), "tok")
+        .groupBy("tok")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+    return (
+        # bounded: 1-row token total
+        exact.crossJoin(F.broadcast(n))
+        .where(F.col("cnt") > F.col("n") / MG_K)
+        .select("tok", "cnt")
+    )

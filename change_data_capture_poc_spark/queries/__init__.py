@@ -16,13 +16,17 @@ Modules:
                     kmeans/PCA, evals)
 - ``pipeline4_q`` — chunking, multiprobe IVF recall (index and gate
                     from operators/ann.py), backoff LM, winnowing,
-                    heavy hitters, sampling
+                    Misra-Gries heavy hitters (operators/sketch.py),
+                    sampling
 - ``pipeline5_q`` — CCNet perplexity pruning, IVF hard negatives,
                     tokenizer fertility
 - ``pipeline6_q`` — ExactSubstr detection+removal, PII classes,
                     Kneser-Ney, portable HLL, bottom-k sampling,
-                    filter funnel, kNN graph
-- ``pipeline7_q`` — portable Count-Min sketch + Bloom-with-FPR,
+                    filter funnel, kNN graph (the span fingerprints
+                    and HLL registers/estimator live in
+                    operators/sketch.py)
+- ``pipeline7_q`` — portable Count-Min sketch + Bloom-with-FPR (both
+                    sketches live in operators/sketch.py),
                     PQ/ADC + composed IVF-PQ recall (the PQ and
                     IVF-PQ algorithms live in operators/ann.py), semantic
                     decontamination, bitext margin mining, DoReMi
@@ -31,7 +35,8 @@ Modules:
                     weighted sampling, schema-evolution CDC reads,
                     and the composed weighted corpus build
 - ``pipeline8_q`` — portable histogram-quantile sketch (+ stream
-                    twin), F2 self-join-size sketch, HLL set algebra,
+                    twin; grid and readout in operators/sketch.py),
+                    F2 self-join-size sketch, HLL set algebra,
                     hash-sampled-truth recall gate, evolved-schema
                     SCD2 recompute, data-constrained epoch planner,
                     Welch t-test, DP noisy counts + k-anonymity audit,

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_bucket_sql
 from change_data_capture_poc_spark.operators.sketch import (
     BLOOM_H,
     BLOOM_M,
@@ -297,14 +298,8 @@ def _para_gh_expr() -> str:
 
 
 def _para_oracle() -> str:
-    # bloom_bit_sql bakes the salt literal per hash function; restate
-    # the identical md5('h:' || gh) recipe generically over the
-    # unnested h (operators/sketch.bloom_bit_sql is the portability
-    # reference both engines already agree on).
-    bit = (
-        "('0x' || substring(md5(b.h || ':' || f.gh), 1, 8))::BIGINT"
-        f" % {BLOOM_M}"
-    )
+    # The bloom_bits recipe md5('h:' || gh), salted by the unnested h.
+    bit = md5_bucket_sql("b.h || ':'", "f.gh", BLOOM_M, "duck")
     return f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     spans AS (

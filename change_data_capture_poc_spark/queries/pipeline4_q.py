@@ -37,7 +37,12 @@ from change_data_capture_poc_spark.operators.ann import (
     variant_tag,
 )
 from change_data_capture_poc_spark.functions.hashing import md5_mod
-from change_data_capture_poc_spark.operators.sketch import MG_K
+from change_data_capture_poc_spark.operators.sketch import (
+    MG_K,
+    MG_ORACLE,
+    mg_candidates,
+    mg_heavy_hitters,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -202,16 +207,7 @@ def corpus_chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_heavy_hitters_misra_gries",
-    oracle=f"""
-    WITH toks AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    n AS (SELECT COUNT(*) AS n FROM toks)
-    SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM toks, n
-    GROUP BY tok, n.n
-    HAVING COUNT(*) > n.n / {MG_K}
-    """,
+    oracle=MG_ORACLE,
     doc=f"Exact heavy hitters (tokens with frequency > N/{MG_K}) via "
         f"the two-pass sketch pattern: phase 1 folds each partition "
         f"through a {MG_K}-counter Misra-Gries summary (Arrow "
@@ -229,43 +225,10 @@ def corpus_chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_heavy_hitters_misra_gries(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
-
     toks = load_table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("tok")
     )
-    n = toks.agg(F.count("*").alias("n"))
-
-    def mg(batches):
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            for tok in pdf["tok"]:
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < MG_K:
-                    counters[tok] = 1
-                else:
-                    dead = []
-                    for t in counters:
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            dead.append(t)
-                    for t in dead:
-                        del counters[t]
-        if counters:
-            yield pd.DataFrame({"tok": list(counters)})
-
-    cand = toks.mapInPandas(mg, "tok string").distinct()
-    # bounded: Misra-Gries heavy hitters, counter-capacity-capped
-    exact = toks.join(F.broadcast(cand), "tok").groupBy("tok").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    return (
-        # bounded: 1-row corpus count
-        exact.crossJoin(F.broadcast(n))
-        .where(F.col("cnt") > F.col("n") / MG_K)
-        .select("tok", "cnt")
-    )
+    return mg_heavy_hitters(toks, mg_candidates(toks).distinct())
 
 
 @register(

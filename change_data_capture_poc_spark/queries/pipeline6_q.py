@@ -46,31 +46,48 @@ from pyspark.sql import functions as F
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.caching import persist_once
-from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.functions.hashing import md5_mod, md5_prefix
+# The span length is read as sketch.SPAN_K at call time (not bound by
+# name at import) so tests can vary it through the shipped queries.
 from change_data_capture_poc_spark.operators import sketch
 from change_data_capture_poc_spark.operators.sketch import (
-    HLL_ALPHA,
     HLL_M,
+    HLL_REGISTERS_SQL,
     HLL_WBITS,
+    hll_estimate,
+    hll_estimate_sql,
+    hll_raw_estimate,
+    hll_registers,
+    hll_sums,
+    span_hash_sql,
+    span_hashes,
 )
 
 # ---------------------------------------------------------------------------
 # dedup_substring_suffix_runs
 # ---------------------------------------------------------------------------
 
-@register(
-    "dedup_substring_suffix_runs",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+# (doc_id, pos, gh) for every overlapping span: both ExactSubstr
+# oracles start from this CTE pair.
+_SPAN_GRAMS_SQL = (
+    "WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),"
+    f"""
     g AS (
         SELECT doc_id, s.pos,
-               md5(array_to_string(w[s.pos + 1 : s.pos + {sketch.SPAN_K}], ' '))
+               {span_hash_sql('s.pos', sketch.SPAN_K)}
                    AS gh
         FROM t, LATERAL (
             SELECT unnest(range(len(w) - {sketch.SPAN_K} + 1)) AS pos
         ) s
         WHERE len(w) >= {sketch.SPAN_K}
-    ),
+    ),"""
+)
+
+
+@register(
+    "dedup_substring_suffix_runs",
+    oracle=f"""
+    {_SPAN_GRAMS_SQL}
     dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) > 1),
     d AS (SELECT g.doc_id, g.pos FROM g JOIN dup USING (gh)),
     runs AS (
@@ -118,19 +135,14 @@ from change_data_capture_poc_spark.operators.sketch import (
 def dedup_substring_suffix_runs(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    k = sketch.SPAN_K
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("w")).where(
-        F.size("w") >= sketch.SPAN_K
+        F.size("w") >= k
     )
     # Overlapping K-grams, hashed in the map stage: (doc_id, pos, gh).
     grams = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {sketch.SPAN_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {sketch.SPAN_K}), ' ')))"
-            )
-        ).alias("pos", "gh"),
+        "doc_id", F.posexplode(span_hashes(k)).alias("pos", "gh")
     )
     # Duplicate test as ONE gh-keyed window count (r14): the old
     # agg-then-self-join shape executed the gram explode + md5 pass
@@ -163,10 +175,10 @@ def dedup_substring_suffix_runs(
     )
     return agg.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_dup_runs"),
-        F.sum(F.col("p1") - F.col("p0") + sketch.SPAN_K)
+        F.sum(F.col("p1") - F.col("p0") + k)
         .cast("long")
         .alias("dup_tokens"),
-        F.max(F.col("p1") - F.col("p0") + sketch.SPAN_K)
+        F.max(F.col("p1") - F.col("p0") + k)
         .cast("long")
         .alias("max_run_tokens"),
     )
@@ -448,48 +460,11 @@ def text_kneser_ney_bigram_score(
 @register(
     "agg_hll_portable",
     oracle=f"""
-    WITH h AS (
-        SELECT event_type,
-               ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                   ::BIGINT AS hv
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    r AS (
-        SELECT event_type, hv % {HLL_M} AS j,
-               CASE WHEN instr(lpad(bin(hv // {HLL_M}),
-                                    {HLL_WBITS}, '0'), '1') = 0
-                    THEN {HLL_WBITS + 1}
-                    ELSE instr(lpad(bin(hv // {HLL_M}),
-                                    {HLL_WBITS}, '0'), '1') END AS rho
-        FROM h
-    ),
-    reg AS (SELECT event_type, j, MAX(rho) AS m FROM r
-            GROUP BY event_type, j),
-    s AS (
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS hit,
-               SUM(CAST(1 << ({HLL_WBITS + 1} - m) AS BIGINT)) AS isum
-        FROM reg GROUP BY event_type
-    ),
+    WITH reg AS ({HLL_REGISTERS_SQL}),
+    fin AS ({hll_estimate_sql('reg', 'event_type')}),
     ex AS (SELECT event_type,
                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_distinct
-           FROM events WHERE user_id IS NOT NULL GROUP BY event_type),
-    est AS (
-        SELECT s.event_type, s.hit,
-               CAST({HLL_M} - s.hit AS BIGINT) AS zero_regs,
-               {HLL_ALPHA} * {HLL_M} * {HLL_M}
-                   * CAST(1 << {HLL_WBITS + 1} AS DOUBLE)
-                   / (s.isum + ({HLL_M} - s.hit)
-                      * CAST(1 << {HLL_WBITS + 1} AS BIGINT)) AS e_raw
-        FROM s
-    ),
-    fin AS (
-        SELECT event_type, hit, zero_regs,
-               CASE WHEN e_raw <= 2.5 * {HLL_M} AND zero_regs > 0
-                    THEN {HLL_M} * ln({HLL_M} * 1.0 / zero_regs)
-                    ELSE e_raw END AS e
-        FROM est
-    )
+           FROM events WHERE user_id IS NOT NULL GROUP BY event_type)
     SELECT fin.event_type, ex.exact_distinct,
            fin.hit AS registers_hit, fin.zero_regs,
            ROUND(fin.e + 1e-9, 6) AS hll_estimate,
@@ -520,55 +495,22 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    wb, m = HLL_WBITS, HLL_M
-    h = ev.select(
-        "event_type",
-        F.conv(
-            F.substring(
-                F.md5(F.col("user_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long").alias("hv"),
-    )
-    pos = F.expr(
-        f"instr(lpad(bin(hv div {m}), {wb}, '0'), '1')"
-    )
-    r = h.select(
-        "event_type",
-        (F.col("hv") % m).alias("j"),
-        F.when(pos == 0, F.lit(wb + 1)).otherwise(pos).alias("rho"),
-    )
-    reg = r.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
-    s = reg.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(1L, {wb + 1} - m) AS BIGINT)")
-        ).alias("isum"),
-    )
+    s = hll_sums(hll_registers(ev), "event_type")
     ex = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_distinct")
     )
-    scale = 1 << (wb + 1)
-    e_raw = (
-        F.lit(HLL_ALPHA * m * m * float(scale))
-        / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
-    )
+    zero_regs, e_raw = hll_raw_estimate(F.col("hit"), F.col("isum"))
     est = s.select(
         "event_type",
         "hit",
-        (F.lit(m) - F.col("hit")).cast("long").alias("zero_regs"),
+        zero_regs.alias("zero_regs"),
         e_raw.alias("e_raw"),
     )
-    e = F.when(
-        (F.col("e_raw") <= 2.5 * m) & (F.col("zero_regs") > 0),
-        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / F.col("zero_regs")),
-    ).otherwise(F.col("e_raw"))
     fin = est.select(
         "event_type",
         F.col("hit").alias("registers_hit"),
         "zero_regs",
-        e.alias("e"),
+        hll_estimate(F.col("zero_regs"), F.col("e_raw")).alias("e"),
     )
     return fin.join(ex, "event_type").select(
         "event_type",
@@ -635,13 +577,7 @@ def corpus_bottomk_consistent_sample(
     h = d.select(
         "source",
         "doc_id",
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long").alias("sample_hash"),
+        md5_prefix(F.col("doc_id")).alias("sample_hash"),
     )
     top = grouped_topk(
         h, ["source"], [("sample_hash", True), ("doc_id", True)], _BK_K
@@ -662,16 +598,7 @@ def corpus_bottomk_consistent_sample(
 @register(
     "dedup_substring_removal",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    g AS (
-        SELECT doc_id, s.pos,
-               md5(array_to_string(w[s.pos + 1 : s.pos + {sketch.SPAN_K}], ' '))
-                   AS gh
-        FROM t, LATERAL (
-            SELECT unnest(range(len(w) - {sketch.SPAN_K} + 1)) AS pos
-        ) s
-        WHERE len(w) >= {sketch.SPAN_K}
-    ),
+    {_SPAN_GRAMS_SQL}
     keeper AS (
         SELECT gh, MIN(doc_id * 1000000 + pos) AS keep_key,
                COUNT(*) AS occ
@@ -724,16 +651,11 @@ def corpus_bottomk_consistent_sample(
 def dedup_substring_removal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    k = sketch.SPAN_K
     d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", F.split("text", " ").alias("w"))
-    grams = t.where(F.size("w") >= sketch.SPAN_K).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {sketch.SPAN_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {sketch.SPAN_K}), ' ')))"
-            )
-        ).alias("pos", "gh"),
+    grams = t.where(F.size("w") >= k).select(
+        "doc_id", F.posexplode(span_hashes(k)).alias("pos", "gh")
     )
     # Keeper resolution as gh-keyed window functions (r14): the old
     # agg-then-self-join shape executed the gram explode + md5 pass
@@ -759,8 +681,7 @@ def dedup_substring_removal(
         .select(
             "doc_id",
             F.explode(
-                F.expr(f"transform(sequence(0, {sketch.SPAN_K - 1}),"
-                       f" i -> pos + i)")
+                F.expr(f"transform(sequence(0, {k - 1}), i -> pos + i)")
             ).alias("tok_pos"),
         )
         .distinct()

@@ -78,17 +78,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_prefix
 from change_data_capture_poc_spark.operators.sketch import (
     BLOOM_H,
     BLOOM_M,
     CMS_D,
+    CMS_ORACLE_CORE,
     CMS_W,
     SPAN_K,
     bloom_bits,
     bloom_oracle,
     bloom_readout,
-    bloom_split_grams,
+    bloom_split_spans,
     cms_bucket_sql,
+    cms_estimates,
+    cms_registers,
 )
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
@@ -119,23 +123,10 @@ from change_data_capture_poc_spark.operators.ann import (
 @register(
     "agg_cms_portable",
     oracle=f"""
-    WITH tok AS (
-        SELECT unnest(string_split(text, ' ')) AS word FROM documents
-    ),
-    t AS (SELECT word FROM tok WHERE word != ''),
-    reg AS (
-        SELECT r.j, {cms_bucket_sql(0, 'word', 'duck')
-                     .replace("'0:'", "CAST(r.j AS VARCHAR) || ':'")} AS b,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t, (SELECT unnest(range({CMS_D})) AS j) r
-        GROUP BY r.j, b
-    ),
-    ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
-           FROM t GROUP BY word),
+    {CMS_ORACLE_CORE}
     wb AS (
         SELECT ex.word, ex.exact_count, r.j,
-               {cms_bucket_sql(0, 'ex.word', 'duck')
-                .replace("'0:'", "CAST(r.j AS VARCHAR) || ':'")} AS b
+               {cms_bucket_sql('ex.word')} AS b
         FROM ex, (SELECT unnest(range({CMS_D})) AS j) r
     )
     SELECT wb.word, wb.exact_count,
@@ -168,38 +159,11 @@ def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .where(F.col("word") != "")
     )
-    # Registers: one (row, bucket) count per token per hash row.
-    jb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.expr(cms_bucket_sql(j, "word", "spark")).alias("b"),
-                )
-                for j in range(CMS_D)
-            ]
-        )
-    )
-    reg = (
-        t.select(jb.alias("jb"))
-        .select("jb.j", "jb.b")
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    reg = cms_registers(t)
     ex = t.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("exact_count")
     )
-    wb = ex.select(
-        "word",
-        "exact_count",
-        jb.alias("jb"),
-    ).select("word", "exact_count", "jb.j", "jb.b")
-    est = (
-        # bounded: CMS register grid, CMS_D x CMS_W rows
-        wb.join(F.broadcast(reg), ["j", "b"])
-        .groupBy("word", "exact_count")
-        .agg(F.min("cnt").cast("long").alias("cms_estimate"))
-    )
+    est = cms_estimates(ex, reg, ["word", "exact_count"])
     return est.select(
         "word",
         "exact_count",
@@ -1207,16 +1171,7 @@ def _wps_priority():
     """Spark twin of ``_wps_pri_sql``'s priority column: u^(1/w) as
     ln(u)/n_chars from the deterministic md5-prefix uniform. Callers
     filter n_chars > 0 first (mirroring the SQL fragment)."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        + 1
-    ) / F.lit(_WPS_U_DEN)
+    u = (md5_prefix(F.col("doc_id")) + 1) / F.lit(_WPS_U_DEN)
     return F.round(F.log(u) / F.col("n_chars") + F.lit(1e-9), 6)
 
 
@@ -1287,9 +1242,7 @@ def corpus_weighted_priority_sample(
         f"sketch that would replace it.",
 )
 def dedup_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = bloom_split_grams(load_table(spark, sf_dir, "documents"))
-    tr = g.where("is_train").select("gh").distinct()
-    te = g.where(~F.col("is_train")).select("gh").distinct()
+    tr, te = bloom_split_spans(load_table(spark, sf_dir, "documents"))
     # persist_once (r14): the bit set is consumed twice (broadcast
     # probe side + the bits_set count) and each build re-runs the
     # train split's BLOOM_H-md5 bit explode over the whole gram table;

@@ -30,16 +30,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.operators.sketch import (
     HIST_B,
     HIST_ORACLE_CORE,
     HIST_QS,
     HIST_W,
-    HLL_ALPHA,
-    HLL_M,
-    HLL_WBITS,
+    HLL_REGISTERS_SQL,
     hist_quantile_readout,
     hist_register_exprs,
+    hll_estimate,
+    hll_estimate_sql,
+    hll_raw_estimate,
+    hll_registers,
+    hll_sums,
 )
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
@@ -424,18 +428,7 @@ def agg_selfjoin_size_f2_sketch(
         F.sum(F.col("c") * F.col("c")).cast("long").alias("f2_exact"),
         F.max("c").cast("long").alias("max_key_count"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("user_id").cast("string").cast("binary")),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _F2_B
-    )
+    bucket = md5_mod(F.col("user_id"), _F2_B)
     b = ev.select(bucket.alias("bucket")).groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cb")
     )
@@ -465,56 +458,29 @@ _HSO_A = "click"
 _HSO_B = "purchase"
 
 
-def _hso_est_sql(src: str) -> str:
-    """DuckDB HLL estimate over a register relation ``src(j, m)`` —
-    the same scaled-integer arithmetic as agg_hll_portable's oracle
-    (pipeline6_q.py), parameterized so A / B / union share it
-    verbatim."""
-    m, wb, alpha = HLL_M, HLL_WBITS, HLL_ALPHA
-    return f"""(
-        SELECT CASE WHEN e_raw <= 2.5 * {m} AND zero_regs > 0
-                    THEN {m} * ln({m} * 1.0 / zero_regs)
-                    ELSE e_raw END
-        FROM (
-            SELECT CAST({m} - COUNT(*) AS BIGINT) AS zero_regs,
-                   {alpha} * {m} * {m}
-                       * CAST(1 << {wb + 1} AS DOUBLE)
-                       / (SUM(CAST(1 << ({wb + 1} - m) AS BIGINT))
-                          + ({m} - COUNT(*))
-                            * CAST(1 << {wb + 1} AS BIGINT)) AS e_raw
-            FROM {src}
-        )
-    )"""
-
-
 def _hso_oracle() -> str:
-    m, wb = HLL_M, HLL_WBITS
     return f"""
     WITH h AS (
-        SELECT event_type, user_id,
-               ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                   ::BIGINT AS hv
+        SELECT event_type, user_id
         FROM events
         WHERE user_id IS NOT NULL
           AND event_type IN ('{_HSO_A}', '{_HSO_B}')
     ),
-    r AS (
-        SELECT event_type, hv % {m} AS j,
-               CASE WHEN instr(lpad(bin(hv // {m}), {wb}, '0'), '1') = 0
-                    THEN {wb + 1}
-                    ELSE instr(lpad(bin(hv // {m}), {wb}, '0'), '1')
-                    END AS rho
-        FROM h
+    reg AS ({HLL_REGISTERS_SQL}),
+    regt AS (
+        SELECT 'a' AS t, j, m FROM reg WHERE event_type = '{_HSO_A}'
+        UNION ALL
+        SELECT 'b' AS t, j, m FROM reg WHERE event_type = '{_HSO_B}'
+        UNION ALL
+        SELECT 'u' AS t, j, MAX(m) AS m FROM reg
+        WHERE event_type IN ('{_HSO_A}', '{_HSO_B}') GROUP BY j
     ),
-    reg AS (SELECT event_type, j, MAX(rho) AS m FROM r
-            GROUP BY event_type, j),
-    rega AS (SELECT j, m FROM reg WHERE event_type = '{_HSO_A}'),
-    regb AS (SELECT j, m FROM reg WHERE event_type = '{_HSO_B}'),
-    regu AS (SELECT j, MAX(m) AS m FROM reg GROUP BY j),
+    e3 AS ({hll_estimate_sql('regt', 't')}),
     est AS (
-        SELECT {_hso_est_sql('rega')} AS ea,
-               {_hso_est_sql('regb')} AS eb,
-               {_hso_est_sql('regu')} AS eu
+        SELECT MAX(e) FILTER (WHERE t = 'a') AS ea,
+               MAX(e) FILTER (WHERE t = 'b') AS eb,
+               MAX(e) FILTER (WHERE t = 'u') AS eu
+        FROM e3
     ),
     exact AS (
         SELECT CAST(COUNT(DISTINCT user_id)
@@ -562,37 +528,15 @@ def _hso_oracle() -> str:
         f"the entire point of sketch set algebra.",
 )
 def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m, wb = HLL_M, HLL_WBITS
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
         & F.col("event_type").isin(_HSO_A, _HSO_B)
-    )
-    h = ev.select(
-        "event_type",
-        "user_id",
-        F.conv(
-            F.substring(
-                F.md5(F.col("user_id").cast("string").cast("binary")),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long").alias("hv"),
-    )
-    pos = F.expr(f"instr(lpad(bin(hv div {m}), {wb}, '0'), '1')")
-    r = h.select(
-        "event_type",
-        (F.col("hv") % m).alias("j"),
-        F.when(pos == 0, F.lit(wb + 1)).otherwise(pos).alias("rho"),
     )
     # Persisted: rega/regb/regu each filter this <=128-row register
     # table differently, and pushdown makes their subtrees
     # non-identical — without the cache the corpus register build runs
     # three times (exchange reuse never fires on differing plans).
-    reg = r.groupBy("event_type", "j").agg(
-        F.max("rho").alias("m")
-    ).transform(persist_once)
+    reg = hll_registers(ev).transform(persist_once)
     rega = reg.where(F.col("event_type") == _HSO_A).select("j", "m")
     regb = reg.where(F.col("event_type") == _HSO_B).select("j", "m")
     regu = reg.groupBy("j").agg(F.max("m").alias("m"))
@@ -601,27 +545,13 @@ def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # estimates (a / b / union) — the old three _hso_estimate branches
     # each ran their own aggregation + broadcast build. Same per-tag
     # integer (hit, isum) pairs, same estimator expression.
-    scale = 1 << (HLL_WBITS + 1)
     tagged = (
         rega.select(F.lit("a").alias("t"), "m")
         .unionByName(regb.select(F.lit("b").alias("t"), "m"))
         .unionByName(regu.select(F.lit("u").alias("t"), "m"))
     )
-    s3 = tagged.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(1L, {HLL_WBITS + 1} - m) AS BIGINT)")
-        ).alias("isum"),
-    )
-    e_raw = (
-        F.lit(HLL_ALPHA * m * m * float(scale))
-        / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
-    )
-    zero = (F.lit(m) - F.col("hit")).cast("long")
-    e_col = F.when(
-        (e_raw <= 2.5 * m) & (zero > 0),
-        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / zero),
-    ).otherwise(e_raw)
+    s3 = hll_sums(tagged, "t")
+    e_col = hll_estimate(*hll_raw_estimate(F.col("hit"), F.col("isum")))
     est = (
         s3.select("t", e_col.alias("e"))
         .groupBy()

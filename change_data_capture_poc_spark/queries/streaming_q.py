@@ -25,23 +25,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.operators.sketch import (
     CMS_D,
+    CMS_ORACLE_CORE,
     HIST_ORACLE_CORE,
-    HLL_ALPHA,
-    HLL_M,
-    HLL_WBITS,
-    MG_K,
+    HLL_REGISTERS_SQL,
+    MG_ORACLE,
     SPAN_K,
     bloom_bits,
-    bloom_gram_explode,
     bloom_oracle,
     bloom_readout,
-    bloom_split_grams,
-    bloom_split_hash,
+    bloom_split_spans,
     cms_bucket_sql,
+    cms_estimates,
+    cms_registers,
     hist_quantile_readout,
     hist_register_exprs,
+    hll_estimate,
+    hll_estimate_sql,
+    hll_raw_estimate,
+    hll_registers,
+    hll_sums,
+    mg_candidates,
+    mg_heavy_hitters,
+    span_hash_sql,
+    span_hashes,
 )
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
@@ -1035,12 +1044,13 @@ def streaming_semdedup_assign_drain(
     return _drain(out, "streaming_semdedup_assign_tbl", "complete")
 
 
-def _suffixgram_dup_oracle() -> str:
-    return f"""
+@register(
+    "streaming_suffixgram_dup_drain",
+    oracle=f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     g AS (
         SELECT doc_id,
-               md5(array_to_string(w[s.pos + 1 : s.pos + {SPAN_K}], ' '))
+               {span_hash_sql('s.pos', SPAN_K)}
                    AS gh
         FROM t, LATERAL (
             SELECT unnest(range(len(w) - {SPAN_K} + 1)) AS pos
@@ -1052,12 +1062,7 @@ def _suffixgram_dup_oracle() -> str:
            CAST(MIN(doc_id) AS BIGINT) AS earliest_doc
     FROM g GROUP BY gh
     HAVING COUNT(*) >= 2
-    """
-
-
-@register(
-    "streaming_suffixgram_dup_drain",
-    oracle=_suffixgram_dup_oracle(),
+    """,
     doc="STREAMING exact-substring dedup front line — the stream twin "
         "of dedup_substring_suffix_runs' detection stage (the pairing "
         "minhash bands / chunking / semdedup already have): documents "
@@ -1081,12 +1086,7 @@ def streaming_suffixgram_dup_drain(
         "doc_id", F.split("text", " ").alias("w")
     ).where(F.size("w") >= SPAN_K).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {SPAN_K}),"
-                f"  p -> md5(array_join(slice(w, p + 1, {SPAN_K}), ' ')))"
-            )
-        ).alias("gram_hash"),
+        F.explode(span_hashes(SPAN_K)).alias("gram_hash"),
     )
     agg = (
         grams.groupBy("gram_hash")
@@ -1099,51 +1099,15 @@ def streaming_suffixgram_dup_drain(
     return _drain(agg, "streaming_suffixgram_dup_tbl", "complete")
 
 
-def _hll_register_oracle() -> str:
-    return f"""
-    WITH h AS (
-        SELECT event_type,
-               ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                   ::BIGINT AS hv
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    r AS (
-        SELECT event_type, hv % {HLL_M} AS j,
-               CASE WHEN instr(lpad(bin(hv // {HLL_M}),
-                                    {HLL_WBITS}, '0'), '1') = 0
-                    THEN {HLL_WBITS + 1}
-                    ELSE instr(lpad(bin(hv // {HLL_M}),
-                                    {HLL_WBITS}, '0'), '1') END AS rho
-        FROM h
-    ),
-    reg AS (SELECT event_type, j, MAX(rho) AS m FROM r
-            GROUP BY event_type, j),
-    s AS (
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS hit,
-               SUM(CAST(1 << ({HLL_WBITS + 1} - m) AS BIGINT)) AS isum
-        FROM reg GROUP BY event_type
-    ),
-    est AS (
-        SELECT event_type, hit,
-               CAST({HLL_M} - hit AS BIGINT) AS zero_regs,
-               {HLL_ALPHA} * {HLL_M} * {HLL_M}
-                   * CAST(1 << {HLL_WBITS + 1} AS DOUBLE)
-                   / (isum + ({HLL_M} - hit)
-                      * CAST(1 << {HLL_WBITS + 1} AS BIGINT)) AS e_raw
-        FROM s
-    )
-    SELECT event_type, hit AS registers_hit, zero_regs,
-           ROUND(CASE WHEN e_raw <= 2.5 * {HLL_M} AND zero_regs > 0
-                      THEN {HLL_M} * ln({HLL_M} * 1.0 / zero_regs)
-                      ELSE e_raw END + 1e-9, 6) AS hll_estimate
-    FROM est
-    """
-
-
 @register(
     "streaming_hll_register_drain",
-    oracle=_hll_register_oracle(),
+    oracle=f"""
+    WITH reg AS ({HLL_REGISTERS_SQL}),
+    est AS ({hll_estimate_sql('reg', 'event_type')})
+    SELECT event_type, hit AS registers_hit, zero_regs,
+           ROUND(e + 1e-9, 6) AS hll_estimate
+    FROM est
+    """,
     doc="STREAMING distinct-count sketch — agg_hll_portable's stream "
         "twin: events arrive as a stream, each row hashes to its "
         "(event_type, register, rank) IN THE MAP STAGE, and the "
@@ -1160,50 +1124,22 @@ def _hll_register_oracle() -> str:
 def streaming_hll_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    wb, m = HLL_WBITS, HLL_M
     ev = _stream_events(spark, sf_dir).where(F.col("user_id").isNotNull())
-    h = ev.select(
-        "event_type",
-        F.conv(
-            F.substring(
-                F.md5(F.col("user_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long").alias("hv"),
+    regs = _drain(
+        hll_registers(ev), "streaming_hll_register_tbl", "complete"
     )
-    pos = F.expr(f"instr(lpad(bin(hv div {m}), {wb}, '0'), '1')")
-    r = h.select(
-        "event_type",
-        (F.col("hv") % m).alias("j"),
-        F.when(pos == 0, F.lit(wb + 1)).otherwise(pos).alias("rho"),
-    )
-    reg_stream = r.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
-    regs = _drain(reg_stream, "streaming_hll_register_tbl", "complete")
 
     # Batch readout over the drained registers (the stream's only
     # state); same scaled-integer arithmetic as agg_hll_portable.
-    s = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("hit"),
-        F.sum(
-            F.expr(f"CAST(shiftleft(1L, {wb + 1} - m) AS BIGINT)")
-        ).alias("isum"),
-    )
-    scale = 1 << (wb + 1)
-    e_raw = (
-        F.lit(HLL_ALPHA * m * m * float(scale))
-        / (F.col("isum") + (F.lit(m) - F.col("hit")) * F.lit(scale))
-    )
+    s = hll_sums(regs, "event_type")
+    zero_regs, e_raw = hll_raw_estimate(F.col("hit"), F.col("isum"))
     est = s.select(
         "event_type",
         F.col("hit").alias("registers_hit"),
-        (F.lit(m) - F.col("hit")).cast("long").alias("zero_regs"),
+        zero_regs.alias("zero_regs"),
         e_raw.alias("e_raw"),
     )
-    e = F.when(
-        (F.col("e_raw") <= 2.5 * m) & (F.col("zero_regs") > 0),
-        F.lit(float(m)) * F.log(F.lit(m) * 1.0 / F.col("zero_regs")),
-    ).otherwise(F.col("e_raw"))
+    e = hll_estimate(F.col("zero_regs"), F.col("e_raw"))
     return est.select(
         "event_type",
         "registers_hit",
@@ -1212,39 +1148,18 @@ def streaming_hll_register_drain(
     )
 
 
-def _cms_oracle() -> str:
-    bucket = cms_bucket_sql(0, "word", "duck").replace(
-        "'0:'", "CAST(r.j AS VARCHAR) || ':'"
-    )
-    bucket_w = cms_bucket_sql(0, "ex.word", "duck").replace(
-        "'0:'", "CAST(r.j AS VARCHAR) || ':'"
-    )
-    return f"""
-    WITH tok AS (
-        SELECT unnest(string_split(text, ' ')) AS word FROM documents
-    ),
-    t AS (SELECT word FROM tok WHERE word != ''),
-    reg AS (
-        SELECT r.j, {bucket} AS b,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t, (SELECT unnest(range({CMS_D})) AS j) r
-        GROUP BY r.j, b
-    ),
-    ex AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_count
-           FROM t GROUP BY word),
+@register(
+    "streaming_cms_register_drain",
+    oracle=f"""
+    {CMS_ORACLE_CORE}
     wb AS (
-        SELECT ex.word, r.j, {bucket_w} AS b
+        SELECT ex.word, r.j, {cms_bucket_sql('ex.word')} AS b
         FROM ex, (SELECT unnest(range({CMS_D})) AS j) r
     )
     SELECT wb.word, CAST(MIN(reg.cnt) AS BIGINT) AS cms_estimate
     FROM wb JOIN reg ON wb.j = reg.j AND wb.b = reg.b
     GROUP BY wb.word
-    """
-
-
-@register(
-    "streaming_cms_register_drain",
-    oracle=_cms_oracle(),
+    """,
     doc="STREAMING frequency sketch — agg_cms_portable's stream twin "
         "(the same lambda shape as streaming_hll_register_drain): "
         "document tokens arrive as a stream, each one hashes to its "
@@ -1268,24 +1183,7 @@ def streaming_cms_register_drain(
     t = stream.select(
         F.explode(F.split("text", " ")).alias("word")
     ).where(F.col("word") != "")
-    jb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.expr(cms_bucket_sql(j, "word", "spark")).alias("b"),
-                )
-                for j in range(CMS_D)
-            ]
-        )
-    )
-    reg_stream = (
-        t.select(jb.alias("jb"))
-        .select("jb.j", "jb.b")
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    regs = _drain(reg_stream, "streaming_cms_register_tbl", "complete")
+    regs = _drain(cms_registers(t), "streaming_cms_register_tbl", "complete")
 
     # Batch readout over the drained registers (the stream's only
     # state): per-word MIN over its buckets, same arithmetic as
@@ -1300,22 +1198,12 @@ def streaming_cms_register_drain(
         .agg(F.count(F.lit(1)).alias("_n"))
         .drop("_n")
     )
-    wb = ex.select("word", jb.alias("jb")).select("word", "jb.j", "jb.b")
-    return (
-        # bounded: constant sketch register grid
-        wb.join(F.broadcast(regs), ["j", "b"])
-        .groupBy("word")
-        .agg(F.min("cnt").cast("long").alias("cms_estimate"))
-    )
-
-
-def _bloom_oracle() -> str:
-    return bloom_oracle()
+    return cms_estimates(ex, regs, ["word"])
 
 
 @register(
     "streaming_bloom_bitset_drain",
-    oracle=_bloom_oracle(),
+    oracle=bloom_oracle(),
     doc="STREAMING Bloom membership sketch — dedup_bloom_portable's "
         "stream twin (completing the portable-sketch trio's stream "
         "pairings: HLL registers, CMS registers, Bloom bits): "
@@ -1338,11 +1226,11 @@ def streaming_bloom_bitset_drain(
         _documents_stream_dir(sf_dir)
     )
     tr_grams = (
-        stream.withColumn("h", bloom_split_hash())
+        stream.withColumn("h", md5_mod(F.col("doc_id"), 100))
         .where(F.col("h") < 80)
         .select(F.split("text", " ").alias("w"))
         .where(F.size("w") >= SPAN_K)
-        .select(bloom_gram_explode().alias("gh"))
+        .select(F.explode(span_hashes(SPAN_K)).alias("gh"))
     )
     bit_stream = (
         tr_grams.select(F.explode(F.array(*bloom_bits())).alias("bit"))
@@ -1356,9 +1244,7 @@ def streaming_bloom_bitset_drain(
     # Batch readout over the drained bit set (the stream's only
     # state): SHARED bloom_readout, so the flag semantics cannot drift
     # from dedup_bloom_portable's.
-    g = bloom_split_grams(load_table(spark, sf_dir, "documents"))
-    tr = g.where("is_train").select("gh").distinct()
-    te = g.where(~F.col("is_train")).select("gh").distinct()
+    tr, te = bloom_split_spans(load_table(spark, sf_dir, "documents"))
     return bloom_readout(te, tr, bits)
 
 
@@ -1426,17 +1312,13 @@ def streaming_weighted_reservoir_drain(
     )
 
 
-def _qsk_stream_oracle() -> str:
-    return (
+@register(
+    "streaming_histogram_register_drain",
+    oracle=(
         f"WITH {HIST_ORACLE_CORE} "
         "SELECT event_type, q, n_rows, n_clipped, registers_hit, "
         "hist_estimate FROM readout"
-    )
-
-
-@register(
-    "streaming_histogram_register_drain",
-    oracle=_qsk_stream_oracle(),
+    ),
     doc="STREAMING quantile sketch — agg_histogram_quantile_portable's "
         "stream twin (the same lambda shape as the HLL/CMS/Bloom "
         "drains): events arrive as a stream, each row maps to its "
@@ -1610,22 +1492,9 @@ def streaming_dedup_ttl_drain(
     return _drain(ev, "streaming_dedup_ttl_tbl", "append")
 
 
-def _mg_oracle() -> str:
-    return f"""
-    WITH toks AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    n AS (SELECT COUNT(*) AS n FROM toks)
-    SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM toks, n
-    GROUP BY tok, n.n
-    HAVING COUNT(*) > n.n / {MG_K}
-    """
-
-
 @register(
     "streaming_heavy_hitters_drain",
-    oracle=_mg_oracle(),
+    oracle=MG_ORACLE,
     doc="STREAMING heavy hitters — text_heavy_hitters_misra_gries's "
         "stream twin: document tokens arrive as a stream; each "
         "micro-batch partition folds through a bounded Misra-Gries "
@@ -1645,8 +1514,6 @@ def _mg_oracle() -> str:
 def streaming_heavy_hitters_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import pandas as pd
-
     from change_data_capture_poc_spark.sources.tables import load_table
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
@@ -1658,28 +1525,8 @@ def streaming_heavy_hitters_drain(
     toks = stream.select(
         F.explode(F.split("text", " ")).alias("tok")
     )
-
-    def mg(batches):
-        counters: dict[str, int] = {}
-        for pdf in batches:
-            for tok in pdf["tok"]:
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < MG_K:
-                    counters[tok] = 1
-                else:
-                    dead = []
-                    for t in counters:
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            dead.append(t)
-                    for t in dead:
-                        del counters[t]
-        if counters:
-            yield pd.DataFrame({"tok": list(counters)})
-
     cand_stream = (
-        toks.mapInPandas(mg, "tok string")
+        mg_candidates(toks)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("_hits"))
     )
@@ -1687,23 +1534,10 @@ def streaming_heavy_hitters_drain(
         cand_stream, "streaming_heavy_hitters_tbl", "complete"
     ).select("tok")
 
-    d = load_table(spark, sf_dir, "documents")
-    btoks = d.select(
+    btoks = load_table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("tok")
     )
-    n = btoks.agg(F.count("*").alias("n"))
-    exact = (
-        # bounded: Misra-Gries heavy hitters, counter-capacity-capped
-        btoks.join(F.broadcast(cand), "tok")
-        .groupBy("tok")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    return (
-        # bounded: 1-row token total
-        exact.crossJoin(F.broadcast(n))
-        .where(F.col("cnt") > F.col("n") / MG_K)
-        .select("tok", "cnt")
-    )
+    return mg_heavy_hitters(btoks, cand)
 
 
 def _chunk_cdc_oracle() -> str:

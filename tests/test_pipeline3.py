@@ -782,6 +782,11 @@ def test_misra_gries_partitioning_independent(spark, sf_dir):
     stream is partitioned: MG survivors are a candidate superset whose
     exact rescan applies the threshold, so 1-partition and 16-partition
     runs agree (the sketch state differs; the answer must not)."""
+    from change_data_capture_poc_spark.operators.sketch import (
+        MG_K,
+        mg_candidates,
+        mg_heavy_hitters,
+    )
     from change_data_capture_poc_spark.registry import all_queries
 
     q = all_queries()["text_heavy_hitters_misra_gries"]
@@ -790,49 +795,56 @@ def test_misra_gries_partitioning_independent(spark, sf_dir):
 
     # Same computation with the token stream forced through different
     # partitionings.
-    from change_data_capture_poc_spark.operators.sketch import MG_K
-    from pyspark.sql import functions as F
-
     toks = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select(F.explode(F.split("text", " ")).alias("tok"))
     )
     for parts in (1, 16):
         t = toks.repartition(parts)
-        n = t.agg(F.count("*").alias("n"))
-        import pandas as pd
-
-        def mg(batches):
-            counters = {}
-            for pdf in batches:
-                for tok in pdf["tok"]:
-                    if tok in counters:
-                        counters[tok] += 1
-                    elif len(counters) < MG_K:
-                        counters[tok] = 1
-                    else:
-                        dead = []
-                        for k in counters:
-                            counters[k] -= 1
-                            if counters[k] == 0:
-                                dead.append(k)
-                        for k in dead:
-                            del counters[k]
-            if counters:
-                yield pd.DataFrame({"tok": list(counters)})
-
-        cand = t.mapInPandas(mg, "tok string").distinct()
-        exact = t.join(F.broadcast(cand), "tok").groupBy("tok").agg(
-            F.count("*").cast("long").alias("cnt")
-        )
         got = {
             (r.tok, r.cnt)
-            for r in exact.crossJoin(F.broadcast(n))
-            .where(F.col("cnt") > F.col("n") / MG_K)
-            .select("tok", "cnt")
-            .collect()
+            for r in mg_heavy_hitters(
+                t, mg_candidates(t).distinct()
+            ).collect()
         }
         assert got == base, f"partitioning {parts} changed the answer"
+
+    # The corpus vocabulary is smaller than MG_K, so the counters never
+    # fill above; this stream has 5 x MG_K distinct light tokens with
+    # the heavy ones arriving after the counters are full, so they only
+    # survive if the fold evicts. Order is kept: one input partition.
+    stream = (
+        [f"light{i}" for i in range(5 * MG_K)]
+        + ["heavy_a", "heavy_b"] * 40
+        + [f"late{i}" for i in range(MG_K)]
+    )
+    n = len(stream)
+    counts = {tok: stream.count(tok) for tok in set(stream)}
+    expected = {(tok, c) for tok, c in counts.items() if c > n / MG_K}
+    assert {tok for tok, _ in expected} == {"heavy_a", "heavy_b"}
+    df = spark.createDataFrame([(tok,) for tok in stream], "tok string")
+    cand = mg_candidates(df.coalesce(1))
+    survivors = [r.tok for r in cand.collect()]
+    assert len(survivors) <= MG_K  # bounded state
+    got = {(r.tok, r.cnt) for r in mg_heavy_hitters(df, cand).collect()}
+    assert got == expected
+
+
+def test_streaming_heavy_hitters_equals_batch(spark, sf_dir):
+    """The stream twin drains Misra-Gries candidates per micro-batch
+    and finishes with the batch rescan, so its rows equal the batch
+    query's rows exactly."""
+    from change_data_capture_poc_spark.registry import all_queries
+
+    def rows(name):
+        return sorted(
+            (r.tok, r.cnt)
+            for r in all_queries()[name].fn(spark, sf_dir).collect()
+        )
+
+    batch = rows("text_heavy_hitters_misra_gries")
+    assert batch
+    assert rows("streaming_heavy_hitters_drain") == batch
 
 
 def test_temperature_resample_allocation(spark, sf_dir):

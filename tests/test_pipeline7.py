@@ -30,10 +30,7 @@ def test_cms_register_merge_associativity(spark, sf_dir):
     """Registers built on two disjoint shards and SUMMED equal the
     registers built on the whole corpus — the property that lets the
     sketch be maintained per-partition / per-stream-batch and merged."""
-    from change_data_capture_poc_spark.operators.sketch import (
-        CMS_D,
-        cms_bucket_sql,
-    )
+    from change_data_capture_poc_spark.operators.sketch import cms_registers
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -41,27 +38,7 @@ def test_cms_register_merge_associativity(spark, sf_dir):
         t = df.select(
             F.explode(F.split("text", " ")).alias("word")
         ).where(F.col("word") != "")
-        jb = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.expr(cms_bucket_sql(j, "word", "spark")).alias(
-                            "b"
-                        ),
-                    )
-                    for j in range(CMS_D)
-                ]
-            )
-        )
-        rows = (
-            t.select(jb.alias("jb"))
-            .select("jb.j", "jb.b")
-            .groupBy("j", "b")
-            .count()
-            .collect()
-        )
-        return {(r.j, r.b): r["count"] for r in rows}
+        return {(r.j, r.b): r.cnt for r in cms_registers(t).collect()}
 
     whole = registers(d)
     even = registers(d.where(F.col("doc_id") % 2 == 0))

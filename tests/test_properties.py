@@ -643,6 +643,7 @@ def test_hll_rho_matches_python_model(spark, hvs):
     from change_data_capture_poc_spark.operators.sketch import (
         HLL_M,
         HLL_WBITS,
+        hll_rho,
     )
 
     def model_rho(hv: int) -> int:
@@ -653,17 +654,9 @@ def test_hll_rho_matches_python_model(spark, hvs):
         return HLL_WBITS + 1
 
     df = spark.createDataFrame([(h,) for h in hvs], "hv bigint")
-    pos = F.expr(
-        f"instr(lpad(bin(hv div {HLL_M}), {HLL_WBITS}, '0'), '1')"
-    )
     got = {
         r.hv: r.rho
-        for r in df.select(
-            "hv",
-            F.when(pos == 0, F.lit(HLL_WBITS + 1))
-            .otherwise(pos)
-            .alias("rho"),
-        ).collect()
+        for r in df.select("hv", hll_rho().alias("rho")).collect()
     }
     for h in hvs:
         assert got[h] == model_rho(h), h
