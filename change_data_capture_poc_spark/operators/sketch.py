@@ -354,12 +354,12 @@ def bloom_readout(te: DataFrame, tr: DataFrame, bits: DataFrame) -> DataFrame:
     )
 
 
-def bloom_oracle() -> str:
-    tr_bits = ", ".join(
-        md5_bucket_sql(f"'{h}:'", "gh", BLOOM_M, "duck")
-        for h in range(BLOOM_H)
-    )
-    return f"""
+_BLOOM_BITS_SQL = ", ".join(
+    md5_bucket_sql(f"'{h}:'", "gh", BLOOM_M, "duck") for h in range(BLOOM_H)
+)
+
+# DuckDB oracle of dedup_bloom_portable and its stream twin.
+BLOOM_ORACLE = f"""
     WITH s AS (
         SELECT doc_id, string_split(text, ' ') AS w,
                ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
@@ -378,7 +378,7 @@ def bloom_oracle() -> str:
     tr AS (SELECT DISTINCT gh FROM g WHERE is_train),
     te AS (SELECT DISTINCT gh FROM g WHERE NOT is_train),
     bits AS (
-        SELECT DISTINCT unnest([{tr_bits}]) AS bit FROM tr
+        SELECT DISTINCT unnest([{_BLOOM_BITS_SQL}]) AS bit FROM tr
     ),
     probe AS (
         -- distinct-bit semantics: a gram whose hash functions collide
@@ -386,8 +386,8 @@ def bloom_oracle() -> str:
         -- and is flagged iff every one of those is set
         SELECT te.gh,
                (SELECT COUNT(*) FROM bits
-                WHERE bit IN ({tr_bits}))
-                   = len(list_distinct([{tr_bits}])) AS flagged,
+                WHERE bit IN ({_BLOOM_BITS_SQL}))
+                   = len(list_distinct([{_BLOOM_BITS_SQL}])) AS flagged,
                te.gh IN (SELECT gh FROM tr) AS is_dup
         FROM te
     )

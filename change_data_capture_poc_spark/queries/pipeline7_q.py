@@ -87,7 +87,7 @@ from change_data_capture_poc_spark.operators.sketch import (
     CMS_W,
     SPAN_K,
     bloom_bits,
-    bloom_oracle,
+    BLOOM_ORACLE,
     bloom_readout,
     bloom_split_spans,
     cms_bucket_sql,
@@ -1222,7 +1222,7 @@ def corpus_weighted_priority_sample(
 
 @register(
     "dedup_bloom_portable",
-    oracle=bloom_oracle(),
+    oracle=BLOOM_ORACLE,
     doc=f"PORTABLE Bloom-filter span dedup with MEASURED false-"
         f"positive rate (the Dolma-style dedup front line): the "
         f"train-split's distinct {SPAN_K}-token span fingerprints set "

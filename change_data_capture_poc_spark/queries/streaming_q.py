@@ -34,7 +34,7 @@ from change_data_capture_poc_spark.operators.sketch import (
     MG_ORACLE,
     SPAN_K,
     bloom_bits,
-    bloom_oracle,
+    BLOOM_ORACLE,
     bloom_readout,
     bloom_split_spans,
     cms_bucket_sql,
@@ -1203,7 +1203,7 @@ def streaming_cms_register_drain(
 
 @register(
     "streaming_bloom_bitset_drain",
-    oracle=bloom_oracle(),
+    oracle=BLOOM_ORACLE,
     doc="STREAMING Bloom membership sketch — dedup_bloom_portable's "
         "stream twin (completing the portable-sketch trio's stream "
         "pairings: HLL registers, CMS registers, Bloom bits): "
