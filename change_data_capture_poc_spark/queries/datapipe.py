@@ -25,6 +25,17 @@ from change_data_capture_poc_spark.functions.text import ngram_shingles
 from change_data_capture_poc_spark.functions.vectors import (
     cosine_similarity as _cosine_expr,
 )
+from change_data_capture_poc_spark.operators.minhash import (
+    BANDS,
+    MH_HX_SQL,
+    MH_MINS_SQL,
+    MINHASH_K,
+    MINHASH_PAIRS_SQL,
+    NGRAM_SQL,
+    spark_bands,
+    spark_grams,
+    spark_sigs,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.windows import global_window
@@ -80,44 +91,13 @@ def dedup_exact_keep_first(spark, sf_dir):
     )
 
 
-# Word 4-gram shingles: with a small vocabulary 3-gram posting lists
-# are dense (every gram shared by many docs → quadratic candidate
-# blowup); 4-grams keep the same planted near-dup pairs (all J >= 0.88
-# empirically) while making the inverted index ~30× sparser.
-_NGRAM_N = 4
-_NGRAM_SQL = f"""
-        SELECT doc_id,
-               list_distinct(list_transform(range(len(w) - {_NGRAM_N - 1}),
-                   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4])) AS grams
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-        WHERE len(w) >= {_NGRAM_N}
-"""
-
-
-def _spark_grams(d: DataFrame) -> DataFrame:
-    """doc_id + distinct word-4-gram array (engine side of _NGRAM_SQL).
-
-    The token array is materialized in its own projection first: an
-    inlined ``split()`` inside the gram lambda is re-evaluated for every
-    ``element_at`` of every gram (4 x |grams| splits per document —
-    measured 10x slower at sf0.1). A projection boundary makes it a
-    compute-once column.
-    """
-    toks = d.select("doc_id", F.split("text", " ").alias("w")).where(
-        F.size("w") >= _NGRAM_N
-    )
-    return toks.select(
-        "doc_id", ngram_shingles(F.col("w"), _NGRAM_N).alias("grams")
-    )
-
-
 _JACCARD_T = 0.8
 
 
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH g AS ({_NGRAM_SQL}),
+    WITH g AS ({NGRAM_SQL}),
     toks AS (SELECT doc_id, unnest(grams) AS gram FROM g),
     sizes AS (SELECT doc_id, len(grams) AS n FROM g),
     inter AS (
@@ -168,7 +148,7 @@ def ngram_jaccard_pairs(spark, sf_dir, rarest_first: bool = False):
     modes return identical pairs (pytest-pinned).
     """
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d)
+    g = spark_grams(d)
 
     if rarest_first:
         ex = g.select("doc_id", F.explode("grams").alias("gram"))
@@ -235,99 +215,12 @@ def ngram_jaccard_pairs(spark, sf_dir, rarest_first: bool = False):
     )
 
 
-_MINHASH_K = 12
-_BANDS = 4  # 4 bands × 3 rows
-# One md5 per gram → 32-bit base hash → K linear-congruential
-# permutations h_i = (a_i·x + b_i) mod p. 12× cheaper than K
-# independent md5 passes, identical arithmetic in both engines.
-_MH_P = 2147483647
-_MH_AB = [(2 * i + 3, 7 * i + 1) for i in range(_MINHASH_K)]
-
-
-def _minhash_sql():
-    hx = ("SELECT doc_id, list_transform(grams, s -> "
-          "('0x' || substring(md5(s), 1, 8))::BIGINT % {p}) AS hx FROM g"
-          ).format(p=_MH_P)
-    mins = ",\n".join(
-        f"list_aggregate(list_transform(hx, x -> ({a} * x + {b}) % {_MH_P}), 'min') AS m{i}"
-        for i, (a, b) in enumerate(_MH_AB)
-    )
-    return hx, mins
-
-
-_MH_HX_SQL, _MH_MINS_SQL = _minhash_sql()
-
-
-def _spark_sigs(g):
-    """(doc_id, grams) → (doc_id, sig array<long>[K]). Base hash per
-    shingle (one md5), then ONE fold over the hash array carrying all
-    K running minima (zip_with against the literal (a,b) coefficient
-    array). K separate array_min(transform) columns cost 36x more at
-    8x scale: interpreted HOFs have no common-subexpression
-    elimination, so per-permutation passes re-walk (and re-allocate)
-    the array per column."""
-    hx = g.select(
-        "doc_id",
-        F.transform(
-            "grams",
-            lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-            % _MH_P,
-        ).alias("hx"),
-    )
-    ab = F.array(
-        *[
-            F.struct(
-                F.lit(a).cast("long").alias("a"),
-                F.lit(b).cast("long").alias("b"),
-            )
-            for a, b in _MH_AB
-        ]
-    )
-    sig_arr = F.aggregate(
-        F.col("hx"),
-        F.array_repeat(F.lit(_MH_P).cast("long"), _MINHASH_K),
-        lambda acc, x: F.zip_with(
-            acc,
-            ab,
-            lambda m, c: F.least(
-                m, (c.getField("a") * x + c.getField("b")) % _MH_P
-            ),
-        ),
-    )
-    return hx.select("doc_id", sig_arr.alias("sig"))
-
-
-def _spark_bands(g):
-    """(doc_id, grams) → exploded LSH band rows (doc_id, band_id,
-    band_key) over the _spark_sigs signatures. Shared by the batch
-    pair join (dedup_minhash_lsh) and the incremental delta-vs-index
-    gate (dedup_incremental_delta_index)."""
-    sig = _spark_sigs(g)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                "|", *[F.element_at("sig", b * 3 + j + 1) for j in range(3)]
-            ).alias("band_key"),
-        )
-        for b in range(_BANDS)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select(
-        "doc_id",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_key").alias("band_key"),
-    )
-
-
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH g AS ({_NGRAM_SQL}),
-    hx AS ({_MH_HX_SQL}),
-    sig AS (SELECT doc_id, {_MH_MINS_SQL} FROM hx),
+    WITH g AS ({NGRAM_SQL}),
+    hx AS ({MH_HX_SQL}),
+    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
     bands AS (
         SELECT doc_id, b.b AS band_id,
                CASE b.b
@@ -336,7 +229,7 @@ def _spark_bands(g):
                    WHEN 2 THEN concat_ws('|', m6, m7, m8)
                    ELSE concat_ws('|', m9, m10, m11)
                END AS band_key
-        FROM sig, (SELECT unnest(range({_BANDS})) AS b) b
+        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
     )
     SELECT DISTINCT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b
     FROM bands x
@@ -351,8 +244,8 @@ def _spark_bands(g):
 )
 def dedup_minhash_lsh(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d)
-    bands = _spark_bands(g).transform(persist_once)
+    g = spark_grams(d)
+    bands = spark_bands(g).transform(persist_once)
     x = bands.alias("x")
     y = bands.alias("y")
     return (
@@ -373,9 +266,9 @@ def dedup_minhash_lsh(spark, sf_dir):
 @register(
     "eval_minhash_estimator_calibration",
     oracle=f"""
-    WITH g AS ({_NGRAM_SQL}),
-    hx AS ({_MH_HX_SQL}),
-    sig AS (SELECT doc_id, {_MH_MINS_SQL} FROM hx),
+    WITH g AS ({NGRAM_SQL}),
+    hx AS ({MH_HX_SQL}),
+    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
     bands AS (
         SELECT doc_id, b.b AS band_id,
                CASE b.b
@@ -384,7 +277,7 @@ def dedup_minhash_lsh(spark, sf_dir):
                    WHEN 2 THEN concat_ws('|', m6, m7, m8)
                    ELSE concat_ws('|', m9, m10, m11)
                END AS band_key
-        FROM sig, (SELECT unnest(range({_BANDS})) AS b) b
+        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
     ),
     pairs AS (
         SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -421,31 +314,31 @@ def dedup_minhash_lsh(spark, sf_dir):
     )
     SELECT CAST(sig_matches AS INT) AS sig_matches,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           ROUND(sig_matches / {_MINHASH_K}.0 + 1e-9, 6) AS est_jaccard,
+           ROUND(sig_matches / {MINHASH_K}.0 + 1e-9, 6) AS est_jaccard,
            ROUND(AVG(inter * 1.0 / uni) + 1e-9, 6) AS mean_exact_jaccard,
-           ROUND(AVG(ABS(sig_matches / {_MINHASH_K}.0
+           ROUND(AVG(ABS(sig_matches / {MINHASH_K}.0
                          - inter * 1.0 / uni)) + 1e-9, 6) AS mean_abs_err
     FROM scored
     GROUP BY sig_matches
     """,
     doc=f"MinHash estimator calibration: for every LSH candidate pair, "
         f"compare the signature-agreement estimate "
-        f"(matching components / {_MINHASH_K}) against EXACT set "
+        f"(matching components / {MINHASH_K}) against EXACT set "
         f"Jaccard over the shingle sets, grouped by match count — the "
-        f"knob-tuning readout that tells you whether {_MINHASH_K} "
-        f"permutations / {_BANDS}x3 banding is tight enough before "
+        f"knob-tuning readout that tells you whether {MINHASH_K} "
+        f"permutations / {BANDS}x3 banding is tight enough before "
         f"trusting the estimate corpus-wide (a biased row here means "
         f"re-band BEFORE the 100 TB dedup run, not after). Exact "
         f"Jaccard is computed only on the candidate pairs the bands "
         f"emit, so the join volume is the candidate set, never "
-        f"all-pairs; output is a <= {_MINHASH_K + 1}-row calibration "
+        f"all-pairs; output is a <= {MINHASH_K + 1}-row calibration "
         f"table.",
 )
 def eval_minhash_estimator_calibration(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d).transform(persist_once)
+    g = spark_grams(d).transform(persist_once)
     # sigs feed both pair sides — pin so the minhash fold runs once
-    sig = _spark_sigs(g).transform(persist_once)
+    sig = spark_sigs(g).transform(persist_once)
     pairs = dedup_minhash_lsh(spark, sf_dir).select(
         F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b")
     )
@@ -478,7 +371,7 @@ def eval_minhash_estimator_calibration(spark, sf_dir):
             F.round(
                 F.avg(
                     F.abs(
-                        F.col("sig_matches") / float(_MINHASH_K)
+                        F.col("sig_matches") / float(MINHASH_K)
                         - F.col("exact_j")
                     )
                 )
@@ -490,7 +383,7 @@ def eval_minhash_estimator_calibration(spark, sf_dir):
             "sig_matches",
             "n_pairs",
             F.round(
-                F.col("sig_matches") / float(_MINHASH_K) + F.lit(1e-9), 6
+                F.col("sig_matches") / float(MINHASH_K) + F.lit(1e-9), 6
             ).alias("est_jaccard"),
             "mean_exact_jaccard",
             "mean_abs_err",
@@ -501,9 +394,9 @@ def eval_minhash_estimator_calibration(spark, sf_dir):
 @register(
     "dedup_incremental_delta_index",
     oracle=f"""
-    WITH g AS ({_NGRAM_SQL}),
-    hx AS ({_MH_HX_SQL}),
-    sig AS (SELECT doc_id, {_MH_MINS_SQL} FROM hx),
+    WITH g AS ({NGRAM_SQL}),
+    hx AS ({MH_HX_SQL}),
+    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
     bands AS (
         SELECT doc_id, b.b AS band_id,
                CASE b.b
@@ -512,7 +405,7 @@ def eval_minhash_estimator_calibration(spark, sf_dir):
                    WHEN 2 THEN concat_ws('|', m6, m7, m8)
                    ELSE concat_ws('|', m9, m10, m11)
                END AS band_key
-        FROM sig, (SELECT unnest(range({_BANDS})) AS b) b
+        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
     ),
     t AS (SELECT max(doc_id) // 2 AS split FROM documents),
     cand AS (
@@ -551,7 +444,7 @@ def eval_minhash_estimator_calibration(spark, sf_dir):
 )
 def dedup_incremental_delta_index(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d)
+    g = spark_grams(d)
     split = d.agg(F.expr("max(doc_id) div 2").alias("split"))
     # The split filters must sit BELOW the band self-join (filtering
     # the join output would still generate every delta x delta and
@@ -559,7 +452,7 @@ def dedup_incremental_delta_index(spark, sf_dir):
     # exists to avoid). Attaching the broadcast scalar to the band
     # table BEFORE the join lets each side prune to its half.
     # bounded: 1-row scalar (max(doc_id) div 2)
-    bands = _spark_bands(g).crossJoin(F.broadcast(split)).transform(persist_once)
+    bands = spark_bands(g).crossJoin(F.broadcast(split)).transform(persist_once)
     n = bands.where(F.col("doc_id") >= F.col("split")).alias("n")
     x = bands.where(F.col("doc_id") < F.col("split")).alias("x")
     cand = (
@@ -594,34 +487,11 @@ def dedup_incremental_delta_index(spark, sf_dir):
     )
 
 
-_MINHASH_PAIRS_SQL = f"""
-    g AS ({_NGRAM_SQL}),
-    hx AS ({_MH_HX_SQL}),
-    sig AS (SELECT doc_id, {_MH_MINS_SQL} FROM hx),
-    bands AS (
-        SELECT doc_id, b.b AS band_id,
-               CASE b.b
-                   WHEN 0 THEN concat_ws('|', m0, m1, m2)
-                   WHEN 1 THEN concat_ws('|', m3, m4, m5)
-                   WHEN 2 THEN concat_ws('|', m6, m7, m8)
-                   ELSE concat_ws('|', m9, m10, m11)
-               END AS band_key
-        FROM sig, (SELECT unnest(range({_BANDS})) AS b) b
-    ),
-    pairs AS (
-        SELECT DISTINCT x.doc_id AS pa, y.doc_id AS pb
-        FROM bands x
-        JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
-                    AND x.doc_id < y.doc_id
-    )
-"""
-
-
 @register(
     "dedup_cluster_label_propagation",
     oracle=f"""
     WITH RECURSIVE
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     reach(a, b) AS (
@@ -1086,7 +956,7 @@ _SW_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
 )
 def text_quality_stats(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    # Materialize the token array once (see _spark_grams: an inlined
+    # Materialize the token array once (see spark_grams: an inlined
     # split() re-evaluates per consuming expression).
     t = d.select(
         "doc_id", "lang", "text", F.split("text", " ").alias("w")
@@ -2064,7 +1934,7 @@ _PR_CTES = ",\n    ".join(
     "graph_pagerank_minhash",
     oracle=f"""
     WITH
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     deg AS (SELECT a, COUNT(*) AS d FROM edges GROUP BY a),
@@ -2336,7 +2206,7 @@ def events_hour_grid_fill(spark, sf_dir):
     "graph_triangle_count",
     oracle=f"""
     WITH
-    {_MINHASH_PAIRS_SQL}
+    {MINHASH_PAIRS_SQL}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
     FROM pairs e1
     JOIN pairs e2 ON e2.pa = e1.pb
@@ -2492,7 +2362,7 @@ def sample_fixed_per_stratum(spark, sf_dir):
     "sql_recursive_reachability",
     oracle=f"""
     WITH RECURSIVE
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     reach(a, b, lvl) AS (
@@ -3117,7 +2987,7 @@ def events_time_weighted_avg(spark, sf_dir):
 @register(
     "eval_minhash_vs_exact",
     oracle=f"""
-    WITH g AS ({_NGRAM_SQL}),
+    WITH g AS ({NGRAM_SQL}),
     tk AS (SELECT doc_id, unnest(grams) AS gram FROM g),
     sizes AS (SELECT doc_id, len(grams) AS n FROM g),
     inter AS (
@@ -3132,8 +3002,8 @@ def events_time_weighted_avg(spark, sf_dir):
         JOIN sizes sb ON inter.doc_id_b = sb.doc_id
         WHERE c * 1.0 / (sa.n + sb.n - c) >= {_JACCARD_T}
     ),
-    hx AS ({_MH_HX_SQL}),
-    sig AS (SELECT doc_id, {_MH_MINS_SQL} FROM hx),
+    hx AS ({MH_HX_SQL}),
+    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
     bands AS (
         SELECT doc_id, b.b AS band_id,
                CASE b.b
@@ -3142,7 +3012,7 @@ def events_time_weighted_avg(spark, sf_dir):
                    WHEN 2 THEN concat_ws('|', m6, m7, m8)
                    ELSE concat_ws('|', m9, m10, m11)
                END AS band_key
-        FROM sig, (SELECT unnest(range({_BANDS})) AS b) b
+        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
     ),
     approx AS (
         SELECT DISTINCT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b
@@ -3695,7 +3565,7 @@ def kmeans_one_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_survivors",
     oracle=f"""
     WITH RECURSIVE
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     reach(a, b) AS (
@@ -3750,7 +3620,7 @@ def dedup_survivors(spark, sf_dir):
     "dedup_impact_by_source",
     oracle=f"""
     WITH RECURSIVE
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     reach(a, b) AS (

@@ -36,6 +36,10 @@ from change_data_capture_poc_spark.functions.windows import (
 )
 from change_data_capture_poc_spark.functions.caching import persist_once
 from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.operators.minhash import (
+    MINHASH_PAIRS_SQL,
+    spark_grams,
+)
 
 
 # --------------------------------------------------------------------
@@ -493,12 +497,8 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 def _containment_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
-    WITH {_MINHASH_PAIRS_SQL}
+    WITH {MINHASH_PAIRS_SQL}
     SELECT p.pa AS doc_id_a, p.pb AS doc_id_b,
            ROUND(len(list_intersect(ga.grams, gb.grams)) * 1.0
                  / len(ga.grams) + 1e-9, 6) AS containment_a,
@@ -546,12 +546,11 @@ def _pair_grams(g: DataFrame):
 )
 def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from change_data_capture_poc_spark.queries.datapipe import (
-        _spark_grams,
         dedup_minhash_lsh,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d)
+    g = spark_grams(d)
     pairs = dedup_minhash_lsh(spark, sf_dir)
     ga, gb = _pair_grams(g)
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
@@ -862,12 +861,8 @@ def embedding_pca_power_iteration(
 # --------------------------------------------------------------------
 
 def _leakage_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
-    WITH {_MINHASH_PAIRS_SQL},
+    WITH {MINHASH_PAIRS_SQL},
     sp AS (
         SELECT doc_id,
                CASE WHEN h < 80 THEN 'train'
@@ -931,12 +926,8 @@ _CONTAIN_T = 0.9
 
 
 def _containment_survivors_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
-    WITH {_MINHASH_PAIRS_SQL},
+    WITH {MINHASH_PAIRS_SQL},
     scored AS (
         SELECT p.pa, p.pb,
                len(list_intersect(ga.grams, gb.grams)) AS inter,
@@ -977,12 +968,11 @@ def dedup_containment_survivors(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.queries.datapipe import (
-        _spark_grams,
         dedup_minhash_lsh,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d)
+    g = spark_grams(d)
     pairs = dedup_minhash_lsh(spark, sf_dir)
     ga, gb = _pair_grams(g)
     scored = (
@@ -1014,12 +1004,8 @@ def dedup_containment_survivors(
 
 
 def _cross_source_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
-    WITH {_MINHASH_PAIRS_SQL}
+    WITH {MINHASH_PAIRS_SQL}
     SELECT LEAST(da.source, db.source) AS source_x,
            GREATEST(da.source, db.source) AS source_y,
            CAST(COUNT(*) AS BIGINT) AS n_dup_pairs
@@ -1876,13 +1862,9 @@ def kmeans_multi_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 def _cluster_size_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
     WITH RECURSIVE
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     reach(a, b) AS (

@@ -62,6 +62,10 @@ from change_data_capture_poc_spark.operators.sketch import (
     span_hash_sql,
     span_hashes,
 )
+from change_data_capture_poc_spark.operators.minhash import (
+    NGRAM_SQL,
+    spark_grams,
+)
 
 # ---------------------------------------------------------------------------
 # dedup_substring_suffix_runs
@@ -888,10 +892,8 @@ _KNN_T = 0.2    # similarity floor (graph sparsifier)
 
 
 def _knn_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import _NGRAM_SQL
-
     return f"""
-    WITH g AS ({_NGRAM_SQL}),
+    WITH g AS ({NGRAM_SQL}),
     toks AS (SELECT doc_id, unnest(grams) AS gram FROM g),
     sizes AS (SELECT doc_id, len(grams) AS n FROM g),
     inter AS (
@@ -949,10 +951,8 @@ def _knn_oracle() -> str:
 def text_knn_similarity_graph(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.datapipe import _spark_grams
-
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d)
+    g = spark_grams(d)
     # PPJoin prefix filter at t = 1/5 (the graph floor): a pair with
     # J >= t must collide within each side's first n - ceil(t*n) + 1
     # canonically-ordered grams, so only prefixes enter the inverted-

@@ -115,6 +115,10 @@ from change_data_capture_poc_spark.operators.ann import (
     rounded_l2,
     variant_scores,
 )
+from change_data_capture_poc_spark.operators.minhash import (
+    MINHASH_PAIRS_SQL,
+    spark_grams,
+)
 
 # ---------------------------------------------------------------------------
 # agg_cms_portable — cross-engine-exact Count-Min sketch
@@ -1031,12 +1035,8 @@ def events_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
-    WITH {_MINHASH_PAIRS_SQL},
+    WITH {MINHASH_PAIRS_SQL},
     e AS (SELECT pa AS a, pb AS b FROM pairs),
     w AS (SELECT e1.a, e1.b, e2.b AS c
           FROM e e1 JOIN e e2 ON e1.b = e2.a),
@@ -1854,13 +1854,9 @@ def events_holt_linear_smoothing(
 
 
 def _rep_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     return f"""
     WITH RECURSIVE
-    {_MINHASH_PAIRS_SQL},
+    {MINHASH_PAIRS_SQL},
     edges AS (SELECT pa AS a, pb AS b FROM pairs
               UNION SELECT pb, pa FROM pairs),
     reach(a, b) AS (
@@ -1949,13 +1945,9 @@ _DTS_THRESHOLDS = (400, 500, 600, 700, 800, 900)  # permille
 
 
 def _dts_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_PAIRS_SQL,
-    )
-
     th = ", ".join(str(t) for t in _DTS_THRESHOLDS)
     return f"""
-    WITH {_MINHASH_PAIRS_SQL},
+    WITH {MINHASH_PAIRS_SQL},
     cand AS (SELECT pa AS a, pb AS b FROM pairs),
     tk AS (SELECT doc_id, unnest(grams) AS gram FROM g),
     sizes AS (SELECT doc_id, len(grams) AS n FROM g),
@@ -2014,12 +2006,11 @@ def dedup_threshold_sensitivity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.queries.datapipe import (
-        _spark_grams,
         dedup_minhash_lsh,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    g = _spark_grams(d).transform(persist_once)  # grams feed the token join + sizes
+    g = spark_grams(d).transform(persist_once)  # grams feed the token join + sizes
     # Candidates come from the REGISTERED pair query (same reuse rule
     # as the triangle census): the curve grades exactly the pairs the
     # production dedup path would verify.

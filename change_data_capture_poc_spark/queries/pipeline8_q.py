@@ -58,6 +58,12 @@ from change_data_capture_poc_spark.operators.ann import (
     sampled_recall,
     variant_tag,
 )
+from change_data_capture_poc_spark.operators.minhash import (
+    MINHASH_K,
+    MINHASH_PAIRS_SQL,
+    spark_grams,
+    spark_sigs,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -937,12 +943,7 @@ def privacy_k_anonymity_audit(
 
 
 def _bbit_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_K,
-        _MINHASH_PAIRS_SQL,
-    )
-
-    k = _MINHASH_K
+    k = MINHASH_K
     full_eq = " + ".join(
         f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
         for i in range(k)
@@ -952,7 +953,7 @@ def _bbit_oracle() -> str:
         for i in range(k)
     )
     return f"""
-    WITH {_MINHASH_PAIRS_SQL},
+    WITH {MINHASH_PAIRS_SQL},
     m AS (
         SELECT p.pa AS doc_id_a, p.pb AS doc_id_b,
                CAST({bit_eq} AS BIGINT) AS bits_match,
@@ -997,9 +998,6 @@ def eval_bbit_minhash_compression(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.queries.datapipe import (
-        _MINHASH_K,
-        _spark_grams,
-        _spark_sigs,
         dedup_minhash_lsh,
     )
 
@@ -1007,14 +1005,14 @@ def eval_bbit_minhash_compression(
         persist_once,
     )
 
-    k = _MINHASH_K
+    k = MINHASH_K
     pairs = dedup_minhash_lsh(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     # grams feed both gram sides AND the signature fold; sigs feed both
     # signature sides — pin each so the shingle/minhash computation
     # runs once instead of four gram passes (sa/sb/ga/gb branches).
-    g = _spark_grams(d).transform(persist_once)
-    sig = _spark_sigs(g).transform(persist_once)
+    g = spark_grams(d).transform(persist_once)
+    sig = spark_sigs(g).transform(persist_once)
     sa = sig.select(
         F.col("doc_id").alias("doc_id_a"), F.col("sig").alias("sig_a")
     )

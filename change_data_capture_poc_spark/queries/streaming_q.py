@@ -55,6 +55,14 @@ from change_data_capture_poc_spark.operators.sketch import (
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
 from change_data_capture_poc_spark.sources.tables import read_events_raw
+from change_data_capture_poc_spark.operators.minhash import (
+    BANDS,
+    MH_HX_SQL,
+    MH_MINS_SQL,
+    NGRAM_SQL,
+    spark_bands,
+    spark_grams,
+)
 
 _EVENTS_RAW_SCHEMA_NANOS = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
@@ -825,17 +833,10 @@ def _documents_stream_dir(sf_dir: str) -> str:
 
 
 def _minhash_band_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _BANDS,
-        _MH_HX_SQL,
-        _MH_MINS_SQL,
-        _NGRAM_SQL,
-    )
-
     return f"""
-    WITH g AS ({_NGRAM_SQL}),
-    hx AS ({_MH_HX_SQL}),
-    sig AS (SELECT doc_id, {_MH_MINS_SQL} FROM hx),
+    WITH g AS ({NGRAM_SQL}),
+    hx AS ({MH_HX_SQL}),
+    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
     bands AS (
         SELECT doc_id, b.b AS band_id,
                CASE b.b
@@ -844,7 +845,7 @@ def _minhash_band_oracle() -> str:
                    WHEN 2 THEN concat_ws('|', m6, m7, m8)
                    ELSE concat_ws('|', m9, m10, m11)
                END AS band_key
-        FROM sig, (SELECT unnest(range({_BANDS})) AS b) b
+        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
     )
     SELECT band_id, band_key,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -860,7 +861,7 @@ def _minhash_band_oracle() -> str:
     doc="STREAMING content dedup front line: documents arrive as a "
         "stream, each is shingled + minhashed + banded IN THE MAP "
         "STAGE (the signature fold is stateless, so the whole LSH "
-        "front end runs on a stream unchanged — same _spark_bands as "
+        "front end runs on a stream unchanged — same spark_bands as "
         "the batch path), and a running per-band aggregate maintains "
         "bucket occupancy (earliest doc + count). Buckets with >= 2 "
         "docs are the live collision set a dedup gate routes to exact "
@@ -871,16 +872,11 @@ def _minhash_band_oracle() -> str:
 def streaming_minhash_band_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _spark_bands,
-        _spark_grams,
-    )
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
     )
-    bands = _spark_bands(_spark_grams(stream))
+    bands = spark_bands(spark_grams(stream))
     agg = (
         bands.groupBy("band_id", "band_key")
         .agg(

@@ -119,14 +119,12 @@ def test_representative_queries_deterministic(spark, sf_dir):
 # Private helpers one query module still imports from another, as
 # (module, name). This list may only shrink: a shared algorithm belongs
 # in operators/ or functions/ (as the ANN index and recall gates now
-# live in operators/ann.py), not behind another query module's
-# underscore.
+# live in operators/ann.py and MinHash LSH in operators/minhash.py),
+# not behind another query module's underscore.
 _CROSS_QUERY_PRIVATE_IMPORTS = {
     "datapipe": {
-        "_BANDS", "_BM25_TERMS_SQL", "_JL", "_MH_HX_SQL", "_MH_MINS_SQL",
-        "_MINHASH_K", "_MINHASH_PAIRS_SQL", "_NGRAM_SQL", "_QCLS_SCORE_SQL",
-        "_QF_RULE_SQL", "_SEED_ASSIGN_SQL", "_qcls_cols", "_spark_bands",
-        "_spark_grams", "_spark_sigs",
+        "_BM25_TERMS_SQL", "_JL", "_QCLS_SCORE_SQL", "_QF_RULE_SQL",
+        "_SEED_ASSIGN_SQL", "_qcls_cols",
     },
     "pipeline4_q": {"_CHUNK_ORACLE"},
     "pipeline7_q": {
