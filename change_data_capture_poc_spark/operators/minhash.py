@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.functions.text import ngram_shingles
 
 # Word 4-gram shingles: with a small vocabulary 3-gram posting lists
@@ -79,13 +80,7 @@ def spark_sigs(g):
     elimination, so per-permutation passes re-walk (and re-allocate)
     the array per column."""
     hx = g.select(
-        "doc_id",
-        F.transform(
-            "grams",
-            lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-            % MH_P,
-        ).alias("hx"),
+        "doc_id", F.transform("grams", lambda s: md5_mod(s, MH_P)).alias("hx")
     )
     ab = F.array(
         *[
@@ -135,9 +130,10 @@ def spark_bands(g):
     )
 
 
-MINHASH_PAIRS_SQL = f"""
-    g AS ({NGRAM_SQL}),
-    hx AS ({MH_HX_SQL}),
+# The band CTE chain every MinHash oracle starts from, after a gram
+# CTE ``g``: base hashes ``hx``, signature columns ``m0 .. m11`` in
+# ``sig``, and one (doc_id, band_id, band_key) row per band in ``bands``.
+BAND_CTES_SQL = f"""hx AS ({MH_HX_SQL}),
     sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
     bands AS (
         SELECT doc_id, b.b AS band_id,
@@ -148,7 +144,34 @@ MINHASH_PAIRS_SQL = f"""
                    ELSE concat_ws('|', m9, m10, m11)
                END AS band_key
         FROM sig, (SELECT unnest(range({BANDS})) AS b) b
-    ),
+    )"""
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_id_a < doc_id_b) sharing a band
+    bucket: the band self-join, shuffled on the band key only."""
+    x = bands.alias("x")
+    y = bands.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.band_id") == F.col("y.band_id"))
+            & (F.col("x.band_key") == F.col("y.band_key"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("doc_id_a"),
+            F.col("y.doc_id").alias("doc_id_b"),
+        )
+        .distinct()
+    )
+
+
+# DuckDB twin of band_pairs over the grams of ``documents``: ends at
+# pairs(pa, pb), with g, sig and bands still in scope.
+MINHASH_PAIRS_SQL = f"""
+    g AS ({NGRAM_SQL}),
+    {BAND_CTES_SQL},
     pairs AS (
         SELECT DISTINCT x.doc_id AS pa, y.doc_id AS pb
         FROM bands x
@@ -156,3 +179,58 @@ MINHASH_PAIRS_SQL = f"""
                     AND x.doc_id < y.doc_id
     )
 """
+
+# The candidate pairs as an undirected dup graph, and its transitive
+# closure reach(a, b) — the recursive-CTE stand-in for the engine's
+# connected components.
+DUP_EDGES_SQL = """edges AS (SELECT pa AS a, pb AS b FROM pairs
+              UNION SELECT pb, pa FROM pairs)"""
+DUP_REACH_SQL = f"""{DUP_EDGES_SQL},
+    reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+    )"""
+
+# Exact all-pairs gram intersection: inter(doc_id_a, doc_id_b, c) with
+# sizes(doc_id, n), the ground truth the LSH candidates are graded
+# against (oracle scale only; the engine never forms all pairs).
+GRAM_INTER_SQL = f"""g AS ({NGRAM_SQL}),
+    toks AS (SELECT doc_id, unnest(grams) AS gram FROM g),
+    sizes AS (SELECT doc_id, len(grams) AS n FROM g),
+    inter AS (
+        SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS c
+        FROM toks a JOIN toks b ON a.gram = b.gram AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )"""
+
+
+def sig_agreement_sql(reduce: str = "") -> str:
+    """Number of signature components on which ``sig`` rows ``sa`` and
+    ``sb`` agree, as a DuckDB sum; ``reduce`` (such as ``" % 2"``)
+    compares a reduced form of each component instead."""
+    return " + ".join(
+        f"CASE WHEN sa.m{i}{reduce} = sb.m{i}{reduce} THEN 1 ELSE 0 END"
+        for i in range(MINHASH_K)
+    )
+
+
+def pair_grams(g: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The gram table split into the two candidate-join sides,
+    (doc_id_a, grams_a) and (doc_id_b, grams_b).
+
+    Deliberately NOT pre-pruned to pair participants: the candidate
+    pair set is dimension-sized next to the corpus, so AQE broadcasts
+    it and the gram arrays never enter an exchange at all — a round-11
+    experiment that semi-joined g down to participants first forced
+    the full gram table through a shuffle instead and measured 17x
+    slower at the 8x probe (60 MB of gram arrays moved vs sub-1 MB).
+    If pairs ever outgrow broadcast, AQE degrades to a hash join whose
+    gram shuffle is one linear pass — still the right fallback."""
+    ga = g.select(
+        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("grams_a")
+    )
+    gb = g.select(
+        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("grams_b")
+    )
+    return ga, gb

@@ -26,12 +26,17 @@ from change_data_capture_poc_spark.functions.vectors import (
     cosine_similarity as _cosine_expr,
 )
 from change_data_capture_poc_spark.operators.minhash import (
+    BAND_CTES_SQL,
     BANDS,
-    MH_HX_SQL,
-    MH_MINS_SQL,
+    DUP_EDGES_SQL,
+    DUP_REACH_SQL,
+    GRAM_INTER_SQL,
     MINHASH_K,
     MINHASH_PAIRS_SQL,
     NGRAM_SQL,
+    band_pairs,
+    pair_grams,
+    sig_agreement_sql,
     spark_bands,
     spark_grams,
     spark_sigs,
@@ -97,14 +102,7 @@ _JACCARD_T = 0.8
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH g AS ({NGRAM_SQL}),
-    toks AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-    sizes AS (SELECT doc_id, len(grams) AS n FROM g),
-    inter AS (
-        SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS c
-        FROM toks a JOIN toks b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {GRAM_INTER_SQL}
     SELECT doc_id_a, doc_id_b,
            ROUND(c * 1.0 / (sa.n + sb.n - c) + 1e-9, 6) AS jaccard
     FROM inter
@@ -203,8 +201,7 @@ def ngram_jaccard_pairs(spark, sf_dir, rarest_first: bool = False):
         )
         .distinct()
     )
-    ga = ordered.select(F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("grams_a"))
-    gb = ordered.select(F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("grams_b"))
+    ga, gb = pair_grams(ordered)
     c = F.size(F.array_intersect("grams_a", "grams_b"))
     jac = c * 1.0 / (F.size("grams_a") + F.size("grams_b") - c)
     return (
@@ -219,18 +216,7 @@ def ngram_jaccard_pairs(spark, sf_dir, rarest_first: bool = False):
     "dedup_minhash_lsh",
     oracle=f"""
     WITH g AS ({NGRAM_SQL}),
-    hx AS ({MH_HX_SQL}),
-    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
-    bands AS (
-        SELECT doc_id, b.b AS band_id,
-               CASE b.b
-                   WHEN 0 THEN concat_ws('|', m0, m1, m2)
-                   WHEN 1 THEN concat_ws('|', m3, m4, m5)
-                   WHEN 2 THEN concat_ws('|', m6, m7, m8)
-                   ELSE concat_ws('|', m9, m10, m11)
-               END AS band_key
-        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
-    )
+    {BAND_CTES_SQL}
     SELECT DISTINCT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b
     FROM bands x
     JOIN bands y ON x.band_id = y.band_id AND x.band_key = y.band_key
@@ -245,40 +231,14 @@ def ngram_jaccard_pairs(spark, sf_dir, rarest_first: bool = False):
 def dedup_minhash_lsh(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     g = spark_grams(d)
-    bands = spark_bands(g).transform(persist_once)
-    x = bands.alias("x")
-    y = bands.alias("y")
-    return (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_id_a"),
-            F.col("y.doc_id").alias("doc_id_b"),
-        )
-        .distinct()
-    )
+    return band_pairs(spark_bands(g).transform(persist_once))
 
 
 @register(
     "eval_minhash_estimator_calibration",
     oracle=f"""
     WITH g AS ({NGRAM_SQL}),
-    hx AS ({MH_HX_SQL}),
-    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
-    bands AS (
-        SELECT doc_id, b.b AS band_id,
-               CASE b.b
-                   WHEN 0 THEN concat_ws('|', m0, m1, m2)
-                   WHEN 1 THEN concat_ws('|', m3, m4, m5)
-                   WHEN 2 THEN concat_ws('|', m6, m7, m8)
-                   ELSE concat_ws('|', m9, m10, m11)
-               END AS band_key
-        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
-    ),
+    {BAND_CTES_SQL},
     pairs AS (
         SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
         FROM bands x
@@ -288,19 +248,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     ),
     scored AS (
         SELECT p.a, p.b,
-               (CASE WHEN sa.m0 = sb.m0 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m1 = sb.m1 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m2 = sb.m2 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m3 = sb.m3 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m4 = sb.m4 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m5 = sb.m5 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m6 = sb.m6 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m7 = sb.m7 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m8 = sb.m8 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m9 = sb.m9 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m10 = sb.m10 THEN 1 ELSE 0 END
-              + CASE WHEN sa.m11 = sb.m11 THEN 1 ELSE 0 END)
-                   AS sig_matches,
+               ({sig_agreement_sql()}) AS sig_matches,
                len(list_filter(ga.grams,
                    s -> list_contains(gb.grams, s))) AS inter,
                len(ga.grams) + len(gb.grams)
@@ -395,18 +343,7 @@ def eval_minhash_estimator_calibration(spark, sf_dir):
     "dedup_incremental_delta_index",
     oracle=f"""
     WITH g AS ({NGRAM_SQL}),
-    hx AS ({MH_HX_SQL}),
-    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
-    bands AS (
-        SELECT doc_id, b.b AS band_id,
-               CASE b.b
-                   WHEN 0 THEN concat_ws('|', m0, m1, m2)
-                   WHEN 1 THEN concat_ws('|', m3, m4, m5)
-                   WHEN 2 THEN concat_ws('|', m6, m7, m8)
-                   ELSE concat_ws('|', m9, m10, m11)
-               END AS band_key
-        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
-    ),
+    {BAND_CTES_SQL},
     t AS (SELECT max(doc_id) // 2 AS split FROM documents),
     cand AS (
         SELECT DISTINCT n.doc_id AS delta_doc_id, x.doc_id AS index_doc_id
@@ -492,13 +429,7 @@ def dedup_incremental_delta_index(spark, sf_dir):
     oracle=f"""
     WITH RECURSIVE
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    )
+    {DUP_REACH_SQL}
     SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
     FROM reach GROUP BY a
     """,
@@ -1935,8 +1866,7 @@ _PR_CTES = ",\n    ".join(
     oracle=f"""
     WITH
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
+    {DUP_EDGES_SQL},
     deg AS (SELECT a, COUNT(*) AS d FROM edges GROUP BY a),
     pr0 AS (SELECT a AS node, 1.0 AS r FROM deg),
     {_PR_CTES}
@@ -2363,8 +2293,7 @@ def sample_fixed_per_stratum(spark, sf_dir):
     oracle=f"""
     WITH RECURSIVE
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
+    {DUP_EDGES_SQL},
     reach(a, b, lvl) AS (
         SELECT a, b, 1 FROM edges
         UNION ALL
@@ -2987,14 +2916,7 @@ def events_time_weighted_avg(spark, sf_dir):
 @register(
     "eval_minhash_vs_exact",
     oracle=f"""
-    WITH g AS ({NGRAM_SQL}),
-    tk AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-    sizes AS (SELECT doc_id, len(grams) AS n FROM g),
-    inter AS (
-        SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS c
-        FROM tk a JOIN tk b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+    WITH {GRAM_INTER_SQL},
     exact AS (
         SELECT doc_id_a, doc_id_b
         FROM inter
@@ -3002,18 +2924,7 @@ def events_time_weighted_avg(spark, sf_dir):
         JOIN sizes sb ON inter.doc_id_b = sb.doc_id
         WHERE c * 1.0 / (sa.n + sb.n - c) >= {_JACCARD_T}
     ),
-    hx AS ({MH_HX_SQL}),
-    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
-    bands AS (
-        SELECT doc_id, b.b AS band_id,
-               CASE b.b
-                   WHEN 0 THEN concat_ws('|', m0, m1, m2)
-                   WHEN 1 THEN concat_ws('|', m3, m4, m5)
-                   WHEN 2 THEN concat_ws('|', m6, m7, m8)
-                   ELSE concat_ws('|', m9, m10, m11)
-               END AS band_key
-        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
-    ),
+    {BAND_CTES_SQL},
     approx AS (
         SELECT DISTINCT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b
         FROM bands x
@@ -3566,13 +3477,7 @@ def kmeans_one_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    {DUP_REACH_SQL},
     comps AS (
         SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
         FROM reach GROUP BY a
@@ -3621,13 +3526,7 @@ def dedup_survivors(spark, sf_dir):
     oracle=f"""
     WITH RECURSIVE
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    {DUP_REACH_SQL},
     comps AS (
         SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
         FROM reach GROUP BY a

@@ -37,7 +37,9 @@ from change_data_capture_poc_spark.functions.windows import (
 from change_data_capture_poc_spark.functions.caching import persist_once
 from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.operators.minhash import (
+    DUP_REACH_SQL,
     MINHASH_PAIRS_SQL,
+    pair_grams,
     spark_grams,
 )
 
@@ -496,8 +498,9 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Containment scoring on LSH candidates (asymmetric near-dup)
 # --------------------------------------------------------------------
 
-def _containment_oracle() -> str:
-    return f"""
+@register(
+    "dedup_minhash_containment",
+    oracle=f"""
     WITH {MINHASH_PAIRS_SQL}
     SELECT p.pa AS doc_id_a, p.pb AS doc_id_b,
            ROUND(len(list_intersect(ga.grams, gb.grams)) * 1.0
@@ -507,32 +510,7 @@ def _containment_oracle() -> str:
     FROM pairs p
     JOIN g ga ON ga.doc_id = p.pa
     JOIN g gb ON gb.doc_id = p.pb
-    """
-
-
-def _pair_grams(g: DataFrame):
-    """The gram table split into the two candidate-join aliases.
-
-    Deliberately NOT pre-pruned to pair participants: the candidate
-    pair set is dimension-sized next to the corpus, so AQE broadcasts
-    it and the gram arrays never enter an exchange at all — a round-11
-    experiment that semi-joined g down to participants first forced
-    the full gram table through a shuffle instead and measured 17x
-    slower at the 8x probe (60 MB of gram arrays moved vs sub-1 MB).
-    If pairs ever outgrow broadcast, AQE degrades to a hash join whose
-    gram shuffle is one linear pass — still the right fallback."""
-    ga = g.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("grams_a")
-    )
-    gb = g.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("grams_b")
-    )
-    return ga, gb
-
-
-@register(
-    "dedup_minhash_containment",
-    oracle=_containment_oracle(),
+    """,
     doc="Containment verification of minhash-LSH candidates: "
         "|A∩B|/|A| and |A∩B|/|B| over the exact 4-gram sets, per "
         "candidate pair. Jaccard misses SUBSET duplication (a doc "
@@ -542,7 +520,7 @@ def _pair_grams(g: DataFrame):
         "LSH survivors (band equi-join output), never all pairs; the "
         "gram arrays join in by doc_id against the broadcast-sized "
         "candidate set, so the heavy column never enters an exchange "
-        "(_pair_grams documents why no participant pre-prune).",
+        "(pair_grams documents why no participant pre-prune).",
 )
 def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from change_data_capture_poc_spark.queries.datapipe import (
@@ -552,7 +530,7 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     g = spark_grams(d)
     pairs = dedup_minhash_lsh(spark, sf_dir)
-    ga, gb = _pair_grams(g)
+    ga, gb = pair_grams(g)
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     return (
         pairs.join(ga, "doc_id_a")
@@ -860,8 +838,9 @@ def embedding_pca_power_iteration(
 # Train/test leakage via near-duplicates
 # --------------------------------------------------------------------
 
-def _leakage_oracle() -> str:
-    return f"""
+@register(
+    "dedup_cross_split_leakage",
+    oracle=f"""
     WITH {MINHASH_PAIRS_SQL},
     sp AS (
         SELECT doc_id,
@@ -881,12 +860,7 @@ def _leakage_oracle() -> str:
     JOIN sp sa ON sa.doc_id = p.pa
     JOIN sp sb ON sb.doc_id = p.pb
     WHERE sa.split != sb.split
-    """
-
-
-@register(
-    "dedup_cross_split_leakage",
-    oracle=_leakage_oracle(),
+    """,
     doc="Train/test leakage audit: near-duplicate pairs (minhash-LSH "
         "candidates) whose two members landed in DIFFERENT splits — "
         "the eval-integrity failure mode where test documents have "
@@ -925,8 +899,9 @@ def dedup_cross_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAIN_T = 0.9
 
 
-def _containment_survivors_oracle() -> str:
-    return f"""
+@register(
+    "dedup_containment_survivors",
+    oracle=f"""
     WITH {MINHASH_PAIRS_SQL},
     scored AS (
         SELECT p.pa, p.pb,
@@ -949,12 +924,7 @@ def _containment_survivors_oracle() -> str:
     SELECT d.doc_id, d.source, d.n_chars
     FROM documents d
     WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = d.doc_id)
-    """
-
-
-@register(
-    "dedup_containment_survivors",
-    oracle=_containment_survivors_oracle(),
+    """,
     doc=f"Sub-document dedup deliverable: for each LSH candidate pair, "
         f"if one doc's 4-gram set is >= {_CONTAIN_T:.0%} contained in "
         f"the other, the CONTAINED doc (the subset — it adds almost "
@@ -974,7 +944,7 @@ def dedup_containment_survivors(
     d = load_table(spark, sf_dir, "documents")
     g = spark_grams(d)
     pairs = dedup_minhash_lsh(spark, sf_dir)
-    ga, gb = _pair_grams(g)
+    ga, gb = pair_grams(g)
     scored = (
         pairs.join(ga, "doc_id_a")
         .join(gb, "doc_id_b")
@@ -1003,8 +973,9 @@ def dedup_containment_survivors(
     )
 
 
-def _cross_source_oracle() -> str:
-    return f"""
+@register(
+    "corpus_cross_source_dup_report",
+    oracle=f"""
     WITH {MINHASH_PAIRS_SQL}
     SELECT LEAST(da.source, db.source) AS source_x,
            GREATEST(da.source, db.source) AS source_y,
@@ -1013,12 +984,7 @@ def _cross_source_oracle() -> str:
     JOIN documents da ON da.doc_id = p.pa
     JOIN documents db ON db.doc_id = p.pb
     GROUP BY 1, 2
-    """
-
-
-@register(
-    "corpus_cross_source_dup_report",
-    oracle=_cross_source_oracle(),
+    """,
     doc="Which crawls duplicate each other: near-dup candidate pairs "
         "rolled up by unordered source pair — the diagnostic that "
         "decides which overlapping sources to drop or down-weight "
@@ -1861,17 +1827,12 @@ def kmeans_multi_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dup-graph statistics & shard manifests
 # --------------------------------------------------------------------
 
-def _cluster_size_oracle() -> str:
-    return f"""
+@register(
+    "dedup_cluster_size_histogram",
+    oracle=f"""
     WITH RECURSIVE
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    {DUP_REACH_SQL},
     comps AS (
         SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
         FROM reach GROUP BY a
@@ -1883,12 +1844,7 @@ def _cluster_size_oracle() -> str:
            CAST(COUNT(*) AS BIGINT) AS n_clusters,
            CAST(SUM(sz) AS BIGINT) AS n_docs
     FROM sizes GROUP BY sz
-    """
-
-
-@register(
-    "dedup_cluster_size_histogram",
-    oracle=_cluster_size_oracle(),
+    """,
     doc="Duplicate-cluster size distribution: how many near-dup "
         "clusters of each size the corpus contains — the QA readout "
         "that distinguishes benign pairwise near-dups from a "

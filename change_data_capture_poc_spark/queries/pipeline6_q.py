@@ -63,7 +63,8 @@ from change_data_capture_poc_spark.operators.sketch import (
     span_hashes,
 )
 from change_data_capture_poc_spark.operators.minhash import (
-    NGRAM_SQL,
+    GRAM_INTER_SQL,
+    pair_grams,
     spark_grams,
 )
 
@@ -891,16 +892,10 @@ _KNN_K = 3      # neighbors per document
 _KNN_T = 0.2    # similarity floor (graph sparsifier)
 
 
-def _knn_oracle() -> str:
-    return f"""
-    WITH g AS ({NGRAM_SQL}),
-    toks AS (SELECT doc_id, unnest(grams) AS gram FROM g),
-    sizes AS (SELECT doc_id, len(grams) AS n FROM g),
-    inter AS (
-        SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS c
-        FROM toks a JOIN toks b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
+@register(
+    "text_knn_similarity_graph",
+    oracle=f"""
+    WITH {GRAM_INTER_SQL},
     pairs AS (
         SELECT doc_id_a, doc_id_b,
                ROUND(c * 1.0 / (sa.n + sb.n - c) + 1e-9, 6) AS jaccard
@@ -924,12 +919,7 @@ def _knn_oracle() -> str:
                    ORDER BY jaccard DESC, neighbor_id) AS rk
         FROM sym
     ) WHERE rk <= {_KNN_K}
-    """
-
-
-@register(
-    "text_knn_similarity_graph",
-    oracle=_knn_oracle(),
+    """,
     doc=f"Document kNN similarity graph: each doc's top-{_KNN_K} "
         f"neighbors by word-4-gram Jaccard above a {_KNN_T} floor — "
         f"the graph-construction step feeding clustering, curation "
@@ -987,12 +977,7 @@ def text_knn_similarity_graph(
         )
         .distinct()
     )
-    ga = ordered.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("grams_a")
-    )
-    gb = ordered.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("grams_b")
-    )
+    ga, gb = pair_grams(ordered)
     c = F.size(F.array_intersect("grams_a", "grams_b"))
     j_raw = c * 1.0 / (F.size("grams_a") + F.size("grams_b") - c)
     jac = (

@@ -116,6 +116,7 @@ from change_data_capture_poc_spark.operators.ann import (
     variant_scores,
 )
 from change_data_capture_poc_spark.operators.minhash import (
+    DUP_REACH_SQL,
     MINHASH_PAIRS_SQL,
     spark_grams,
 )
@@ -1034,8 +1035,9 @@ def events_anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _triangle_oracle() -> str:
-    return f"""
+@register(
+    "graph_triangle_count_dupgraph",
+    oracle=f"""
     WITH {MINHASH_PAIRS_SQL},
     e AS (SELECT pa AS a, pb AS b FROM pairs),
     w AS (SELECT e1.a, e1.b, e2.b AS c
@@ -1048,12 +1050,7 @@ def _triangle_oracle() -> str:
            CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
            CAST((SELECT COUNT(*) FROM w) AS BIGINT) AS n_wedges,
            CAST((SELECT COUNT(*) FROM t) AS BIGINT) AS n_triangles
-    """
-
-
-@register(
-    "graph_triangle_count_dupgraph",
-    oracle=_triangle_oracle(),
+    """,
     doc="Triangle count over the MinHash-LSH candidate-pair graph "
         "(vertices = documents, edges = band-bucket collisions, the "
         "same edge set dedup_cluster_label_propagation consumes): "
@@ -1388,8 +1385,9 @@ _WB_MIN_CHARS = 50   # admission gate (documented simple bound; the
 _WB_BUDGET = 200     # total docs to sample across all sources
 
 
-def _wb_oracle() -> str:
-    return f"""
+@register(
+    "corpus_weighted_build_e2e",
+    oracle=f"""
     WITH gated AS (
         SELECT source, doc_id, text, n_chars FROM documents
         WHERE n_chars >= {_WB_MIN_CHARS}
@@ -1430,12 +1428,7 @@ def _wb_oracle() -> str:
            CAST(r.sample_rank AS BIGINT) AS sample_rank
     FROM ranked r JOIN alloc a USING (source)
     WHERE r.sample_rank <= a.k_s
-    """
-
-
-@register(
-    "corpus_weighted_build_e2e",
-    oracle=_wb_oracle(),
+    """,
     doc=f"COMPOSED weighted corpus-build pipeline — the round-7 "
         f"flagship, chaining this round's pieces end to end the way "
         f"a real curation run does: admission gate (n_chars >= "
@@ -1853,17 +1846,12 @@ def events_holt_linear_smoothing(
 # ---------------------------------------------------------------------------
 
 
-def _rep_oracle() -> str:
-    return f"""
+@register(
+    "dedup_cluster_best_representative",
+    oracle=f"""
     WITH RECURSIVE
     {MINHASH_PAIRS_SQL},
-    edges AS (SELECT pa AS a, pb AS b FROM pairs
-              UNION SELECT pb, pa FROM pairs),
-    reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    {DUP_REACH_SQL},
     comp AS (
         SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
         FROM reach GROUP BY a
@@ -1886,12 +1874,7 @@ def _rep_oracle() -> str:
                                   ORDER BY n_chars DESC, doc_id) AS rn
         FROM scored
     ) WHERE rn = 1
-    """
-
-
-@register(
-    "dedup_cluster_best_representative",
-    oracle=_rep_oracle(),
+    """,
     doc="QUALITY-KEEPER cluster collapse: the near-dup clusters from "
         "min-label propagation (dedup_cluster_label_propagation's "
         "components over the MinHash-LSH candidate graph) each keep "

@@ -61,6 +61,8 @@ from change_data_capture_poc_spark.operators.ann import (
 from change_data_capture_poc_spark.operators.minhash import (
     MINHASH_K,
     MINHASH_PAIRS_SQL,
+    pair_grams,
+    sig_agreement_sql,
     spark_grams,
     spark_sigs,
 )
@@ -464,8 +466,9 @@ _HSO_A = "click"
 _HSO_B = "purchase"
 
 
-def _hso_oracle() -> str:
-    return f"""
+@register(
+    "agg_hll_set_ops",
+    oracle=f"""
     WITH h AS (
         SELECT event_type, user_id
         FROM events
@@ -510,12 +513,7 @@ def _hso_oracle() -> str:
            ROUND((x.a_exact + x.b_exact - x.union_exact) * 1.0
                  / x.union_exact + 1e-9, 6) AS jaccard_exact
     FROM exact x, est e
-    """
-
-
-@register(
-    "agg_hll_set_ops",
-    oracle=_hso_oracle(),
+    """,
     doc=f"HLL SET ALGEBRA — sketch-space union/intersection/Jaccard "
         f"(the audience-overlap readout computed WITHOUT co-shuffling "
         f"raw keys): per-set registers merge by MAX into the union "
@@ -942,22 +940,14 @@ def privacy_k_anonymity_audit(
 # ---------------------------------------------------------------------------
 
 
-def _bbit_oracle() -> str:
-    k = MINHASH_K
-    full_eq = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
-        for i in range(k)
-    )
-    bit_eq = " + ".join(
-        f"CASE WHEN sa.m{i} % 2 = sb.m{i} % 2 THEN 1 ELSE 0 END"
-        for i in range(k)
-    )
-    return f"""
+@register(
+    "eval_bbit_minhash_compression",
+    oracle=f"""
     WITH {MINHASH_PAIRS_SQL},
     m AS (
         SELECT p.pa AS doc_id_a, p.pb AS doc_id_b,
-               CAST({bit_eq} AS BIGINT) AS bits_match,
-               CAST({full_eq} AS BIGINT) AS mins_match,
+               CAST({sig_agreement_sql(' % 2')} AS BIGINT) AS bits_match,
+               CAST({sig_agreement_sql()} AS BIGINT) AS mins_match,
                len(list_intersect(ga.grams, gb.grams)) AS inter,
                len(ga.grams) + len(gb.grams)
                    - len(list_intersect(ga.grams, gb.grams)) AS uni
@@ -968,17 +958,12 @@ def _bbit_oracle() -> str:
         JOIN g gb ON gb.doc_id = p.pb
     )
     SELECT doc_id_a, doc_id_b, bits_match, mins_match,
-           ROUND(GREATEST(2.0 * bits_match / {k} - 1, 0) + 1e-9, 6)
+           ROUND(GREATEST(2.0 * bits_match / {MINHASH_K} - 1, 0) + 1e-9, 6)
                AS jaccard_bbit_est,
-           ROUND(mins_match * 1.0 / {k} + 1e-9, 6) AS jaccard_minhash_est,
+           ROUND(mins_match * 1.0 / {MINHASH_K} + 1e-9, 6) AS jaccard_minhash_est,
            ROUND(inter * 1.0 / uni + 1e-9, 6) AS jaccard_exact
     FROM m
-    """
-
-
-@register(
-    "eval_bbit_minhash_compression",
-    oracle=_bbit_oracle(),
+    """,
     doc="b-BIT MINHASH compression calibration (Li & Konig 2010): keep "
         "only the LOWEST BIT of each min-hash value — a 12-permutation "
         "signature shrinks from 12x64 bits to 12 bits, the storage "
@@ -1019,12 +1004,7 @@ def eval_bbit_minhash_compression(
     sb = sig.select(
         F.col("doc_id").alias("doc_id_b"), F.col("sig").alias("sig_b")
     )
-    ga = g.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("grams").alias("grams_a")
-    )
-    gb = g.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("grams").alias("grams_b")
-    )
+    ga, gb = pair_grams(g)
     bits_match = F.aggregate(
         F.zip_with(
             "sig_a",

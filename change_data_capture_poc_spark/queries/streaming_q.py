@@ -56,9 +56,7 @@ from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
 from change_data_capture_poc_spark.sources.tables import read_events_raw
 from change_data_capture_poc_spark.operators.minhash import (
-    BANDS,
-    MH_HX_SQL,
-    MH_MINS_SQL,
+    BAND_CTES_SQL,
     NGRAM_SQL,
     spark_bands,
     spark_grams,
@@ -832,32 +830,17 @@ def _documents_stream_dir(sf_dir: str) -> str:
     return _stream_dir(sf_dir, "documents", "/docs")
 
 
-def _minhash_band_oracle() -> str:
-    return f"""
+@register(
+    "streaming_minhash_band_drain",
+    oracle=f"""
     WITH g AS ({NGRAM_SQL}),
-    hx AS ({MH_HX_SQL}),
-    sig AS (SELECT doc_id, {MH_MINS_SQL} FROM hx),
-    bands AS (
-        SELECT doc_id, b.b AS band_id,
-               CASE b.b
-                   WHEN 0 THEN concat_ws('|', m0, m1, m2)
-                   WHEN 1 THEN concat_ws('|', m3, m4, m5)
-                   WHEN 2 THEN concat_ws('|', m6, m7, m8)
-                   ELSE concat_ws('|', m9, m10, m11)
-               END AS band_key
-        FROM sig, (SELECT unnest(range({BANDS})) AS b) b
-    )
+    {BAND_CTES_SQL}
     SELECT band_id, band_key,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(MIN(doc_id) AS BIGINT) AS earliest_doc
     FROM bands GROUP BY band_id, band_key
     HAVING COUNT(*) >= 2
-    """
-
-
-@register(
-    "streaming_minhash_band_drain",
-    oracle=_minhash_band_oracle(),
+    """,
     doc="STREAMING content dedup front line: documents arrive as a "
         "stream, each is shingled + minhashed + banded IN THE MAP "
         "STAGE (the signature fold is stateless, so the whole LSH "
@@ -891,7 +874,7 @@ def streaming_minhash_band_drain(
 def _chunk_oracle() -> str:
     # One oracle string, two execution engines: the streaming drain
     # must produce the exact rows of the batch chunker (same pattern
-    # as _minhash_band_oracle above). The import is cycle-free —
+    # as streaming_minhash_band_drain above). The import is cycle-free —
     # pipeline4_q depends only on registry + sources.
     from change_data_capture_poc_spark.queries.pipeline4_q import (
         _CHUNK_ORACLE,
