@@ -62,3 +62,35 @@ def ngram_shingles(tokens: Column, n: int) -> Column:
             )
         )
     )
+
+
+# BM25 (k1=1.2, b=0.75) for a fixed query term set: the DuckDB CTE
+# chain ending at scored(doc_id, s), one row per (document, matched
+# term). text_bm25_retrieval and the lexical side of text_rrf_fusion
+# both start from it.
+BM25_TERMS = ("spark", "merge", "window", "scan")
+BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_TERMS)
+BM25_SCORED_SQL = f"""base AS (
+        SELECT doc_id, len(string_split(text, ' ')) AS dl,
+               string_split(text, ' ') AS w
+        FROM documents
+    ),
+    tok AS (
+        SELECT doc_id, dl, unnest(w) AS tok FROM base
+    ),
+    tf AS (
+        SELECT doc_id, tok, MAX(dl) AS dl, COUNT(*) AS tf
+        FROM tok WHERE tok IN ({BM25_TERMS_SQL})
+        GROUP BY doc_id, tok
+    ),
+    dfreq AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
+    n AS (SELECT COUNT(*) AS n FROM documents),
+    ad AS (SELECT AVG(dl) AS avgdl FROM base),
+    scored AS (
+        SELECT tf.doc_id,
+               ln((n.n - dfreq.df + 0.5) / (dfreq.df + 0.5) + 1.0)
+                   * (tf.tf * 2.2)
+                   / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / ad.avgdl))
+                   AS s
+        FROM tf JOIN dfreq USING (tok), n, ad
+    )"""

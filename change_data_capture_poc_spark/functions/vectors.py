@@ -109,3 +109,49 @@ def centroid_argmin_expr(
         for cid, c in centroids
     )
     return F.expr(f"least({cands})")
+
+
+# Shared seed-argmin assignment CTE chain, ending at
+# asgn(vec_id, cid, e): nearest of the 8 deterministic seed centroids
+# (vec_id < 8), 1e-6-rounded distance, lowest-cid tiebreak. The Spark
+# twin is collect_centroids + centroid_argmin_expr above —
+# keep the two in lockstep (kmeans_one_iter and dedup_semantic_semdedup
+# both pin this block against their oracles).
+SEED_ASSIGN_SQL = """ed AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        FROM embeddings
+    ),
+    seeds AS (SELECT vec_id AS cid, e AS c FROM ed WHERE vec_id < 8),
+    d AS (
+        SELECT ed.vec_id, s.cid,
+               ROUND(list_reduce(list_transform(list_zip(ed.e, s.c),
+                         p -> (p[1] - p[2]) * (p[1] - p[2])),
+                     (a, b) -> a + b) + 1e-9, 6) AS dist
+        FROM ed, seeds s
+    ),
+    a AS (
+        SELECT vec_id, cid,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY dist, cid) AS rn
+        FROM d
+    ),
+    asgn AS (SELECT a.vec_id, a.cid, ed.e
+             FROM a JOIN ed USING (vec_id) WHERE rn = 1)"""
+
+
+# Johnson-Lindenstrauss sign matrix (8 x 64, +-1 from a fixed LCG) and
+# its 1/sqrt(8) scale, shared by embedding_random_projection and the
+# cross-modal retrieval queries.
+def _jl_signs() -> list[list[int]]:
+    s, out = 12345, []
+    for _ in range(8):
+        row = []
+        for _ in range(64):
+            s = (1103515245 * s + 12345) % (1 << 31)
+            row.append(1 if (s >> 16) & 1 else -1)
+        out.append(row)
+    return out
+
+
+JL = _jl_signs()
+JL_SCALE = "0.35355339059327373"  # 1/sqrt(8), shared literal

@@ -17,21 +17,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_prefix
+
 
 # 2^b as signed-long literals; bit 63 is the sign bit (-2^63).
 _POW2 = [1 << b for b in range(63)] + [-(1 << 63)]
-
-
-def md5_token_hash32(t: Column) -> Column:
-    """Portable 32-bit token hash: first 8 hex chars of md5 as a long.
-
-    THE single definition of the DuckDB-replayable base hash — both
-    simhash32 variants (and their oracle SQL) promise bit-identity on
-    exactly this expression; keep it in one place so they cannot drift.
-    """
-    return F.conv(F.substring(F.md5(t.cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
 
 
 def simhash64(tokens: Column) -> Column:
@@ -117,7 +107,7 @@ def simhash32_portable_pandas(
     hashed = df.select(
         id_col,
         F.transform(
-            F.split(F.col(text_col), " "), md5_token_hash32
+            F.split(F.col(text_col), " "), md5_prefix
         ).alias("hx"),
     )
     out_schema = T.StructType(
@@ -157,7 +147,7 @@ def simhash32_portable(tokens: Column) -> Column:
     exists so the banded-LSH simhash pipeline has a hash-checkable
     oracle.
     """
-    hashes = F.transform(tokens, md5_token_hash32)
+    hashes = F.transform(tokens, md5_prefix)
     pows = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
     bit_votes = F.aggregate(
         hashes,

@@ -3,7 +3,9 @@
 Modules:
 - ``scd2_q``      — the CDC/SCD2 pipeline queries (reference parity)
 - ``relational``  — scans/filters/joins/aggs/windows/sorts/set ops
-- ``datapipe``    — dedup / similarity / text / multimodal (north star)
+- ``datapipe``    — dedup / similarity / text / multimodal (north star;
+                    MinHash LSH lives in operators/minhash.py, the
+                    quality rules and classifier in operators/quality.py)
 - ``operators_q`` — custom-operator queries (as-of, sessions, simhash,
                     salted join, sketches, CDC e2e)
 - ``functions_q`` — scalar/window/statistical function families

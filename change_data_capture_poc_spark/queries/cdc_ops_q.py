@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_prefix
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.functions.windows import global_window
@@ -239,9 +240,7 @@ def table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.coalesce(F.col("c_mktsegment"), F.lit("")),
     )
-    h = F.conv(F.substring(F.md5(row_repr.cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    h = md5_prefix(row_repr)
     return (
         cust.select((F.col("c_custkey") % 16).alias("bucket"), h.alias("h"))
         .groupBy("bucket")

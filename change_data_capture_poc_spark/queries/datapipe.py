@@ -21,8 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.functions.text import ngram_shingles
+from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.functions.text import (
+    BM25_SCORED_SQL,
+    BM25_TERMS,
+    ngram_shingles,
+)
 from change_data_capture_poc_spark.functions.vectors import (
+    JL,
+    JL_SCALE,
+    SEED_ASSIGN_SQL,
     cosine_similarity as _cosine_expr,
 )
 from change_data_capture_poc_spark.operators.minhash import (
@@ -40,6 +48,15 @@ from change_data_capture_poc_spark.operators.minhash import (
     spark_bands,
     spark_grams,
     spark_sigs,
+)
+from change_data_capture_poc_spark.operators.quality import (
+    QCLS_BUCKETS,
+    QCLS_SCORE_SQL,
+    QF_RULE_SQL,
+    STOPWORDS,
+    STOPWORDS_SQL,
+    qcls_cols,
+    quality_drop_reason,
 )
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
@@ -862,10 +879,6 @@ def ann_cosine_lsh_hyperplane(spark, sf_dir):
 # Text analysis
 # --------------------------------------------------------------------
 
-_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
-_SW_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
-
-
 @register(
     "text_quality_stats",
     oracle=f"""
@@ -875,7 +888,7 @@ _SW_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
            length(text) AS n_chars,
            len(w) AS n_tokens,
            ROUND(length(text) * 1.0 / len(w), 6) AS avg_token_len,
-           ROUND(len(list_filter(w, x -> list_contains({_SW_SQL}, x)))
+           ROUND(len(list_filter(w, x -> list_contains({STOPWORDS_SQL}, x)))
                  * 1.0 / len(w), 6) AS stopword_ratio,
            ROUND(len(list_distinct(w)) * 1.0 / len(w), 6) AS ttr,
            CAST(CEIL(length(text) / 4.0) AS BIGINT) AS n_tokens_bpe_est
@@ -894,7 +907,7 @@ def text_quality_stats(spark, sf_dir):
     ).where(F.size("w") > 0)
     w = F.col("w")
     n_tok = F.size(w)
-    sw = F.size(F.filter(w, lambda x: x.isin(*_STOPWORDS)))
+    sw = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS)))
     return (
         t.select(
             "doc_id",
@@ -1055,63 +1068,10 @@ def text_lang_confusion_matrix(spark, sf_dir):
     )
 
 
-_QCLS_BUCKETS = 64
-
-# Shared classifier-score CTE chain, ending at
-# qscore(doc_id, n_tokens, score): hashing-trick features, mean bucket
-# weight through a sigmoid, 1e-6-rounded. Used by both
-# text_quality_classifier_score and eval_quality_score_calibration —
-# a weight/bucket change must hit both oracles at once.
-_QCLS_SCORE_SQL = f"""tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    fh AS (SELECT doc_id,
-                  ('0x' || substring(md5(tok), 1, 8))::BIGINT
-                      % {_QCLS_BUCKETS} AS b
-           FROM tok),
-    wtab AS (SELECT range AS b, ((range * 37 + 11) % 21 - 10) / 10.0 AS wt
-             FROM range({_QCLS_BUCKETS})),
-    qscore AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                      ROUND(1.0 / (1.0 + exp(-AVG(wt))) + 1e-9, 6) AS score
-               FROM fh JOIN wtab USING (b) GROUP BY doc_id)"""
-
-
-def _qcls_cols(text):
-    """(n_tokens, quality_score) as pure row-wise Columns over a text
-    column. The hashing-trick feature weight is a pure per-token
-    function (md5 mod buckets -> linear-congruential weight), so the
-    mean-weight score is a higher-order fold over the token array —
-    MAP-ONLY: no explode, no weight-table join, no per-doc agg shuffle
-    (r13). The fold adds weights in token order, the same order one
-    doc's exploded rows reached the old hash-agg in (they never
-    crossed a partition boundary), so the double sum is bit-identical
-    to the old avg()."""
-    toks = F.split(text, " ")
-
-    def wt(t):
-        b = (
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-            % _QCLS_BUCKETS
-        )
-        return ((b * 37 + 11) % 21 - 10) / 10.0
-
-    n = F.size(toks)
-    m = (
-        F.aggregate(
-            F.transform(toks, lambda t: wt(t)),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        / n
-    )
-    score = F.round(1.0 / (1.0 + F.exp(-m)) + F.lit(1e-9), 6)
-    return n.cast("long"), score
-
-
 @register(
     "text_quality_classifier_score",
     oracle=f"""
-    WITH {_QCLS_SCORE_SQL}
+    WITH {QCLS_SCORE_SQL}
     SELECT doc_id,
            CAST(n_tokens AS BIGINT) AS n_tokens,
            score AS quality_score,
@@ -1121,7 +1081,7 @@ def _qcls_cols(text):
     doc=f"Model-based quality filtering, the fasttext-classifier shape "
         f"every production pretraining pipeline runs (heuristic rules "
         f"catch boilerplate; a learned classifier catches fluent spam): "
-        f"hashing-trick features (md5 token hash mod {_QCLS_BUCKETS}) "
+        f"hashing-trick features (md5 token hash mod {QCLS_BUCKETS}) "
         f"mapped through a deterministic weight function, mean feature "
         f"weight through a sigmoid, keep at 0.5. The weights here are "
         f"a deterministic stand-in (a real model just swaps the weight "
@@ -1132,7 +1092,7 @@ def _qcls_cols(text):
 )
 def text_quality_classifier_score(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    n_tokens, score = _qcls_cols(F.col("text"))
+    n_tokens, score = qcls_cols(F.col("text"))
     return d.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
@@ -1428,16 +1388,7 @@ def multimodal_feature_bucket_dedup(spark, sf_dir):
 )
 def sample_stratified_hash(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = md5_mod(F.col("doc_id"), 100)
     rate = F.when(F.col("lang") == "en", 20).otherwise(60)
     return d.where(h < rate).select("doc_id", "lang", "source", "n_chars")
 
@@ -1554,43 +1505,10 @@ def corpus_source_mix(spark, sf_dir):
     )
 
 
-_QF_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
-
-# Shared Gopher-rule CTE chain, ending at qrule(doc_id, drop_reason)
-# where drop_reason IS NULL == keep. Used by both text_quality_filter
-# and eval_quality_score_calibration — a threshold change must hit
-# both oracles at once.
-_QF_RULE_SQL = f"""qf_t AS (
-        SELECT doc_id, n_chars, string_split(text, ' ') AS w
-        FROM documents
-    ),
-    qf_m AS (
-        SELECT doc_id, n_chars,
-               len(w) AS n_words,
-               list_aggregate(list_transform(w, x -> len(x)), 'sum')
-                   AS sum_wlen,
-               len(list_filter(w, x -> regexp_matches(x, '^[A-Za-z]+$')))
-                   AS n_alpha,
-               len(list_intersect(w, {_QF_STOP_SQL})) > 0 AS has_stop
-        FROM qf_t
-    ),
-    qrule AS (
-        SELECT doc_id,
-               CASE WHEN n_chars < 50 THEN 'too_short'
-                    WHEN n_chars > 10000 THEN 'too_long'
-                    WHEN sum_wlen < 2 * n_words THEN 'short_words'
-                    WHEN sum_wlen > 12 * n_words THEN 'long_words'
-                    WHEN 5 * n_alpha < 3 * n_words THEN 'low_alpha'
-                    WHEN NOT has_stop THEN 'no_stopword'
-               END AS drop_reason
-        FROM qf_m
-    )"""
-
-
 @register(
     "text_quality_filter",
     oracle=f"""
-    WITH {_QF_RULE_SQL}
+    WITH {QF_RULE_SQL}
     SELECT doc_id, drop_reason, drop_reason IS NULL AS keep
     FROM qrule
     """,
@@ -1607,36 +1525,6 @@ def text_quality_filter(spark, sf_dir):
     reason = quality_drop_reason(F.col("text"), F.col("n_chars"))
     return d.select(
         "doc_id", reason.alias("drop_reason"), reason.isNull().alias("keep")
-    )
-
-
-def quality_drop_reason(text, n_chars):
-    """The Gopher-rule drop reason (NULL == keep) as a pure row-wise
-    Column over (text, n_chars) — exposed so composing queries (the
-    datacard, the filter funnel, the calibration readout) can compute
-    it inline on an existing scan instead of joining the registered
-    plan's frame back on doc_id (r13: each such join replayed a full
-    corpus scan). Codegen's subexpression elimination shares the one
-    split() across the rule signals, exactly as the old projection
-    boundary did."""
-    w = F.split(text, " ")
-    n_words = F.size(w)
-    sum_wlen = F.aggregate(
-        F.transform(w, lambda x: F.length(x)),
-        F.lit(0),
-        lambda a, b: a + b,
-    )
-    n_alpha = F.size(F.filter(w, lambda x: x.rlike("^[A-Za-z]+$")))
-    has_stop = F.arrays_overlap(
-        w, F.array(*[F.lit(s) for s in _STOPWORDS])
-    )
-    return (
-        F.when(n_chars < 50, "too_short")
-        .when(n_chars > 10000, "too_long")
-        .when(sum_wlen < 2 * n_words, "short_words")
-        .when(sum_wlen > 12 * n_words, "long_words")
-        .when(5 * n_alpha < 3 * n_words, "low_alpha")
-        .when(~has_stop, "no_stopword")
     )
 
 
@@ -2246,16 +2134,7 @@ def text_char_entropy(spark, sf_dir):
 )
 def sample_weighted_hash(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
+    h = md5_mod(F.col("doc_id"), 1000000)
     return d.where(
         h < F.least(F.col("n_chars"), F.lit(500)) * 1000
     ).select("doc_id", "lang", "n_chars")
@@ -3388,38 +3267,10 @@ def bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared seed-argmin assignment CTE chain, ending at
-# asgn(vec_id, cid, e): nearest of the 8 deterministic seed centroids
-# (vec_id < 8), 1e-6-rounded distance, lowest-cid tiebreak. The Spark
-# twin is functions/vectors.collect_centroids + centroid_argmin_expr —
-# keep the two in lockstep (kmeans_one_iter and dedup_semantic_semdedup
-# both pin this block against their oracles).
-_SEED_ASSIGN_SQL = """ed AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings
-    ),
-    seeds AS (SELECT vec_id AS cid, e AS c FROM ed WHERE vec_id < 8),
-    d AS (
-        SELECT ed.vec_id, s.cid,
-               ROUND(list_reduce(list_transform(list_zip(ed.e, s.c),
-                         p -> (p[1] - p[2]) * (p[1] - p[2])),
-                     (a, b) -> a + b) + 1e-9, 6) AS dist
-        FROM ed, seeds s
-    ),
-    a AS (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dist, cid) AS rn
-        FROM d
-    ),
-    asgn AS (SELECT a.vec_id, a.cid, ed.e
-             FROM a JOIN ed USING (vec_id) WHERE rn = 1)"""
-
-
 @register(
     "kmeans_one_iter",
     oracle=f"""
-    WITH {_SEED_ASSIGN_SQL},
+    WITH {SEED_ASSIGN_SQL},
     j AS (SELECT cid, e FROM asgn)
     SELECT cid AS cluster_id, r.i AS dim,
            ROUND(AVG(e[r.i]) + 1e-9, 6) AS centroid_val,
@@ -3595,37 +3446,10 @@ def dedup_impact_by_source(spark, sf_dir):
     )
 
 
-_BM25_TERMS = ("spark", "merge", "window", "scan")
-_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-
-
 @register(
     "text_bm25_retrieval",
     oracle=f"""
-    WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl,
-               string_split(text, ' ') AS w
-        FROM documents
-    ),
-    tok AS (
-        SELECT doc_id, dl, unnest(w) AS tok FROM base
-    ),
-    tf AS (
-        SELECT doc_id, tok, MAX(dl) AS dl, COUNT(*) AS tf
-        FROM tok WHERE tok IN ({_BM25_TERMS_SQL})
-        GROUP BY doc_id, tok
-    ),
-    dfreq AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-    n AS (SELECT COUNT(*) AS n FROM documents),
-    ad AS (SELECT AVG(dl) AS avgdl FROM base),
-    scored AS (
-        SELECT tf.doc_id,
-               ln((n.n - dfreq.df + 0.5) / (dfreq.df + 0.5) + 1.0)
-                   * (tf.tf * 2.2)
-                   / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / ad.avgdl))
-                   AS s
-        FROM tf JOIN dfreq USING (tok), n, ad
-    )
+    WITH {BM25_SCORED_SQL}
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_terms_matched,
            ROUND(SUM(s) + 1e-9, 6) AS bm25
@@ -3652,7 +3476,7 @@ def text_bm25_retrieval(spark, sf_dir):
     )
     tok = base.select("doc_id", "dl", F.explode("w").alias("tok"))
     tf = (
-        tok.where(F.col("tok").isin(*_BM25_TERMS))
+        tok.where(F.col("tok").isin(*BM25_TERMS))
         .groupBy("doc_id", "tok")
         .agg(F.max("dl").alias("dl"), F.count(F.lit(1)).alias("tf"))
     )
@@ -3663,7 +3487,7 @@ def text_bm25_retrieval(spark, sf_dir):
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     )
     scored = (
-        # bounded: dfreq capped at |_BM25_TERMS| rows; stats is 1-row
+        # bounded: dfreq capped at |BM25_TERMS| rows; stats is 1-row
         tf.join(F.broadcast(dfreq), "tok")
         .crossJoin(F.broadcast(stats))
         .select(
@@ -3692,31 +3516,13 @@ def text_bm25_retrieval(spark, sf_dir):
     )
 
 
-# Johnson-Lindenstrauss sign matrix (8 components x 64 dims), generated
-# by a fixed LCG and inlined as literals into BOTH engines' expressions
-# (shared-literal rule: no engine-specific RNG can diverge).
-def _jl_signs() -> list[list[int]]:
-    s, out = 12345, []
-    for _ in range(8):
-        row = []
-        for _ in range(64):
-            s = (1103515245 * s + 12345) % (1 << 31)
-            row.append(1 if (s >> 16) & 1 else -1)
-        out.append(row)
-    return out
-
-
-_JL = _jl_signs()
-_JL_SCALE = "0.35355339059327373"  # 1/sqrt(8), shared literal
-
-
 def _jl_oracle() -> str:
     comps = ",\n".join(
         "ROUND(list_reduce(list_transform(list_zip(e, "
         f"[{', '.join(str(c) for c in row)}]), "
         "p -> p[1] * p[2]), (a, b) -> a + b) "
-        f"* {_JL_SCALE} + 1e-9, 6) AS proj_{j}"
-        for j, row in enumerate(_JL)
+        f"* {JL_SCALE} + 1e-9, 6) AS proj_{j}"
+        for j, row in enumerate(JL)
     )
     return f"""
     WITH ed AS (
@@ -3753,13 +3559,13 @@ def embedding_random_projection(spark, sf_dir):
                 "aggregate(zip_with(e, array({lits}), (x, c) -> x * c), "
                 "0D, (a, b) -> a + b) * {scale}".format(
                     lits=", ".join(f"{c}D" for c in row),
-                    scale=_JL_SCALE,
+                    scale=JL_SCALE,
                 )
             )
             + F.lit(1e-9),
             6,
         ).alias(f"proj_{j}")
-        for j, row in enumerate(_JL)
+        for j, row in enumerate(JL)
     ]
     return ed.select("vec_id", "label", *comps)
 
@@ -3842,7 +3648,7 @@ def dedup_exact_normalized(spark, sf_dir):
 @register(
     "dedup_semantic_semdedup",
     oracle=f"""
-    WITH {_SEED_ASSIGN_SQL},
+    WITH {SEED_ASSIGN_SQL},
     norm AS (
         -- normalize-then-dot, the same float path the Spark matmul uses
         SELECT vec_id, cid,
@@ -3934,8 +3740,8 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_quality_score_calibration",
     oracle=f"""
-    WITH {_QCLS_SCORE_SQL},
-    {_QF_RULE_SQL},
+    WITH {QCLS_SCORE_SQL},
+    {QF_RULE_SQL},
     binned AS (
         SELECT LEAST(CAST(FLOOR(qscore.score * 10) AS INT), 9) AS bin,
                qscore.score,
@@ -3975,7 +3781,7 @@ def eval_quality_score_calibration(spark, sf_dir):
     # projections over the same scan — compute both columns in ONE
     # scan instead (r13: 2 corpus scans + 1 corpus join -> 1 scan).
     d = load_table(spark, sf_dir, "documents")
-    _n, score_c = _qcls_cols(F.col("text"))
+    _n, score_c = qcls_cols(F.col("text"))
     keep_rule = quality_drop_reason(
         F.col("text"), F.col("n_chars")
     ).isNull()

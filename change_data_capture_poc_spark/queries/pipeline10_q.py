@@ -43,26 +43,21 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_mod, md5_prefix
+from change_data_capture_poc_spark.functions.text import BM25_SCORED_SQL
+from change_data_capture_poc_spark.functions.vectors import JL
 from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.operators.topk import grouped_topk
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
-from change_data_capture_poc_spark.queries.datapipe import (
-    _JL,
-    text_bm25_retrieval,
-)
-
-
-def _md5_long(col):
-    """First-8-hex-chars md5 as BIGINT — the repo's portable hash
-    (identical in DuckDB as ('0x' || substring(md5(x),1,8))::BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from change_data_capture_poc_spark.queries.datapipe import text_bm25_retrieval
 
 
 _MD5_SQL = "('0x' || substring(md5({x}), 1, 8))::BIGINT"
 # The same hash as a Spark-SQL string (for expr()-built folds) — keep
-# in lockstep with _md5_long and _MD5_SQL: all three MUST agree or
-# content-defined boundaries drift between paths/engines.
+# in lockstep with functions/hashing.md5_prefix and _MD5_SQL: all
+# three MUST agree or content-defined boundaries drift between
+# paths/engines.
 _MD5_SPARK_SQL = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
@@ -522,33 +517,9 @@ _RRF_QNORM = repr(math.sqrt(sum(c * c for c in _RRF_QV)))
 
 
 def _rrf_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _BM25_TERMS_SQL,
-    )
-
     qv_sql = ", ".join(repr(c) for c in _RRF_QV)
     return f"""
-    WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl,
-               string_split(text, ' ') AS w
-        FROM documents
-    ),
-    tok AS (SELECT doc_id, dl, unnest(w) AS tok FROM base),
-    tf AS (
-        SELECT doc_id, tok, MAX(dl) AS dl, COUNT(*) AS tf
-        FROM tok WHERE tok IN ({_BM25_TERMS_SQL})
-        GROUP BY doc_id, tok
-    ),
-    dfreq AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-    n AS (SELECT COUNT(*) AS n FROM documents),
-    ad AS (SELECT AVG(dl) AS avgdl FROM base),
-    scored AS (
-        SELECT tf.doc_id,
-               ln((n.n - dfreq.df + 0.5) / (dfreq.df + 0.5) + 1.0)
-                   * (tf.tf * 2.2)
-                   / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / ad.avgdl)) AS s
-        FROM tf JOIN dfreq USING (tok), n, ad
-    ),
+    WITH {BM25_SCORED_SQL},
     lex AS (
         SELECT doc_id, ROUND(SUM(s) + 1e-9, 6) AS bm25
         FROM scored GROUP BY doc_id
@@ -710,16 +681,16 @@ def corpus_epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded: literal _SHUF_EPOCHS range
     x = d.crossJoin(F.broadcast(ep))
     sh = (
-        _md5_long(
+        md5_mod(
             F.concat(
                 F.col("epoch").cast("string"),
                 F.lit(":"),
                 F.col("doc_id").cast("string"),
-            )
+            ),
+            _SHUF_SHARDS,
         )
-        % _SHUF_SHARDS
     ).cast("int")
-    pk = _md5_long(
+    pk = md5_prefix(
         F.concat(
             F.col("epoch").cast("string"),
             F.lit("#"),
@@ -749,7 +720,7 @@ def _xm_oracle() -> str:
         "list_reduce(list_transform(list_zip(embedding::DOUBLE[], "
         f"[{', '.join(str(c) for c in row)}]), "
         "p -> p[1] * p[2]), (a, b) -> a + b)"
-        for row in _JL
+        for row in JL
     )
     return f"""
     WITH img AS (
@@ -843,7 +814,7 @@ def multimodal_crossmodal_retrieval(
                     lits=", ".join(f"{c}D" for c in row)
                 )
             )
-            for row in _JL
+            for row in JL
         ]
     )
     pr = emb.select("vec_id", proj.alias("proj"))
@@ -1307,15 +1278,7 @@ def privacy_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     grid = spark.range(_DPQ_BINS).select(F.col("id").cast("int").alias("bin"))
     uni = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dpq:"), F.col("bin").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_prefix(F.concat(F.lit("dpq:"), F.col("bin").cast("string")))
         % F.lit(4294967296)
     ) / F.lit(4294967296.0)
     centered = uni - 0.5

@@ -37,6 +37,10 @@ from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
+from change_data_capture_poc_spark.operators.quality import (
+    QF_RULE_SQL,
+    quality_drop_reason,
+)
 
 # ---------------------------------------------------------------------------
 # cdc_schema_evolution_widening — upstream ALTER TYPE tolerance
@@ -188,14 +192,13 @@ def cdc_schema_evolution_widening(
 
 
 def _datacard_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import _QF_RULE_SQL
     from change_data_capture_poc_spark.queries.pipeline10_q import (
         _cdc_chunk_ctes,
     )
 
     return f"""
     WITH {_cdc_chunk_ctes().strip()},
-    {_QF_RULE_SQL},
+    {QF_RULE_SQL},
     dcbase AS (
         SELECT doc_id, source, lang, n_chars,
                len(list_filter(string_split(text, ' '), x -> x != ''))
@@ -294,9 +297,6 @@ def _datacard_oracle() -> str:
 def corpus_datacard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from change_data_capture_poc_spark.functions.caching import (
         persist_once,
-    )
-    from change_data_capture_poc_spark.queries.datapipe import (
-        quality_drop_reason,
     )
     from change_data_capture_poc_spark.queries.pipeline3_q import (
         split_assignment,

@@ -67,6 +67,12 @@ from change_data_capture_poc_spark.operators.minhash import (
     pair_grams,
     spark_grams,
 )
+from change_data_capture_poc_spark.operators.quality import (
+    QCLS_SCORE_SQL,
+    QF_RULE_SQL,
+    qcls_cols,
+    quality_drop_reason,
+)
 
 # ---------------------------------------------------------------------------
 # dedup_substring_suffix_runs
@@ -283,9 +289,7 @@ def text_pii_redact_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         redacted = F.regexp_replace(
             "blob", F.lit(pat), F.lit(f"[{name.upper()}]")
         )
-        row_sum = F.conv(
-            F.substring(F.md5(redacted.cast("binary")), 1, 8), 16, 10
-        ).cast("long")
+        row_sum = md5_prefix(redacted)
         per_class.append(
             b.select(
                 matches.alias("m"), row_sum.alias("rc")
@@ -723,15 +727,11 @@ def dedup_substring_removal(
 _FUNNEL_STAGES = ("length", "gopher_rules", "exact_dup", "classifier")
 
 
-def _funnel_oracle() -> str:
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _QCLS_SCORE_SQL,
-        _QF_RULE_SQL,
-    )
-
-    return f"""
-    WITH {_QF_RULE_SQL},
-    {_QCLS_SCORE_SQL},
+@register(
+    "corpus_filter_funnel_attribution",
+    oracle=f"""
+    WITH {QF_RULE_SQL},
+    {QCLS_SCORE_SQL},
     fp AS (SELECT doc_id, md5(text) AS fp FROM documents),
     kp AS (SELECT fp, MIN(doc_id) AS keeper FROM fp GROUP BY fp),
     st AS (
@@ -769,12 +769,7 @@ def _funnel_oracle() -> str:
                  / NULLIF(tot.t - (cumdrop - n_dropped), 0) + 1e-9, 6)
                AS drop_rate
     FROM cum, tot
-    """
-
-
-@register(
-    "corpus_filter_funnel_attribution",
-    oracle=_funnel_oracle(),
+    """,
     doc="Filter-funnel attribution (the FineWeb-style ablation "
         "readout): the corpus flows through the quality gates IN "
         "ORDER — length bounds, remaining Gopher rules, exact dedup "
@@ -796,10 +791,6 @@ def corpus_filter_funnel_attribution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from change_data_capture_poc_spark.functions.windows import global_window
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _qcls_cols,
-        quality_drop_reason,
-    )
 
     # drop_reason, fp and score are all pure row-wise functions of the
     # documents row (classifier score is map-only as of r13), so the
@@ -809,7 +800,7 @@ def corpus_filter_funnel_attribution(
     # window instead of the keeper-agg + fp join (r13: 4 corpus scans
     # + 4 joins -> 1 scan + 1 window shuffle).
     d = load_table(spark, sf_dir, "documents")
-    _n, score_c = _qcls_cols(F.col("text"))
+    _n, score_c = qcls_cols(F.col("text"))
     st = (
         d.select(
             "doc_id",

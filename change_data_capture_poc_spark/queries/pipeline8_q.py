@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.functions.hashing import md5_mod, md5_prefix
 from change_data_capture_poc_spark.operators.sketch import (
     HIST_B,
     HIST_ORACLE_CORE,
@@ -842,9 +842,7 @@ def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("true_count")
     )
     uni = (
-        F.conv(F.substring(F.md5(F.col("event_type")), 1, 8), 16, 10)
-        .cast("long")
-        % F.lit(4294967296)
+        md5_prefix(F.col("event_type")) % F.lit(4294967296)
     ) / F.lit(4294967296.0)
     centered = uni - 0.5
     # Floor the ln argument at 2^-32: a uniform landing EXACTLY on 0

@@ -61,6 +61,9 @@ from change_data_capture_poc_spark.operators.minhash import (
     spark_bands,
     spark_grams,
 )
+from change_data_capture_poc_spark.functions.vectors import (
+    SEED_ASSIGN_SQL,
+)
 
 _EVENTS_RAW_SCHEMA_NANOS = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
@@ -908,18 +911,14 @@ def streaming_chunk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(out, "streaming_chunk_tbl", "append")
 
 
-def _semdedup_assign_oracle() -> str:
-    # Shares the batch SemDeDup machinery verbatim: the seed-argmin
-    # assignment CTE (kept in lockstep with collect_centroids +
-    # centroid_argmin_expr) and the zero-norm-guarded normalization the
-    # batch oracle uses. Import is cycle-free (datapipe depends only on
-    # registry + sources).
-    from change_data_capture_poc_spark.queries.datapipe import (
-        _SEED_ASSIGN_SQL,
-    )
-
-    return f"""
-    WITH {_SEED_ASSIGN_SQL},
+# Shares the batch SemDeDup machinery verbatim: the seed-argmin
+# assignment CTE (kept in lockstep with collect_centroids +
+# centroid_argmin_expr) and the zero-norm-guarded normalization the
+# batch oracle uses.
+@register(
+    "streaming_semdedup_assign_drain",
+    oracle=f"""
+    WITH {SEED_ASSIGN_SQL},
     norm AS (
         SELECT vec_id, cid,
                list_transform(e, x -> x /
@@ -934,12 +933,7 @@ def _semdedup_assign_oracle() -> str:
       ON x.cid = y.cid AND y.vec_id < x.vec_id
      AND ROUND(list_dot_product(x.u, y.u), 6) >= 0.30
     GROUP BY x.vec_id, x.cid
-    """
-
-
-@register(
-    "streaming_semdedup_assign_drain",
-    oracle=_semdedup_assign_oracle(),
+    """,
     doc="STREAMING semantic dedup gate — the batch<->stream twin the "
         "other dedup families already have (streaming_minhash_band_"
         "drain for MinHash LSH): arriving vectors are assigned to the "

@@ -122,10 +122,6 @@ def test_representative_queries_deterministic(spark, sf_dir):
 # live in operators/ann.py and MinHash LSH in operators/minhash.py),
 # not behind another query module's underscore.
 _CROSS_QUERY_PRIVATE_IMPORTS = {
-    "datapipe": {
-        "_BM25_TERMS_SQL", "_JL", "_QCLS_SCORE_SQL", "_QF_RULE_SQL",
-        "_SEED_ASSIGN_SQL", "_qcls_cols",
-    },
     "pipeline4_q": {"_CHUNK_ORACLE"},
     "pipeline7_q": {
         "_BPE_ROUNDS", "_WPS_K", "_bpe_rounds_cte", "_bpe_train_state",
