@@ -847,6 +847,36 @@ def test_streaming_heavy_hitters_equals_batch(spark, sf_dir):
     assert rows("streaming_heavy_hitters_drain") == batch
 
 
+def test_streaming_minhash_band_drain_equals_batch(spark, sf_dir):
+    """The stream shingles, signs and bands each document with the
+    batch code of operators/minhash.py, so its drained bucket
+    occupancy equals a batch groupBy over the same bands of
+    documents, keeping buckets with at least two docs."""
+    from change_data_capture_poc_spark.operators.minhash import (
+        spark_bands,
+        spark_grams,
+    )
+    from change_data_capture_poc_spark.sources.tables import load_table
+
+    batch = sorted(
+        tuple(r)
+        for r in spark_bands(
+            spark_grams(load_table(spark, sf_dir, "documents"))
+        )
+        .groupBy("band_id", "band_key")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("doc_id").alias("earliest_doc"),
+        )
+        .where(F.col("n_docs") >= 2)
+        .collect()
+    )
+    assert batch
+    drained = all_queries()["streaming_minhash_band_drain"].fn(spark, sf_dir)
+    assert drained.columns == ["band_id", "band_key", "n_docs", "earliest_doc"]
+    assert sorted(tuple(r) for r in drained.collect()) == batch
+
+
 def test_temperature_resample_allocation(spark, sf_dir):
     """Largest-remainder targets: sum exactly equals the budget, every
     source gets >= its floor quota, and temperature flattens the mix

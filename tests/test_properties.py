@@ -662,6 +662,65 @@ def test_hll_rho_matches_python_model(spark, hvs):
         assert got[h] == model_rho(h), h
 
 
+_token_docs = st.lists(
+    st.lists(
+        st.sampled_from(["a", "b", "c", "d", "e", "the", "of"]),
+        min_size=0,
+        max_size=12,
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+@given(docs=_token_docs)
+@settings(**_SETTINGS)
+def test_minhash_bands_match_python_model(spark, docs):
+    """Word-4-gram shingles, MinHash signatures and LSH bands vs a
+    hashlib model: base hash int(md5(gram)[:8], 16) % P, one minimum
+    of (a*x + b) % P per (a, b), then each band's 3 rows joined by
+    '|'. Documents shorter than 4 tokens have no grams and no rows.
+    The bands spell out all 12 signature components, so one collect
+    checks shingles, signatures and banding together."""
+    import hashlib
+
+    from change_data_capture_poc_spark.operators.minhash import (
+        BANDS,
+        MH_AB,
+        MH_P,
+        NGRAM_N,
+        spark_bands,
+        spark_grams,
+    )
+
+    bands = set()
+    for i, toks in enumerate(docs):
+        if len(toks) < NGRAM_N:
+            continue
+        grams = {
+            " ".join(toks[j:j + NGRAM_N])
+            for j in range(len(toks) - NGRAM_N + 1)
+        }
+        xs = [
+            int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % MH_P
+            for g in grams
+        ]
+        sig = [min((a * x + b) % MH_P for x in xs) for a, b in MH_AB]
+        for band in range(BANDS):
+            key = "|".join(str(v) for v in sig[3 * band:3 * band + 3])
+            bands.add((i, band, key))
+
+    df = spark.createDataFrame(
+        [(i, " ".join(toks)) for i, toks in enumerate(docs)],
+        "doc_id bigint, text string",
+    )
+    got = {
+        (r.doc_id, r.band_id, r.band_key)
+        for r in spark_bands(spark_grams(df)).collect()
+    }
+    assert got == bands
+
+
 _rank_rows = st.lists(
     st.tuples(st.integers(0, 9), st.integers(0, 5)),  # (n, tok-ish)
     min_size=0,
