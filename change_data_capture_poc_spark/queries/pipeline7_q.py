@@ -1385,9 +1385,8 @@ _WB_MIN_CHARS = 50   # admission gate (documented simple bound; the
 _WB_BUDGET = 200     # total docs to sample across all sources
 
 
-@register(
-    "corpus_weighted_build_e2e",
-    oracle=f"""
+def _wb_oracle() -> str:
+    return f"""
     WITH gated AS (
         SELECT source, doc_id, text, n_chars FROM documents
         WHERE n_chars >= {_WB_MIN_CHARS}
@@ -1428,7 +1427,12 @@ _WB_BUDGET = 200     # total docs to sample across all sources
            CAST(r.sample_rank AS BIGINT) AS sample_rank
     FROM ranked r JOIN alloc a USING (source)
     WHERE r.sample_rank <= a.k_s
-    """,
+    """
+
+
+@register(
+    "corpus_weighted_build_e2e",
+    oracle=_wb_oracle(),
     doc=f"COMPOSED weighted corpus-build pipeline — the round-7 "
         f"flagship, chaining this round's pieces end to end the way "
         f"a real curation run does: admission gate (n_chars >= "

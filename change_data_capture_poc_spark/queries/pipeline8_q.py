@@ -466,9 +466,8 @@ _HSO_A = "click"
 _HSO_B = "purchase"
 
 
-@register(
-    "agg_hll_set_ops",
-    oracle=f"""
+def _hso_oracle() -> str:
+    return f"""
     WITH h AS (
         SELECT event_type, user_id
         FROM events
@@ -513,7 +512,12 @@ _HSO_B = "purchase"
            ROUND((x.a_exact + x.b_exact - x.union_exact) * 1.0
                  / x.union_exact + 1e-9, 6) AS jaccard_exact
     FROM exact x, est e
-    """,
+    """
+
+
+@register(
+    "agg_hll_set_ops",
+    oracle=_hso_oracle(),
     doc=f"HLL SET ALGEBRA — sketch-space union/intersection/Jaccard "
         f"(the audience-overlap readout computed WITHOUT co-shuffling "
         f"raw keys): per-set registers merge by MAX into the union "
