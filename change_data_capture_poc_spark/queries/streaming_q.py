@@ -61,9 +61,7 @@ from change_data_capture_poc_spark.operators.minhash import (
     spark_bands,
     spark_grams,
 )
-from change_data_capture_poc_spark.functions.vectors import (
-    SEED_ASSIGN_SQL,
-)
+from change_data_capture_poc_spark.functions.vectors import SEED_ASSIGN_SQL
 
 _EVENTS_RAW_SCHEMA_NANOS = (
     "event_id bigint, ts bigint, user_id bigint, event_type string, "
