@@ -139,9 +139,9 @@ SEED_ASSIGN_SQL = """ed AS (
              FROM a JOIN ed USING (vec_id) WHERE rn = 1)"""
 
 
-# Johnson-Lindenstrauss sign matrix (8 x 64, +-1 from a fixed LCG) and
-# its 1/sqrt(8) scale, shared by embedding_random_projection and the
-# cross-modal retrieval queries.
+# Johnson-Lindenstrauss sign matrix (8 components x 64 dims), generated
+# by a fixed LCG and inlined as literals into BOTH engines' expressions
+# (shared-literal rule: no engine-specific RNG can diverge).
 def _jl_signs() -> list[list[int]]:
     s, out = 12345, []
     for _ in range(8):
