@@ -39,10 +39,12 @@ pipeline breadth the brief asks for beyond it):
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.functions.hashing import md5_mod, md5_prefix
 from change_data_capture_poc_spark.functions.text import BM25_SCORED_SQL
 from change_data_capture_poc_spark.functions.vectors import JL
@@ -1468,55 +1470,25 @@ def chunk_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _chunk_index_dir(sf_dir: str) -> str:
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    return artifact_dir("chunk_index", sf_dir)
-
-
 def ensure_chunk_index(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
-    """Build the persisted chunk-fingerprint index iff absent — the
-    chunk store's offline half: the existing corpus (everything
+    """Build the persisted chunk-fingerprint index iff absent or stale
+    — the chunk store's offline half: the existing corpus (everything
     outside the delta cohort doc_id % 10 == 7) is chunked ONCE and
     only its DISTINCT fingerprints are written
-    (``fp_index.parquet``). ``_INDEX_META.json`` records the source
-    parquet's stat fingerprint (size + mtime_ns) so testdata
-    regenerated at the same path triggers a rebuild instead of
-    silently serving the old generation (the repo-wide staleness
-    guard; one os.stat per call, no data read)."""
-    import json
-    import os
+    (``fp_index.parquet``). Staleness is the documents table's stat
+    fingerprint (functions/artifacts.persisted)."""
+    def build(d: str) -> None:
+        idx = (
+            _cdc_chunks(spark, sf_dir)
+            .where(F.col("doc_id") % 10 != 7)
+            .select("chunk_fp")
+            .distinct()
+        )
+        idx.write.mode("overwrite").parquet(os.path.join(d, "fp_index.parquet"))
 
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _source_fingerprint,
-    )
-
-    d = _chunk_index_dir(sf_dir)
-    marker = os.path.join(d, "_INDEX_META.json")
-    fp = _source_fingerprint(sf_dir, "documents")
-    if not force and os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-                if meta.get("sf_dir") == sf_dir and meta.get("fp") == fp:
-                    return d
-        except (OSError, ValueError):
-            pass  # unreadable marker -> rebuild
-
-    idx = (
-        _cdc_chunks(spark, sf_dir)
-        .where(F.col("doc_id") % 10 != 7)
-        .select("chunk_fp")
-        .distinct()
-    )
-    idx.write.mode("overwrite").parquet(os.path.join(d, "fp_index.parquet"))
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "fp": fp}, fh)
-    return d
+    return persisted("chunk_index", sf_dir, "documents", build, force)[0]
 
 
 @register(
@@ -1540,8 +1512,6 @@ def ensure_chunk_index(
         "re-shardable independently of the text.",
 )
 def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     d = ensure_chunk_index(spark, sf_dir, force=True)
     idx = spark.read.parquet(os.path.join(d, "fp_index.parquet"))
     src = _cdc_chunks(spark, sf_dir).where(F.col("doc_id") % 10 != 7)
@@ -1587,8 +1557,6 @@ def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transparent to the result.",
 )
 def chunk_incremental_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     d = ensure_chunk_index(spark, sf_dir)
     idx = spark.read.parquet(
         os.path.join(d, "fp_index.parquet")

@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.operators.quality import (
@@ -55,31 +56,17 @@ def _widen_gen_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the two writer generations (once per sf_dir) and return
     the landing directory. Narrow generation = even LSNs, physical
     INT32/FLOAT; wide generation = odd LSNs, INT64/DOUBLE. Content is
-    a deterministic function of the events table, so the marker file
-    makes re-runs free. Price is derived from integers then quantized
-    through float32 for the narrow generation — the exact value a
-    REAL-era writer would have persisted, reproducible in DuckDB as
-    CAST(... AS REAL)."""
-    import json
+    a deterministic function of the events table, so the artifact
+    marker (functions/artifacts.persisted) makes re-runs free. Price
+    is derived from integers then quantized through float32 for the
+    narrow generation — the exact value a REAL-era writer would have
+    persisted, reproducible in DuckDB as CAST(... AS REAL)."""
+    return persisted(
+        "widen", sf_dir, "events", lambda d: _write_widen_gens(spark, sf_dir, d)
+    )[0]
 
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _source_fingerprint,
-    )
 
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    d = artifact_dir("widen", sf_dir)
-    marker = os.path.join(d, "_GENS_WRITTEN.json")
-    fp = _source_fingerprint(sf_dir, "events")
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                if json.load(fh).get("fp") == fp:
-                    return d
-        except (OSError, ValueError):
-            pass  # unreadable marker -> rewrite
+def _write_widen_gens(spark: SparkSession, sf_dir: str, d: str) -> None:
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
@@ -116,9 +103,6 @@ def _widen_gen_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     narrow.write.mode("overwrite").parquet(os.path.join(d, "gen_narrow"))
     wide.write.mode("overwrite").parquet(os.path.join(d, "gen_wide"))
-    with open(marker, "w") as f:
-        json.dump({"sf_dir": sf_dir, "fp": fp}, f)
-    return d
 
 
 @register(

@@ -48,15 +48,19 @@ Closes the genuinely-absent deliverables from the round-8 verdict:
   minimum.
 
 Every persisted /tmp artifact (index, log, vocabulary, snapshot) is
-fingerprint-guarded against testdata regeneration at the same path
-(``_source_fingerprint``).
+built and published through ``functions/artifacts.persisted``: guarded
+by the source table's stat fingerprint against testdata regeneration
+at the same path, and made visible by one atomic directory rename.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
@@ -311,34 +315,12 @@ def ann_multiprobe_recall_sampled_truth(
 
 
 
-def _source_fingerprint(sf_dir: str, table: str) -> list[int]:
-    """(size, mtime_ns) of a source parquet — the staleness guard for
-    per-SF artifacts persisted under /tmp (index tables, synthesized
-    logs): testdata can be REGENERATED at the same path between
-    rounds, and an artifact keyed on the path alone would silently
-    serve the old generation. One os.stat, no data read."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return [st.st_size, st.st_mtime_ns]
-
-
-def _ann_index_dir(sf_dir: str) -> str:
-    """Per-SF index home (same /tmp device as streaming_q._stream_dir
-    — in production this is the object-store prefix the offline build
-    job owns and the online servers mount read-only)."""
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    return artifact_dir("ann_index", sf_dir)
-
-
 def ensure_ann_index(
     spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
-    """Build the persisted IVF-PQ index iff absent (FAISS's offline
-    build): writes three parquet tables under the index dir —
+) -> tuple[str, dict]:
+    """Build the persisted IVF-PQ index iff absent or stale (FAISS's
+    offline build) and return ``(dir, meta)``: three parquet tables
+    under the index dir —
 
     - ``codebook.parquet`` (cid, v): the PQ_C codeword/centroid
       source vectors (they double as coarse centroids, as in
@@ -350,58 +332,38 @@ def ensure_ann_index(
       input in production; materialized here so the serve plan
       provably never touches the embeddings table).
 
-    plus ``_INDEX_META.json`` recording the source path AND its stat
-    fingerprint (size + mtime): /tmp artifacts outlive testdata
-    regeneration at the same path, and a stale index would silently
-    diverge from a refreshed embeddings table. The fingerprint is one
-    os.stat — no data read — so freshness is checked on every call
-    without violating the FAISS-style no-per-call-corpus-scan rule;
-    force-refresh via ann_index_build."""
-    import json
-    import os
-
-    d = _ann_index_dir(sf_dir)
-    marker = os.path.join(d, "_INDEX_META.json")
-    fp = _source_fingerprint(sf_dir, "embeddings")
-    if not force and os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-                if (
-                    meta.get("sf_dir") == sf_dir
-                    and meta.get("fp") == fp
-                    and "max_vec_id" in meta  # pre-watermark marker -> stale
-                ):
-                    return d
-        except (OSError, ValueError):
-            pass  # unreadable marker -> rebuild
-
+    Freshness is the embeddings table's stat fingerprint (one os.stat,
+    no data read — functions/artifacts.persisted), so it is checked on
+    every call without violating the FAISS-style no-per-call-corpus-
+    scan rule; ann_index_build redoes the build (force). In production
+    the index dir is the object-store prefix the offline build job
+    owns and the online servers mount read-only."""
     from change_data_capture_poc_spark.functions.vectors import (
         centroid_argmin_expr,
     )
 
-    e = pq_embeddings(spark, sf_dir)
-    cb = pq_codebook(e)
-    spark.createDataFrame(
-        [(cid, vec) for cid, vec in cb], "cid int, v array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "codebook.parquet")
-    )
-    e.select(
-        "vec_id",
-        centroid_argmin_expr(cb, "v").getField("cid").alias("ccid"),
-        *pq_code_cols(cb),
-    ).write.mode("overwrite").parquet(os.path.join(d, "codes.parquet"))
-    pq_queries(e).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "queries.parquet")
-    )
-    # max_vec_id = the build's id watermark, recorded so incremental
-    # serving can find "rows inserted since this build" from the
-    # metadata alone (no corpus scan at serve time).
-    hi = int(e.agg(F.max("vec_id")).first()[0])
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "fp": fp, "max_vec_id": hi}, fh)
-    return d
+    def build(d: str) -> dict:
+        e = pq_embeddings(spark, sf_dir)
+        cb = pq_codebook(e)
+        spark.createDataFrame(
+            [(cid, vec) for cid, vec in cb], "cid int, v array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "codebook.parquet")
+        )
+        e.select(
+            "vec_id",
+            centroid_argmin_expr(cb, "v").getField("cid").alias("ccid"),
+            *pq_code_cols(cb),
+        ).write.mode("overwrite").parquet(os.path.join(d, "codes.parquet"))
+        pq_queries(e).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "queries.parquet")
+        )
+        # max_vec_id = the build's id watermark, recorded so incremental
+        # serving can find "rows inserted since this build" from the
+        # metadata alone (no corpus scan at serve time).
+        return {"max_vec_id": int(e.agg(F.max("vec_id")).first()[0])}
+
+    return persisted("ann_index", sf_dir, "embeddings", build, force)
 
 
 _CODE_COLS = [f"code_{m}" for m in range(PQ_M)]
@@ -423,8 +385,6 @@ def _index_codebook(
     spark: SparkSession, d: str
 ) -> list[tuple[int, list[float]]]:
     """The persisted PQ_C-row codebook — bounded collect."""
-    import os
-
     return sorted(
         (int(r["cid"]), [float(x) for x in r["v"]])
         for r in spark.read.parquet(
@@ -504,9 +464,7 @@ def _codes_oracle() -> str:
         f"corpus.",
 )
 def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    d = ensure_ann_index(spark, sf_dir, force=True)
+    d, _ = ensure_ann_index(spark, sf_dir, force=True)
     return spark.read.parquet(os.path.join(d, "codes.parquet")).select(
         "vec_id", "ccid", *_CODE_COLS
     )
@@ -532,9 +490,7 @@ def ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"codebook and the request batch LUT.",
 )
 def ann_serve_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    d = ensure_ann_index(spark, sf_dir)
+    d, _ = ensure_ann_index(spark, sf_dir)
     cb = _index_codebook(spark, d)
     qe = spark.read.parquet(os.path.join(d, "queries.parquet"))
     codes = spark.read.parquet(os.path.join(d, "codes.parquet"))
@@ -762,71 +718,48 @@ _QUAR_GARBLE_REM = 3
 _QUAR_PREFIX = "xlog-v1|"
 
 
-def _quarantine_log_dir(sf_dir: str) -> str:
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    return artifact_dir("quarlog", sf_dir)
-
-
 def ensure_quarantine_log(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
-    """Write the day-partitioned corrupted envelope log iff absent —
-    the S3-sink layout (sources/writers.py partitioned-JSON shape,
-    day= dirs) with transport damage injected by the deterministic
-    rule above. One linear map over events, no shuffle: partitionBy
-    splits the write by the ~|days| distinct day values."""
-    import json
-    import os
+    """Write the day-partitioned corrupted envelope log iff absent or
+    stale — the S3-sink layout (sources/writers.py partitioned-JSON
+    shape, day= dirs) with transport damage injected by the
+    deterministic rule above. One linear map over events, no shuffle:
+    partitionBy splits the write by the ~|days| distinct day values."""
 
-    d = _quarantine_log_dir(sf_dir)
-    marker = os.path.join(d, "_LOG_META.json")
-    fp = _source_fingerprint(sf_dir, "events")
-    if not force and os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-                if meta.get("sf_dir") == sf_dir and meta.get("fp") == fp:
-                    return d
-        except (OSError, ValueError):
-            pass  # unreadable marker -> rebuild
-
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("user_id").isNotNull()
-    )
-    line = F.to_json(
-        F.struct(
+    def build(d: str) -> None:
+        line = F.to_json(
             F.struct(
                 F.struct(
-                    F.col("user_id").alias("id"),
-                    F.col("event_type").alias("etype"),
-                ).alias("after"),
-                F.lit("u").alias("op"),
-                F.unix_millis("ts").alias("ts_ms"),
-                F.struct(F.col("event_id").alias("lsn")).alias("source"),
-            ).alias("payload")
+                    F.struct(
+                        F.col("user_id").alias("id"),
+                        F.col("event_type").alias("etype"),
+                    ).alias("after"),
+                    F.lit("u").alias("op"),
+                    F.unix_millis("ts").alias("ts_ms"),
+                    F.struct(F.col("event_id").alias("lsn")).alias("source"),
+                ).alias("payload")
+            )
         )
-    )
-    damaged = (
-        F.when(
-            F.col("event_id") % _QUAR_TRUNC_MOD == 0,
-            F.substring(line, 1, (F.length(line) / 2).cast("int")),
+        damaged = (
+            F.when(
+                F.col("event_id") % _QUAR_TRUNC_MOD == 0,
+                F.substring(line, 1, (F.length(line) / 2).cast("int")),
+            )
+            .when(
+                F.col("event_id") % _QUAR_GARBLE_MOD == _QUAR_GARBLE_REM,
+                F.concat(F.lit(_QUAR_PREFIX), line),
+            )
+            .otherwise(line)
         )
-        .when(
-            F.col("event_id") % _QUAR_GARBLE_MOD == _QUAR_GARBLE_REM,
-            F.concat(F.lit(_QUAR_PREFIX), line),
-        )
-        .otherwise(line)
-    )
-    ev.select(
-        damaged.alias("value"),
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-    ).write.partitionBy("day").mode("overwrite").text(d)
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "fp": fp}, fh)
-    return d
+        load_table(spark, sf_dir, "events").where(
+            F.col("user_id").isNotNull()
+        ).select(
+            damaged.alias("value"),
+            F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        ).write.partitionBy("day").mode("overwrite").text(d)
+
+    return persisted("quarlog", sf_dir, "events", build, force)[0]
 
 
 # Shared by the batch report and its stream twin (streaming_q):
@@ -953,13 +886,8 @@ def _delta_watermark(spark: SparkSession, sf_dir: str) -> int:
     recorded in the index metadata — a marker read, zero scans at
     serve time (the simulated delta is the top decile of build-time
     ids standing in for rows inserted after the build)."""
-    import json
-    import os
-
-    d = ensure_ann_index(spark, sf_dir)
-    with open(os.path.join(d, "_INDEX_META.json")) as fh:
-        hi = int(json.load(fh)["max_vec_id"])
-    return hi * 9 // 10
+    _d, meta = ensure_ann_index(spark, sf_dir)
+    return meta["max_vec_id"] * 9 // 10
 
 
 def _merged_codes(
@@ -971,8 +899,6 @@ def _merged_codes(
     """Persisted base codes up to the build watermark (range pushed
     into the scan) ∪ the post-watermark delta encoded in-plan against
     the persisted codebook ``cb`` — equal to a from-scratch build."""
-    import os
-
     from change_data_capture_poc_spark.functions.vectors import (
         centroid_argmin_expr,
     )
@@ -1016,9 +942,7 @@ def _merged_codes(
         f"everything else matches ann_serve_from_index.",
 )
 def ann_index_delta_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    d = ensure_ann_index(spark, sf_dir)
+    d, _ = ensure_ann_index(spark, sf_dir)
     cb = _index_codebook(spark, d)
     qe = spark.read.parquet(os.path.join(d, "queries.parquet"))
     codes = _merged_codes(spark, sf_dir, d, cb)
@@ -1263,50 +1187,27 @@ def cdc_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # encoder's trainer cascade).
 
 
-def _bpe_vocab_dir(sf_dir: str) -> str:
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    return artifact_dir("bpe_vocab", sf_dir)
-
-
 def ensure_bpe_vocab(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
     """Train iff absent/stale; write ``vocab.parquet`` (word, toks)
     and ``token_ids.parquet`` (token, token_id)."""
-    import json
-    import os
+    def build(d: str) -> None:
+        _merges, v = _bpe_train_state(spark, sf_dir)
+        v.select("word", "toks").write.mode("overwrite").parquet(
+            os.path.join(d, "vocab.parquet")
+        )
+        syms = v.select(F.explode("toks").alias("token")).distinct()
+        syms.select(
+            "token",
+            (F.row_number().over(global_window("token")) - 1)
+            .cast("int")
+            .alias("token_id"),
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "token_ids.parquet")
+        )
 
-    d = _bpe_vocab_dir(sf_dir)
-    marker = os.path.join(d, "_VOCAB_META.json")
-    fp = _source_fingerprint(sf_dir, "documents")
-    if not force and os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-                if meta.get("sf_dir") == sf_dir and meta.get("fp") == fp:
-                    return d
-        except (OSError, ValueError):
-            pass  # unreadable marker -> rebuild
-
-    _merges, v = _bpe_train_state(spark, sf_dir)
-    v.select("word", "toks").write.mode("overwrite").parquet(
-        os.path.join(d, "vocab.parquet")
-    )
-    syms = v.select(F.explode("toks").alias("token")).distinct()
-    syms.select(
-        "token",
-        (F.row_number().over(global_window("token")) - 1)
-        .cast("int")
-        .alias("token_id"),
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "token_ids.parquet")
-    )
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "fp": fp}, fh)
-    return d
+    return persisted("bpe_vocab", sf_dir, "documents", build, force)[0]
 
 
 @register(
@@ -1327,14 +1228,13 @@ def ensure_bpe_vocab(
         f"trainer once, persists the word->tokens vocabulary and the "
         f"symbol->id table to parquet, and RETURNS the id table read "
         f"back FROM DISK so the oracle certifies the persisted bytes "
-        f"(the ann_index_build pattern). Refreshes on force or when "
-        f"the source fingerprint changes. Scale shape: training is "
+        f"(the ann_index_build pattern). Retrains on every call; "
+        f"the persisted artifact is replaced when the source "
+        f"fingerprint or the code changes. Scale shape: training is "
         f"the documented Heaps-bounded trainer; the artifact is "
         f"vocabulary-sized, not corpus-sized.",
 )
 def tokenizer_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     d = ensure_bpe_vocab(spark, sf_dir, force=True)
     return spark.read.parquet(os.path.join(d, "token_ids.parquet"))
 
@@ -1355,8 +1255,6 @@ def tokenizer_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "parquet must be semantics-preserving.",
 )
 def bpe_encode_from_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     d = ensure_bpe_vocab(spark, sf_dir)
     v = spark.read.parquet(os.path.join(d, "vocab.parquet"))
     ids = spark.read.parquet(os.path.join(d, "token_ids.parquet"))
@@ -1553,52 +1451,31 @@ def pack_best_fit_bpe_tokens(
 # the contract that makes IVM trustworthy: snapshot + delta == truth.
 
 
-def _agg_snapshot_dir(sf_dir: str) -> str:
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    return artifact_dir("aggsnap", sf_dir)
-
-
 def ensure_agg_snapshot(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> tuple[str, int]:
     """Materialize the per-user (n_events, value_sum) aggregate over
     event_id <= T (T = max id div 2, the halves convention); returns
     (dir, T)."""
-    import json
-    import os
-
-    d = _agg_snapshot_dir(sf_dir)
-    marker = os.path.join(d, "_SNAP_META.json")
-    fp = _source_fingerprint(sf_dir, "events")
-    if not force and os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-                if meta.get("sf_dir") == sf_dir and meta.get("fp") == fp:
-                    return d, int(meta["t"])
-        except (OSError, ValueError, KeyError):
-            pass  # unreadable marker -> rebuild
-
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("user_id").isNotNull()
-    )
-    t = int(ev.agg(F.expr("max(event_id) div 2")).first()[0])
-    (
-        ev.where(F.col("event_id") <= t)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("value").alias("value_sum"),
+    def build(d: str) -> dict:
+        ev = load_table(spark, sf_dir, "events").where(
+            F.col("user_id").isNotNull()
         )
-        .write.mode("overwrite")
-        .parquet(os.path.join(d, "snapshot.parquet"))
-    )
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "fp": fp, "t": t}, fh)
-    return d, t
+        t = int(ev.agg(F.expr("max(event_id) div 2")).first()[0])
+        (
+            ev.where(F.col("event_id") <= t)
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_events"),
+                F.sum("value").alias("value_sum"),
+            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(d, "snapshot.parquet"))
+        )
+        return {"t": t}
+
+    d, meta = persisted("aggsnap", sf_dir, "events", build, force)
+    return d, meta["t"]
 
 
 @register(
@@ -1627,8 +1504,6 @@ def ensure_agg_snapshot(
 def cdc_incremental_agg_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     d, t = ensure_agg_snapshot(spark, sf_dir)
     snap = spark.read.parquet(os.path.join(d, "snapshot.parquet"))
     delta = (
@@ -1679,15 +1554,15 @@ def cdc_incremental_agg_maintenance(
 # is the delta-serve union WRITTEN BACK instead of scored: base codes
 # (pushed-range scan, <= watermark) union the delta encoded against the
 # persisted codebook (map-side literal argmin, NO retrain — the coarse
-# geometry is frozen, exactly like FAISS compaction), landing as
-# codes_g2. Because PQ encoding is deterministic in (codebook, vector),
-# the compacted generation must equal a from-scratch build bit for bit
-# — that is the oracle (shared with ann_index_build), and the pytest
-# pins generation-2 == generation-1 row for row. In production the swap
-# is then atomic: rename the generation directory, bump max_vec_id in
-# the metadata; this query leaves generation 1 untouched so serve/
-# delta-serve keep answering during the compaction (the reason
-# generations exist).
+# geometry is frozen, exactly like FAISS compaction), published as its
+# own ``ann_index_g2`` artifact. Because PQ encoding is deterministic
+# in (codebook, vector), the compacted generation must equal a
+# from-scratch build bit for bit — that is the oracle (shared with
+# ann_index_build), and the pytest pins generation-2 == generation-1
+# row for row. In production the swap is then atomic: rename the
+# generation directory, bump max_vec_id in the metadata; this query
+# leaves generation 1 untouched so serve/delta-serve keep answering
+# during the compaction (the reason generations exist).
 
 
 @register(
@@ -1709,13 +1584,18 @@ def cdc_incremental_agg_maintenance(
         f"replaces.",
 )
 def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    d = ensure_ann_index(spark, sf_dir)
+    d, _ = ensure_ann_index(spark, sf_dir)
     merged = _merged_codes(spark, sf_dir, d, _index_codebook(spark, d))
-    g2 = os.path.join(d, "codes_g2.parquet")
-    merged.write.mode("overwrite").parquet(g2)
-    return spark.read.parquet(g2).select("vec_id", "ccid", *_CODE_COLS)
+
+    def build(stage: str) -> None:
+        merged.write.mode("overwrite").parquet(
+            os.path.join(stage, "codes.parquet")
+        )
+
+    g2, _ = persisted("ann_index_g2", sf_dir, "embeddings", build, force=True)
+    return spark.read.parquet(os.path.join(g2, "codes.parquet")).select(
+        "vec_id", "ccid", *_CODE_COLS
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1752,8 +1632,6 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_detokenize_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     d = ensure_bpe_vocab(spark, sf_dir)
     v = spark.read.parquet(os.path.join(d, "vocab.parquet")).select(
         "word", "toks"
@@ -2323,8 +2201,6 @@ def _unigram_ctes() -> str:
 def tokenizer_family_fertility_compare(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from change_data_capture_poc_spark.functions.caching import (
         persist_once,
     )
@@ -2794,14 +2670,6 @@ def _uni_em_state(
     return vocab, cost
 
 
-def _uni_vocab_dir(sf_dir: str) -> str:
-    from change_data_capture_poc_spark.functions.artifacts import (
-        artifact_dir,
-    )
-
-    return artifact_dir("uni_vocab", sf_dir)
-
-
 def ensure_unigram_vocab(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -2810,36 +2678,21 @@ def ensure_unigram_vocab(
     of the tokenizer train/serve split (same source-fingerprint guard
     as the BPE and ANN artifacts): encode jobs read the model from
     disk instead of embedding two EM rounds in every plan."""
-    import json
-    import os
-
-    d = _uni_vocab_dir(sf_dir)
-    marker = os.path.join(d, "_VOCAB_META.json")
-    fp = _source_fingerprint(sf_dir, "documents")
-    if not force and os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                meta = json.load(fh)
-                if meta.get("sf_dir") == sf_dir and meta.get("fp") == fp:
-                    return d
-        except (OSError, ValueError):
-            pass  # unreadable marker -> rebuild
-
     from change_data_capture_poc_spark.functions.caching import (
         free_local_checkpoint,
     )
 
-    vocab, cost = _uni_em_state(spark, sf_dir)
-    vocab.join(cost, "token").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "vocab.parquet"))
-    # The model now lives on disk; the final EM round's checkpoint
-    # blocks have no further reader — free them.
-    free_local_checkpoint(cost)
-    free_local_checkpoint(vocab)
-    with open(marker, "w") as fh:
-        json.dump({"sf_dir": sf_dir, "fp": fp}, fh)
-    return d
+    def build(d: str) -> None:
+        vocab, cost = _uni_em_state(spark, sf_dir)
+        vocab.join(cost, "token").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(d, "vocab.parquet"))
+        # The model now lives on disk; the final EM round's checkpoint
+        # blocks have no further reader — free them.
+        free_local_checkpoint(cost)
+        free_local_checkpoint(vocab)
+
+    return persisted("uni_vocab", sf_dir, "documents", build, force)[0]
 
 
 @register(
@@ -2879,8 +2732,6 @@ def ensure_unigram_vocab(
         f"exactly once, at seed time.",
 )
 def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     d = ensure_unigram_vocab(spark, sf_dir, force=True)
     v = spark.read.parquet(os.path.join(d, "vocab.parquet"))
     return v.select(
@@ -2930,8 +2781,6 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unigram_viterbi_encode(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     words, _chars, _freq, _tot = _wp_tables(spark, sf_dir)
     d = ensure_unigram_vocab(spark, sf_dir)
     cost = spark.read.parquet(os.path.join(d, "vocab.parquet")).select(
@@ -3082,8 +2931,6 @@ def _uni_soft_ctes() -> str:
 def unigram_em_expected_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from change_data_capture_poc_spark.functions.caching import (
         persist_once,
     )

@@ -87,8 +87,8 @@ def test_ann_serve_reads_only_index_tables(spark, sf_dir):
     (codebook/codes/queries parquet) — never the embeddings table.
     Also pins the serve answer against the composed in-one-plan
     recall query's prediction machinery: top-1 neighbor ids agree."""
+    from change_data_capture_poc_spark.functions.artifacts import artifact_dir
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _ann_index_dir,
         ensure_ann_index,
     )
 
@@ -96,7 +96,7 @@ def test_ann_serve_reads_only_index_tables(spark, sf_dir):
     df = all_queries()["ann_serve_from_index"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "embeddings.parquet" not in plan, plan
-    assert _ann_index_dir(sf_dir).split("/")[-1] in plan
+    assert artifact_dir("ann_index", sf_dir).split("/")[-1] in plan
 
     rows = df.collect()
     assert len(rows) == 8 * 5
@@ -455,8 +455,11 @@ def test_quarantine_log_regenerates_when_source_changes(
     import os
     import shutil
 
+    from change_data_capture_poc_spark.functions.artifacts import (
+        MARKER,
+        artifact_dir,
+    )
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _quarantine_log_dir,
         ensure_quarantine_log,
     )
 
@@ -467,7 +470,7 @@ def test_quarantine_log_regenerates_when_source_changes(
         os.path.join(my_sf, "events.parquet"),
     )
     d = ensure_quarantine_log(spark, my_sf)
-    marker = os.path.join(_quarantine_log_dir(my_sf), "_LOG_META.json")
+    marker = os.path.join(artifact_dir("quarlog", my_sf), MARKER)
     with open(marker) as fh:
         fp1 = json.load(fh)["fp"]
 
@@ -490,8 +493,8 @@ def test_bpe_encode_from_vocab_matches_and_skips_trainer(spark, sf_dir):
     exactly ONCE (the corpus pass) plus the two artifact tables — the
     trainer cascade is provably absent (the in-plan encoder's plan
     scans documents more than once because it embeds training)."""
+    from change_data_capture_poc_spark.functions.artifacts import artifact_dir
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _bpe_vocab_dir,
         ensure_bpe_vocab,
     )
 
@@ -500,7 +503,7 @@ def test_bpe_encode_from_vocab_matches_and_skips_trainer(spark, sf_dir):
     art = qs["bpe_encode_from_vocab"].fn(spark, sf_dir)
     plan = art._jdf.queryExecution().executedPlan().toString()
     assert plan.count("documents.parquet") == 1, plan
-    assert _bpe_vocab_dir(sf_dir).split("/")[-1] in plan
+    assert artifact_dir("bpe_vocab", sf_dir).split("/")[-1] in plan
 
     inplan = qs["bpe_encode_corpus"].fn(spark, sf_dir)
     assert (
@@ -521,7 +524,6 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
 
     from change_data_capture_poc_spark.queries.pipeline9_q import (
         _UNI_MAXLEN,
-        _uni_vocab_dir,
         ensure_unigram_vocab,
         unigram_em_expected_counts,
     )
@@ -616,8 +618,8 @@ def test_unigram_encode_serves_from_artifact(spark, sf_dir):
     absent (each would add its own cost-table lineage). The oracle
     replays the full EM chain, so correctness of the artifact is
     already gated; here we pin the plan shape."""
+    from change_data_capture_poc_spark.functions.artifacts import artifact_dir
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _uni_vocab_dir,
         ensure_unigram_vocab,
     )
 
@@ -628,7 +630,7 @@ def test_unigram_encode_serves_from_artifact(spark, sf_dir):
     # persist_once materializes); the EM rounds would each add their
     # own word-table lineage on top
     assert plan.count("documents.parquet") <= 3, plan
-    assert _uni_vocab_dir(sf_dir).split("/")[-1] in plan
+    assert artifact_dir("uni_vocab", sf_dir).split("/")[-1] in plan
 
 
 def test_ivm_maintenance_reads_snapshot_plus_pruned_delta(
@@ -643,8 +645,8 @@ def test_ivm_maintenance_reads_snapshot_plus_pruned_delta(
         formatted_plan,
         pushed_filters,
     )
+    from change_data_capture_poc_spark.functions.artifacts import artifact_dir
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _agg_snapshot_dir,
         ensure_agg_snapshot,
     )
     from change_data_capture_poc_spark.sources.tables import load_table
@@ -654,7 +656,7 @@ def test_ivm_maintenance_reads_snapshot_plus_pruned_delta(
         spark, sf_dir
     )
     plan = formatted_plan(df)
-    assert _agg_snapshot_dir(sf_dir).split("/")[-1] in plan
+    assert artifact_dir("aggsnap", sf_dir).split("/")[-1] in plan
     assert "GreaterThan(event_id" in " | ".join(
         pushed_filters(df, plan)
     )
@@ -711,13 +713,13 @@ def test_compact_generation_equals_build(spark, sf_dir):
     must survive untouched so serving continues mid-compaction."""
     import os
 
+    from change_data_capture_poc_spark.functions.artifacts import artifact_dir
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _ann_index_dir,
         ensure_ann_index,
     )
 
     qs = all_queries()
-    d = ensure_ann_index(spark, sf_dir)
+    d, _ = ensure_ann_index(spark, sf_dir)
     g1_before = sorted(
         os.listdir(os.path.join(d, "codes.parquet"))
     )
@@ -727,7 +729,7 @@ def test_compact_generation_equals_build(spark, sf_dir):
     )
     assert g2.exceptAll(g1).count() == 0
     assert g1.exceptAll(g2).count() == 0
-    assert d == _ann_index_dir(sf_dir)
+    assert d == artifact_dir("ann_index", sf_dir)
     assert sorted(
         os.listdir(os.path.join(d, "codes.parquet"))
     ) == g1_before

@@ -127,7 +127,7 @@ _CROSS_QUERY_PRIVATE_IMPORTS = {
         "_BPE_ROUNDS", "_WPS_K", "_bpe_rounds_cte", "_bpe_train_state",
         "_wps_pri_sql", "_wps_priority",
     },
-    "pipeline9_q": {"_QUAR_REPORT_ORACLE", "_source_fingerprint"},
+    "pipeline9_q": {"_QUAR_REPORT_ORACLE"},
     "pipeline10_q": {"_cdc_chunk_ctes", "_cdc_chunks", "_cdc_chunks_from"},
     "pipeline12_q": {
         "_URL_CANON_CTE_SQL", "_canonical_url_col", "_raw_url_col",
