@@ -81,7 +81,9 @@ def _stream_dir(sf_dir: str, table: str, suffix: str = "") -> str:
     landing directory. Shared by the events/embeddings/documents
     streams (suffix keeps their historical directory names). A
     dangling symlink left by a deleted sf_dir is replaced, not
-    silently kept."""
+    silently kept. Two processes creating the link at once both
+    succeed: the loser accepts the winner's identical link."""
+    import contextlib
     import hashlib
     import os
 
@@ -89,10 +91,16 @@ def _stream_dir(sf_dir: str, table: str, suffix: str = "") -> str:
     d = f"/tmp/spark_graft_stream{suffix.replace('/', '_')}_{key}"
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, f"{table}.parquet")
+    target = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.lexists(link) and not os.path.exists(link):
-        os.remove(link)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(link)
     if not os.path.lexists(link):
-        os.symlink(os.path.join(sf_dir, f"{table}.parquet"), link)
+        try:
+            os.symlink(target, link)
+        except FileExistsError:
+            if os.readlink(link) != target:
+                raise
     return d
 
 
