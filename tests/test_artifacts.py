@@ -16,6 +16,7 @@ import time
 
 import pytest
 
+from change_data_capture_poc_spark.functions import artifacts
 from change_data_capture_poc_spark.functions.artifacts import (
     MARKER,
     artifact_dir,
@@ -79,13 +80,21 @@ def _leftovers(sf: str) -> list[str]:
     ]
 
 
-@pytest.mark.parametrize("rep", range(4))
 @pytest.mark.parametrize("force", [False, True])
-def test_racing_builds_publish_exactly_one(my_sf, force, rep):
+def test_racing_builds_publish_exactly_one(monkeypatch, my_sf, force):
     """More racing builders than cores, finishing together, with
-    frequent thread switches (repeated: a lost update is a race): all
-    get the published dir and the winner's meta, and it holds exactly
-    one build's files plus the marker."""
+    frequent thread switches and a slowed marker read widening the
+    check-then-rename window: all get the published dir and the
+    winner's meta, and it holds exactly one build's files plus the
+    marker."""
+    read_marker = artifacts._read_marker
+
+    def slow_read_marker(d: str) -> dict | None:
+        m = read_marker(d)
+        time.sleep(0.01)
+        return m
+
+    monkeypatch.setattr(artifacts, "_read_marker", slow_read_marker)
     tags = [f"b{i}" for i in range(32)]
     done = threading.Barrier(len(tags), timeout=60)
     out: dict[str, tuple[str, dict]] = {}
