@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import sys
 
+from change_data_capture_poc_spark.functions.caching import release_pins
 from change_data_capture_poc_spark.plans import (
     broadcast_count,
     formatted_plan,
@@ -59,6 +60,11 @@ def main() -> None:
                 )
         except Exception as e:  # noqa: BLE001
             rows.append((name, "-", "-", "-", "-", "-", f"ERROR {e}"))
+        finally:
+            # Registry cache contract: a query's persist_once pins
+            # (e.g. an artifact build's cached rounds) must not leak
+            # into the next query's plan as InMemoryRelations.
+            release_pins(spark)
 
     with open("PLANS.md", "w") as f:
         f.write(
