@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.functions.hashing import md5_prefix
+
 
 def grouped_topk(
     df: DataFrame,
@@ -162,3 +164,40 @@ def variant_topk_hits(
             F.sum("_pr").cast("long").alias("hits"),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# A-Res weighted sampling (Efraimidis & Spirakis 2006) — ranked by
+# grouped_topk on the priority column
+# ---------------------------------------------------------------------------
+
+WPS_K = 20          # sample size per source stratum
+WPS_U_DEN = 4294967297.0  # 2^32 + 1: md5-prefix -> u in (0, 1)
+
+
+def wps_pri_sql(docs_cte: str) -> str:
+    """DuckDB CTE chain computing A-Res priorities from a relation
+    ``docs_cte(source, doc_id, n_chars)`` — ends in ``wps_p(source,
+    doc_id, n_chars, priority)``. Shared by the standalone sampler,
+    the composed weighted build, and the streaming reservoir so the
+    three oracles cannot drift."""
+    return f"""
+    wps_h AS (
+        SELECT source, doc_id, n_chars,
+               (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+                   ::BIGINT + 1) / {WPS_U_DEN} AS u
+        FROM {docs_cte} WHERE n_chars > 0
+    ),
+    wps_p AS (
+        SELECT source, doc_id, n_chars,
+               ROUND(ln(u) / n_chars + 1e-9, 6) AS priority
+        FROM wps_h
+    )"""
+
+
+def wps_priority():
+    """Spark twin of ``wps_pri_sql``'s priority column: u^(1/w) as
+    ln(u)/n_chars from the deterministic md5-prefix uniform. Callers
+    filter n_chars > 0 first (mirroring the SQL fragment)."""
+    u = (md5_prefix(F.col("doc_id")) + 1) / F.lit(WPS_U_DEN)
+    return F.round(F.log(u) / F.col("n_chars") + F.lit(1e-9), 6)

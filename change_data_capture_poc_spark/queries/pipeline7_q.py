@@ -78,7 +78,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.functions.hashing import md5_prefix
 from change_data_capture_poc_spark.operators.sketch import (
     BLOOM_H,
     BLOOM_M,
@@ -119,6 +118,16 @@ from change_data_capture_poc_spark.operators.minhash import (
     DUP_REACH_SQL,
     MINHASH_PAIRS_SQL,
     spark_grams,
+)
+from change_data_capture_poc_spark.operators.topk import (
+    WPS_K,
+    wps_pri_sql,
+    wps_priority,
+)
+from change_data_capture_poc_spark.operators.subword import (
+    BPE_ROUNDS,
+    bpe_rounds_cte,
+    bpe_train_state,
 )
 
 # ---------------------------------------------------------------------------
@@ -700,82 +709,6 @@ def corpus_doremi_domain_weights(
 # bpe_train_iterative_merges — 3 rounds of greedy BPE merge training
 # ---------------------------------------------------------------------------
 
-_BPE_ROUNDS = 3
-
-
-def _bpe_rounds_cte() -> str:
-    """Shared CTE prefix: word counts, char-split v0, and the unrolled
-    training rounds pc{r}/b{r}/…/v{r}. Reused by the trainer oracle
-    (final select = the merge table) and the round-9 corpus-encode
-    oracle (final select = the tokenized corpus stream off v{R})."""
-    rounds = []
-    for r in range(1, _BPE_ROUNDS + 1):
-        p = r - 1
-        rounds.append(f"""
-    pc{r} AS (
-        SELECT v.toks[s.i + 1] AS l, v.toks[s.i + 2] AS r2,
-               SUM(v.n) AS cnt
-        FROM v{p} v, LATERAL (
-            SELECT unnest(range(len(v.toks) - 1)) AS i
-        ) s
-        WHERE len(v.toks) >= 2
-        GROUP BY 1, 2
-    ),
-    b{r} AS (SELECT l, r2, CAST(cnt AS BIGINT) AS cnt FROM pc{r}
-             ORDER BY cnt DESC, l, r2 LIMIT 1),
-    mpos{r} AS (
-        SELECT v.word, s.i AS pos
-        FROM v{p} v, LATERAL (
-            SELECT unnest(range(len(v.toks) - 1)) AS i
-        ) s, b{r} b
-        WHERE len(v.toks) >= 2
-          AND v.toks[s.i + 1] = b.l AND v.toks[s.i + 2] = b.r2
-    ),
-    isl{r} AS (
-        SELECT word, pos,
-               pos - ROW_NUMBER() OVER (
-                   PARTITION BY word ORDER BY pos) AS grp
-        FROM mpos{r}
-    ),
-    sel{r} AS (
-        SELECT word, pos,
-               (pos - MIN(pos) OVER (PARTITION BY word, grp)) % 2 = 0
-                   AS keep
-        FROM isl{r}
-    ),
-    pos{r} AS (
-        SELECT v.word, v.n, s.i AS pos, v.toks[s.i + 1] AS sym
-        FROM v{p} v, LATERAL (
-            SELECT unnest(range(len(v.toks))) AS i
-        ) s
-    ),
-    v{r} AS (
-        SELECT word, ANY_VALUE(n) AS n,
-               list(CASE WHEN m.keep THEN p.sym || (SELECT r2 FROM b{r})
-                         ELSE p.sym END ORDER BY p.pos) AS toks
-        FROM pos{r} p
-        LEFT JOIN (SELECT word, pos, keep FROM sel{r} WHERE keep) m
-            USING (word, pos)
-        LEFT JOIN (SELECT word, pos + 1 AS pos, keep
-                   FROM sel{r} WHERE keep) cons USING (word, pos)
-        WHERE cons.keep IS NULL
-        GROUP BY word
-    )""")
-    return f"""
-    WITH wc AS (
-        SELECT tok AS word, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE tok != '' GROUP BY tok
-    ),
-    v0 AS (
-        SELECT word, n,
-               string_split(rtrim(regexp_replace(word, '(.)', '\\1 ',
-                                                 'g')), ' ') AS toks
-        FROM wc
-    ),
-    {",".join(rounds)}
-    """
-
 
 def _bpe_oracle() -> str:
     """Unrolled 3-round BPE trainer in DuckDB SQL.
@@ -789,15 +722,15 @@ def _bpe_oracle() -> str:
     finals = " UNION ALL ".join(
         f"SELECT {r} AS merge_round, l AS left_sym, r2 AS right_sym, "
         f"l || r2 AS merged_sym, cnt AS pair_count FROM b{r}"
-        for r in range(1, _BPE_ROUNDS + 1)
+        for r in range(1, BPE_ROUNDS + 1)
     )
-    return _bpe_rounds_cte() + finals
+    return bpe_rounds_cte() + finals
 
 
 @register(
     "bpe_train_iterative_merges",
     oracle=_bpe_oracle(),
-    doc=f"BPE tokenizer TRAINING to {_BPE_ROUNDS} merge rounds "
+    doc=f"BPE tokenizer TRAINING to {BPE_ROUNDS} merge rounds "
         f"(Sennrich et al. 2016): per round, count adjacent symbol "
         f"pairs over the frequency-weighted vocabulary, pick the most "
         f"frequent pair (count-desc, pair-asc tiebreak), and apply "
@@ -819,7 +752,7 @@ def _bpe_oracle() -> str:
 def bpe_train_iterative_merges(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    merges, _v = _bpe_train_state(spark, sf_dir)
+    merges, _v = bpe_train_state(spark, sf_dir)
     if not merges:
         return spark.createDataFrame(
             [],
@@ -832,128 +765,6 @@ def bpe_train_iterative_merges(
         "merged_sym string, pair_count long",
     )
 
-
-def _bpe_train_state(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list[tuple], DataFrame]:
-    """Run the _BPE_ROUNDS training rounds on the frequency-weighted
-    word table; return ``(merges, v)`` — the chosen merge rows
-    (possibly fewer if the vocabulary fuses early) and the FINAL
-    word -> token-array vocabulary frame (word, n, toks). The round-9
-    corpus encoder reuses ``v`` directly: BPE-encoding the training
-    corpus with the trained merges is exactly the trainer's final
-    state, so the corpus never re-runs the merge application."""
-    from pyspark.sql import Window
-
-    d = load_table(spark, sf_dir, "documents")
-    wc = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    v = wc.select(
-        "word",
-        "n",
-        F.split(
-            F.rtrim(F.regexp_replace("word", "(.)", "$1 ")), " "
-        ).alias("toks"),
-    )
-    merges: list[tuple] = []
-    for _r in range(1, _BPE_ROUNDS + 1):
-        pairs = (
-            v.where(F.size("toks") >= 2)
-            .select(
-                "n",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(0, size(toks) - 2), i -> "
-                        "struct(element_at(toks, i + 1) AS l, "
-                        "element_at(toks, i + 2) AS r2))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r2")
-            .agg(F.sum("n").cast("long").alias("cnt"))
-        )
-        best_df = pairs.orderBy(F.col("cnt").desc(), "l", "r2").limit(1)
-        best_rows = best_df.collect()  # bounded 1-row collect per round
-        if not best_rows:
-            # Vocabulary fully fused into single symbols — no pairs
-            # left. Emit fewer merge rows, matching the oracle's
-            # empty LIMIT 1 CTEs for the remaining rounds.
-            break
-        best = best_rows[0]
-        l_lit, r_lit = best["l"], best["r2"]
-        # The round's output row comes from the ALREADY-collected
-        # literals — deriving it from the lazy best_df would re-run
-        # the round's pair-count aggregation and orderBy/limit a
-        # second time when the final result materializes.
-        merges.append((_r, l_lit, r_lit, l_lit + r_lit, int(best["cnt"])))
-
-        # Apply the merge: match positions, greedy run-parity select,
-        # rebuild token arrays in position order (word-keyed windows
-        # over the vocab frame only).
-        pos = v.select(
-            "word", "n", F.posexplode("toks").alias("pos", "sym")
-        )
-        mpos = (
-            v.where(F.size("toks") >= 2)
-            .select(
-                "word",
-                F.explode(
-                    F.expr("sequence(0, size(toks) - 2)")
-                ).alias("pos"),
-                "toks",
-            )
-            .where(
-                (F.expr("element_at(toks, pos + 1)") == F.lit(l_lit))
-                & (F.expr("element_at(toks, pos + 2)") == F.lit(r_lit))
-            )
-            .select("word", "pos")
-        )
-        wrn = Window.partitionBy("word").orderBy("pos")
-        grp = F.col("pos") - F.row_number().over(wrn)
-        wgrp = Window.partitionBy("word", "grp")
-        sel = (
-            mpos.withColumn("grp", grp)
-            .withColumn(
-                "keep",
-                ((F.col("pos") - F.min("pos").over(wgrp)) % 2) == 0,
-            )
-            .where("keep")
-            .select("word", "pos", "keep")
-        )
-        cons = sel.select(
-            "word", (F.col("pos") + 1).alias("pos"), F.col("keep").alias("c")
-        )
-        merged = (
-            pos.join(sel, ["word", "pos"], "left")
-            .join(cons, ["word", "pos"], "left")
-            .where(F.col("c").isNull())
-            .withColumn(
-                "sym2",
-                F.when(
-                    F.col("keep"), F.concat(F.col("sym"), F.lit(r_lit))
-                ).otherwise(F.col("sym")),
-            )
-        )
-        v = merged.groupBy("word").agg(
-            F.first("n").alias("n"),
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, sym2))), "
-                "x -> x.sym2)"
-            ).alias("toks"),
-        ).transform(persist_once)  # vocab-sized; cuts round r's actions from
-        # replaying rounds 1..r-1's whole merge lineage. NOT unpersisted
-        # here: repeated calls build identical logical plans, so the
-        # CacheManager dedups them (total live caches are bounded at
-        # _BPE_ROUNDS per session, not per call) and warm re-runs skip
-        # rounds 1..r-1's recompute entirely; the harnesses' between-
-        # query clearCache releases them (registry.py cache contract).
-        # An in-query unpersist measured 1.9x slower under the bench's
-        # documented warm-cache protocol for zero bounded-memory gain.
-    return merges, v
 
 
 # ---------------------------------------------------------------------------
@@ -1140,54 +951,22 @@ def graph_triangle_count_dupgraph(
 # corpus_weighted_priority_sample — Efraimidis-Spirakis A-Res sampling
 # ---------------------------------------------------------------------------
 
-_WPS_K = 20          # sample size per source stratum
-_WPS_U_DEN = 4294967297.0  # 2^32 + 1: md5-prefix -> u in (0, 1)
-
-
-def _wps_pri_sql(docs_cte: str) -> str:
-    """DuckDB CTE chain computing A-Res priorities from a relation
-    ``docs_cte(source, doc_id, n_chars)`` — ends in ``wps_p(source,
-    doc_id, n_chars, priority)``. Shared by the standalone sampler,
-    the composed weighted build, and the streaming reservoir so the
-    three oracles cannot drift."""
-    return f"""
-    wps_h AS (
-        SELECT source, doc_id, n_chars,
-               (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                   ::BIGINT + 1) / {_WPS_U_DEN} AS u
-        FROM {docs_cte} WHERE n_chars > 0
-    ),
-    wps_p AS (
-        SELECT source, doc_id, n_chars,
-               ROUND(ln(u) / n_chars + 1e-9, 6) AS priority
-        FROM wps_h
-    )"""
-
-
-def _wps_priority():
-    """Spark twin of ``_wps_pri_sql``'s priority column: u^(1/w) as
-    ln(u)/n_chars from the deterministic md5-prefix uniform. Callers
-    filter n_chars > 0 first (mirroring the SQL fragment)."""
-    u = (md5_prefix(F.col("doc_id")) + 1) / F.lit(_WPS_U_DEN)
-    return F.round(F.log(u) / F.col("n_chars") + F.lit(1e-9), 6)
-
-
 @register(
     "corpus_weighted_priority_sample",
     oracle=f"""
     WITH d AS (SELECT source, doc_id, n_chars FROM documents),
-    {_wps_pri_sql('d')}
+    {wps_pri_sql('d')}
     SELECT source, doc_id, n_chars, priority
     FROM wps_p
     QUALIFY ROW_NUMBER() OVER (PARTITION BY source
                                ORDER BY priority DESC, doc_id)
-            <= {_WPS_K}
+            <= {WPS_K}
     """,
     doc=f"WEIGHTED sampling without replacement (Efraimidis & "
         f"Spirakis 2006 A-Res): each doc draws priority u^(1/w) — "
         f"computed as ln(u)/w for numeric stability — with u a "
         f"deterministic md5-prefix uniform and w = n_chars (the "
-        f"quality/size weight), and the top-{_WPS_K} priorities per "
+        f"quality/size weight), and the top-{WPS_K} priorities per "
         f"source ARE a weight-proportional sample. The weighted "
         f"companion to corpus_bottomk_consistent_sample (uniform "
         f"bottom-k): same determinism (no rand(), reproducible across "
@@ -1206,10 +985,10 @@ def corpus_weighted_priority_sample(
 
     d = load_table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
     p = d.select(
-        "source", "doc_id", "n_chars", _wps_priority().alias("priority")
+        "source", "doc_id", "n_chars", wps_priority().alias("priority")
     )
     return grouped_topk(
-        p, ["source"], [("priority", False), ("doc_id", True)], _WPS_K
+        p, ["source"], [("priority", False), ("doc_id", True)], WPS_K
     )
 
 
@@ -1415,7 +1194,7 @@ def _wb_oracle() -> str:
             FROM drm
         )
     ),
-    {_wps_pri_sql('surv')},
+    {wps_pri_sql('surv')},
     ranked AS (
         SELECT source, doc_id, n_chars, priority,
                ROW_NUMBER() OVER (PARTITION BY source
@@ -1508,7 +1287,7 @@ def corpus_weighted_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pri = surv.where(F.col("n_chars") > 0).select(
-        "source", "doc_id", "n_chars", _wps_priority().alias("priority")
+        "source", "doc_id", "n_chars", wps_priority().alias("priority")
     )
     # Budget-bounded cut first (map-side partial top-k), then rank the
     # <= BUDGET-per-source survivor frame — a window over a bounded

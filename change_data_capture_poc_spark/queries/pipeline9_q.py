@@ -90,10 +90,24 @@ from change_data_capture_poc_spark.operators.ann import (
     sampled_recall,
     variant_tag,
 )
-from change_data_capture_poc_spark.queries.pipeline7_q import (
-    _BPE_ROUNDS,
-    _bpe_rounds_cte,
-    _bpe_train_state,
+from change_data_capture_poc_spark.operators.subword import (
+    BPE_ROUNDS,
+    UNI_EM_ROUNDS,
+    UNI_EM_TOPK,
+    UNI_MAXLEN,
+    WP_MAXLEN,
+    WP_PERMILLE,
+    bpe_rounds_cte,
+    bpe_train_state,
+    uni_em_state,
+    uni_train_ctes,
+    uni_viterbi_toks,
+    unigram_ctes,
+    wp_base_ctes,
+    wp_tables,
+    wp_vocab_ctes,
+    wp_walk_ctes,
+    wp_word_toks,
 )
 
 
@@ -106,8 +120,8 @@ def _bpe_encode_oracle() -> str:
     """Unrolled trainer rounds (shared CTE prefix with the trainer
     oracle) + the encode tail: token-id vocabulary off the final
     round's word->toks table, then the per-document token stream."""
-    r = _BPE_ROUNDS
-    return _bpe_rounds_cte() + f""",
+    r = BPE_ROUNDS
+    return bpe_rounds_cte() + f""",
     syms AS (
         SELECT DISTINCT t AS token
         FROM (SELECT unnest(toks) AS t FROM v{r})
@@ -140,19 +154,19 @@ def _bpe_encode_oracle() -> str:
 @register(
     "bpe_encode_corpus",
     oracle=_bpe_encode_oracle(),
-    doc=f"BPE corpus ENCODE — apply the {_BPE_ROUNDS} trained merges "
+    doc=f"BPE corpus ENCODE — apply the {BPE_ROUNDS} trained merges "
         f"to every document, emitting the per-document token stream "
         f"(doc_id, word_pos, tok_idx, token, token_id) that an LM "
         f"pipeline feeds to packing. The key scale move: encoding is "
         f"WORD-level, and BPE-encoding the training corpus with its "
         f"own merges is exactly the trainer's final vocabulary state, "
         f"so the word -> token-array mapping comes straight from "
-        f"_bpe_train_state's Heaps-bounded word table — the corpus is "
+        f"bpe_train_state's Heaps-bounded word table — the corpus is "
         f"scanned ONCE, joined to the vocabulary on word (vocab side "
         f"~O(corpus^0.5), broadcast at typical fixed-vocab sizes, "
         f"hash join beyond), and never globally sorted or windowed. "
         f"Token ids are a row_number over the SYMBOL table (alphabet "
-        f"+ {_BPE_ROUNDS} merges — constant-bounded, the documented "
+        f"+ {BPE_ROUNDS} merges — constant-bounded, the documented "
         f"global_window shape) and broadcast back onto the token "
         f"stream. Out-of-vocab words cannot exist here by "
         f"construction (encode corpus == train corpus); a held-out "
@@ -160,7 +174,7 @@ def _bpe_encode_oracle() -> str:
         f"plan shape.",
 )
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _merges, v = _bpe_train_state(spark, sf_dir)
+    _merges, v = bpe_train_state(spark, sf_dir)
 
     syms = v.select(F.explode("toks").alias("token")).distinct()
     ids = syms.select(
@@ -183,7 +197,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word_pos",
         F.posexplode("toks").alias("tok_idx", "token"),
     )
-    # bounded: BPE token set = alphabet + _BPE_ROUNDS merge tokens
+    # bounded: BPE token set = alphabet + BPE_ROUNDS merge tokens
     return enc.join(F.broadcast(ids), "token").select(
         "doc_id", "word_pos", "tok_idx", "token", "token_id"
     )
@@ -1193,7 +1207,7 @@ def ensure_bpe_vocab(
     """Train iff absent/stale; write ``vocab.parquet`` (word, toks)
     and ``token_ids.parquet`` (token, token_id)."""
     def build(d: str) -> None:
-        _merges, v = _bpe_train_state(spark, sf_dir)
+        _merges, v = bpe_train_state(spark, sf_dir)
         v.select("word", "toks").write.mode("overwrite").parquet(
             os.path.join(d, "vocab.parquet")
         )
@@ -1212,8 +1226,8 @@ def ensure_bpe_vocab(
 
 @register(
     "tokenizer_vocab_build",
-    oracle=_bpe_rounds_cte() + f""",
-    vocab AS (SELECT word, toks FROM v{_BPE_ROUNDS}),
+    oracle=bpe_rounds_cte() + f""",
+    vocab AS (SELECT word, toks FROM v{BPE_ROUNDS}),
     syms AS (
         SELECT DISTINCT t AS token
         FROM (SELECT unnest(toks) AS t FROM vocab)
@@ -1224,7 +1238,7 @@ def ensure_bpe_vocab(
     FROM syms
     """,
     doc=f"TOKENIZER ARTIFACT BUILD — the offline half of the "
-        f"tokenizer train/serve split: runs the {_BPE_ROUNDS}-round "
+        f"tokenizer train/serve split: runs the {BPE_ROUNDS}-round "
         f"trainer once, persists the word->tokens vocabulary and the "
         f"symbol->id table to parquet, and RETURNS the id table read "
         f"back FROM DISK so the oracle certifies the persisted bytes "
@@ -1272,7 +1286,7 @@ def bpe_encode_from_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word_pos",
         F.posexplode("toks").alias("tok_idx", "token"),
     )
-    # bounded: BPE token set = alphabet + _BPE_ROUNDS merge tokens
+    # bounded: BPE token set = alphabet + BPE_ROUNDS merge tokens
     return enc.join(F.broadcast(ids), "token").select(
         "doc_id", "word_pos", "tok_idx", "token", "token_id"
     )
@@ -1312,7 +1326,7 @@ def _packt_class_col() -> F.Column:
 
 @register(
     "pack_best_fit_bpe_tokens",
-    oracle=_bpe_rounds_cte() + f""",
+    oracle=bpe_rounds_cte() + f""",
     dw AS (
         SELECT sp.doc_id, sp.s[s.i + 1] AS word
         FROM (SELECT doc_id, string_split(text, ' ') AS s
@@ -1323,7 +1337,7 @@ def _packt_class_col() -> F.Column:
     tc AS (
         SELECT dw.doc_id,
                CAST(SUM(len(v.toks)) AS BIGINT) AS n_toks
-        FROM dw JOIN v{_BPE_ROUNDS} v USING (word)
+        FROM dw JOIN v{BPE_ROUNDS} v USING (word)
         GROUP BY dw.doc_id
     ),
     d AS (
@@ -1727,263 +1741,12 @@ def pack_emit_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # wordpiece_maxmatch_encode — the second tokenizer family (MaxMatch)
 # ---------------------------------------------------------------------------
-#
-# BPE (pipeline7_q's trainer + this module's encoders) is one of the two
-# subword families production LM pipelines actually run; the other is
-# WordPiece-style greedy longest-match-first inference (Wu et al. 2016;
-# the MaxMatch segmenter HuggingFace's WordPiece tokenizer executes).
-# Relational form, all integer/string logic so both engines agree bit
-# for bit:
-#   vocab  = every single character (totality guarantee) ∪ substrings
-#            of length 2..4 whose occurrence-weighted corpus frequency
-#            clears a PROPORTIONAL admission threshold (freq*1000 >=
-#            total_words*permille — integer cross-multiply, scale-
-#            invariant, no float division);
-#   jumps  = per (word, position): the longest vocab token starting
-#            there (tried 4,3,2 via three joins against the bounded
-#            vocabulary, else the guaranteed single char);
-#   walk   = greedy left-to-right segmentation — a fold over the
-#            word's positions consuming jump(i) characters at a time.
-#            Spark folds with aggregate() (JVM map-side, one pass);
-#            the oracle replays the identical walk as a recursive CTE.
-# Everything up to the final corpus join runs on the Heaps-bounded
-# word table; the corpus is scanned once and joined to word->toks,
-# exactly the bpe_encode_corpus shape.
-
-_WP_MAXLEN = 4      # longest subword the segmenter considers
-_WP_PERMILLE = 50   # vocab admission: freq >= 5% of word instances
-
-
-def _wp_base_ctes() -> str:
-    """Threshold-independent oracle CTEs: word counts, the instance
-    total, the char alphabet, occurrence-weighted substring
-    frequencies, the per-word position grid, and the doc->word
-    stream."""
-    return """
-    wpc AS (
-        SELECT tok AS word, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE tok != '' GROUP BY tok
-    ),
-    wptot AS (SELECT SUM(n) AS t FROM wpc),
-    wpchars AS (
-        SELECT DISTINCT substring(word, s.p, 1) AS token
-        FROM wpc, LATERAL (
-            SELECT unnest(range(1, length(wpc.word) + 1)) AS p
-        ) s
-    ),
-    wpsubs AS (
-        SELECT substring(word, s.p, l.l) AS token, SUM(n) AS freq
-        FROM wpc,
-             (VALUES (2), (3), (4)) l(l),
-             LATERAL (
-                 SELECT unnest(range(1, length(wpc.word) - l.l + 2)) AS p
-             ) s
-        GROUP BY 1
-    ),
-    wppos AS (
-        SELECT wpc.word, s.p
-        FROM wpc, LATERAL (
-            SELECT unnest(range(1, length(wpc.word) + 1)) AS p
-        ) s
-    ),
-    wpdw AS (
-        SELECT sp.doc_id, CAST(s.i AS INT) AS word_pos,
-               sp.s[s.i + 1] AS word
-        FROM (SELECT doc_id, string_split(text, ' ') AS s
-              FROM documents) sp,
-             LATERAL (SELECT unnest(range(len(sp.s))) AS i) s
-        WHERE sp.s[s.i + 1] != ''
-    )"""
-
-
-def _wp_walk_ctes(sfx: str, permille: int) -> str:
-    """Per-threshold oracle CTEs (vocab admission -> longest-match
-    jumps -> the recursive greedy walk), name-suffixed so several
-    thresholds coexist in one statement."""
-    return f"""
-    wpvocab{sfx} AS (
-        SELECT token FROM wpchars
-        UNION
-        SELECT s.token FROM wpsubs s, wptot
-        WHERE s.freq * 1000 >= wptot.t * {permille}
-    ),
-    wpj{sfx} AS (
-        SELECT word, p,
-               CASE WHEN p + 3 <= length(word) AND substring(word, p, 4)
-                             IN (SELECT token FROM wpvocab{sfx}) THEN 4
-                    WHEN p + 2 <= length(word) AND substring(word, p, 3)
-                             IN (SELECT token FROM wpvocab{sfx}) THEN 3
-                    WHEN p + 1 <= length(word) AND substring(word, p, 2)
-                             IN (SELECT token FROM wpvocab{sfx}) THEN 2
-                    ELSE 1 END AS jump
-        FROM wppos
-    ),
-    wpwalk{sfx} AS (
-        SELECT j.word, 1 + j.jump AS p, CAST(0 AS INT) AS tok_idx,
-               substring(j.word, 1, j.jump) AS token
-        FROM wpj{sfx} j WHERE j.p = 1
-        UNION ALL
-        SELECT w.word, w.p + j2.jump, CAST(w.tok_idx + 1 AS INT),
-               substring(w.word, CAST(w.p AS INT), j2.jump)
-        FROM wpwalk{sfx} w
-        JOIN wpj{sfx} j2 ON j2.word = w.word AND j2.p = w.p
-        WHERE w.p <= length(w.word)
-    )"""
-
-
-def _wp_vocab_ctes() -> str:
-    """Shared oracle CTE block at the default admission threshold:
-    word counts -> vocabulary -> jumps -> the recursive greedy walk
-    (word, tok_idx, token) -> the doc->word stream. Callers prepend
-    WITH RECURSIVE (the walk member requires it)."""
-    return (
-        _wp_base_ctes() + "," + _wp_walk_ctes("", _WP_PERMILLE)
-    )
-
-
-def _wp_tables(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Threshold-independent engine frames: (words, chars, freq, tot)
-    — the engine half of _wp_base_ctes, all on the Heaps-bounded
-    word table."""
-    from change_data_capture_poc_spark.functions.caching import (
-        persist_once,
-    )
-
-    # The Heaps-bounded word table feeds every vocab branch (chars,
-    # each substring length, the total, the position frame) — cached
-    # so the corpus is scanned once, not once per branch; same for the
-    # vocabulary, which the three jump joins probe. persist_once keeps
-    # the round-9 cache contract (caller releases via release_pins).
-    words = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(persist_once)
-    )
-    # chars and freq are re-derived per admission threshold by the
-    # sensitivity sweep (each threshold's vocab is its own cached
-    # frame, so cross-branch exchange reuse cannot deduplicate them)
-    # — persist both: alphabet-sized and Heaps-bounded respectively.
-    chars = (
-        words.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, length(word)),"
-                    " p -> substring(word, p, 1))"
-                )
-            ).alias("token")
-        )
-        .distinct()
-        .transform(persist_once)
-    )
-    subs = None
-    for l in range(2, _WP_MAXLEN + 1):
-        s = (
-            words.where(F.length("word") >= l)
-            .select(
-                "n",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, length(word) - {l} + 1),"
-                        f" p -> substring(word, p, {l}))"
-                    )
-                ).alias("token"),
-            )
-        )
-        subs = s if subs is None else subs.unionByName(s)
-    tot = words.agg(F.sum("n").cast("long").alias("t"))
-    freq = (
-        subs.groupBy("token")
-        .agg(F.sum("n").cast("long").alias("freq"))
-        .transform(persist_once)
-    )
-    return words, chars, freq, tot
-
-
-def _wp_vocab_for(
-    chars: DataFrame, freq: DataFrame, tot: DataFrame, permille: int
-) -> DataFrame:
-    from change_data_capture_poc_spark.functions.caching import (
-        persist_once,
-    )
-
-    admitted = (
-        # bounded: 1-row instance total
-        freq.crossJoin(F.broadcast(tot))
-        .where(F.col("freq") * 1000 >= F.col("t") * permille)
-        .select("token")
-    )
-    return chars.unionByName(admitted).distinct().transform(persist_once)
-
-
-def _wp_toks_for(words: DataFrame, vocab: DataFrame) -> DataFrame:
-    """(word, toks): the MaxMatch segmentation of every distinct word
-    under the given vocabulary — per-position longest-match jumps via
-    three joins against the bounded vocab, then one greedy fold."""
-    wp = words.select(
-        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
-    )
-    j = wp
-    for l in (4, 3, 2):
-        v = vocab.select(F.col("token").alias(f"tok{l}"))
-        j = j.join(
-            # bounded: admission floor caps vocab at ~1000/permille pieces per length + alphabet
-            F.broadcast(v),
-            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
-            & (F.col("pos") + l - 1 <= F.length("word")),
-            "left",
-        )
-    jump = (
-        F.when(F.col("tok4").isNotNull(), 4)
-        .when(F.col("tok3").isNotNull(), 3)
-        .when(F.col("tok2").isNotNull(), 2)
-        .otherwise(1)
-    )
-    jarr = (
-        j.select("word", "pos", jump.alias("jump"))
-        .groupBy("word")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, jump))),"
-                " x -> x.jump)"
-            ).alias("jumps")
-        )
-    )
-    return jarr.select(
-        "word",
-        F.expr(
-            """
-            aggregate(
-                sequence(1, length(word)),
-                named_struct('nxt', 1,
-                             'toks', cast(array() as array<string>)),
-                (acc, i) -> IF(i != acc.nxt, acc,
-                    named_struct(
-                        'nxt', acc.nxt + element_at(jumps, i),
-                        'toks', array_append(acc.toks,
-                            substring(word, i, element_at(jumps, i))))),
-                acc -> acc.toks)
-            """
-        ).alias("toks"),
-    )
-
-
-def _wp_word_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, toks) at the default admission threshold — the engine
-    half of _wp_vocab_ctes."""
-    words, chars, freq, tot = _wp_tables(spark, sf_dir)
-    return _wp_toks_for(words, _wp_vocab_for(chars, freq, tot, _WP_PERMILLE))
 
 
 @register(
     "wordpiece_maxmatch_encode",
     oracle="WITH RECURSIVE "
-    + _wp_vocab_ctes().strip()
+    + wp_vocab_ctes().strip()
     + """
     SELECT dw.doc_id, dw.word_pos, w.tok_idx, w.token
     FROM wpdw dw JOIN wpwalk w USING (word)
@@ -1992,8 +1755,8 @@ def _wp_word_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"next to BPE (Wu et al. 2016; the greedy longest-match-first "
         f"inference HuggingFace's WordPiece executes): vocabulary = "
         f"every character (totality) ∪ substrings up to length "
-        f"{_WP_MAXLEN} clearing a proportional admission threshold "
-        f"({_WP_PERMILLE} permille of word instances, integer "
+        f"{WP_MAXLEN} clearing a proportional admission threshold "
+        f"({WP_PERMILLE} permille of word instances, integer "
         f"cross-multiplied — scale-invariant, float-free); per-word "
         f"segmentation = a greedy fold over positions consuming the "
         f"longest vocab token at each step, computed ONCE per distinct "
@@ -2008,7 +1771,7 @@ def _wp_word_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wordpiece_maxmatch_encode(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    wt = _wp_word_toks(spark, sf_dir)
+    wt = wp_word_toks(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     dw = (
         d.select(
@@ -2024,136 +1787,19 @@ def wordpiece_maxmatch_encode(
     )
 
 
-_UNI_EM_ROUNDS = 2  # SentencePiece-style hard-EM e/m cycles
-_UNI_EM_TOPK = 4096  # multi-char pieces kept per m-step (count desc, token)
-
-
-def _uni_enum_ctes(cost_cte: str, sfx: str) -> str:
-    """One vocab-restricted Viterbi e-step as oracle CTEs: enumerate
-    every segmentation of every distinct word whose pieces ALL exist
-    in ``cost_cte`` (the inner join against the cost table IS the
-    vocab restriction — pruned pieces never enter the lattice) and
-    pick the (cost, str) total-order winner. Deliberately brute-force
-    (<= 2^(len-1) paths, len <= corpus max word length): the SPEC the
-    engine's linear backward-Viterbi fold must reproduce."""
-    return f"""
-    urec{sfx} AS (
-        SELECT word, CAST(1 AS BIGINT) AS p, CAST(0 AS BIGINT) AS cost,
-               '' AS str
-        FROM wpc
-        UNION ALL
-        SELECT r.word, r.p + l.l, r.cost + c.c,
-               CASE WHEN r.str = '' THEN
-                        substring(r.word, CAST(r.p AS INT), l.l)
-                    ELSE concat(r.str, ' ',
-                        substring(r.word, CAST(r.p AS INT), l.l)) END
-        FROM urec{sfx} r
-        CROSS JOIN (VALUES (1), (2), (3), (4)) l(l)
-        JOIN {cost_cte} c
-          ON c.token = substring(r.word, CAST(r.p AS INT), l.l)
-        WHERE r.p + l.l <= length(r.word) + 1
-    ),
-    uwin{sfx} AS MATERIALIZED (
-        SELECT word, str FROM urec{sfx}
-        WHERE p = length(word) + 1
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY word ORDER BY cost, str) = 1
-    ),
-    utoks{sfx} AS MATERIALIZED (SELECT word, string_split(str, ' ') AS toks
-                   FROM uwin{sfx})"""
-
-
-def _uni_mstep_ctes(r: int) -> str:
-    """m-step r as oracle CTEs: occurrence-weighted Viterbi piece
-    counts from ``utoks_e{r}``, then the pruned re-normalized vocab —
-    single chars ALWAYS kept (Laplace-floored at count 1, so every
-    word stays segmentable), multi-char pieces kept only if USED by
-    some Viterbi path this round, capped at the top ``_UNI_EM_TOPK``
-    under the (count DESC, token ASC) total order — and the fresh
-    millinat cost grid over the new total."""
-    return f"""
-    ucnt_r{r} AS MATERIALIZED (
-        SELECT t.tok AS token, CAST(SUM(w.n) AS BIGINT) AS cnt
-        FROM utoks_e{r} u JOIN wpc w USING (word),
-             LATERAL (SELECT unnest(u.toks) AS tok) t
-        GROUP BY 1
-    ),
-    umulti_r{r} AS MATERIALIZED (
-        SELECT token, cnt FROM ucnt_r{r}
-        WHERE length(token) >= 2
-        QUALIFY ROW_NUMBER() OVER (ORDER BY cnt DESC, token)
-                <= {_UNI_EM_TOPK}
-    ),
-    uvocab_r{r} AS MATERIALIZED (
-        SELECT ch.token,
-               CAST(GREATEST(COALESCE(c.cnt, 0), 1) AS BIGINT) AS cnt
-        FROM wpchars ch LEFT JOIN ucnt_r{r} c USING (token)
-        UNION ALL
-        SELECT token, cnt FROM umulti_r{r}
-    ),
-    uz_r{r} AS MATERIALIZED (SELECT SUM(cnt) AS z FROM uvocab_r{r}),
-    ucost_r{r} AS MATERIALIZED (
-        SELECT token,
-               CAST(ROUND(1000 * LN(uz_r{r}.z * 1.0 / cnt) + 1e-9)
-                    AS BIGINT) AS c
-        FROM uvocab_r{r}, uz_r{r}
-    )"""
-
-
-def _uni_train_ctes() -> str:
-    """Seed model + _UNI_EM_ROUNDS unrolled hard-EM cycles (the BPE
-    trainer's fixed-round-unroll pattern): ufreq_r0/ucost_r0 is the
-    all-substrings frequency seed; round r = Viterbi e-step under
-    ucost_r{r-1} (utoks_e{r}) then m-step r (ucost_r{r})."""
-    parts = [f"""
-    ufreq_r0 AS MATERIALIZED (
-        SELECT substring(word, s.p, l.l) AS token,
-               CAST(SUM(n) AS BIGINT) AS cnt
-        FROM wpc,
-             (VALUES (1), (2), (3), (4)) l(l),
-             LATERAL (
-                 SELECT unnest(range(1, length(wpc.word) - l.l + 2)) AS p
-             ) s
-        GROUP BY 1
-    ),
-    uz_r0 AS MATERIALIZED (SELECT SUM(cnt) AS z FROM ufreq_r0),
-    ucost_r0 AS MATERIALIZED (
-        SELECT token,
-               CAST(ROUND(1000 * LN(uz_r0.z * 1.0 / cnt) + 1e-9)
-                    AS BIGINT) AS c
-        FROM ufreq_r0, uz_r0
-    )"""]
-    for r in range(1, _UNI_EM_ROUNDS + 1):
-        parts.append(_uni_enum_ctes(f"ucost_r{r - 1}", f"_e{r}"))
-        parts.append(_uni_mstep_ctes(r))
-    return ",".join(parts)
-
-
-def _unigram_ctes() -> str:
-    """Oracle CTEs appended after _wp_base_ctes (reuses wpc/wpchars/
-    wpdw): the TRAINED unigram model (seed + unrolled EM rounds) ->
-    all-segmentations recursion under the final trained costs ->
-    total-order winner ``utoks``."""
-    return (
-        _uni_train_ctes()
-        + ","
-        + _uni_enum_ctes(f"ucost_r{_UNI_EM_ROUNDS}", "")
-    )
-
-
 
 @register(
     "tokenizer_family_fertility_compare",
-    oracle=_bpe_rounds_cte().replace("WITH", "WITH RECURSIVE", 1) + ","
-    + _wp_vocab_ctes().strip().rstrip() + ","
-    + _unigram_ctes().strip().rstrip() + f""",
+    oracle=bpe_rounds_cte().replace("WITH", "WITH RECURSIVE", 1) + ","
+    + wp_vocab_ctes().strip().rstrip() + ","
+    + unigram_ctes().strip().rstrip() + f""",
     wp_stream AS (
         SELECT dw.doc_id, w.tok_idx
         FROM wpdw dw JOIN wpwalk w USING (word)
     ),
     bpe_stream AS (
         SELECT dw.doc_id, CAST(t.j AS INT) AS tok_idx
-        FROM wpdw dw JOIN v{_BPE_ROUNDS} v USING (word),
+        FROM wpdw dw JOIN v{BPE_ROUNDS} v USING (word),
              LATERAL (SELECT unnest(range(len(v.toks))) AS j) t
     ),
     uni_stream AS (
@@ -2220,8 +1866,8 @@ def tokenizer_family_fertility_compare(
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .transform(persist_once)
     )
-    words, _chars, _freq, _tot = _wp_tables(spark, sf_dir)
-    wp_toks = _wp_word_toks(spark, sf_dir)
+    words, _chars, _freq, _tot = wp_tables(spark, sf_dir)
+    wp_toks = wp_word_toks(spark, sf_dir)
     bd = ensure_bpe_vocab(spark, sf_dir)
     bpe_toks = spark.read.parquet(os.path.join(bd, "vocab.parquet")).select(
         "word", "toks"
@@ -2230,7 +1876,7 @@ def tokenizer_family_fertility_compare(
     cost = spark.read.parquet(os.path.join(ud, "vocab.parquet")).select(
         "token", "c"
     )
-    uni_toks = _uni_viterbi_toks(words, cost)
+    uni_toks = uni_viterbi_toks(words, cost)
 
     def summarize(wt: DataFrame, name: str) -> DataFrame:
         return (
@@ -2270,11 +1916,11 @@ _WP_CURVE = (20, 50, 100)  # admission thresholds, permille of instances
 
 
 def _wp_curve_oracle() -> str:
-    parts = ["WITH RECURSIVE " + _wp_base_ctes().strip()]
+    parts = ["WITH RECURSIVE " + wp_base_ctes().strip()]
     selects = []
     for pm in _WP_CURVE:
         sfx = f"_{pm}"
-        parts.append("," + _wp_walk_ctes(sfx, pm).strip())
+        parts.append("," + wp_walk_ctes(sfx, pm).strip())
         selects.append(f"""
         SELECT CAST({pm} AS INT) AS permille,
                CAST((SELECT COUNT(*) FROM wpvocab{sfx}) AS BIGINT)
@@ -2324,7 +1970,7 @@ def wordpiece_threshold_sensitivity(
         persist_once,
     )
 
-    words, chars, freq, tot = _wp_tables(spark, sf_dir)
+    words, chars, freq, tot = wp_tables(spark, sf_dir)
     pms = sorted(_WP_CURVE)
     lo = pms[0]
     # Admission is MONOTONE in the threshold (vocab_100 ⊆ vocab_50 ⊆
@@ -2463,212 +2109,6 @@ def wordpiece_threshold_sensitivity(
 # ---------------------------------------------------------------------------
 # unigram LM — the third tokenizer family: EM trainer + Viterbi encode
 # ---------------------------------------------------------------------------
-#
-# SentencePiece's unigram model (Kudo 2018) segments each word into the
-# token sequence MAXIMIZING the product of unigram probabilities — the
-# probabilistic alternative to BPE's learned merges and WordPiece's
-# greedy MaxMatch. Relational form with exact cross-engine parity:
-#
-#   model  = TRAINED by _UNI_EM_ROUNDS hard-EM cycles
-#            (unigram_train_em) from the all-substrings (length 1..4)
-#            occurrence-weighted seed; token cost in integer
-#            MILLINATS: round(1000 * ln(Z / cnt)) — the DoReMi grid
-#            trick, so all downstream comparison is BIGINT arithmetic;
-#   winner = the segmentation minimizing (total cost, then the
-#            space-joined token string) — the explicit TOTAL ORDER that
-#            makes the answer unique, so tie-breaking never depends on
-#            traversal order;
-#   engine = a backward Viterbi fold per distinct word: one aggregate()
-#            pass building the best (cost, suffix-string) per position,
-#            LINEAR in word length (the 100 TB path: per-word work is
-#            O(len * 4), all on the Heaps-bounded word table);
-#   oracle = enumerates every segmentation with a recursive CTE
-#            (bounded by 2^(len-1) paths — the SPEC, deliberately
-#            brute-force like the exact sides of the ANN eval gates)
-#            and picks the minimum under the identical total order.
-#
-# The total order composes over suffixes (cost is additive; equal-cost
-# prefixes reduce string comparison to suffix comparison), so the DP's
-# per-position suffix minimum IS the global minimum — pinned against a
-# pure-Python enumerator in tests.
-
-_UNI_MAXLEN = 4
-
-
-def _uni_seed_vocab(words: DataFrame) -> DataFrame:
-    """(token, cnt): occurrence-weighted substring frequencies,
-    lengths 1..4 — the unigram model's SEED support (no admission
-    threshold: the seed lattice must cover every substring so each
-    word has >= 1 segmentation)."""
-    subs = None
-    for l in range(1, _UNI_MAXLEN + 1):
-        s = (
-            words.where(F.length("word") >= l)
-            .select(
-                "n",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, length(word) - {l} + 1),"
-                        f" p -> substring(word, p, {l}))"
-                    )
-                ).alias("token"),
-            )
-        )
-        subs = s if subs is None else subs.unionByName(s)
-    return subs.groupBy("token").agg(
-        F.sum("n").cast("long").alias("cnt")
-    )
-
-
-def _uni_cost_table(vocab: DataFrame) -> DataFrame:
-    """(token, c): millinat integer cost grid over a (token, cnt)
-    vocab — round(1000 * ln(Z / cnt)), Z = sum of counts, so all
-    downstream comparison is exact BIGINT arithmetic (the DoReMi grid
-    trick; +1e-9 nudge shared with the oracle's ROUND)."""
-    z = vocab.agg(F.sum("cnt").cast("long").alias("z"))
-    # bounded: 1-row Z scalar
-    return vocab.crossJoin(F.broadcast(z)).select(
-        "token",
-        F.round(
-            F.lit(1000) * F.log(F.col("z") * 1.0 / F.col("cnt"))
-            + F.lit(1e-9)
-        )
-        .cast("long")
-        .alias("c"),
-    )
-
-
-def _uni_viterbi_toks(words: DataFrame, ucost: DataFrame) -> DataFrame:
-    """(word, toks): the Viterbi segmentation of every distinct word
-    under an ARBITRARY (token, c) cost table — backward DP over
-    positions, linear in word length. A piece absent from the cost
-    table (pruned by an EM m-step) is an invalid lattice edge: its
-    cost join comes back NULL and the candidate falls to the max-cost
-    sentinel, exactly like a too-long piece."""
-    wp = words.select(
-        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
-    )
-    j = wp
-    for l in range(1, _UNI_MAXLEN + 1):
-        v = ucost.select(
-            F.col("token").alias(f"tok{l}"), F.col("c").alias(f"c{l}")
-        )
-        j = j.join(
-            # bounded: unigram vocab = alphabet + top _UNI_EM_TOPK pieces
-            F.broadcast(v),
-            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
-            & (F.col("pos") + l - 1 <= F.length("word")),
-            "left",
-        )
-    costs = j.groupBy("word").agg(
-        F.expr(
-            "transform(array_sort(collect_list("
-            "  struct(pos, c1, c2, c3, c4))),"
-            " x -> struct(x.c1 as c1, x.c2 as c2, x.c3 as c3,"
-            "             x.c4 as c4))"
-        ).alias("costs")
-    )
-
-    # Backward Viterbi fold. Accumulator = suffix-best entries, element
-    # 1 = position p+1 (prepend-built); at step i, p = len - i + 1 and
-    # candidate token length l is valid iff l <= size(acc). Candidates
-    # compare by the (cost, space-joined-string) TOTAL ORDER via
-    # least() on structs; invalid lengths use a max-cost sentinel.
-    def cand(l: int) -> str:
-        return f"""
-            IF({l} <= size(acc)
-               AND element_at(costs, length(word) - i + 1).c{l}
-                   IS NOT NULL,
-               named_struct(
-                   'cost', element_at(costs, length(word) - i + 1).c{l}
-                           + element_at(acc, {l}).cost,
-                   'str', CASE WHEN element_at(acc, {l}).str = ''
-                               THEN substring(word,
-                                              length(word) - i + 1, {l})
-                               ELSE concat(
-                                   substring(word,
-                                             length(word) - i + 1, {l}),
-                                   ' ', element_at(acc, {l}).str) END),
-               named_struct('cost', CAST(9223372036854775807 AS BIGINT),
-                            'str', ''))"""
-
-    fold = f"""
-        aggregate(
-            sequence(1, length(word)),
-            array(named_struct('cost', CAST(0 AS BIGINT), 'str', '')),
-            (acc, i) -> concat(
-                array(least({cand(1)}, {cand(2)}, {cand(3)}, {cand(4)})),
-                acc),
-            acc -> split(element_at(acc, 1).str, ' '))
-    """
-    return costs.select("word", F.expr(fold).alias("toks"))
-
-
-def _uni_em_state(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(vocab, cost) after ``_UNI_EM_ROUNDS`` SentencePiece-style
-    hard-EM cycles (Kudo 2018, Viterbi-approximated e-step):
-
-      seed    = every substring of length 1..4, occurrence-weighted;
-      e-step  = Viterbi-segment every distinct word under the current
-                millinat costs (the existing _uni_viterbi_toks
-                machinery — pruned pieces are invalid lattice edges);
-      m-step  = piece count := sum over words of n * uses; keep single
-                chars ALWAYS (Laplace floor 1, so segmentability is
-                invariant), keep multi-char pieces only if used,
-                capped at the top _UNI_EM_TOPK under the
-                (count DESC, token ASC) total order (TakeOrdered —
-                never a single-partition sort); re-normalize costs
-                over the new total.
-
-    Scale shape: every frame is the Heaps-bounded word table or the
-    Zipf-bounded vocab; the corpus is never touched after _wp_tables'
-    single scan. Each round = one fold over distinct words + one
-    explode-agg + one limit — no shuffle touches corpus-sized data.
-    ``localCheckpoint`` per round truncates lineage (the
-    components/pagerank pattern): each Viterbi fold references the
-    cost table 4 times, so an un-truncated chain grows the plan — and
-    the fold's codegen — 4x per round."""
-    from change_data_capture_poc_spark.functions.caching import (
-        free_local_checkpoint,
-    )
-
-    words, chars, _freq, _tot = _wp_tables(spark, sf_dir)
-    vocab = _uni_seed_vocab(words)
-    cost = _uni_cost_table(vocab).localCheckpoint()
-    for _ in range(_UNI_EM_ROUNDS):
-        toks = _uni_viterbi_toks(words, cost)
-        cnts = (
-            toks.join(words, "word")
-            .select("n", F.explode("toks").alias("token"))
-            .groupBy("token")
-            .agg(F.sum("n").cast("long").alias("cnt"))
-            .localCheckpoint()
-        )
-        ch = chars.join(cnts, "token", "left").select(
-            "token",
-            F.greatest(F.coalesce(F.col("cnt"), F.lit(0)), F.lit(1))
-            .cast("long")
-            .alias("cnt"),
-        )
-        multi = (
-            cnts.where(F.length("token") >= 2)
-            .orderBy(F.col("cnt").desc(), "token")
-            .limit(_UNI_EM_TOPK)
-        )
-        prev_vocab, prev_cost = vocab, cost
-        vocab = ch.unionByName(multi).localCheckpoint()
-        cost = _uni_cost_table(vocab).localCheckpoint()
-        # The new round's checkpoints above are EAGER, so nothing
-        # references the superseded round's blocks any more — drop
-        # them now instead of leaking them for the session lifetime
-        # (release_pins only covers persist_once pins).
-        free_local_checkpoint(prev_cost)
-        free_local_checkpoint(prev_vocab)
-        free_local_checkpoint(cnts)
-    return vocab, cost
-
 
 def ensure_unigram_vocab(
     spark: SparkSession, sf_dir: str, force: bool = False
@@ -2683,7 +2123,7 @@ def ensure_unigram_vocab(
     )
 
     def build(d: str) -> None:
-        vocab, cost = _uni_em_state(spark, sf_dir)
+        vocab, cost = uni_em_state(spark, sf_dir)
         vocab.join(cost, "token").coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(d, "vocab.parquet"))
@@ -2698,23 +2138,23 @@ def ensure_unigram_vocab(
 @register(
     "unigram_train_em",
     oracle="WITH RECURSIVE "
-    + _wp_base_ctes().strip()
+    + wp_base_ctes().strip()
     + ","
-    + _uni_train_ctes().strip()
+    + uni_train_ctes().strip()
     + f"""
     SELECT v.token, CAST(length(v.token) AS INT) AS piece_len,
            v.cnt, c.c AS cost
-    FROM uvocab_r{_UNI_EM_ROUNDS} v
-    JOIN ucost_r{_UNI_EM_ROUNDS} c USING (token)
+    FROM uvocab_r{UNI_EM_ROUNDS} v
+    JOIN ucost_r{UNI_EM_ROUNDS} c USING (token)
     """,
     doc=f"UNIGRAM-LM EM TRAINER (SentencePiece, Kudo 2018 — "
-        f"Viterbi-approximated hard EM): {_UNI_EM_ROUNDS} unrolled "
+        f"Viterbi-approximated hard EM): {UNI_EM_ROUNDS} unrolled "
         f"e/m cycles from the all-substrings seed. e-step = the "
         f"linear backward-Viterbi fold under the current integer "
         f"millinat grid; m-step = occurrence-weighted piece counts, "
         f"chars Laplace-floored (segmentability invariant), unused "
         f"multi-char pieces PRUNED and survivors capped at the top "
-        f"{_UNI_EM_TOPK} under (count DESC, token ASC), costs "
+        f"{UNI_EM_TOPK} under (count DESC, token ASC), costs "
         f"re-normalized over the new total. PERSISTS the trained "
         f"vocab (the tokenizer train/serve split: "
         f"ensure_unigram_vocab, same fingerprint guard as the BPE "
@@ -2745,9 +2185,9 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "unigram_viterbi_encode",
     oracle="WITH RECURSIVE "
-    + _wp_base_ctes().strip()
+    + wp_base_ctes().strip()
     + ","
-    + _unigram_ctes().strip()
+    + unigram_ctes().strip()
     + """
     SELECT dw.doc_id, dw.word_pos, CAST(t.j AS INT) AS tok_idx,
            v.toks[t.j + 1] AS token
@@ -2758,7 +2198,7 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(SentencePiece's unigram model, Kudo 1804.10959): segment "
         f"every word into the token sequence of MINIMUM total cost "
         f"under the TRAINED unigram model (unigram_train_em's "
-        f"{_UNI_EM_ROUNDS}-round hard-EM vocab; cost = millinats, an "
+        f"{UNI_EM_ROUNDS}-round hard-EM vocab; cost = millinats, an "
         f"integer grid — the DoReMi trick — so all comparison is "
         f"exact BIGINT arithmetic), tie-broken by the space-joined "
         f"token string to a UNIQUE answer. Engine: backward Viterbi "
@@ -2773,7 +2213,7 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"persisted artifact (ensure_unigram_vocab — built iff "
         f"absent/stale, the bpe_encode_from_vocab pattern), so the "
         f"encode plan embeds ZERO trainer stages: one fold over the "
-        f"Heaps-bounded word table ({_UNI_MAXLEN} broadcast cost "
+        f"Heaps-bounded word table ({UNI_MAXLEN} broadcast cost "
         f"joins), one corpus scan joined to word->toks — the "
         f"bpe_encode_corpus shape. Oracle replays the full EM chain: "
         f"the parquet round-trip must be semantics-preserving.",
@@ -2781,12 +2221,12 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unigram_viterbi_encode(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    words, _chars, _freq, _tot = _wp_tables(spark, sf_dir)
+    words, _chars, _freq, _tot = wp_tables(spark, sf_dir)
     d = ensure_unigram_vocab(spark, sf_dir)
     cost = spark.read.parquet(os.path.join(d, "vocab.parquet")).select(
         "token", "c"
     )
-    wt = _uni_viterbi_toks(words, cost)
+    wt = uni_viterbi_toks(words, cost)
     d = load_table(spark, sf_dir, "documents")
     dw = (
         d.select(
@@ -2826,7 +2266,7 @@ def _uni_soft_ctes() -> str:
     (probabilities from the final EM vocab), ualpha/ubeta (window-4
     forward/backward recursions, one row per (word, boundary)), uocc
     (all piece occurrences), uexp (expected counts)."""
-    r = _UNI_EM_ROUNDS
+    r = UNI_EM_ROUNDS
     return f"""
     uprob AS MATERIALIZED (
         SELECT token, cnt * 1.0 / (SELECT SUM(cnt) FROM uvocab_r{r}) AS p
@@ -2900,9 +2340,9 @@ def _uni_soft_ctes() -> str:
 @register(
     "unigram_em_expected_counts",
     oracle="WITH RECURSIVE "
-    + _wp_base_ctes().strip()
+    + wp_base_ctes().strip()
     + ","
-    + _uni_train_ctes().strip()
+    + uni_train_ctes().strip()
     + ","
     + _uni_soft_ctes().strip()
     + """
@@ -2935,7 +2375,7 @@ def unigram_em_expected_counts(
         persist_once,
     )
 
-    words, _chars, _freq, _tot = _wp_tables(spark, sf_dir)
+    words, _chars, _freq, _tot = wp_tables(spark, sf_dir)
     d = ensure_unigram_vocab(spark, sf_dir)
     vocab = spark.read.parquet(os.path.join(d, "vocab.parquet"))
     z = vocab.agg(F.sum("cnt").cast("double").alias("z"))
@@ -2960,12 +2400,12 @@ def unigram_em_expected_counts(
         "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
     )
     j = wp
-    for l in range(1, _UNI_MAXLEN + 1):
+    for l in range(1, UNI_MAXLEN + 1):
         v = prob.select(
             F.col("token").alias(f"tok{l}"), F.col("p").alias(f"p{l}")
         )
         j = j.join(
-            # bounded: unigram vocab = alphabet + top _UNI_EM_TOPK pieces
+            # bounded: unigram vocab = alphabet + top UNI_EM_TOPK pieces
             F.broadcast(v),
             (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
             & (F.col("pos") + l - 1 <= F.length("word")),
@@ -3022,7 +2462,7 @@ def unigram_em_expected_counts(
     )
 
     occ = None
-    for l in range(1, _UNI_MAXLEN + 1):
+    for l in range(1, UNI_MAXLEN + 1):
         s = (
             words.where(F.length("word") >= l)
             .select(

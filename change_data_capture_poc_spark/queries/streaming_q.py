@@ -1228,19 +1228,19 @@ def streaming_bloom_bitset_drain(
 
 
 def _wps_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _WPS_K,
-        _wps_pri_sql,
+    from change_data_capture_poc_spark.operators.topk import (
+        WPS_K,
+        wps_pri_sql,
     )
 
     return f"""
     WITH d AS (SELECT source, doc_id, n_chars FROM documents),
-    {_wps_pri_sql('d')}
+    {wps_pri_sql('d')}
     SELECT source, doc_id, n_chars, priority
     FROM wps_p
     QUALIFY ROW_NUMBER() OVER (PARTITION BY source
                                ORDER BY priority DESC, doc_id)
-            <= {_WPS_K}
+            <= {WPS_K}
     """
 
 
@@ -1264,9 +1264,9 @@ def _wps_oracle() -> str:
 def streaming_weighted_reservoir_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _WPS_K,
-        _wps_priority,
+    from change_data_capture_poc_spark.operators.topk import (
+        WPS_K,
+        wps_priority,
     )
     from change_data_capture_poc_spark.streaming.stateful import (
         weighted_reservoir,
@@ -1277,11 +1277,11 @@ def streaming_weighted_reservoir_drain(
         _documents_stream_dir(sf_dir)
     )
     scored = stream.where(F.col("n_chars") > 0).select(
-        "source", "doc_id", "n_chars", _wps_priority().alias("priority")
+        "source", "doc_id", "n_chars", wps_priority().alias("priority")
     )
     from pyspark.sql import Window
 
-    out = weighted_reservoir(scored, _WPS_K)
+    out = weighted_reservoir(scored, WPS_K)
     drained = _drain(out, "streaming_weighted_reservoir_tbl", "update")
     w = Window.partitionBy("source")
     return (

@@ -256,9 +256,7 @@ def test_bpe_trainer_matches_python_reference(spark, sf_dir):
     """The 3-round merge sequence equals a pure-Python greedy BPE
     trainer run on the same word-frequency table (counts and chosen
     pairs exact), and pair counts never increase across rounds."""
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _BPE_ROUNDS,
-    )
+    from change_data_capture_poc_spark.operators.subword import BPE_ROUNDS
 
     words: dict[str, int] = {}
     for r in (
@@ -272,7 +270,7 @@ def test_bpe_trainer_matches_python_reference(spark, sf_dir):
     vocab = {w: (list(w), n) for w, n in words.items()}
 
     expected = []
-    for _ in range(_BPE_ROUNDS):
+    for _ in range(BPE_ROUNDS):
         counts: dict[tuple[str, str], int] = {}
         for toks, n in vocab.values():
             for i in range(len(toks) - 1):
@@ -382,9 +380,9 @@ def test_triangle_count_matches_python_reference(spark, sf_dir):
 def test_weighted_priority_sample_matches_model(spark, sf_dir):
     """Per-source samples equal the A-Res top-k of a driver-side
     float64 recompute (deterministic u from the same md5 prefix)."""
-    from change_data_capture_poc_spark.queries.pipeline7_q import (
-        _WPS_K,
-        _WPS_U_DEN,
+    from change_data_capture_poc_spark.operators.topk import (
+        WPS_K,
+        WPS_U_DEN,
     )
     import hashlib
 
@@ -397,11 +395,11 @@ def test_weighted_priority_sample_matches_model(spark, sf_dir):
     by_source: dict = {}
     for r in rows:
         hv = int(hashlib.md5(str(r.doc_id).encode()).hexdigest()[:8], 16)
-        u = (hv + 1) / _WPS_U_DEN
+        u = (hv + 1) / WPS_U_DEN
         pk = math.log(u) / r.n_chars
         by_source.setdefault(r.source, []).append((pk, r.doc_id))
     expect = {
-        src: {d for _pk, d in sorted(v, key=lambda t: (-t[0], t[1]))[:_WPS_K]}
+        src: {d for _pk, d in sorted(v, key=lambda t: (-t[0], t[1]))[:WPS_K]}
         for src, v in by_source.items()
     }
     got: dict = {}

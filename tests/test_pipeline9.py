@@ -522,8 +522,8 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
     word never below 1 (every word emits at least one piece)."""
     import os
 
+    from change_data_capture_poc_spark.operators.subword import UNI_MAXLEN
     from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _UNI_MAXLEN,
         ensure_unigram_vocab,
         unigram_em_expected_counts,
     )
@@ -553,7 +553,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
         for j in range(1, L + 1):
             a[j] = sum(
                 p[w[j - l: j]] * a[j - l]
-                for l in range(1, min(_UNI_MAXLEN, j) + 1)
+                for l in range(1, min(UNI_MAXLEN, j) + 1)
                 if w[j - l: j] in p
             )
         b = [0.0] * (L + 1)
@@ -561,7 +561,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
         for j in range(L - 1, -1, -1):
             b[j] = sum(
                 p[w[j: j + l]] * b[j + l]
-                for l in range(1, min(_UNI_MAXLEN, L - j) + 1)
+                for l in range(1, min(UNI_MAXLEN, L - j) + 1)
                 if w[j: j + l] in p
             )
         return a, b
@@ -571,7 +571,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
         a, b = fb(w)
         L = len(w)
         for s in range(L):
-            for l in range(1, min(_UNI_MAXLEN, L - s) + 1):
+            for l in range(1, min(UNI_MAXLEN, L - s) + 1):
                 tok = w[s: s + l]
                 if tok in p:
                     ref[tok] = (
@@ -808,10 +808,10 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
     greedy fold) must segment every distinct word exactly like a
     straightforward Python greedy longest-match over the same
     vocabulary rule."""
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _WP_MAXLEN,
-        _WP_PERMILLE,
-        _wp_word_toks,
+    from change_data_capture_poc_spark.operators.subword import (
+        WP_MAXLEN,
+        WP_PERMILLE,
+        wp_word_toks,
     )
     from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -832,16 +832,16 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
     for w, n in words.items():
         for i in range(len(w)):
             vocab.add(w[i])  # chars always admitted
-        for l in range(2, _WP_MAXLEN + 1):
+        for l in range(2, WP_MAXLEN + 1):
             for i in range(len(w) - l + 1):
                 t = w[i : i + l]
                 freq[t] = freq.get(t, 0) + n
-    vocab |= {t for t, f in freq.items() if f * 1000 >= total * _WP_PERMILLE}
+    vocab |= {t for t, f in freq.items() if f * 1000 >= total * WP_PERMILLE}
 
     def maxmatch(w: str) -> list[str]:
         out, i = [], 0
         while i < len(w):
-            for l in range(_WP_MAXLEN, 0, -1):
+            for l in range(WP_MAXLEN, 0, -1):
                 if i + l <= len(w) and w[i : i + l] in vocab:
                     out.append(w[i : i + l])
                     i += l
@@ -850,7 +850,7 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
 
     engine = {
         r["word"]: list(r["toks"])
-        for r in _wp_word_toks(spark, sf_dir).collect()
+        for r in wp_word_toks(spark, sf_dir).collect()
     }
     assert set(engine) == set(words)
     for w in words:
@@ -945,13 +945,13 @@ def test_unigram_em_train_vs_pure_python_reference(spark, sf_dir):
     Python reference that enumerates every vocab-restricted
     segmentation brute-force under the identical total order — both
     the trained vocab/costs and the final segmentations."""
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _UNI_EM_ROUNDS,
-        _UNI_EM_TOPK,
-        _UNI_MAXLEN,
-        _uni_em_state,
-        _uni_viterbi_toks,
-        _wp_tables,
+    from change_data_capture_poc_spark.operators.subword import (
+        UNI_EM_ROUNDS,
+        UNI_EM_TOPK,
+        UNI_MAXLEN,
+        uni_em_state,
+        uni_viterbi_toks,
+        wp_tables,
     )
     from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -966,19 +966,19 @@ def test_unigram_em_train_vs_pure_python_reference(spark, sf_dir):
     }
 
     ref_vocab, ref_cost, ref_best = _py_unigram_em(
-        words, _UNI_MAXLEN, _UNI_EM_ROUNDS, _UNI_EM_TOPK
+        words, UNI_MAXLEN, UNI_EM_ROUNDS, UNI_EM_TOPK
     )
 
-    vocab, cost = _uni_em_state(spark, sf_dir)
+    vocab, cost = uni_em_state(spark, sf_dir)
     got_vocab = {r["token"]: r["cnt"] for r in vocab.collect()}
     got_cost = {r["token"]: r["c"] for r in cost.collect()}
     assert got_vocab == ref_vocab
     assert got_cost == ref_cost
 
-    wt, _, _, _ = _wp_tables(spark, sf_dir)
+    wt, _, _, _ = wp_tables(spark, sf_dir)
     engine = {
         r["word"]: list(r["toks"])
-        for r in _uni_viterbi_toks(wt, cost).collect()
+        for r in uni_viterbi_toks(wt, cost).collect()
     }
     assert set(engine) == set(words)
     for w in words:

@@ -123,10 +123,6 @@ def test_representative_queries_deterministic(spark, sf_dir):
 # not behind another query module's underscore.
 _CROSS_QUERY_PRIVATE_IMPORTS = {
     "pipeline4_q": {"_CHUNK_ORACLE"},
-    "pipeline7_q": {
-        "_BPE_ROUNDS", "_WPS_K", "_bpe_rounds_cte", "_bpe_train_state",
-        "_wps_pri_sql", "_wps_priority",
-    },
     "pipeline9_q": {"_QUAR_REPORT_ORACLE"},
     "pipeline10_q": {"_cdc_chunk_ctes", "_cdc_chunks", "_cdc_chunks_from"},
     "pipeline12_q": {
