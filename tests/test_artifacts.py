@@ -26,16 +26,11 @@ from change_data_capture_poc_spark.functions.artifacts import (
 
 
 @pytest.fixture
-def my_sf(tmp_path):
-    """A private SF dir holding one fake source table; every /tmp
-    directory keyed on it is removed afterwards."""
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    with open(os.path.join(sf, "src.parquet"), "w") as fh:
+def my_sf(tmp_sf):
+    """``tmp_sf`` holding one fake source table."""
+    with open(os.path.join(tmp_sf, "src.parquet"), "w") as fh:
         fh.write("v1")
-    yield sf
-    for d in glob.glob(f"/tmp/spark_graft_*_{artifact_key(sf)}"):
-        shutil.rmtree(d, ignore_errors=True)
+    return tmp_sf
 
 
 def _slow_build(tag: str, calls: list | None = None, done=None):

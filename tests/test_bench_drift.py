@@ -6,6 +6,8 @@ import importlib.util
 import os
 import sys
 
+import pytest
+
 _here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
     "bench_mod", os.path.join(_here, "bench.py")
@@ -188,10 +190,13 @@ def test_main_removes_only_its_own_artifact_dirs(monkeypatch, tmp_path):
         for prefix in ("ann_index", "uni_vocab"):
             built.append(artifact_dir(prefix, sf_dir))
             os.makedirs(built[-1])
-        monkeypatch.setenv("SPARK_GRAFT_TMP_NS", "other-run")
+        # Plain writes, not monkeypatch.setenv: bench.main restores the
+        # variable itself, and a monkeypatch record of bench's own
+        # value would re-set it at teardown for every later test.
+        os.environ["SPARK_GRAFT_TMP_NS"] = "other-run"
         built.append(artifact_dir("ann_index", sf_dir))
         os.makedirs(built[-1])
-        monkeypatch.setenv("SPARK_GRAFT_TMP_NS", f"bench{os.getpid()}")
+        os.environ["SPARK_GRAFT_TMP_NS"] = f"bench{os.getpid()}"
 
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.delenv("SPARK_GRAFT_TMP_NS", raising=False)
@@ -203,3 +208,16 @@ def test_main_removes_only_its_own_artifact_dirs(monkeypatch, tmp_path):
     finally:
         for d in built:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_artifact_dir_cleanup_test_leaves_tmp_ns_unset(monkeypatch, tmp_path):
+    """Tearing the cleanup test down leaves ``SPARK_GRAFT_TMP_NS``
+    unset: a leaked ``bench<pid>`` would key every later test's
+    artifacts under a namespace no cleanup glob matches."""
+    monkeypatch.delenv("SPARK_GRAFT_TMP_NS", raising=False)
+    inner = pytest.MonkeyPatch()
+    try:
+        test_main_removes_only_its_own_artifact_dirs(inner, tmp_path)
+    finally:
+        inner.undo()
+    assert "SPARK_GRAFT_TMP_NS" not in os.environ

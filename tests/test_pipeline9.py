@@ -446,7 +446,7 @@ def test_quarantine_replay_recovers_exactly_the_garbled_lines(
 
 
 def test_quarantine_log_regenerates_when_source_changes(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_sf
 ):
     """Staleness guard: per-SF /tmp artifacts outlive testdata
     regeneration at the same path. A changed source fingerprint
@@ -463,8 +463,7 @@ def test_quarantine_log_regenerates_when_source_changes(
         ensure_quarantine_log,
     )
 
-    my_sf = str(tmp_path / "sf")
-    os.makedirs(my_sf)
+    my_sf = tmp_sf
     shutil.copy(
         os.path.join(sf_dir, "events.parquet"),
         os.path.join(my_sf, "events.parquet"),
@@ -672,7 +671,7 @@ def test_ivm_maintenance_reads_snapshot_plus_pruned_delta(
     assert direct.exceptAll(df).count() == 0
 
 
-def test_ivm_merge_preserves_all_null_sum(spark, tmp_path):
+def test_ivm_merge_preserves_all_null_sum(spark, tmp_sf):
     """SUM ignores NULLs: a key whose values are ALL NULL must stay
     NULL through the snapshot+delta merge (coalescing both sides to
     0.0 would silently report 0.0 where the recompute says NULL)."""
@@ -680,8 +679,7 @@ def test_ivm_merge_preserves_all_null_sum(spark, tmp_path):
     import pyarrow.parquet as pq
     import os
 
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
+    sf = tmp_sf
     # user 1: all-null values split across both halves; user 2: mixed.
     tbl = pa.table(
         {
