@@ -1,22 +1,164 @@
 """Subword tokenizers: the BPE trainer, WordPiece MaxMatch and the
-unigram-LM EM trainer / Viterbi segmenter, each as an engine builder
-plus its DuckDB oracle twin.
+unigram-LM EM trainer / Viterbi segmenter, each an engine builder
+beside its DuckDB oracle twin. The steps all three families run —
+the doc -> word stream, the word table, substring frequencies, the
+piece lattice and the encode tail — exist once, at the top.
 
-The registered tokenizer queries (``bpe_train_iterative_merges`` in
-``pipeline7_q``; the encoders, the family bake-off, the threshold
-curve and the unigram trainer in ``pipeline9_q``) and the persisted
+The registered queries (``pipeline7_q``, ``pipeline9_q``) and the
 vocabulary artifacts (``ensure_bpe_vocab`` / ``ensure_unigram_vocab``)
-call these; per-query knobs and one-query oracle builders stay with
-their query.
+call these. Oracle builders return CTE bodies with no leading
+``WITH``: the caller writes ``WITH`` or ``WITH RECURSIVE`` once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable, Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.caching import persist_once
+from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.sources.tables import load_table
+
+MAX_PIECE = 4  # longest piece WordPiece and unigram segment into
+
+
+# ---------------------------------------------------------------------------
+# Shared steps — each an engine builder plus its DuckDB twin
+# ---------------------------------------------------------------------------
+
+
+def doc_words(docs: DataFrame) -> DataFrame:
+    """(doc_id, word_pos, word): every non-empty space-split word of
+    every document — the pre-tokenization all three families share.
+    ``word_pos`` is the position in the raw split, so the empty
+    strings of repeated spaces still count."""
+    return docs.select(
+        "doc_id",
+        F.posexplode(F.split("text", " ")).alias("word_pos", "word"),
+    ).where(F.col("word") != "")
+
+
+DOC_WORDS_SQL = """
+    dw AS (
+        SELECT sp.doc_id, CAST(s.i AS INT) AS word_pos,
+               sp.s[s.i + 1] AS word
+        FROM (SELECT doc_id, string_split(text, ' ') AS s
+              FROM documents) sp,
+             LATERAL (SELECT unnest(range(len(sp.s))) AS i) s
+        WHERE sp.s[s.i + 1] != ''
+    )"""
+
+
+def word_counts(docs: DataFrame, *by: str) -> DataFrame:
+    """(*by, word, n): occurrences of every non-empty word, per ``by``
+    group — the Heaps-bounded word table the trainers run on (the
+    corpus is read once, into this). Returned uncached; callers that
+    fan it out pin it themselves."""
+    return (
+        docs.select(*by, F.explode(F.split("text", " ")).alias("word"))
+        .where(F.col("word") != "")
+        .groupBy(*by, "word")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+
+
+WORD_COUNTS_SQL = """
+    wc AS (
+        SELECT tok AS word, CAST(COUNT(*) AS BIGINT) AS n FROM (
+            SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+        ) WHERE tok != '' GROUP BY tok
+    )"""
+
+
+def substring_freq(words: DataFrame, lo: int, col: str) -> DataFrame:
+    """(token, ``col``): occurrence-weighted frequency of every
+    substring of length ``lo``..MAX_PIECE over a (word, n) table."""
+    subs = None
+    for l in range(lo, MAX_PIECE + 1):
+        s = (
+            words.where(F.length("word") >= l)
+            .select(
+                "n",
+                F.explode(
+                    F.expr(
+                        f"transform(sequence(1, length(word) - {l} + 1),"
+                        f" p -> substring(word, p, {l}))"
+                    )
+                ).alias("token"),
+            )
+        )
+        subs = s if subs is None else subs.unionByName(s)
+    return subs.groupBy("token").agg(F.sum("n").cast("long").alias(col))
+
+
+def substring_freq_sql(name: str, lo: int, col: str) -> str:
+    """Oracle twin of ``substring_freq`` over ``wc``: CTE ``name``
+    (token, ``col``)."""
+    lens = ", ".join(f"({l})" for l in range(lo, MAX_PIECE + 1))
+    return f"""
+    {name} AS MATERIALIZED (
+        SELECT substring(word, s.p, l.l) AS token,
+               CAST(SUM(n) AS BIGINT) AS {col}
+        FROM wc,
+             (VALUES {lens}) l(l),
+             LATERAL (
+                 SELECT unnest(range(1, length(wc.word) - l.l + 2)) AS p
+             ) s
+        GROUP BY 1
+    )"""
+
+
+def piece_lattice(
+    words: DataFrame,
+    pieces: DataFrame,
+    lens: Iterable[int],
+    carry: Callable[[int], Iterable[Column]] = lambda l: (),
+) -> DataFrame:
+    """(word, pos, tok{l}, …): one row per (distinct word, start
+    position), left-joined once per piece length l in ``lens`` to the
+    ``pieces`` row whose token is the length-l substring starting
+    there (tok{l} NULL when absent or past the word end). ``carry(l)``
+    lists the pieces columns each join brings along, renamed per l."""
+    j = words.select(
+        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
+    )
+    for l in lens:
+        v = pieces.select(F.col("token").alias(f"tok{l}"), *carry(l))
+        j = j.join(
+            # bounded: pieces is a vocabulary — the alphabet plus
+            # admission-capped or top-UNI_EM_TOPK multi-char pieces
+            F.broadcast(v),
+            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
+            & (F.col("pos") + l - 1 <= F.length("word")),
+            "left",
+        )
+    return j
+
+
+def encode_words(docs: DataFrame, word_toks: DataFrame) -> DataFrame:
+    """(doc_id, word_pos, tok_idx, token): the corpus token stream —
+    ``doc_words`` joined to a (word, toks) segmentation table, one row
+    per token. Segmentation runs once per distinct word; the corpus
+    is scanned once and never sorted."""
+    return doc_words(docs).join(word_toks, "word").select(
+        "doc_id",
+        "word_pos",
+        F.posexplode("toks").alias("tok_idx", "token"),
+    )
+
+
+def encode_sql(word_toks: str) -> str:
+    """Oracle twin of ``encode_words``: a SELECT of (doc_id, word_pos,
+    tok_idx, token) off ``dw`` and the (word, toks) relation
+    ``word_toks``."""
+    return f"""
+    SELECT dw.doc_id, dw.word_pos, CAST(t.j AS INT) AS tok_idx,
+           v.toks[t.j + 1] AS token
+    FROM dw JOIN {word_toks} v USING (word),
+         LATERAL (SELECT unnest(range(len(v.toks))) AS j) t
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -27,10 +169,10 @@ BPE_ROUNDS = 3
 
 
 def bpe_rounds_cte() -> str:
-    """Shared CTE prefix: word counts, char-split v0, and the unrolled
-    training rounds pc{r}/b{r}/…/v{r}. Reused by the trainer oracle
-    (final select = the merge table) and the round-9 corpus-encode
-    oracle (final select = the tokenized corpus stream off v{R})."""
+    """Oracle CTEs over ``wc``: char-split v0 and the unrolled training
+    rounds pc{r}/b{r}/…/v{r}. Reused by the trainer oracle (final
+    select = the merge table), the encode oracles (the token stream
+    off v{R}) and the family bake-off."""
     rounds = []
     for r in range(1, BPE_ROUNDS + 1):
         p = r - 1
@@ -85,11 +227,6 @@ def bpe_rounds_cte() -> str:
         GROUP BY word
     )""")
     return f"""
-    WITH wc AS (
-        SELECT tok AS word, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE tok != '' GROUP BY tok
-    ),
     v0 AS (
         SELECT word, n,
                string_split(rtrim(regexp_replace(word, '(.)', '\\1 ',
@@ -98,6 +235,33 @@ def bpe_rounds_cte() -> str:
     ),
     {",".join(rounds)}
     """
+
+
+BPE_IDS_SQL = f"""
+    syms AS (
+        SELECT DISTINCT t AS token
+        FROM (SELECT unnest(toks) AS t FROM v{BPE_ROUNDS})
+    ),
+    ids AS (
+        SELECT token,
+               CAST(ROW_NUMBER() OVER (ORDER BY token) - 1 AS INT)
+                   AS token_id
+        FROM syms
+    )"""
+
+
+def bpe_token_ids(v: DataFrame) -> DataFrame:
+    """(token, token_id): ids over the trained symbol set (alphabet +
+    BPE_ROUNDS merges — constant-bounded, so the global row_number is
+    the documented global_window shape). Twin of ``BPE_IDS_SQL``."""
+    syms = v.select(F.explode("toks").alias("token")).distinct()
+    return syms.select(
+        "token",
+        (F.row_number().over(global_window("token")) - 1)
+        .cast("int")
+        .alias("token_id"),
+    )
+
 
 def bpe_train_state(
     spark: SparkSession, sf_dir: str
@@ -111,13 +275,7 @@ def bpe_train_state(
     state, so the corpus never re-runs the merge application."""
     from pyspark.sql import Window
 
-    d = load_table(spark, sf_dir, "documents")
-    wc = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
+    wc = word_counts(load_table(spark, sf_dir, "documents"))
     v = wc.select(
         "word",
         "n",
@@ -226,17 +384,17 @@ def bpe_train_state(
 # WordPiece — greedy longest-match-first (MaxMatch)
 # ---------------------------------------------------------------------------
 #
-# BPE (pipeline7_q's trainer + this module's encoders) is one of the two
+# BPE (the trainer above + pipeline9_q's encoders) is one of the two
 # subword families production LM pipelines actually run; the other is
 # WordPiece-style greedy longest-match-first inference (Wu et al. 2016;
 # the MaxMatch segmenter HuggingFace's WordPiece tokenizer executes).
 # Relational form, all integer/string logic so both engines agree bit
 # for bit:
 #   vocab  = every single character (totality guarantee) ∪ substrings
-#            of length 2..4 whose occurrence-weighted corpus frequency
-#            clears a PROPORTIONAL admission threshold (freq*1000 >=
-#            total_words*permille — integer cross-multiply, scale-
-#            invariant, no float division);
+#            of length 2..MAX_PIECE whose occurrence-weighted corpus
+#            frequency clears a PROPORTIONAL admission threshold
+#            (freq*1000 >= total_words*permille — integer cross-
+#            multiply, scale-invariant, no float division);
 #   jumps  = per (word, position): the longest vocab token starting
 #            there (tried 4,3,2 via three joins against the bounded
 #            vocabulary, else the guaranteed single char);
@@ -248,51 +406,28 @@ def bpe_train_state(
 # word table; the corpus is scanned once and joined to word->toks,
 # exactly the bpe_encode_corpus shape.
 
-WP_MAXLEN = 4      # longest subword the segmenter considers
 WP_PERMILLE = 50   # vocab admission: freq >= 5% of word instances
 
 
 def wp_base_ctes() -> str:
-    """Threshold-independent oracle CTEs: word counts, the instance
-    total, the char alphabet, occurrence-weighted substring
+    """Threshold-independent oracle CTEs: the word table ``wc``, the
+    instance total, the char alphabet, occurrence-weighted substring
     frequencies, the per-word position grid, and the doc->word
-    stream."""
-    return """
-    wpc AS (
-        SELECT tok AS word, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE tok != '' GROUP BY tok
-    ),
-    wptot AS (SELECT SUM(n) AS t FROM wpc),
+    stream ``dw``."""
+    return WORD_COUNTS_SQL + """,
+    wptot AS (SELECT SUM(n) AS t FROM wc),
     wpchars AS (
         SELECT DISTINCT substring(word, s.p, 1) AS token
-        FROM wpc, LATERAL (
-            SELECT unnest(range(1, length(wpc.word) + 1)) AS p
+        FROM wc, LATERAL (
+            SELECT unnest(range(1, length(wc.word) + 1)) AS p
         ) s
-    ),
-    wpsubs AS (
-        SELECT substring(word, s.p, l.l) AS token, SUM(n) AS freq
-        FROM wpc,
-             (VALUES (2), (3), (4)) l(l),
-             LATERAL (
-                 SELECT unnest(range(1, length(wpc.word) - l.l + 2)) AS p
-             ) s
-        GROUP BY 1
-    ),
+    ),""" + substring_freq_sql("wpsubs", 2, "freq") + """,
     wppos AS (
-        SELECT wpc.word, s.p
-        FROM wpc, LATERAL (
-            SELECT unnest(range(1, length(wpc.word) + 1)) AS p
+        SELECT wc.word, s.p
+        FROM wc, LATERAL (
+            SELECT unnest(range(1, length(wc.word) + 1)) AS p
         ) s
-    ),
-    wpdw AS (
-        SELECT sp.doc_id, CAST(s.i AS INT) AS word_pos,
-               sp.s[s.i + 1] AS word
-        FROM (SELECT doc_id, string_split(text, ' ') AS s
-              FROM documents) sp,
-             LATERAL (SELECT unnest(range(len(sp.s))) AS i) s
-        WHERE sp.s[s.i + 1] != ''
-    )"""
+    ),""" + DOC_WORDS_SQL
 
 
 def wp_walk_ctes(sfx: str, permille: int) -> str:
@@ -346,22 +481,13 @@ def wp_tables(
     """Threshold-independent engine frames: (words, chars, freq, tot)
     — the engine half of wp_base_ctes, all on the Heaps-bounded
     word table."""
-    from change_data_capture_poc_spark.functions.caching import (
-        persist_once,
-    )
-
     # The Heaps-bounded word table feeds every vocab branch (chars,
     # each substring length, the total, the position frame) — cached
     # so the corpus is scanned once, not once per branch; same for the
     # vocabulary, which the three jump joins probe. persist_once keeps
     # the round-9 cache contract (caller releases via release_pins).
-    words = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(persist_once)
+    words = word_counts(load_table(spark, sf_dir, "documents")).transform(
+        persist_once
     )
     # chars and freq are re-derived per admission threshold by the
     # sensitivity sweep (each threshold's vocab is its own cached
@@ -379,37 +505,14 @@ def wp_tables(
         .distinct()
         .transform(persist_once)
     )
-    subs = None
-    for l in range(2, WP_MAXLEN + 1):
-        s = (
-            words.where(F.length("word") >= l)
-            .select(
-                "n",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, length(word) - {l} + 1),"
-                        f" p -> substring(word, p, {l}))"
-                    )
-                ).alias("token"),
-            )
-        )
-        subs = s if subs is None else subs.unionByName(s)
     tot = words.agg(F.sum("n").cast("long").alias("t"))
-    freq = (
-        subs.groupBy("token")
-        .agg(F.sum("n").cast("long").alias("freq"))
-        .transform(persist_once)
-    )
+    freq = substring_freq(words, 2, "freq").transform(persist_once)
     return words, chars, freq, tot
 
 
 def wp_vocab_for(
     chars: DataFrame, freq: DataFrame, tot: DataFrame, permille: int
 ) -> DataFrame:
-    from change_data_capture_poc_spark.functions.caching import (
-        persist_once,
-    )
-
     admitted = (
         # bounded: 1-row instance total
         freq.crossJoin(F.broadcast(tot))
@@ -423,19 +526,7 @@ def wp_toks_for(words: DataFrame, vocab: DataFrame) -> DataFrame:
     """(word, toks): the MaxMatch segmentation of every distinct word
     under the given vocabulary — per-position longest-match jumps via
     three joins against the bounded vocab, then one greedy fold."""
-    wp = words.select(
-        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
-    )
-    j = wp
-    for l in (4, 3, 2):
-        v = vocab.select(F.col("token").alias(f"tok{l}"))
-        j = j.join(
-            # bounded: admission floor caps vocab at ~1000/permille pieces per length + alphabet
-            F.broadcast(v),
-            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
-            & (F.col("pos") + l - 1 <= F.length("word")),
-            "left",
-        )
+    j = piece_lattice(words, vocab, (4, 3, 2))
     jump = (
         F.when(F.col("tok4").isNotNull(), 4)
         .when(F.col("tok3").isNotNull(), 3)
@@ -498,7 +589,7 @@ def uni_enum_ctes(cost_cte: str, sfx: str) -> str:
     urec{sfx} AS (
         SELECT word, CAST(1 AS BIGINT) AS p, CAST(0 AS BIGINT) AS cost,
                '' AS str
-        FROM wpc
+        FROM wc
         UNION ALL
         SELECT r.word, r.p + l.l, r.cost + c.c,
                CASE WHEN r.str = '' THEN
@@ -532,7 +623,7 @@ def uni_mstep_ctes(r: int) -> str:
     return f"""
     ucnt_r{r} AS MATERIALIZED (
         SELECT t.tok AS token, CAST(SUM(w.n) AS BIGINT) AS cnt
-        FROM utoks_e{r} u JOIN wpc w USING (word),
+        FROM utoks_e{r} u JOIN wc w USING (word),
              LATERAL (SELECT unnest(u.toks) AS tok) t
         GROUP BY 1
     ),
@@ -548,13 +639,19 @@ def uni_mstep_ctes(r: int) -> str:
         FROM wpchars ch LEFT JOIN ucnt_r{r} c USING (token)
         UNION ALL
         SELECT token, cnt FROM umulti_r{r}
-    ),
-    uz_r{r} AS MATERIALIZED (SELECT SUM(cnt) AS z FROM uvocab_r{r}),
+    ),""" + cost_grid_sql(r, f"uvocab_r{r}")
+
+
+def cost_grid_sql(r: int, vocab: str) -> str:
+    """``uz_r{r}`` / ``ucost_r{r}``: the millinat cost grid over the
+    (token, cnt) CTE ``vocab`` — oracle twin of ``uni_cost_table``."""
+    return f"""
+    uz_r{r} AS MATERIALIZED (SELECT SUM(cnt) AS z FROM {vocab}),
     ucost_r{r} AS MATERIALIZED (
         SELECT token,
                CAST(ROUND(1000 * LN(uz_r{r}.z * 1.0 / cnt) + 1e-9)
                     AS BIGINT) AS c
-        FROM uvocab_r{r}, uz_r{r}
+        FROM {vocab}, uz_r{r}
     )"""
 
 
@@ -563,24 +660,11 @@ def uni_train_ctes() -> str:
     trainer's fixed-round-unroll pattern): ufreq_r0/ucost_r0 is the
     all-substrings frequency seed; round r = Viterbi e-step under
     ucost_r{r-1} (utoks_e{r}) then m-step r (ucost_r{r})."""
-    parts = [f"""
-    ufreq_r0 AS MATERIALIZED (
-        SELECT substring(word, s.p, l.l) AS token,
-               CAST(SUM(n) AS BIGINT) AS cnt
-        FROM wpc,
-             (VALUES (1), (2), (3), (4)) l(l),
-             LATERAL (
-                 SELECT unnest(range(1, length(wpc.word) - l.l + 2)) AS p
-             ) s
-        GROUP BY 1
-    ),
-    uz_r0 AS MATERIALIZED (SELECT SUM(cnt) AS z FROM ufreq_r0),
-    ucost_r0 AS MATERIALIZED (
-        SELECT token,
-               CAST(ROUND(1000 * LN(uz_r0.z * 1.0 / cnt) + 1e-9)
-                    AS BIGINT) AS c
-        FROM ufreq_r0, uz_r0
-    )"""]
+    parts = [
+        substring_freq_sql("ufreq_r0", 1, "cnt")
+        + ","
+        + cost_grid_sql(0, "ufreq_r0")
+    ]
     for r in range(1, UNI_EM_ROUNDS + 1):
         parts.append(uni_enum_ctes(f"ucost_r{r - 1}", f"_e{r}"))
         parts.append(uni_mstep_ctes(r))
@@ -588,8 +672,8 @@ def uni_train_ctes() -> str:
 
 
 def unigram_ctes() -> str:
-    """Oracle CTEs appended after wp_base_ctes (reuses wpc/wpchars/
-    wpdw): the TRAINED unigram model (seed + unrolled EM rounds) ->
+    """Oracle CTEs appended after wp_base_ctes (reuses wc/wpchars):
+    the TRAINED unigram model (seed + unrolled EM rounds) ->
     all-segmentations recursion under the final trained costs ->
     total-order winner ``utoks``."""
     return (
@@ -631,34 +715,6 @@ def unigram_ctes() -> str:
 # per-position suffix minimum IS the global minimum — pinned against a
 # pure-Python enumerator in tests.
 
-UNI_MAXLEN = 4
-
-
-def uni_seed_vocab(words: DataFrame) -> DataFrame:
-    """(token, cnt): occurrence-weighted substring frequencies,
-    lengths 1..4 — the unigram model's SEED support (no admission
-    threshold: the seed lattice must cover every substring so each
-    word has >= 1 segmentation)."""
-    subs = None
-    for l in range(1, UNI_MAXLEN + 1):
-        s = (
-            words.where(F.length("word") >= l)
-            .select(
-                "n",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, length(word) - {l} + 1),"
-                        f" p -> substring(word, p, {l}))"
-                    )
-                ).alias("token"),
-            )
-        )
-        subs = s if subs is None else subs.unionByName(s)
-    return subs.groupBy("token").agg(
-        F.sum("n").cast("long").alias("cnt")
-    )
-
-
 def uni_cost_table(vocab: DataFrame) -> DataFrame:
     """(token, c): millinat integer cost grid over a (token, cnt)
     vocab — round(1000 * ln(Z / cnt)), Z = sum of counts, so all
@@ -684,21 +740,12 @@ def uni_viterbi_toks(words: DataFrame, ucost: DataFrame) -> DataFrame:
     table (pruned by an EM m-step) is an invalid lattice edge: its
     cost join comes back NULL and the candidate falls to the max-cost
     sentinel, exactly like a too-long piece."""
-    wp = words.select(
-        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
+    j = piece_lattice(
+        words,
+        ucost,
+        range(1, MAX_PIECE + 1),
+        lambda l: [F.col("c").alias(f"c{l}")],
     )
-    j = wp
-    for l in range(1, UNI_MAXLEN + 1):
-        v = ucost.select(
-            F.col("token").alias(f"tok{l}"), F.col("c").alias(f"c{l}")
-        )
-        j = j.join(
-            # bounded: unigram vocab = alphabet + top UNI_EM_TOPK pieces
-            F.broadcast(v),
-            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
-            & (F.col("pos") + l - 1 <= F.length("word")),
-            "left",
-        )
     costs = j.groupBy("word").agg(
         F.expr(
             "transform(array_sort(collect_list("
@@ -774,7 +821,10 @@ def uni_em_state(
     )
 
     words, chars, _freq, _tot = wp_tables(spark, sf_dir)
-    vocab = uni_seed_vocab(words)
+    # Seed support: every substring up to MAX_PIECE, no admission
+    # threshold — the seed lattice must cover every substring so each
+    # word has >= 1 segmentation.
+    vocab = substring_freq(words, 1, "cnt")
     cost = uni_cost_table(vocab).localCheckpoint()
     for _ in range(UNI_EM_ROUNDS):
         toks = uni_viterbi_toks(words, cost)

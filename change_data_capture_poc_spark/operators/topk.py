@@ -195,9 +195,30 @@ def wps_pri_sql(docs_cte: str) -> str:
     )"""
 
 
-def wps_priority():
-    """Spark twin of ``wps_pri_sql``'s priority column: u^(1/w) as
-    ln(u)/n_chars from the deterministic md5-prefix uniform. Callers
-    filter n_chars > 0 first (mirroring the SQL fragment)."""
+def wps_scored(docs: DataFrame) -> DataFrame:
+    """Spark twin of ``wps_pri_sql``: (source, doc_id, n_chars,
+    priority) for every doc with n_chars > 0, priority u^(1/w) as
+    ln(u)/n_chars from the deterministic md5-prefix uniform. Rank it
+    with ``grouped_topk`` (batch) or the stateful reservoir (stream)."""
     u = (md5_prefix(F.col("doc_id")) + 1) / F.lit(WPS_U_DEN)
-    return F.round(F.log(u) / F.col("n_chars") + F.lit(1e-9), 6)
+    return docs.where(F.col("n_chars") > 0).select(
+        "source",
+        "doc_id",
+        "n_chars",
+        F.round(F.log(u) / F.col("n_chars") + F.lit(1e-9), 6).alias(
+            "priority"
+        ),
+    )
+
+
+# The per-source A-Res sample: the oracle of the batch sampler and of
+# its stream twin (the reservoir drain's readout equals it).
+WPS_ORACLE = f"""
+    WITH d AS (SELECT source, doc_id, n_chars FROM documents),
+    {wps_pri_sql('d')}
+    SELECT source, doc_id, n_chars, priority
+    FROM wps_p
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY source
+                               ORDER BY priority DESC, doc_id)
+            <= {WPS_K}
+    """

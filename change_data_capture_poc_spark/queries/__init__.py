@@ -32,10 +32,12 @@ Modules:
                     PQ/ADC + composed IVF-PQ recall (the PQ and
                     IVF-PQ algorithms live in operators/ann.py), semantic
                     decontamination, bitext margin mining, DoReMi
-                    reweighting, iterative BPE training, MAD/CUSUM
-                    robust statistics, dup-graph triangles, A-Res
-                    weighted sampling, schema-evolution CDC reads,
-                    and the composed weighted corpus build
+                    reweighting, iterative BPE training (trainer in
+                    operators/subword.py), MAD/CUSUM robust
+                    statistics, dup-graph triangles, A-Res weighted
+                    sampling (priority and oracle in operators/topk.py),
+                    schema-evolution CDC reads, and the composed
+                    weighted corpus build
 - ``pipeline8_q`` — portable histogram-quantile sketch (+ stream
                     twin; grid and readout in operators/sketch.py),
                     F2 self-join-size sketch, HLL set algebra,
@@ -47,7 +49,11 @@ Modules:
 - ``pipeline9_q`` — corpus-scale BPE encode, sampled-truth multiprobe
                     recall gate, persisted IVF-PQ index build/serve/
                     compact lifecycle over operators/ann.py, best-fit
-                    sequence packing, CDC quarantine report
+                    sequence packing, CDC quarantine report, and the
+                    tokenizer queries and vocabulary artifacts over
+                    operators/subword.py (BPE encode/decode, WordPiece
+                    MaxMatch and threshold curve, unigram EM train/
+                    Viterbi encode/soft e-step, family bake-off)
 - ``pipeline10_q`` — content-defined chunking (map-only fold) +
                     chunk dedup reports (batch/incremental), retrieval
                     quality (nDCG@10/MRR@100), RRF hybrid fusion,

@@ -121,11 +121,14 @@ from change_data_capture_poc_spark.operators.minhash import (
 )
 from change_data_capture_poc_spark.operators.topk import (
     WPS_K,
+    WPS_ORACLE,
+    grouped_topk,
     wps_pri_sql,
-    wps_priority,
+    wps_scored,
 )
 from change_data_capture_poc_spark.operators.subword import (
     BPE_ROUNDS,
+    WORD_COUNTS_SQL,
     bpe_rounds_cte,
     bpe_train_state,
 )
@@ -440,8 +443,6 @@ def _bmm_oracle() -> str:
         f"twice and never shuffled.",
 )
 def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -724,7 +725,7 @@ def _bpe_oracle() -> str:
         f"l || r2 AS merged_sym, cnt AS pair_count FROM b{r}"
         for r in range(1, BPE_ROUNDS + 1)
     )
-    return bpe_rounds_cte() + finals
+    return f"WITH {WORD_COUNTS_SQL},{bpe_rounds_cte()}" + finals
 
 
 @register(
@@ -953,15 +954,7 @@ def graph_triangle_count_dupgraph(
 
 @register(
     "corpus_weighted_priority_sample",
-    oracle=f"""
-    WITH d AS (SELECT source, doc_id, n_chars FROM documents),
-    {wps_pri_sql('d')}
-    SELECT source, doc_id, n_chars, priority
-    FROM wps_p
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY source
-                               ORDER BY priority DESC, doc_id)
-            <= {WPS_K}
-    """,
+    oracle=WPS_ORACLE,
     doc=f"WEIGHTED sampling without replacement (Efraimidis & "
         f"Spirakis 2006 A-Res): each doc draws priority u^(1/w) — "
         f"computed as ln(u)/w for numeric stability — with u a "
@@ -981,12 +974,7 @@ def graph_triangle_count_dupgraph(
 def corpus_weighted_priority_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
-
-    d = load_table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    p = d.select(
-        "source", "doc_id", "n_chars", wps_priority().alias("priority")
-    )
+    p = wps_scored(load_table(spark, sf_dir, "documents"))
     return grouped_topk(
         p, ["source"], [("priority", False), ("doc_id", True)], WPS_K
     )
@@ -1234,8 +1222,6 @@ def _wb_oracle() -> str:
 def corpus_weighted_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from change_data_capture_poc_spark.operators.topk import grouped_topk
-
     d = load_table(spark, sf_dir, "documents")
     gated = d.where(F.col("n_chars") >= _WB_MIN_CHARS).select(
         "source", "doc_id", "text", "n_chars"
@@ -1286,9 +1272,7 @@ def corpus_weighted_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    pri = surv.where(F.col("n_chars") > 0).select(
-        "source", "doc_id", "n_chars", wps_priority().alias("priority")
-    )
+    pri = wps_scored(surv)
     # Budget-bounded cut first (map-side partial top-k), then rank the
     # <= BUDGET-per-source survivor frame — a window over a bounded
     # frame, never the corpus.

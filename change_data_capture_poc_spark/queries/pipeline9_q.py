@@ -61,7 +61,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.artifacts import persisted
-from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.operators.ann import (
@@ -91,18 +90,26 @@ from change_data_capture_poc_spark.operators.ann import (
     variant_tag,
 )
 from change_data_capture_poc_spark.operators.subword import (
+    BPE_IDS_SQL,
     BPE_ROUNDS,
+    DOC_WORDS_SQL,
+    MAX_PIECE,
     UNI_EM_ROUNDS,
     UNI_EM_TOPK,
-    UNI_MAXLEN,
-    WP_MAXLEN,
+    WORD_COUNTS_SQL,
     WP_PERMILLE,
     bpe_rounds_cte,
+    bpe_token_ids,
     bpe_train_state,
+    doc_words,
+    encode_sql,
+    encode_words,
+    piece_lattice,
     uni_em_state,
     uni_train_ctes,
     uni_viterbi_toks,
     unigram_ctes,
+    word_counts,
     wp_base_ctes,
     wp_tables,
     wp_vocab_ctes,
@@ -120,32 +127,9 @@ def _bpe_encode_oracle() -> str:
     """Unrolled trainer rounds (shared CTE prefix with the trainer
     oracle) + the encode tail: token-id vocabulary off the final
     round's word->toks table, then the per-document token stream."""
-    r = BPE_ROUNDS
-    return bpe_rounds_cte() + f""",
-    syms AS (
-        SELECT DISTINCT t AS token
-        FROM (SELECT unnest(toks) AS t FROM v{r})
-    ),
-    ids AS (
-        SELECT token,
-               CAST(ROW_NUMBER() OVER (ORDER BY token) - 1 AS INT)
-                   AS token_id
-        FROM syms
-    ),
-    dw AS (
-        SELECT sp.doc_id, CAST(s.i AS INT) AS word_pos,
-               sp.s[s.i + 1] AS word
-        FROM (SELECT doc_id, string_split(text, ' ') AS s
-              FROM documents) sp,
-             LATERAL (SELECT unnest(range(len(sp.s))) AS i) s
-        WHERE sp.s[s.i + 1] != ''
-    ),
-    enc AS (
-        SELECT dw.doc_id, dw.word_pos, CAST(t.j AS INT) AS tok_idx,
-               v.toks[t.j + 1] AS token
-        FROM dw JOIN v{r} v USING (word),
-             LATERAL (SELECT unnest(range(len(v.toks))) AS j) t
-    )
+    return f"""
+    WITH {WORD_COUNTS_SQL},{bpe_rounds_cte()},{BPE_IDS_SQL},{DOC_WORDS_SQL},
+    enc AS ({encode_sql(f"v{BPE_ROUNDS}")})
     SELECT e.doc_id, e.word_pos, e.tok_idx, e.token, i.token_id
     FROM enc e JOIN ids i USING (token)
     """
@@ -175,28 +159,9 @@ def _bpe_encode_oracle() -> str:
 )
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     _merges, v = bpe_train_state(spark, sf_dir)
-
-    syms = v.select(F.explode("toks").alias("token")).distinct()
-    ids = syms.select(
-        "token",
-        (F.row_number().over(global_window("token")) - 1)
-        .cast("int")
-        .alias("token_id"),
-    )
-
+    ids = bpe_token_ids(v)
     d = load_table(spark, sf_dir, "documents")
-    dw = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.split("text", " ")).alias("word_pos", "word"),
-        )
-        .where(F.col("word") != "")
-    )
-    enc = dw.join(v.select("word", "toks"), "word").select(
-        "doc_id",
-        "word_pos",
-        F.posexplode("toks").alias("tok_idx", "token"),
-    )
+    enc = encode_words(d, v.select("word", "toks"))
     # bounded: BPE token set = alphabet + BPE_ROUNDS merge tokens
     return enc.join(F.broadcast(ids), "token").select(
         "doc_id", "word_pos", "tok_idx", "token", "token_id"
@@ -1211,13 +1176,7 @@ def ensure_bpe_vocab(
         v.select("word", "toks").write.mode("overwrite").parquet(
             os.path.join(d, "vocab.parquet")
         )
-        syms = v.select(F.explode("toks").alias("token")).distinct()
-        syms.select(
-            "token",
-            (F.row_number().over(global_window("token")) - 1)
-            .cast("int")
-            .alias("token_id"),
-        ).coalesce(1).write.mode("overwrite").parquet(
+        bpe_token_ids(v).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, "token_ids.parquet")
         )
 
@@ -1226,16 +1185,9 @@ def ensure_bpe_vocab(
 
 @register(
     "tokenizer_vocab_build",
-    oracle=bpe_rounds_cte() + f""",
-    vocab AS (SELECT word, toks FROM v{BPE_ROUNDS}),
-    syms AS (
-        SELECT DISTINCT t AS token
-        FROM (SELECT unnest(toks) AS t FROM vocab)
-    )
-    SELECT token,
-           CAST(ROW_NUMBER() OVER (ORDER BY token) - 1 AS INT)
-               AS token_id
-    FROM syms
+    oracle=f"""
+    WITH {WORD_COUNTS_SQL},{bpe_rounds_cte()},{BPE_IDS_SQL}
+    SELECT token, token_id FROM ids
     """,
     doc=f"TOKENIZER ARTIFACT BUILD — the offline half of the "
         f"tokenizer train/serve split: runs the {BPE_ROUNDS}-round "
@@ -1273,19 +1225,7 @@ def bpe_encode_from_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = spark.read.parquet(os.path.join(d, "vocab.parquet"))
     ids = spark.read.parquet(os.path.join(d, "token_ids.parquet"))
 
-    doc = load_table(spark, sf_dir, "documents")
-    dw = (
-        doc.select(
-            "doc_id",
-            F.posexplode(F.split("text", " ")).alias("word_pos", "word"),
-        )
-        .where(F.col("word") != "")
-    )
-    enc = dw.join(v, "word").select(
-        "doc_id",
-        "word_pos",
-        F.posexplode("toks").alias("tok_idx", "token"),
-    )
+    enc = encode_words(load_table(spark, sf_dir, "documents"), v)
     # bounded: BPE token set = alphabet + BPE_ROUNDS merge tokens
     return enc.join(F.broadcast(ids), "token").select(
         "doc_id", "word_pos", "tok_idx", "token", "token_id"
@@ -1326,14 +1266,8 @@ def _packt_class_col() -> F.Column:
 
 @register(
     "pack_best_fit_bpe_tokens",
-    oracle=bpe_rounds_cte() + f""",
-    dw AS (
-        SELECT sp.doc_id, sp.s[s.i + 1] AS word
-        FROM (SELECT doc_id, string_split(text, ' ') AS s
-              FROM documents) sp,
-             LATERAL (SELECT unnest(range(len(sp.s))) AS i) s
-        WHERE sp.s[s.i + 1] != ''
-    ),
+    oracle=f"""
+    WITH {WORD_COUNTS_SQL},{bpe_rounds_cte()},{DOC_WORDS_SQL},
     tc AS (
         SELECT dw.doc_id,
                CAST(SUM(len(v.toks)) AS BIGINT) AS n_toks
@@ -1650,11 +1584,7 @@ def bpe_detokenize_roundtrip(
     v = spark.read.parquet(os.path.join(d, "vocab.parquet")).select(
         "word", "toks"
     )
-    doc = load_table(spark, sf_dir, "documents")
-    dw = doc.select(
-        "doc_id",
-        F.posexplode(F.split("text", " ")).alias("word_pos", "word"),
-    ).where(F.col("word") != "")
+    dw = doc_words(load_table(spark, sf_dir, "documents"))
     # Decode each word straight off its vocabulary token array:
     # array_join(toks, '') IS the sorted-by-tok_idx concatenation the
     # old path rebuilt by posexploding to token rows, broadcast-joining
@@ -1749,13 +1679,13 @@ def pack_emit_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     + wp_vocab_ctes().strip()
     + """
     SELECT dw.doc_id, dw.word_pos, w.tok_idx, w.token
-    FROM wpdw dw JOIN wpwalk w USING (word)
+    FROM dw JOIN wpwalk w USING (word)
     """,
     doc=f"WORDPIECE-STYLE MAXMATCH ENCODE — the second subword family "
         f"next to BPE (Wu et al. 2016; the greedy longest-match-first "
         f"inference HuggingFace's WordPiece executes): vocabulary = "
         f"every character (totality) ∪ substrings up to length "
-        f"{WP_MAXLEN} clearing a proportional admission threshold "
+        f"{MAX_PIECE} clearing a proportional admission threshold "
         f"({WP_PERMILLE} permille of word instances, integer "
         f"cross-multiplied — scale-invariant, float-free); per-word "
         f"segmentation = a greedy fold over positions consuming the "
@@ -1771,42 +1701,22 @@ def pack_emit_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wordpiece_maxmatch_encode(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    wt = wp_word_toks(spark, sf_dir)
-    d = load_table(spark, sf_dir, "documents")
-    dw = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.split("text", " ")).alias("word_pos", "word"),
-        )
-        .where(F.col("word") != "")
-    )
-    return dw.join(wt, "word").select(
-        "doc_id",
-        "word_pos",
-        F.posexplode("toks").alias("tok_idx", "token"),
+    return encode_words(
+        load_table(spark, sf_dir, "documents"), wp_word_toks(spark, sf_dir)
     )
 
 
 
 @register(
     "tokenizer_family_fertility_compare",
-    oracle=bpe_rounds_cte().replace("WITH", "WITH RECURSIVE", 1) + ","
-    + wp_vocab_ctes().strip().rstrip() + ","
-    + unigram_ctes().strip().rstrip() + f""",
+    oracle=f"""
+    WITH RECURSIVE {wp_vocab_ctes()},{bpe_rounds_cte()},{unigram_ctes()},
     wp_stream AS (
         SELECT dw.doc_id, w.tok_idx
-        FROM wpdw dw JOIN wpwalk w USING (word)
+        FROM dw JOIN wpwalk w USING (word)
     ),
-    bpe_stream AS (
-        SELECT dw.doc_id, CAST(t.j AS INT) AS tok_idx
-        FROM wpdw dw JOIN v{BPE_ROUNDS} v USING (word),
-             LATERAL (SELECT unnest(range(len(v.toks))) AS j) t
-    ),
-    uni_stream AS (
-        SELECT dw.doc_id, CAST(t.j AS INT) AS tok_idx
-        FROM wpdw dw JOIN utoks v USING (word),
-             LATERAL (SELECT unnest(range(len(v.toks))) AS j) t
-    ),
+    bpe_stream AS ({encode_sql(f"v{BPE_ROUNDS}")}),
+    uni_stream AS ({encode_sql("utoks")}),
     summ AS (
         SELECT 'wordpiece' AS tokenizer, d.lang,
                CAST(COUNT(*) FILTER (s.tok_idx = 0) AS BIGINT) AS n_words,
@@ -1859,13 +1769,7 @@ def tokenizer_family_fertility_compare(
     # (n_words = sum(n), n_tokens = sum(n * |toks(word)|)), identical
     # to counting the encoded token streams the oracle counts, because
     # both are sums over word occurrences grouped by lang.
-    wl = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("lang", "word")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(persist_once)
-    )
+    wl = word_counts(docs, "lang").transform(persist_once)
     words, _chars, _freq, _tot = wp_tables(spark, sf_dir)
     wp_toks = wp_word_toks(spark, sf_dir)
     bd = ensure_bpe_vocab(spark, sf_dir)
@@ -1927,7 +1831,7 @@ def _wp_curve_oracle() -> str:
                    AS vocab_size,
                CAST(SUM(c.n) AS BIGINT) AS n_words,
                CAST(SUM(c.n * tc.k) AS BIGINT) AS n_tokens
-        FROM wpc c JOIN (
+        FROM wc c JOIN (
             SELECT word, COUNT(*) AS k FROM wpwalk{sfx} GROUP BY word
         ) tc USING (word)""")
     return (
@@ -1996,22 +1900,12 @@ def wordpiece_threshold_sensitivity(
         )
         .transform(persist_once)  # Heaps-bounded; probed by 3 jump joins
     )
-    wp = words.select(
-        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
+    j = piece_lattice(
+        words,
+        adm,
+        (4, 3, 2),
+        lambda l: [F.col(f"ok_{pm}").alias(f"ok{l}_{pm}") for pm in pms],
     )
-    j = wp
-    for l in (4, 3, 2):
-        v = adm.select(
-            F.col("token").alias(f"tok{l}"),
-            *[F.col(f"ok_{pm}").alias(f"ok{l}_{pm}") for pm in pms],
-        )
-        j = j.join(
-            # bounded: admission floor caps the superset vocab
-            F.broadcast(v),
-            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
-            & (F.col("pos") + l - 1 <= F.length("word")),
-            "left",
-        )
     jump_cols = []
     for pm in pms:
         jump_cols.append(
@@ -2188,12 +2082,7 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     + wp_base_ctes().strip()
     + ","
     + unigram_ctes().strip()
-    + """
-    SELECT dw.doc_id, dw.word_pos, CAST(t.j AS INT) AS tok_idx,
-           v.toks[t.j + 1] AS token
-    FROM wpdw dw JOIN utoks v USING (word),
-         LATERAL (SELECT unnest(range(len(v.toks))) AS j) t
-    """,
+    + encode_sql("utoks"),
     doc=f"UNIGRAM-LM VITERBI ENCODE — the third subword family "
         f"(SentencePiece's unigram model, Kudo 1804.10959): segment "
         f"every word into the token sequence of MINIMUM total cost "
@@ -2213,7 +2102,7 @@ def unigram_train_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"persisted artifact (ensure_unigram_vocab — built iff "
         f"absent/stale, the bpe_encode_from_vocab pattern), so the "
         f"encode plan embeds ZERO trainer stages: one fold over the "
-        f"Heaps-bounded word table ({UNI_MAXLEN} broadcast cost "
+        f"Heaps-bounded word table ({MAX_PIECE} broadcast cost "
         f"joins), one corpus scan joined to word->toks — the "
         f"bpe_encode_corpus shape. Oracle replays the full EM chain: "
         f"the parquet round-trip must be semantics-preserving.",
@@ -2227,19 +2116,7 @@ def unigram_viterbi_encode(
         "token", "c"
     )
     wt = uni_viterbi_toks(words, cost)
-    d = load_table(spark, sf_dir, "documents")
-    dw = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.split("text", " ")).alias("word_pos", "word"),
-        )
-        .where(F.col("word") != "")
-    )
-    return dw.join(wt, "word").select(
-        "doc_id",
-        "word_pos",
-        F.posexplode("toks").alias("tok_idx", "token"),
-    )
+    return encode_words(load_table(spark, sf_dir, "documents"), wt)
 
 
 # ---------------------------------------------------------------------------
@@ -2276,7 +2153,7 @@ def _uni_soft_ctes() -> str:
         SELECT word, 0 AS j, CAST(1.0 AS DOUBLE) AS a0,
                CAST(NULL AS DOUBLE) AS a1, CAST(NULL AS DOUBLE) AS a2,
                CAST(NULL AS DOUBLE) AS a3
-        FROM wpc
+        FROM wc
         UNION ALL
         SELECT r.word, r.j + 1,
                COALESCE(p1.p * r.a0, 0)
@@ -2298,7 +2175,7 @@ def _uni_soft_ctes() -> str:
         SELECT word, length(word) AS j, CAST(1.0 AS DOUBLE) AS b0,
                CAST(NULL AS DOUBLE) AS b1, CAST(NULL AS DOUBLE) AS b2,
                CAST(NULL AS DOUBLE) AS b3
-        FROM wpc
+        FROM wc
         UNION ALL
         SELECT r.word, r.j - 1,
                COALESCE(p1.p * r.b0, 0)
@@ -2319,7 +2196,7 @@ def _uni_soft_ctes() -> str:
     uocc AS MATERIALIZED (
         SELECT w.word, w.n, CAST(s.s AS INT) AS s, l.l,
                substring(w.word, CAST(s.s AS INT), l.l) AS token
-        FROM wpc w,
+        FROM wc w,
              (VALUES (1), (2), (3), (4)) l(l),
              LATERAL (
                  SELECT unnest(range(1, length(w.word) - l.l + 2)) AS s
@@ -2396,21 +2273,12 @@ def unigram_em_expected_counts(
     # Per-(word, start-pos) piece probabilities p1..p4, collected into
     # a position-ordered array — the probability twin of the Viterbi
     # cost lattice.
-    wp = words.select(
-        "word", F.explode(F.expr("sequence(1, length(word))")).alias("pos")
+    j = piece_lattice(
+        words,
+        prob,
+        range(1, MAX_PIECE + 1),
+        lambda l: [F.col("p").alias(f"p{l}")],
     )
-    j = wp
-    for l in range(1, UNI_MAXLEN + 1):
-        v = prob.select(
-            F.col("token").alias(f"tok{l}"), F.col("p").alias(f"p{l}")
-        )
-        j = j.join(
-            # bounded: unigram vocab = alphabet + top UNI_EM_TOPK pieces
-            F.broadcast(v),
-            (F.expr(f"substring(word, pos, {l})") == F.col(f"tok{l}"))
-            & (F.col("pos") + l - 1 <= F.length("word")),
-            "left",
-        )
     lat = j.groupBy("word").agg(
         F.expr(
             "transform(array_sort(collect_list("
@@ -2462,7 +2330,7 @@ def unigram_em_expected_counts(
     )
 
     occ = None
-    for l in range(1, UNI_MAXLEN + 1):
+    for l in range(1, MAX_PIECE + 1):
         s = (
             words.where(F.length("word") >= l)
             .select(

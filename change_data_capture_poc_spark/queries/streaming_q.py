@@ -55,6 +55,11 @@ from change_data_capture_poc_spark.operators.sketch import (
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.functions.hints import vocab_broadcast
 from change_data_capture_poc_spark.sources.tables import read_events_raw
+from change_data_capture_poc_spark.operators.topk import (
+    WPS_K,
+    WPS_ORACLE,
+    wps_scored,
+)
 from change_data_capture_poc_spark.operators.minhash import (
     BAND_CTES_SQL,
     NGRAM_SQL,
@@ -1227,26 +1232,9 @@ def streaming_bloom_bitset_drain(
     return bloom_readout(te, tr, bits)
 
 
-def _wps_oracle() -> str:
-    from change_data_capture_poc_spark.operators.topk import (
-        WPS_K,
-        wps_pri_sql,
-    )
-
-    return f"""
-    WITH d AS (SELECT source, doc_id, n_chars FROM documents),
-    {wps_pri_sql('d')}
-    SELECT source, doc_id, n_chars, priority
-    FROM wps_p
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY source
-                               ORDER BY priority DESC, doc_id)
-            <= {WPS_K}
-    """
-
-
 @register(
     "streaming_weighted_reservoir_drain",
-    oracle=_wps_oracle(),
+    oracle=WPS_ORACLE,
     doc="STREAMING weighted reservoir sampling — "
         "corpus_weighted_priority_sample's stream twin and the "
         "textbook A-Res use case (Efraimidis & Spirakis designed the "
@@ -1264,10 +1252,6 @@ def _wps_oracle() -> str:
 def streaming_weighted_reservoir_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.operators.topk import (
-        WPS_K,
-        wps_priority,
-    )
     from change_data_capture_poc_spark.streaming.stateful import (
         weighted_reservoir,
     )
@@ -1276,9 +1260,7 @@ def streaming_weighted_reservoir_drain(
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
     )
-    scored = stream.where(F.col("n_chars") > 0).select(
-        "source", "doc_id", "n_chars", wps_priority().alias("priority")
-    )
+    scored = wps_scored(stream)
     from pyspark.sql import Window
 
     out = weighted_reservoir(scored, WPS_K)

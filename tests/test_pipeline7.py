@@ -377,15 +377,26 @@ def test_triangle_count_matches_python_reference(spark, sf_dir):
     assert out.n_triangles <= out.n_wedges
 
 
-def test_weighted_priority_sample_matches_model(spark, sf_dir):
+def test_weighted_priority_sample_matches_model(spark, sf_dir, tmp_path):
     """Per-source samples equal the A-Res top-k of a driver-side
-    float64 recompute (deterministic u from the same md5 prefix)."""
+    float64 recompute (deterministic u from the same md5 prefix). The
+    corpus gains one zero-length doc, which has no priority and must
+    never be sampled."""
     from change_data_capture_poc_spark.operators.topk import (
         WPS_K,
         WPS_U_DEN,
     )
     import hashlib
 
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    empty = docs.limit(1).withColumns(
+        {
+            c: F.lit(v).cast(docs.schema[c].dataType)
+            for c, v in {"doc_id": 10**9, "text": "", "n_chars": 0}.items()
+        }
+    )
+    docs.unionByName(empty).write.parquet(str(tmp_path / "documents.parquet"))
+    sf_dir = str(tmp_path)
     rows = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("source", "doc_id", "n_chars")

@@ -80,6 +80,18 @@ def test_bpe_encode_roundtrip_vs_pure_python(spark, tmp_path):
     spark.catalog.clearCache()
     assert got == expected
 
+    # The shared doc -> word stream itself: every encoder inner-joins
+    # it to a word table, which would hide an empty word it let through.
+    from change_data_capture_poc_spark.operators.subword import doc_words
+
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    assert {tuple(r) for r in doc_words(docs).collect()} == {
+        (doc_id, word_pos, w)
+        for doc_id, t in texts
+        for word_pos, w in enumerate(t.split(" "))
+        if w
+    }
+
 
 def test_ann_serve_reads_only_index_tables(spark, sf_dir):
     """The production split's contract: after the offline build, the
@@ -521,7 +533,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
     word never below 1 (every word emits at least one piece)."""
     import os
 
-    from change_data_capture_poc_spark.operators.subword import UNI_MAXLEN
+    from change_data_capture_poc_spark.operators.subword import MAX_PIECE
     from change_data_capture_poc_spark.queries.pipeline9_q import (
         ensure_unigram_vocab,
         unigram_em_expected_counts,
@@ -552,7 +564,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
         for j in range(1, L + 1):
             a[j] = sum(
                 p[w[j - l: j]] * a[j - l]
-                for l in range(1, min(UNI_MAXLEN, j) + 1)
+                for l in range(1, min(MAX_PIECE, j) + 1)
                 if w[j - l: j] in p
             )
         b = [0.0] * (L + 1)
@@ -560,7 +572,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
         for j in range(L - 1, -1, -1):
             b[j] = sum(
                 p[w[j: j + l]] * b[j + l]
-                for l in range(1, min(UNI_MAXLEN, L - j) + 1)
+                for l in range(1, min(MAX_PIECE, L - j) + 1)
                 if w[j: j + l] in p
             )
         return a, b
@@ -570,7 +582,7 @@ def test_unigram_soft_em_expected_counts_vs_pure_python(spark, sf_dir):
         a, b = fb(w)
         L = len(w)
         for s in range(L):
-            for l in range(1, min(UNI_MAXLEN, L - s) + 1):
+            for l in range(1, min(MAX_PIECE, L - s) + 1):
                 tok = w[s: s + l]
                 if tok in p:
                     ref[tok] = (
@@ -807,7 +819,7 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
     straightforward Python greedy longest-match over the same
     vocabulary rule."""
     from change_data_capture_poc_spark.operators.subword import (
-        WP_MAXLEN,
+        MAX_PIECE,
         WP_PERMILLE,
         wp_word_toks,
     )
@@ -830,7 +842,7 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
     for w, n in words.items():
         for i in range(len(w)):
             vocab.add(w[i])  # chars always admitted
-        for l in range(2, WP_MAXLEN + 1):
+        for l in range(2, MAX_PIECE + 1):
             for i in range(len(w) - l + 1):
                 t = w[i : i + l]
                 freq[t] = freq.get(t, 0) + n
@@ -839,7 +851,7 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
     def maxmatch(w: str) -> list[str]:
         out, i = [], 0
         while i < len(w):
-            for l in range(WP_MAXLEN, 0, -1):
+            for l in range(MAX_PIECE, 0, -1):
                 if i + l <= len(w) and w[i : i + l] in vocab:
                     out.append(w[i : i + l])
                     i += l
@@ -944,9 +956,9 @@ def test_unigram_em_train_vs_pure_python_reference(spark, sf_dir):
     segmentation brute-force under the identical total order — both
     the trained vocab/costs and the final segmentations."""
     from change_data_capture_poc_spark.operators.subword import (
+        MAX_PIECE,
         UNI_EM_ROUNDS,
         UNI_EM_TOPK,
-        UNI_MAXLEN,
         uni_em_state,
         uni_viterbi_toks,
         wp_tables,
@@ -964,7 +976,7 @@ def test_unigram_em_train_vs_pure_python_reference(spark, sf_dir):
     }
 
     ref_vocab, ref_cost, ref_best = _py_unigram_em(
-        words, UNI_MAXLEN, UNI_EM_ROUNDS, UNI_EM_TOPK
+        words, MAX_PIECE, UNI_EM_ROUNDS, UNI_EM_TOPK
     )
 
     vocab, cost = uni_em_state(spark, sf_dir)
