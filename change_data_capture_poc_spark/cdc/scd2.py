@@ -41,6 +41,9 @@ from pyspark.sql import functions as F
 SCD2_SENTINEL = "9999-01-01 00:00:00"
 MERGE_SENTINEL = "9999-12-31 23:59:59"
 
+# Default attribute columns of a version row: the product image.
+PRODUCT_ATTRS = ["name", "description", "price"]
+
 
 def scd2_recompute(cdc_events: DataFrame,
                    attr_fields: list[str] | None = None) -> DataFrame:
@@ -56,7 +59,7 @@ def scd2_recompute(cdc_events: DataFrame,
     its version row carries NULL attributes and stays open — required
     for parity (SURVEY.md T3).
     """
-    attr_fields = attr_fields or ["name", "description", "price"]
+    attr_fields = attr_fields or PRODUCT_ATTRS
     w = Window.partitionBy("id").orderBy("log_seq_num")
 
     ranked = (

@@ -11,8 +11,9 @@ query mid-stream and restart it from the same checkpoint:
 
 The SCD2 materializer additionally exercises foreachBatch replay: a
 crash between the log write and the offset commit re-runs the whole
-batch, so the (batch_id, bucket)-partitioned dynamic-overwrite log
-write must absorb the replay instead of appending duplicates.
+batch, so the log write, which overwrites the batch's own
+``batch_id=<id>`` directory, must absorb the replay instead of
+appending duplicates, and the table must end equal to the recompute.
 """
 
 from __future__ import annotations

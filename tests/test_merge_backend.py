@@ -1,9 +1,12 @@
 """Merge backend of the SCD2 stream (streaming/scd2_stream.py) — the
 contract that keeps the stream exactly-once replayable: replace exactly
 the partitions present in the applied rows, leave the rest untouched,
-and be idempotent under re-apply. Tombstone rows (delete after-images
-with NULL attributes — SURVEY.md T3, init_duckdb.sh:56-68 parity) must
-survive both."""
+and be idempotent under re-apply. The stream applies its table rows
+partitioned by ``part`` (``c<bucket>`` for the current snapshot,
+``h<batch_id>`` for closed history); the contract is the same for any
+partition column. Tombstone rows (delete after-images with NULL
+attributes — SURVEY.md T3, init_duckdb.sh:56-68 parity) must survive
+both."""
 
 from __future__ import annotations
 

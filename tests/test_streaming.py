@@ -4,8 +4,9 @@
   the landed rows (T1, checkpointed).
 - incremental SCD2: multi-batch foreachBatch materialization converges
   to the single-shot batch recompute (streaming ↔ batch equivalence);
-  one micro-batch runs at most three Spark jobs, and replayed, empty
-  and op-less batches leave the table equal to the recompute.
+  one micro-batch runs at most three Spark jobs and reads no older log
+  batch, and replayed, empty and op-less batches leave the table equal
+  to the recompute.
 - session_window on static data matches the lag/cumsum sessionize
   operator.
 """
@@ -573,9 +574,10 @@ def _scd2_matches_recompute(inc, df):
 
 def test_incremental_scd2_batch_job_budget(spark, tmp_path):
     """One micro-batch of the incremental merge runs at most three Spark
-    jobs — log write, recompute, table write. The touched-bucket lookup
-    is a driver-side listing and the log read uses the known schema, so
-    neither adds a job (a distinct() over the log or a parquet schema
+    jobs — the log write, then the table write's shuffle and write
+    stages. The touched buckets come from an Observation on the log
+    write, and the current-snapshot and log reads use the known schema,
+    so neither adds a job (a distinct() over the log or a parquet schema
     inference would)."""
     from change_data_capture_poc_spark.streaming import IncrementalScd2
 
@@ -592,6 +594,26 @@ def test_incremental_scd2_batch_job_budget(spark, tmp_path):
             assert len(jobs) <= 3, (batch_id, sorted(jobs))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _scd2_matches_recompute(inc, df)
+
+
+def test_incremental_scd2_in_order_batch_reads_no_older_log(spark, tmp_path):
+    """An in-order micro-batch reads its own events and the current rows
+    of the buckets it touches, never an older log batch: with batch 0's
+    log directory gone, batch 2 still brings the table to the recompute
+    over every source event."""
+    import shutil
+
+    from change_data_capture_poc_spark.streaming import IncrementalScd2
+
+    df = CdcGenerator(seed=19).products_df(spark, num_records=90)
+    log_p = str(tmp_path / "log")
+    inc = IncrementalScd2(spark, log_p, str(tmp_path / "scd2"), n_buckets=4)
+    b0, b1, b2 = _split_envelopes(spark, df, 3)
+    inc.process_batch(b0, 0)
+    inc.process_batch(b1, 1)
+    shutil.rmtree(os.path.join(log_p, "batch_id=0"))
+    inc.process_batch(b2, 2)
     assert _scd2_matches_recompute(inc, df)
 
 
