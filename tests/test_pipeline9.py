@@ -813,16 +813,11 @@ def test_pack_emit_manifest_invariants(spark, sf_dir):
     assert n_distinct == n_assigned
 
 
-def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
-    """The engine's relational MaxMatch (vocab admission -> jumps ->
-    greedy fold) must segment every distinct word exactly like a
-    straightforward Python greedy longest-match over the same
-    vocabulary rule."""
-    from change_data_capture_poc_spark.operators.subword import (
-        MAX_PIECE,
-        WP_PERMILLE,
-        wp_word_toks,
-    )
+def _wordpiece_model(spark, sf_dir, permille):
+    """(word counts, greedy longest-match in Python) under the engine's
+    vocabulary rule: every character, plus each 2..MAX_PIECE substring
+    whose occurrence-weighted frequency reaches ``permille``."""
+    from change_data_capture_poc_spark.operators.subword import MAX_PIECE
     from change_data_capture_poc_spark.sources.tables import load_table
 
     words = {}
@@ -846,7 +841,7 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
             for i in range(len(w) - l + 1):
                 t = w[i : i + l]
                 freq[t] = freq.get(t, 0) + n
-    vocab |= {t for t, f in freq.items() if f * 1000 >= total * WP_PERMILLE}
+    vocab |= {t for t, f in freq.items() if f * 1000 >= total * permille}
 
     def maxmatch(w: str) -> list[str]:
         out, i = [], 0
@@ -858,6 +853,20 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
                     break
         return out
 
+    return words, maxmatch
+
+
+def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
+    """The engine's relational MaxMatch (vocab admission -> jumps ->
+    greedy fold) must segment every distinct word exactly like a
+    straightforward Python greedy longest-match over the same
+    vocabulary rule."""
+    from change_data_capture_poc_spark.operators.subword import (
+        WP_PERMILLE,
+        wp_word_toks,
+    )
+
+    words, maxmatch = _wordpiece_model(spark, sf_dir, WP_PERMILLE)
     engine = {
         r["word"]: list(r["toks"])
         for r in wp_word_toks(spark, sf_dir).collect()
@@ -866,6 +875,34 @@ def test_wordpiece_maxmatch_vs_pure_python(spark, sf_dir):
     for w in words:
         assert engine[w] == maxmatch(w), w
         assert "".join(engine[w]) == w  # segmentation partitions the word
+
+
+def test_wordpiece_maxmatch_4char_jump_vs_pure_python(spark, sf_dir):
+    """The same comparison at 20 permille, the loosest point of
+    wordpiece_threshold_sensitivity: the default threshold admits no
+    4-character piece, this one does, so the 4-character jump is taken
+    and checked against the Python greedy model."""
+    from change_data_capture_poc_spark.operators.subword import (
+        wp_tables,
+        wp_toks_for,
+        wp_vocab_for,
+    )
+
+    permille = 20
+    words, maxmatch = _wordpiece_model(spark, sf_dir, permille)
+    w_df, chars, freq, tot = wp_tables(spark, sf_dir)
+    engine = {
+        r["word"]: list(r["toks"])
+        for r in wp_toks_for(
+            w_df, wp_vocab_for(chars, freq, tot, permille)
+        ).collect()
+    }
+    assert set(engine) == set(words)
+    # 4 = the longest jump wp_toks_for probes.
+    assert any(len(t) == 4 for toks in engine.values() for t in toks)
+    for w in words:
+        assert engine[w] == maxmatch(w), w
+        assert "".join(engine[w]) == w
 
 
 def test_wordpiece_threshold_curve_monotone(spark, sf_dir):
