@@ -172,12 +172,15 @@ def bpe_rounds_cte() -> str:
     """Oracle CTEs over ``wc``: char-split v0 and the unrolled training
     rounds pc{r}/b{r}/…/v{r}. Reused by the trainer oracle (final
     select = the merge table), the encode oracles (the token stream
-    off v{R}) and the family bake-off."""
+    off v{R}) and the family bake-off. Every CTE is pinned AS
+    MATERIALIZED, as in the unigram chain: each round reads v{r-1}
+    three times, and DuckDB re-evaluating the chain per reference made
+    the encode oracles take 8-17 s (0.3-2.5 s pinned, same rows)."""
     rounds = []
     for r in range(1, BPE_ROUNDS + 1):
         p = r - 1
         rounds.append(f"""
-    pc{r} AS (
+    pc{r} AS MATERIALIZED (
         SELECT v.toks[s.i + 1] AS l, v.toks[s.i + 2] AS r2,
                SUM(v.n) AS cnt
         FROM v{p} v, LATERAL (
@@ -186,9 +189,9 @@ def bpe_rounds_cte() -> str:
         WHERE len(v.toks) >= 2
         GROUP BY 1, 2
     ),
-    b{r} AS (SELECT l, r2, CAST(cnt AS BIGINT) AS cnt FROM pc{r}
+    b{r} AS MATERIALIZED (SELECT l, r2, CAST(cnt AS BIGINT) AS cnt FROM pc{r}
              ORDER BY cnt DESC, l, r2 LIMIT 1),
-    mpos{r} AS (
+    mpos{r} AS MATERIALIZED (
         SELECT v.word, s.i AS pos
         FROM v{p} v, LATERAL (
             SELECT unnest(range(len(v.toks) - 1)) AS i
@@ -196,25 +199,25 @@ def bpe_rounds_cte() -> str:
         WHERE len(v.toks) >= 2
           AND v.toks[s.i + 1] = b.l AND v.toks[s.i + 2] = b.r2
     ),
-    isl{r} AS (
+    isl{r} AS MATERIALIZED (
         SELECT word, pos,
                pos - ROW_NUMBER() OVER (
                    PARTITION BY word ORDER BY pos) AS grp
         FROM mpos{r}
     ),
-    sel{r} AS (
+    sel{r} AS MATERIALIZED (
         SELECT word, pos,
                (pos - MIN(pos) OVER (PARTITION BY word, grp)) % 2 = 0
                    AS keep
         FROM isl{r}
     ),
-    pos{r} AS (
+    pos{r} AS MATERIALIZED (
         SELECT v.word, v.n, s.i AS pos, v.toks[s.i + 1] AS sym
         FROM v{p} v, LATERAL (
             SELECT unnest(range(len(v.toks))) AS i
         ) s
     ),
-    v{r} AS (
+    v{r} AS MATERIALIZED (
         SELECT word, ANY_VALUE(n) AS n,
                list(CASE WHEN m.keep THEN p.sym || (SELECT r2 FROM b{r})
                          ELSE p.sym END ORDER BY p.pos) AS toks
@@ -227,7 +230,7 @@ def bpe_rounds_cte() -> str:
         GROUP BY word
     )""")
     return f"""
-    v0 AS (
+    v0 AS MATERIALIZED (
         SELECT word, n,
                string_split(rtrim(regexp_replace(word, '(.)', '\\1 ',
                                                  'g')), ' ') AS toks
