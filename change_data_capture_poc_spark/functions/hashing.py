@@ -30,6 +30,15 @@ def md5_mod(col: Column, mod: int) -> Column:
     return md5_prefix(col) % mod
 
 
+def md5_prefix_sql(x: str, engine: str) -> str:
+    """``md5_prefix`` of the SQL string expression ``x`` as an
+    engine-specific SQL string (``engine`` is ``"spark"`` or
+    ``"duck"``), for folds and oracles written as SQL text."""
+    if engine == "spark":
+        return f"CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+    return f"('0x' || substring(md5({x}), 1, 8))::BIGINT"
+
+
 def md5_bucket_sql(salt: str, key: str, mod: int, engine: str) -> str:
     """Salted md5-prefix bucket ``md5(salt || key)`` mod ``mod`` as an
     engine-specific SQL string. ``salt`` is an SQL string expression

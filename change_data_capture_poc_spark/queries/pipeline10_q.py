@@ -45,7 +45,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.artifacts import persisted
-from change_data_capture_poc_spark.functions.hashing import md5_mod, md5_prefix
+from change_data_capture_poc_spark.functions.hashing import (
+    md5_mod,
+    md5_prefix,
+    md5_prefix_sql,
+)
 from change_data_capture_poc_spark.functions.text import BM25_SCORED_SQL
 from change_data_capture_poc_spark.functions.vectors import JL
 from change_data_capture_poc_spark.functions.windows import global_window
@@ -53,14 +57,6 @@ from change_data_capture_poc_spark.operators.topk import grouped_topk
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.queries.datapipe import text_bm25_retrieval
-
-
-_MD5_SQL = "('0x' || substring(md5({x}), 1, 8))::BIGINT"
-# The same hash as a Spark-SQL string (for expr()-built folds) — keep
-# in lockstep with functions/hashing.md5_prefix and _MD5_SQL: all
-# three MUST agree or content-defined boundaries drift between
-# paths/engines.
-_MD5_SPARK_SQL = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +67,7 @@ _CDC_MASK = 8  # expected chunk length in words (cut when hash % 8 == 0)
 
 
 def _cdc_chunk_ctes() -> str:
-    cut = _MD5_SQL.format(x="word")
+    cut = md5_prefix_sql("word", "duck")
     return f"""
     tok AS (
         SELECT sp.doc_id, sp.source, CAST(s.i AS INT) AS word_pos,
@@ -113,7 +109,7 @@ def _cdc_chunk_fold_expr() -> str:
     is O(n log n) and parallel WITHIN a document. The fold is also
     what the streaming twin runs: stateless, so it works unchanged
     under readStream."""
-    cut = _MD5_SPARK_SQL.format(x="w") + f" % {_CDC_MASK} = 0"
+    cut = md5_prefix_sql("w", "spark") + f" % {_CDC_MASK} = 0"
     empty = "CAST(array() AS ARRAY<STRING>)"
     return f"""
         aggregate(
@@ -649,13 +645,13 @@ _SHUF_SHARDS = 8
                     AS epoch),
     k AS (
         SELECT d.doc_id, ep.epoch,
-               CAST({_MD5_SQL.format(
-                   x="CAST(ep.epoch AS VARCHAR) || ':' "
-                     "|| CAST(d.doc_id AS VARCHAR)")}
+               CAST({md5_prefix_sql(
+                   "CAST(ep.epoch AS VARCHAR) || ':' "
+                   "|| CAST(d.doc_id AS VARCHAR)", "duck")}
                     % {_SHUF_SHARDS} AS INT) AS shard,
-               {_MD5_SQL.format(
-                   x="CAST(ep.epoch AS VARCHAR) || '#' "
-                     "|| CAST(d.doc_id AS VARCHAR)")} AS pkey
+               {md5_prefix_sql(
+                   "CAST(ep.epoch AS VARCHAR) || '#' "
+                   "|| CAST(d.doc_id AS VARCHAR)", "duck")} AS pkey
         FROM documents d, ep
     )
     SELECT epoch, shard,
