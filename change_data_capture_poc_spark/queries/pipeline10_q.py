@@ -53,118 +53,20 @@ from change_data_capture_poc_spark.functions.hashing import (
 from change_data_capture_poc_spark.functions.text import BM25_SCORED_SQL
 from change_data_capture_poc_spark.functions.vectors import JL
 from change_data_capture_poc_spark.functions.windows import global_window
+from change_data_capture_poc_spark.operators.chunking import (
+    cdc_chunk_ctes,
+    cdc_chunks,
+)
 from change_data_capture_poc_spark.operators.topk import grouped_topk
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.queries.datapipe import text_bm25_retrieval
 
 
-# ---------------------------------------------------------------------------
-# content-defined chunking
-# ---------------------------------------------------------------------------
-
-_CDC_MASK = 8  # expected chunk length in words (cut when hash % 8 == 0)
-
-
-def _cdc_chunk_ctes() -> str:
-    cut = md5_prefix_sql("word", "duck")
-    return f"""
-    tok AS (
-        SELECT sp.doc_id, sp.source, CAST(s.i AS INT) AS word_pos,
-               sp.s[s.i + 1] AS word
-        FROM (SELECT doc_id, source, string_split(text, ' ') AS s
-              FROM documents) sp,
-             LATERAL (SELECT unnest(range(len(sp.s))) AS i) s
-        WHERE sp.s[s.i + 1] != ''
-    ),
-    cid AS (
-        SELECT doc_id, source, word_pos, word,
-               CAST(COALESCE(SUM(CASE WHEN {cut} % {_CDC_MASK} = 0
-                                      THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY doc_id ORDER BY word_pos
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING), 0) AS INT) AS chunk_idx
-        FROM tok
-    ),
-    chunks AS (
-        SELECT doc_id, MIN(source) AS source, chunk_idx,
-               CAST(COUNT(*) AS BIGINT) AS n_words,
-               md5(string_agg(word, ' ' ORDER BY word_pos)) AS chunk_fp
-        FROM cid GROUP BY doc_id, chunk_idx
-    )
-    """
-
-
-def _cdc_chunk_fold_expr() -> str:
-    """SQL fold producing the chunk-text array for one document —
-    MAP-ONLY (no explode, no window, no per-doc shuffle): each
-    document's words already live in its own row, so the running
-    cut-count the oracle states as a window is a left fold. Cost note:
-    array_append copies the growing chunk accumulator, so a c-chunk
-    document pays ~c^2/2 pointer copies inside its task — measured
-    fastest at every tested SF (a slice-per-chunk rewrite was 80x
-    SLOWER: interpreted HOFs re-evaluate referenced sub-expressions
-    per element), but for book-length documents (100k+ chunks) the
-    right plan is the oracle's explode + per-doc-window form, which
-    is O(n log n) and parallel WITHIN a document. The fold is also
-    what the streaming twin runs: stateless, so it works unchanged
-    under readStream."""
-    cut = md5_prefix_sql("w", "spark") + f" % {_CDC_MASK} = 0"
-    empty = "CAST(array() AS ARRAY<STRING>)"
-    return f"""
-        aggregate(
-            filter(split(text, ' '), x -> x != ''),
-            named_struct('chunks', {empty}, 'cur', {empty}),
-            (acc, w) -> IF({cut},
-                named_struct(
-                    'chunks',
-                    array_append(acc.chunks,
-                                 array_join(array_append(acc.cur, w), ' ')),
-                    'cur', {empty}),
-                named_struct('chunks', acc.chunks,
-                             'cur', array_append(acc.cur, w))),
-            acc -> IF(size(acc.cur) > 0,
-                      array_append(acc.chunks, array_join(acc.cur, ' ')),
-                      acc.chunks))
-    """
-
-
-def _cdc_chunks_from(d: DataFrame) -> DataFrame:
-    """Chunk table from a (doc_id, source, text) frame — batch or
-    streaming; the plan is map-only either way (see
-    _cdc_chunk_fold_expr; total on empty/whitespace-only documents:
-    the fold over an empty word array yields an empty chunk array and
-    posexplode emits no rows)."""
-    return d.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.expr(_cdc_chunk_fold_expr())).alias(
-            "chunk_idx", "chunk_text"
-        ),
-    ).select(
-        "doc_id",
-        "source",
-        "chunk_idx",
-        F.size(F.split("chunk_text", " ")).cast("long").alias("n_words"),
-        F.md5("chunk_text").alias("chunk_fp"),
-    )
-
-
-def _cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, source, chunk_idx, n_words, chunk_fp) — shared by the
-    chunk queries and the dedup reports (source rides along, so the
-    reports never join back to the corpus)."""
-    return _cdc_chunks_from(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-    )
-
-
 @register(
     "chunk_content_defined",
     oracle="WITH "
-    + _cdc_chunk_ctes().strip()
+    + cdc_chunk_ctes().strip()
     + """
     SELECT doc_id, chunk_idx, n_words, chunk_fp FROM chunks
     """,
@@ -184,7 +86,7 @@ def _cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "partition.",
 )
 def chunk_content_defined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cdc_chunks(spark, sf_dir).select(
+    return cdc_chunks(spark, sf_dir).select(
         "doc_id", "chunk_idx", "n_words", "chunk_fp"
     )
 
@@ -192,7 +94,7 @@ def chunk_content_defined(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_cdc_dedup_report",
     oracle="WITH "
-    + _cdc_chunk_ctes().strip()
+    + cdc_chunk_ctes().strip()
     + """,
     firsts AS (
         SELECT chunk_fp,
@@ -232,7 +134,7 @@ def chunk_cdc_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The map-only chunk build feeds BOTH branches (instances and the
     # firsts index) — pin it once per the round-9 cache contract
     # instead of computing it twice.
-    ch = _cdc_chunks(spark, sf_dir).transform(persist_once)
+    ch = cdc_chunks(spark, sf_dir).transform(persist_once)
     firsts = (
         ch.groupBy("chunk_fp")
         .agg(F.min(F.struct("doc_id", "chunk_idx")).alias("fk"))
@@ -1398,7 +1300,7 @@ def er_eval_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_incremental_dedup",
     oracle="WITH "
-    + _cdc_chunk_ctes().strip()
+    + cdc_chunk_ctes().strip()
     + """,
     idx AS (
         SELECT DISTINCT chunk_fp FROM chunks WHERE doc_id % 10 <> 7
@@ -1437,7 +1339,7 @@ def chunk_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist_once,
     )
 
-    ch = _cdc_chunks(spark, sf_dir).transform(persist_once)
+    ch = cdc_chunks(spark, sf_dir).transform(persist_once)
     idx = (
         ch.where(F.col("doc_id") % 10 != 7).select("chunk_fp").distinct()
         .withColumn("known", F.lit(1))
@@ -1477,7 +1379,7 @@ def ensure_chunk_index(
     fingerprint (functions/artifacts.persisted)."""
     def build(d: str) -> None:
         idx = (
-            _cdc_chunks(spark, sf_dir)
+            cdc_chunks(spark, sf_dir)
             .where(F.col("doc_id") % 10 != 7)
             .select("chunk_fp")
             .distinct()
@@ -1490,7 +1392,7 @@ def ensure_chunk_index(
 @register(
     "chunk_index_build",
     oracle="WITH "
-    + _cdc_chunk_ctes().strip()
+    + cdc_chunk_ctes().strip()
     + """
     SELECT CAST(COUNT(DISTINCT chunk_fp) AS BIGINT) AS n_fps,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs_indexed
@@ -1510,7 +1412,7 @@ def ensure_chunk_index(
 def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_chunk_index(spark, sf_dir, force=True)
     idx = spark.read.parquet(os.path.join(d, "fp_index.parquet"))
-    src = _cdc_chunks(spark, sf_dir).where(F.col("doc_id") % 10 != 7)
+    src = cdc_chunks(spark, sf_dir).where(F.col("doc_id") % 10 != 7)
     return idx.agg(
         F.count(F.lit(1)).cast("long").alias("n_fps")
     ).crossJoin(
@@ -1523,7 +1425,7 @@ def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_incremental_serve",
     oracle="WITH "
-    + _cdc_chunk_ctes().strip()
+    + cdc_chunk_ctes().strip()
     + """,
     idx AS (
         SELECT DISTINCT chunk_fp FROM chunks WHERE doc_id % 10 <> 7
@@ -1557,7 +1459,7 @@ def chunk_incremental_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = spark.read.parquet(
         os.path.join(d, "fp_index.parquet")
     ).withColumn("known", F.lit(1))
-    delta = _cdc_chunks(spark, sf_dir).where(F.col("doc_id") % 10 == 7)
+    delta = cdc_chunks(spark, sf_dir).where(F.col("doc_id") % 10 == 7)
     known = F.coalesce("known", F.lit(0))
     return (
         delta.join(idx, "chunk_fp", "left")

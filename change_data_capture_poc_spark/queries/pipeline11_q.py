@@ -36,6 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.artifacts import persisted
+from change_data_capture_poc_spark.operators.chunking import (
+    cdc_chunk_ctes,
+    cdc_chunks,
+)
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 from change_data_capture_poc_spark.operators.quality import (
@@ -176,12 +180,8 @@ def cdc_schema_evolution_widening(
 
 
 def _datacard_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline10_q import (
-        _cdc_chunk_ctes,
-    )
-
     return f"""
-    WITH {_cdc_chunk_ctes().strip()},
+    WITH {cdc_chunk_ctes().strip()},
     {QF_RULE_SQL},
     dcbase AS (
         SELECT doc_id, source, lang, n_chars,
@@ -285,9 +285,6 @@ def corpus_datacard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from change_data_capture_poc_spark.queries.pipeline3_q import (
         split_assignment,
     )
-    from change_data_capture_poc_spark.queries.pipeline10_q import (
-        _cdc_chunks,
-    )
 
     d = load_table(spark, sf_dir, "documents")
     # keep (the Gopher rule verdict) and split (a doc_id hash) are
@@ -379,7 +376,7 @@ def corpus_datacard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    ch = _cdc_chunks(spark, sf_dir)
+    ch = cdc_chunks(spark, sf_dir)
     fk = F.min(F.struct("doc_id", "chunk_idx")).over(
         Window.partitionBy("chunk_fp")
     )

@@ -37,6 +37,12 @@ from change_data_capture_poc_spark.operators.ann import (
     variant_tag,
 )
 from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.operators.chunking import (
+    CHUNK_ORACLE,
+    CHUNK_S,
+    CHUNK_W,
+    chunk_sliding_window,
+)
 from change_data_capture_poc_spark.operators.sketch import (
     MG_K,
     MG_ORACLE,
@@ -46,78 +52,12 @@ from change_data_capture_poc_spark.operators.sketch import (
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
 
-_CHUNK_W = 32  # tokens per chunk
-_CHUNK_S = 24  # stride (overlap = W - S = 8)
-
-
-def chunk_sliding_window(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, text) → (doc_id, chunk_idx, n_tokens, chunk_text).
-
-    Pure map-stage transform (split → closed-form chunk count →
-    sequence+explode → slice): no shuffle, no UDF, no state — which is
-    also why the identical plan runs unmodified on a STREAMING frame
-    (streaming_chunk_drain proves it through the streaming engine).
-    """
-    W, S = _CHUNK_W, _CHUNK_S
-    d = df.select("doc_id", F.split(text_col, " ").alias("w")).select(
-        "doc_id",
-        "w",
-        F.size("w").alias("n"),
-        F.expr(f"1 + (greatest(size(w) - {W}, 0) + {S - 1}) div {S}").alias(
-            "nc"
-        ),
-    )
-    return d.select(
-        "doc_id",
-        "w",
-        "n",
-        F.explode(F.sequence(F.lit(0), F.col("nc") - 1)).alias("chunk_idx"),
-    ).select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.least(F.lit(W), F.col("n") - F.col("chunk_idx") * S)
-        .cast("long")
-        .alias("n_tokens"),
-        F.concat_ws(
-            " ", F.slice(F.col("w"), F.col("chunk_idx") * S + 1, W)
-        ).alias("chunk_text"),
-    )
-
-
-# Shared by corpus_chunk_sliding_window and streaming_chunk_drain —
-# one oracle string, two execution engines (batch and streaming run
-# the identical chunk_sliding_window plan).
-_CHUNK_ORACLE = f"""
-    WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    x AS (
-        SELECT doc_id, w, len(w) AS n,
-               1 + (greatest(len(w) - {_CHUNK_W}, 0) + {_CHUNK_S - 1})
-                   // {_CHUNK_S} AS nc
-        FROM t
-    ),
-    y AS (
-        SELECT doc_id, w, n, unnest(range(nc)) AS i FROM x
-    )
-    SELECT doc_id,
-           CAST(i AS BIGINT) AS chunk_idx,
-           CAST(least({_CHUNK_W}, n - i * {_CHUNK_S}) AS BIGINT)
-               AS n_tokens,
-           array_to_string(
-               list_slice(w, i * {_CHUNK_S} + 1,
-                          i * {_CHUNK_S} + {_CHUNK_W}), ' ')
-               AS chunk_text
-    FROM y
-    """
-
-
 @register(
     "corpus_chunk_sliding_window",
-    oracle=_CHUNK_ORACLE,
+    oracle=CHUNK_ORACLE,
     doc=f"RAG chunking: every document split into overlapping "
-        f"{_CHUNK_W}-token windows at stride {_CHUNK_S} (overlap "
-        f"{_CHUNK_W - _CHUNK_S}) — the retrieval-prep step between "
+        f"{CHUNK_W}-token windows at stride {CHUNK_S} (overlap "
+        f"{CHUNK_W - CHUNK_S}) — the retrieval-prep step between "
         f"curation and embedding. Chunk count is closed-form "
         f"(1 + ceil((n-W)/S)), so the plan is one map-side "
         f"sequence+explode per doc: zero shuffles, zero UDFs, and the "
@@ -139,15 +79,15 @@ _CHUNK_SQL_CTE = f"""
     ),
     x AS (
         SELECT doc_id, w,
-               1 + (greatest(len(w) - {_CHUNK_W}, 0) + {_CHUNK_S - 1})
-                   // {_CHUNK_S} AS nc
+               1 + (greatest(len(w) - {CHUNK_W}, 0) + {CHUNK_S - 1})
+                   // {CHUNK_S} AS nc
         FROM t
     ),
     chunks AS (
         SELECT doc_id,
                array_to_string(
-                   list_slice(w, i * {_CHUNK_S} + 1,
-                              i * {_CHUNK_S} + {_CHUNK_W}), ' ')
+                   list_slice(w, i * {CHUNK_S} + 1,
+                              i * {CHUNK_S} + {CHUNK_W}), ' ')
                    AS chunk_text
         FROM (SELECT doc_id, w, unnest(range(nc)) AS i FROM x)
     )

@@ -26,6 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.operators.chunking import (
+    CHUNK_ORACLE,
+    cdc_chunk_ctes,
+    cdc_chunks_from,
+    chunk_sliding_window,
+)
 from change_data_capture_poc_spark.operators.sketch import (
     CMS_D,
     CMS_ORACLE_CORE,
@@ -885,23 +891,11 @@ def streaming_minhash_band_drain(
     return _drain(agg, "streaming_minhash_band_tbl", "complete")
 
 
-def _chunk_oracle() -> str:
-    # One oracle string, two execution engines: the streaming drain
-    # must produce the exact rows of the batch chunker (same pattern
-    # as streaming_minhash_band_drain above). The import is cycle-free —
-    # pipeline4_q depends only on registry + sources.
-    from change_data_capture_poc_spark.queries.pipeline4_q import (
-        _CHUNK_ORACLE,
-    )
-
-    return _CHUNK_ORACLE
-
-
 @register(
     "streaming_chunk_drain",
-    oracle=_chunk_oracle(),
+    oracle=CHUNK_ORACLE,
     doc="STREAMING RAG chunking: documents arrive as a stream and the "
-        "sliding-window chunker (pipeline3/4 chunk_sliding_window — "
+        "sliding-window chunker (operators/chunking.chunk_sliding_window — "
         "pure map stage: split, closed-form chunk count, "
         "sequence+explode, slice) runs UNMODIFIED on the streaming "
         "frame in append mode with zero state — the property that "
@@ -910,10 +904,6 @@ def _chunk_oracle() -> str:
         "must come out of the streaming engine).",
 )
 def streaming_chunk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline4_q import (
-        chunk_sliding_window,
-    )
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
@@ -1501,26 +1491,16 @@ def streaming_heavy_hitters_drain(
     return mg_heavy_hitters(btoks, cand)
 
 
-def _chunk_cdc_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline10_q import (
-        _cdc_chunk_ctes,
-    )
-
-    return (
-        "WITH "
-        + _cdc_chunk_ctes().strip()
-        + """
-    SELECT doc_id, chunk_idx, n_words, chunk_fp FROM chunks
-    """
-    )
-
-
 @register(
     "streaming_chunk_cdc_drain",
-    oracle=_chunk_cdc_oracle(),
+    oracle="WITH "
+    + cdc_chunk_ctes().strip()
+    + """
+    SELECT doc_id, chunk_idx, n_words, chunk_fp FROM chunks
+    """,
     doc="STREAMING content-defined chunking — chunk_content_defined's "
         "stream twin: documents arrive as a stream and the identical "
-        "map-only fold (pipeline10_q._cdc_chunk_fold_expr: the running "
+        "map-only fold (operators/chunking.cdc_chunk_fold_expr: the running "
         "cut-count as a left fold over the document's own words — no "
         "window, no shuffle, no state) chunks each one on arrival; "
         "append-mode drain, so the streaming engine adds NOTHING but "
@@ -1531,15 +1511,11 @@ def _chunk_cdc_oracle() -> str:
 def streaming_chunk_cdc_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline10_q import (
-        _cdc_chunks_from,
-    )
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
     )
-    out = _cdc_chunks_from(
+    out = cdc_chunks_from(
         stream.select("doc_id", "source", "text")
     ).select("doc_id", "chunk_idx", "n_words", "chunk_fp")
     return _drain(out, "streaming_chunk_cdc_tbl", "append")

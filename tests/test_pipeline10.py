@@ -14,8 +14,8 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.operators.chunking import CDC_MASK
 from change_data_capture_poc_spark.queries.pipeline10_q import (
-    _CDC_MASK,
     _RETR_QUERIES,
     chunk_content_defined,
     corpus_epoch_shuffle_plan,
@@ -30,7 +30,7 @@ SF = "/root/testdata/sf0.001"
 
 def _cut(word: str) -> bool:
     h = int(hashlib.md5(word.encode()).hexdigest()[:8], 16)
-    return h % _CDC_MASK == 0
+    return h % CDC_MASK == 0
 
 
 def test_chunks_reconstruct_source_tokens(spark):
@@ -294,8 +294,8 @@ def test_chunking_total_on_degenerate_documents(spark):
     empty word array — an observed ANSI crash) produce no rows rather
     than failing the stage; single-word and cut-terminal documents
     chunk correctly."""
-    from change_data_capture_poc_spark.queries.pipeline10_q import (
-        _cdc_chunks_from,
+    from change_data_capture_poc_spark.operators.chunking import (
+        cdc_chunks_from,
     )
 
     nocut = ["aaa", "aab", "aac", "aad", "aae"]  # none hits the mask
@@ -312,7 +312,7 @@ def test_chunking_total_on_degenerate_documents(spark):
         (6, "s", "   "),                       # whitespace only
     ]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = _cdc_chunks_from(df).collect()
+    out = cdc_chunks_from(df).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r["doc_id"], []).append(r)

@@ -525,13 +525,13 @@ def test_chunk_sliding_window_matches_model(spark, docs):
     """Chunking invariants on random token lists: chunk i is EXACTLY
     tokens[i*S : i*S+W]; chunk count is 1+ceil((n-W)/S); every token
     position is covered; n_tokens matches the emitted text."""
-    from change_data_capture_poc_spark.queries.pipeline4_q import (
-        _CHUNK_S,
-        _CHUNK_W,
+    from change_data_capture_poc_spark.operators.chunking import (
+        CHUNK_S,
+        CHUNK_W,
         chunk_sliding_window,
     )
 
-    W, S = _CHUNK_W, _CHUNK_S
+    W, S = CHUNK_W, CHUNK_S
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     collected = chunk_sliding_window(df).collect()

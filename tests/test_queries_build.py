@@ -122,9 +122,7 @@ def test_representative_queries_deterministic(spark, sf_dir):
 # live in operators/ann.py and MinHash LSH in operators/minhash.py),
 # not behind another query module's underscore.
 _CROSS_QUERY_PRIVATE_IMPORTS = {
-    "pipeline4_q": {"_CHUNK_ORACLE"},
     "pipeline9_q": {"_QUAR_REPORT_ORACLE"},
-    "pipeline10_q": {"_cdc_chunk_ctes", "_cdc_chunks", "_cdc_chunks_from"},
     "pipeline12_q": {
         "_URL_CANON_CTE_SQL", "_canonical_url_col", "_raw_url_col",
     },
