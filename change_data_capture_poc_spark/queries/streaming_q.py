@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.hashing import md5_mod
+from change_data_capture_poc_spark.functions.url import (
+    URL_CANON_CTE_SQL,
+    canonical_url_col,
+    raw_url_col,
+)
 from change_data_capture_poc_spark.operators.chunking import (
     CHUNK_ORACLE,
     cdc_chunk_ctes,
@@ -1521,18 +1526,8 @@ def streaming_chunk_cdc_drain(
     return _drain(out, "streaming_chunk_cdc_tbl", "append")
 
 
-def _url_dedup_stream_oracle() -> str:
-    # Shares pipeline12_q's canonicalization CTE chain verbatim so
-    # the streamed and batch rules cannot drift. (Importing here —
-    # evaluated at registration — just loads pipeline12_q a moment
-    # early; Python's module cache makes the queries-package import
-    # order immaterial, and pipeline12_q never imports this module.)
-    from change_data_capture_poc_spark.queries.pipeline12_q import (
-        _URL_CANON_CTE_SQL,
-    )
-
-    return f"""
-    WITH {_URL_CANON_CTE_SQL}
+_URL_DEDUP_STREAM_ORACLE = f"""
+    WITH {URL_CANON_CTE_SQL}
     SELECT canonical_url,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            MIN(doc_id) AS keeper_doc_id
@@ -1542,7 +1537,7 @@ def _url_dedup_stream_oracle() -> str:
 
 @register(
     "streaming_url_dedup_drain",
-    oracle=_url_dedup_stream_oracle(),
+    oracle=_URL_DEDUP_STREAM_ORACLE,
     doc="STREAMING URL dedup — the front-line crawl dedup key "
         "(dedup_url_canonical) maintained as stream state: documents "
         "arrive, the messy URL is synthesized + canonicalized IN THE "
@@ -1560,18 +1555,13 @@ def _url_dedup_stream_oracle() -> str:
         "an offline readout anyway.",
 )
 def streaming_url_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from change_data_capture_poc_spark.queries.pipeline12_q import (
-        _canonical_url_col,
-        _raw_url_col,
-    )
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = spark.readStream.schema(schema).parquet(
         _documents_stream_dir(sf_dir)
     )
     canon = stream.select(
         "doc_id",
-        _canonical_url_col(_raw_url_col()).alias("canonical_url"),
+        canonical_url_col(raw_url_col()).alias("canonical_url"),
     )
     agg = canon.groupBy("canonical_url").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

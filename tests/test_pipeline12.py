@@ -4,9 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from change_data_capture_poc_spark.queries.pipeline12_q import (
-    _canonical_url_col,
-    _raw_url_col,
+from change_data_capture_poc_spark.functions.url import (
+    canonical_url_col,
+    raw_url_col,
 )
 from change_data_capture_poc_spark.registry import all_queries
 
@@ -15,13 +15,13 @@ def _canon_for(spark, doc_ids):
     df = spark.createDataFrame(
         [(int(i),) for i in doc_ids], "doc_id bigint"
     )
-    raw = _raw_url_col()
+    raw = raw_url_col()
     return {
         r.doc_id: (r.raw, r.canon)
         for r in df.select(
             "doc_id",
             raw.alias("raw"),
-            _canonical_url_col(raw).alias("canon"),
+            canonical_url_col(raw).alias("canon"),
         ).collect()
     }
 
@@ -78,7 +78,7 @@ def test_dedup_url_canonical_census_shape(spark, sf_dir):
     recomputed = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
-        .withColumn("canonical_url", _canonical_url_col(_raw_url_col()))
+        .withColumn("canonical_url", canonical_url_col(raw_url_col()))
         .groupBy("canonical_url")
         .agg(F.min("doc_id").alias("k2"))
     )
@@ -174,13 +174,13 @@ def test_port_strip_twin_semantics_on_adversarial_urls(spark):
     spark_out = {
         r.raw: r.canon
         for r in df.select(
-            "raw", _canonical_url_col(F.col("raw")).alias("canon")
+            "raw", canonical_url_col(F.col("raw")).alias("canon")
         ).collect()
     }
 
     con = duckdb.connect()
     # The oracle's s1..s5 chain restated over a VALUES list — same
-    # regexes as _URL_CANON_CTE_SQL (which is doc-synthesis-bound and
+    # regexes as URL_CANON_CTE_SQL (which is doc-synthesis-bound and
     # can't be fed crafted strings directly).
     duck = con.execute(
         """

@@ -123,9 +123,6 @@ def test_representative_queries_deterministic(spark, sf_dir):
 # not behind another query module's underscore.
 _CROSS_QUERY_PRIVATE_IMPORTS = {
     "pipeline9_q": {"_QUAR_REPORT_ORACLE"},
-    "pipeline12_q": {
-        "_URL_CANON_CTE_SQL", "_canonical_url_col", "_raw_url_col",
-    },
 }
 
 
