@@ -60,6 +60,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.cdc.quarantine import (
+    QUAR_GARBLE_MOD,
+    QUAR_GARBLE_REM,
+    QUAR_REPORT_ORACLE,
+    QUAR_TRUNC_MOD,
+    ensure_quarantine_log,
+)
 from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.registry import register
 from change_data_capture_poc_spark.sources.tables import load_table
@@ -666,111 +673,13 @@ def pack_fill_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cdc_quarantine_report — the malformed-envelope quarantine, on the gate
 # ---------------------------------------------------------------------------
 #
-# Reference parity: the reference's S3 sink lands raw Debezium JSON in
-# day-partitioned objects (connectors/s3-sink.json) and its DuckDB layer
-# reads them back with read_json — a single garbled message fails (or
-# silently drops from) the whole day's scan. sources/readers.py's
-# read_envelope_log_tolerant is the engine's answer (PERMISSIVE +
-# corrupt-record column); until round 9 it was pytest-only. This
-# promotes it to an oracle-checked per-day report: line totals, parse
-# successes, and failure counts BY REASON — the first dashboard every
-# production CDC pipeline builds, because a bad_fraction step change is
-# how transport rot (a broken producer, a bad deploy) actually surfaces.
-#
-# The log is synthesized once per SF from the events table with a
-# DETERMINISTIC corruption rule, so DuckDB can state the expected
-# report without ever reading the files:
-#   event_id % 97 == 0 -> line truncated at half length   ("truncated")
-#   event_id % 89 == 3 -> non-JSON transport prefix       ("not_json")
-#   otherwise          -> well-formed envelope             (parses)
-# Precedence: truncation wins when both rules hit. The engine never
-# sees event_id at read time — it classifies from the quarantined raw
-# text alone (a corrupt line starting with '{' can only be the
-# truncation; a valid envelope prefix cut strictly short is never
-# balanced JSON), so the classifier is honest: it works on any log,
-# and the rule-based oracle certifies it on this one.
-
-
-_QUAR_TRUNC_MOD = 97
-_QUAR_GARBLE_MOD = 89
-_QUAR_GARBLE_REM = 3
-_QUAR_PREFIX = "xlog-v1|"
-
-
-def ensure_quarantine_log(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
-    """Write the day-partitioned corrupted envelope log iff absent or
-    stale — the S3-sink layout (sources/writers.py partitioned-JSON
-    shape, day= dirs) with transport damage injected by the
-    deterministic rule above. One linear map over events, no shuffle:
-    partitionBy splits the write by the ~|days| distinct day values."""
-
-    def build(d: str) -> None:
-        line = F.to_json(
-            F.struct(
-                F.struct(
-                    F.struct(
-                        F.col("user_id").alias("id"),
-                        F.col("event_type").alias("etype"),
-                    ).alias("after"),
-                    F.lit("u").alias("op"),
-                    F.unix_millis("ts").alias("ts_ms"),
-                    F.struct(F.col("event_id").alias("lsn")).alias("source"),
-                ).alias("payload")
-            )
-        )
-        damaged = (
-            F.when(
-                F.col("event_id") % _QUAR_TRUNC_MOD == 0,
-                F.substring(line, 1, (F.length(line) / 2).cast("int")),
-            )
-            .when(
-                F.col("event_id") % _QUAR_GARBLE_MOD == _QUAR_GARBLE_REM,
-                F.concat(F.lit(_QUAR_PREFIX), line),
-            )
-            .otherwise(line)
-        )
-        load_table(spark, sf_dir, "events").where(
-            F.col("user_id").isNotNull()
-        ).select(
-            damaged.alias("value"),
-            F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        ).write.partitionBy("day").mode("overwrite").text(d)
-
-    return persisted("quarlog", sf_dir, "events", build, force)[0]
-
-
-# Shared by the batch report and its stream twin (streaming_q):
-# identical readout contract, so the drain proves the streaming path
-# computes the same dashboard.
-_QUAR_REPORT_ORACLE = f"""
-    WITH e AS (
-        SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-               CASE
-                   WHEN event_id % {_QUAR_TRUNC_MOD} = 0 THEN 'truncated'
-                   WHEN event_id % {_QUAR_GARBLE_MOD} = {_QUAR_GARBLE_REM}
-                       THEN 'not_json'
-                   ELSE 'ok'
-               END AS reason
-        FROM events WHERE user_id IS NOT NULL
-    )
-    SELECT day,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(COUNT(*) FILTER (reason = 'ok') AS BIGINT) AS n_ok,
-           CAST(COUNT(*) FILTER (reason = 'truncated') AS BIGINT)
-               AS n_truncated,
-           CAST(COUNT(*) FILTER (reason = 'not_json') AS BIGINT)
-               AS n_not_json,
-           ROUND(COUNT(*) FILTER (reason != 'ok') * 1.0 / COUNT(*)
-                 + 1e-9, 6) AS bad_fraction
-    FROM e GROUP BY day
-    """
+# The log, its damage rule and the report oracle the stream twin shares
+# live in cdc/quarantine.py.
 
 
 @register(
     "cdc_quarantine_report",
-    oracle=_QUAR_REPORT_ORACLE,
+    oracle=QUAR_REPORT_ORACLE,
     doc="CDC QUARANTINE REPORT — per-day parse health of the raw "
         "envelope log (read_envelope_log_tolerant promoted from "
         "pytest-only to the oracle gate): line totals, parse "
@@ -1072,8 +981,8 @@ def gdpr_erasure_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT event_id,
                strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
                CASE
-                   WHEN event_id % {_QUAR_TRUNC_MOD} = 0 THEN 'truncated'
-                   WHEN event_id % {_QUAR_GARBLE_MOD} = {_QUAR_GARBLE_REM}
+                   WHEN event_id % {QUAR_TRUNC_MOD} = 0 THEN 'truncated'
+                   WHEN event_id % {QUAR_GARBLE_MOD} = {QUAR_GARBLE_REM}
                        THEN 'not_json'
                    ELSE 'ok'
                END AS reason

@@ -25,6 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from change_data_capture_poc_spark.cdc.quarantine import (
+    QUAR_REPORT_ORACLE,
+    ensure_quarantine_log,
+)
 from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.functions.url import (
     URL_CANON_CTE_SQL,
@@ -1320,17 +1324,9 @@ def streaming_histogram_register_drain(
     )
 
 
-def _quar_report_oracle() -> str:
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _QUAR_REPORT_ORACLE,
-    )
-
-    return _QUAR_REPORT_ORACLE
-
-
 @register(
     "streaming_quarantine_drain",
-    oracle=_quar_report_oracle(),
+    oracle=QUAR_REPORT_ORACLE,
     doc="STREAMING parse-health dashboard — cdc_quarantine_report's "
         "stream twin (the production shape: the quarantine dashboard "
         "watches the landing directory live, it does not batch-scan "
@@ -1351,9 +1347,6 @@ def streaming_quarantine_drain(
     from pyspark.sql import types as T
 
     from change_data_capture_poc_spark.cdc.envelope import envelope_schema
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        ensure_quarantine_log,
-    )
 
     d = ensure_quarantine_log(spark, sf_dir)
     stream = (

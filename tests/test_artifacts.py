@@ -172,7 +172,7 @@ def test_concurrent_forced_quarantine_log_builds(spark, sf_dir, my_sf):
     """Two threads of one session force-build the same quarantine log:
     both succeed, both get the published directory, and it holds one
     complete log (one line per non-null-user event)."""
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
+    from change_data_capture_poc_spark.cdc.quarantine import (
         ensure_quarantine_log,
     )
 

@@ -273,10 +273,10 @@ def test_quarantine_report_counts_match_damage_rule(spark, sf_dir):
     deterministic damage rule exactly: per-reason totals equal the
     modular arithmetic on event_id (truncation wins the overlap), and
     the split is lossless (every line lands in exactly one bucket)."""
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _QUAR_GARBLE_MOD,
-        _QUAR_GARBLE_REM,
-        _QUAR_TRUNC_MOD,
+    from change_data_capture_poc_spark.cdc.quarantine import (
+        QUAR_GARBLE_MOD,
+        QUAR_GARBLE_REM,
+        QUAR_TRUNC_MOD,
     )
     from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -291,8 +291,8 @@ def test_quarantine_report_counts_match_damage_rule(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    trunc = F.col("event_id") % _QUAR_TRUNC_MOD == 0
-    garble = F.col("event_id") % _QUAR_GARBLE_MOD == _QUAR_GARBLE_REM
+    trunc = F.col("event_id") % QUAR_TRUNC_MOD == 0
+    garble = F.col("event_id") % QUAR_GARBLE_MOD == QUAR_GARBLE_REM
     exp = ev.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(trunc.cast("long")).alias("tr"),
@@ -312,10 +312,10 @@ def test_quarantine_ok_rows_parse_with_intact_lsn(spark, sf_dir):
     silent drops, no partial parses counted as ok)."""
     from pyspark.sql import types as T
 
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _QUAR_GARBLE_MOD,
-        _QUAR_GARBLE_REM,
-        _QUAR_TRUNC_MOD,
+    from change_data_capture_poc_spark.cdc.quarantine import (
+        QUAR_GARBLE_MOD,
+        QUAR_GARBLE_REM,
+        QUAR_TRUNC_MOD,
         ensure_quarantine_log,
     )
     from change_data_capture_poc_spark.sources.readers import (
@@ -346,10 +346,10 @@ def test_quarantine_ok_rows_parse_with_intact_lsn(spark, sf_dir):
         want = {
             r.event_id
             for r in ev.where(
-                (F.col("event_id") % _QUAR_TRUNC_MOD != 0)
+                (F.col("event_id") % QUAR_TRUNC_MOD != 0)
                 & (
-                    F.col("event_id") % _QUAR_GARBLE_MOD
-                    != _QUAR_GARBLE_REM
+                    F.col("event_id") % QUAR_GARBLE_MOD
+                    != QUAR_GARBLE_REM
                 )
             )
             .select("event_id")
@@ -431,10 +431,10 @@ def test_quarantine_replay_recovers_exactly_the_garbled_lines(
     """Replay recovers every transport-prefixed line (strip + re-parse
     succeeds) and none of the truncated ones; recovered + dead ==
     quarantined, day by day."""
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
-        _QUAR_GARBLE_MOD,
-        _QUAR_GARBLE_REM,
-        _QUAR_TRUNC_MOD,
+    from change_data_capture_poc_spark.cdc.quarantine import (
+        QUAR_GARBLE_MOD,
+        QUAR_GARBLE_REM,
+        QUAR_TRUNC_MOD,
     )
     from change_data_capture_poc_spark.sources.tables import load_table
 
@@ -447,8 +447,8 @@ def test_quarantine_replay_recovers_exactly_the_garbled_lines(
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    trunc = F.col("event_id") % _QUAR_TRUNC_MOD == 0
-    garble = F.col("event_id") % _QUAR_GARBLE_MOD == _QUAR_GARBLE_REM
+    trunc = F.col("event_id") % QUAR_TRUNC_MOD == 0
+    garble = F.col("event_id") % QUAR_GARBLE_MOD == QUAR_GARBLE_REM
     exp = ev.agg(
         F.sum((~trunc & garble).cast("long")).alias("rec"),
         F.sum(trunc.cast("long")).alias("dead"),
@@ -471,7 +471,7 @@ def test_quarantine_log_regenerates_when_source_changes(
         MARKER,
         artifact_dir,
     )
-    from change_data_capture_poc_spark.queries.pipeline9_q import (
+    from change_data_capture_poc_spark.cdc.quarantine import (
         ensure_quarantine_log,
     )
 

@@ -122,7 +122,6 @@ def test_representative_queries_deterministic(spark, sf_dir):
 # live in operators/ann.py and MinHash LSH in operators/minhash.py),
 # not behind another query module's underscore.
 _CROSS_QUERY_PRIVATE_IMPORTS = {
-    "pipeline9_q": {"_QUAR_REPORT_ORACLE"},
 }
 
 
