@@ -27,8 +27,9 @@ re-parses the quarantined lines under the same rule.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.sources.tables import load_table
@@ -37,6 +38,12 @@ QUAR_TRUNC_MOD = 97
 QUAR_GARBLE_MOD = 89
 QUAR_GARBLE_REM = 3
 QUAR_PREFIX = "xlog-v1|"
+
+# The after-image fields every reader parses the log's envelopes with.
+QUAR_ROW_FIELDS = [
+    T.StructField("id", T.LongType()),
+    T.StructField("etype", T.StringType()),
+]
 
 
 def ensure_quarantine_log(
@@ -83,18 +90,22 @@ def ensure_quarantine_log(
     return persisted("quarlog", sf_dir, "events", build, force)[0]
 
 
+# Each event's line, by the damage rule: the DuckDB side of
+# quarantine_reason, read by the report and replay oracles.
+QUAR_REASON_SQL = f"""CASE
+                   WHEN event_id % {QUAR_TRUNC_MOD} = 0 THEN 'truncated'
+                   WHEN event_id % {QUAR_GARBLE_MOD} = {QUAR_GARBLE_REM}
+                       THEN 'not_json'
+                   ELSE 'ok'
+               END"""
+
 # Shared by the batch report and its stream twin (streaming_q):
 # identical readout contract, so the drain proves the streaming path
 # computes the same dashboard.
 QUAR_REPORT_ORACLE = f"""
     WITH e AS (
         SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-               CASE
-                   WHEN event_id % {QUAR_TRUNC_MOD} = 0 THEN 'truncated'
-                   WHEN event_id % {QUAR_GARBLE_MOD} = {QUAR_GARBLE_REM}
-                       THEN 'not_json'
-                   ELSE 'ok'
-               END AS reason
+               {QUAR_REASON_SQL} AS reason
         FROM events WHERE user_id IS NOT NULL
     )
     SELECT day,
@@ -108,3 +119,49 @@ QUAR_REPORT_ORACLE = f"""
                  + 1e-9, 6) AS bad_fraction
     FROM e GROUP BY day
     """
+
+
+def quarantine_reason(parsed: Column, line: Column) -> Column:
+    """'ok' for a line that parsed, else the damage read off its raw
+    text: a line cut short still starts with '{' ('truncated'), a
+    prefixed one does not ('not_json')."""
+    return (
+        F.when(parsed, F.lit("ok"))
+        .when(F.substring(line, 1, 1) != "{", F.lit("not_json"))
+        .otherwise(F.lit("truncated"))
+    )
+
+
+def quarantine_report(
+    reasons: DataFrame, n_lines: Column, weight: Column
+) -> DataFrame:
+    """Per-day report columns of ``QUAR_REPORT_ORACLE`` from (day,
+    reason) rows: ``n_lines`` counts a day's lines and each reason
+    count sums ``weight`` over that reason's rows."""
+
+    def n_reason(r: str) -> Column:
+        return F.sum(
+            F.when(F.col("reason") == r, weight).otherwise(0)
+        ).cast("long")
+
+    return (
+        reasons.groupBy("day")
+        .agg(
+            n_lines.cast("long").alias("n_lines"),
+            n_reason("ok").alias("n_ok"),
+            n_reason("truncated").alias("n_truncated"),
+            n_reason("not_json").alias("n_not_json"),
+        )
+        .select(
+            "day",
+            "n_lines",
+            "n_ok",
+            "n_truncated",
+            "n_not_json",
+            F.round(
+                (F.col("n_lines") - F.col("n_ok")) * 1.0 / F.col("n_lines")
+                + F.lit(1e-9),
+                6,
+            ).alias("bad_fraction"),
+        )
+    )

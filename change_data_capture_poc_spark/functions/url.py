@@ -80,6 +80,11 @@ def raw_url_col() -> Column:
     )
 
 
+# A default port right after the host, for both engines (see
+# canonical_url_col on why it is anchored).
+URL_PORT_RE = "^([^/:?#]*):(443|80)/"
+
+
 def canonical_url_col(raw: Column) -> Column:
     low = F.lower(raw)
     nofrag = F.regexp_replace(low, "#.*$", "")
@@ -92,7 +97,7 @@ def canonical_url_col(raw: Column) -> Column:
     # unanchored pattern would let the twin rules diverge on a URL
     # carrying a second ':443/'-looking substring in a query param.
     # '^' can match at most once, making the semantics identical.
-    noport = F.regexp_replace(nowww, "^([^/:?#]*):(443|80)/", "$1/")
+    noport = F.regexp_replace(nowww, URL_PORT_RE, "$1/")
     hostpath = F.regexp_replace(
         F.substring_index(noport, "?", 1), "/+$", ""
     )
@@ -114,7 +119,7 @@ def canonical_url_col(raw: Column) -> Column:
     )
 
 
-URL_RAW_SQL = """
+_RAW_URL_SQL = """
         concat(
             CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://'
                  WHEN doc_id % 3 = 1 THEN 'https://'
@@ -146,15 +151,15 @@ URL_RAW_SQL = """
 """
 
 
-# Shared canonicalization CTE chain (raw synthesis -> canonical_url
-# per doc) — the batch census oracle and the streaming drain oracle
-# both build on it, so the canonicalization rule cannot drift between
-# the two (repo rule: shared CTE builders keep twin oracles in
-# lockstep).
-URL_CANON_CTE_SQL = f"""
+# The synthesized messy URL of every document, as u(doc_id, raw_url).
+URL_RAW_CTE = f"""
     u AS (
-        SELECT doc_id, {URL_RAW_SQL} AS raw_url FROM documents
-    ),
+        SELECT doc_id, {_RAW_URL_SQL} AS raw_url FROM documents
+    )"""
+
+# The canonicaliser over any relation u(doc_id, raw_url), ending in
+# canon(doc_id, raw_url, canonical_url).
+URL_CANON_CTES = f"""
     s1 AS (
         SELECT doc_id, raw_url,
                regexp_replace(regexp_replace(regexp_replace(
@@ -164,7 +169,7 @@ URL_CANON_CTE_SQL = f"""
     ),
     s2 AS (
         SELECT doc_id, raw_url,
-               regexp_replace(s, '^([^/:?#]*):(443|80)/', '\\1/') AS s
+               regexp_replace(s, '{URL_PORT_RE}', '\\1/') AS s
         FROM s1
     ),
     s3 AS (
@@ -191,3 +196,7 @@ URL_CANON_CTE_SQL = f"""
         FROM s4
     )
 """
+
+# Both URL oracles (the batch census and its stream twin) read the
+# canonical URL of every document from this chain.
+URL_CANON_CTE_SQL = f"{URL_RAW_CTE},{URL_CANON_CTES}"

@@ -11,7 +11,7 @@ chunkers are stateless maps, so each batch query and its stream twin
 run the same plan and check against the same oracle:
 ``corpus_chunk_sliding_window`` and ``streaming_chunk_drain`` share
 ``CHUNK_ORACLE``; ``chunk_content_defined`` and
-``streaming_chunk_cdc_drain`` share the CDC chain.
+``streaming_chunk_cdc_drain`` share ``CDC_CHUNK_ORACLE``.
 """
 
 from __future__ import annotations
@@ -99,9 +99,12 @@ CHUNK_ORACLE = f"""
 CDC_MASK = 8  # expected chunk length in words (cut when hash % 8 == 0)
 
 
-def cdc_chunk_ctes() -> str:
-    cut = md5_prefix_sql("word", "duck")
-    return f"""
+# The oracle's chunker: explode words, number chunks by a running
+# count of cut words (a window), fingerprint each chunk. Every chunk
+# oracle reads its ``chunks(doc_id, source, chunk_idx, n_words,
+# chunk_fp)`` CTE.
+_WORD_CUT_HASH = md5_prefix_sql("word", "duck")
+CDC_CHUNK_CTES = f"""
     tok AS (
         SELECT sp.doc_id, sp.source, CAST(s.i AS INT) AS word_pos,
                sp.s[s.i + 1] AS word
@@ -112,7 +115,7 @@ def cdc_chunk_ctes() -> str:
     ),
     cid AS (
         SELECT doc_id, source, word_pos, word,
-               CAST(COALESCE(SUM(CASE WHEN {cut} % {CDC_MASK} = 0
+               CAST(COALESCE(SUM(CASE WHEN {_WORD_CUT_HASH} % {CDC_MASK} = 0
                                       THEN 1 ELSE 0 END)
                    OVER (PARTITION BY doc_id ORDER BY word_pos
                          ROWS BETWEEN UNBOUNDED PRECEDING
@@ -125,7 +128,16 @@ def cdc_chunk_ctes() -> str:
                md5(string_agg(word, ' ' ORDER BY word_pos)) AS chunk_fp
         FROM cid GROUP BY doc_id, chunk_idx
     )
+    """.strip()
+
+# Shared by chunk_content_defined and streaming_chunk_cdc_drain.
+CDC_CHUNK_ORACLE = (
+    "WITH "
+    + CDC_CHUNK_CTES
+    + """
+    SELECT doc_id, chunk_idx, n_words, chunk_fp FROM chunks
     """
+)
 
 
 def cdc_chunk_fold_expr() -> str:

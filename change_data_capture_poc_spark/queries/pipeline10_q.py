@@ -54,7 +54,8 @@ from change_data_capture_poc_spark.functions.text import BM25_SCORED_SQL
 from change_data_capture_poc_spark.functions.vectors import JL
 from change_data_capture_poc_spark.functions.windows import global_window
 from change_data_capture_poc_spark.operators.chunking import (
-    cdc_chunk_ctes,
+    CDC_CHUNK_CTES,
+    CDC_CHUNK_ORACLE,
     cdc_chunks,
 )
 from change_data_capture_poc_spark.operators.topk import grouped_topk
@@ -65,11 +66,7 @@ from change_data_capture_poc_spark.queries.datapipe import text_bm25_retrieval
 
 @register(
     "chunk_content_defined",
-    oracle="WITH "
-    + cdc_chunk_ctes().strip()
-    + """
-    SELECT doc_id, chunk_idx, n_words, chunk_fp FROM chunks
-    """,
+    oracle=CDC_CHUNK_ORACLE,
     doc="Content-defined chunking at word granularity (the storage-"
         "dedup 'CDC' idea applied to text, as in suffix/span dedup "
         "systems): a word whose portable md5 hits the cut mask "
@@ -94,7 +91,7 @@ def chunk_content_defined(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_cdc_dedup_report",
     oracle="WITH "
-    + cdc_chunk_ctes().strip()
+    + CDC_CHUNK_CTES
     + """,
     firsts AS (
         SELECT chunk_fp,
@@ -1300,7 +1297,7 @@ def er_eval_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_incremental_dedup",
     oracle="WITH "
-    + cdc_chunk_ctes().strip()
+    + CDC_CHUNK_CTES
     + """,
     idx AS (
         SELECT DISTINCT chunk_fp FROM chunks WHERE doc_id % 10 <> 7
@@ -1392,7 +1389,7 @@ def ensure_chunk_index(
 @register(
     "chunk_index_build",
     oracle="WITH "
-    + cdc_chunk_ctes().strip()
+    + CDC_CHUNK_CTES
     + """
     SELECT CAST(COUNT(DISTINCT chunk_fp) AS BIGINT) AS n_fps,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs_indexed
@@ -1425,7 +1422,7 @@ def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_incremental_serve",
     oracle="WITH "
-    + cdc_chunk_ctes().strip()
+    + CDC_CHUNK_CTES
     + """,
     idx AS (
         SELECT DISTINCT chunk_fp FROM chunks WHERE doc_id % 10 <> 7

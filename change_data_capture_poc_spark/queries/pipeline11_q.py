@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.operators.chunking import (
-    cdc_chunk_ctes,
+    CDC_CHUNK_CTES,
     cdc_chunks,
 )
 from change_data_capture_poc_spark.registry import register
@@ -181,7 +181,7 @@ def cdc_schema_evolution_widening(
 
 def _datacard_oracle() -> str:
     return f"""
-    WITH {cdc_chunk_ctes().strip()},
+    WITH {CDC_CHUNK_CTES},
     {QF_RULE_SQL},
     dcbase AS (
         SELECT doc_id, source, lang, n_chars,

@@ -73,31 +73,10 @@ def corpus_chunk_sliding_window(
     )
 
 
-_CHUNK_SQL_CTE = f"""
-    t AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    x AS (
-        SELECT doc_id, w,
-               1 + (greatest(len(w) - {CHUNK_W}, 0) + {CHUNK_S - 1})
-                   // {CHUNK_S} AS nc
-        FROM t
-    ),
-    chunks AS (
-        SELECT doc_id,
-               array_to_string(
-                   list_slice(w, i * {CHUNK_S} + 1,
-                              i * {CHUNK_S} + {CHUNK_W}), ' ')
-                   AS chunk_text
-        FROM (SELECT doc_id, w, unnest(range(nc)) AS i FROM x)
-    )
-"""
-
-
 @register(
     "corpus_chunk_dedup_rate",
     oracle=f"""
-    WITH {_CHUNK_SQL_CTE},
+    WITH chunks AS ({CHUNK_ORACLE}),
     j AS (
         SELECT d.source, c.chunk_text
         FROM chunks c JOIN documents d USING (doc_id)

@@ -61,11 +61,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.cdc.quarantine import (
-    QUAR_GARBLE_MOD,
-    QUAR_GARBLE_REM,
+    QUAR_REASON_SQL,
     QUAR_REPORT_ORACLE,
-    QUAR_TRUNC_MOD,
+    QUAR_ROW_FIELDS,
     ensure_quarantine_log,
+    quarantine_reason,
+    quarantine_report,
 )
 from change_data_capture_poc_spark.functions.artifacts import persisted
 from change_data_capture_poc_spark.registry import register
@@ -695,8 +696,6 @@ def pack_fill_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "output is |days| rows.",
 )
 def cdc_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from change_data_capture_poc_spark.functions.caching import (
         persist_once,
     )
@@ -705,50 +704,18 @@ def cdc_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = ensure_quarantine_log(spark, sf_dir)
-    raw = read_envelope_log_tolerant(
-        spark,
-        d,
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("etype", T.StringType()),
-        ],
-    )
+    raw = read_envelope_log_tolerant(spark, d, QUAR_ROW_FIELDS)
     # Cached per the reader's contract: Spark refuses an uncached scan
     # whose projection touches only the corrupt-record column
     # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — and the report reads it in
     # every branch. persist_once keeps the round-9 cache contract.
     raw = raw.transform(persist_once)
     bad = F.col("_corrupt_record")
-    reason = (
-        F.when(bad.isNull(), F.lit("ok"))
-        .when(F.substring(bad, 1, 1) != "{", F.lit("not_json"))
-        .otherwise(F.lit("truncated"))
+    reasons = raw.select(
+        F.col("day").cast("string").alias("day"),
+        quarantine_reason(bad.isNull(), bad).alias("reason"),
     )
-    n_reason = lambda r: F.sum(  # noqa: E731
-        F.when(F.col("reason") == r, 1).otherwise(0)
-    ).cast("long")
-    return (
-        raw.select(F.col("day").cast("string").alias("day"), reason.alias("reason"))
-        .groupBy("day")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            n_reason("ok").alias("n_ok"),
-            n_reason("truncated").alias("n_truncated"),
-            n_reason("not_json").alias("n_not_json"),
-        )
-        .select(
-            "day",
-            "n_lines",
-            "n_ok",
-            "n_truncated",
-            "n_not_json",
-            F.round(
-                (F.col("n_lines") - F.col("n_ok")) * 1.0 / F.col("n_lines")
-                + F.lit(1e-9),
-                6,
-            ).alias("bad_fraction"),
-        )
-    )
+    return quarantine_report(reasons, F.count(F.lit(1)), F.lit(1))
 
 
 # ---------------------------------------------------------------------------
@@ -980,12 +947,7 @@ def gdpr_erasure_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
         SELECT event_id,
                strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-               CASE
-                   WHEN event_id % {QUAR_TRUNC_MOD} = 0 THEN 'truncated'
-                   WHEN event_id % {QUAR_GARBLE_MOD} = {QUAR_GARBLE_REM}
-                       THEN 'not_json'
-                   ELSE 'ok'
-               END AS reason
+               {QUAR_REASON_SQL} AS reason
         FROM events WHERE user_id IS NOT NULL
     )
     SELECT day,
@@ -1016,8 +978,6 @@ def gdpr_erasure_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quarantined slice; one |days|-key rollup.",
 )
 def cdc_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from change_data_capture_poc_spark.cdc.envelope import envelope_schema
     from change_data_capture_poc_spark.functions.caching import (
         persist_once,
@@ -1027,11 +987,7 @@ def cdc_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = ensure_quarantine_log(spark, sf_dir)
-    row_fields = [
-        T.StructField("id", T.LongType()),
-        T.StructField("etype", T.StringType()),
-    ]
-    raw = read_envelope_log_tolerant(spark, d, row_fields).transform(
+    raw = read_envelope_log_tolerant(spark, d, QUAR_ROW_FIELDS).transform(
         persist_once
     )
     bad = raw.where(F.col("_corrupt_record").isNotNull()).select(
@@ -1042,7 +998,7 @@ def cdc_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # locate()=0 (no brace at all) yields an empty substring, which
     # from_json maps to null — structurally dead either way.
     stripped = F.expr("substring(line, locate('{', line))")
-    reparsed = F.from_json(stripped, envelope_schema(row_fields))
+    reparsed = F.from_json(stripped, envelope_schema(QUAR_ROW_FIELDS))
     lsn = reparsed.getField("payload").getField("source").getField("lsn")
     r = bad.select("day", lsn.alias("lsn"))
     return (

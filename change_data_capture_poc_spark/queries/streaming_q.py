@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.cdc.quarantine import (
     QUAR_REPORT_ORACLE,
+    QUAR_ROW_FIELDS,
     ensure_quarantine_log,
+    quarantine_reason,
+    quarantine_report,
 )
 from change_data_capture_poc_spark.functions.hashing import md5_mod
 from change_data_capture_poc_spark.functions.url import (
@@ -37,7 +40,7 @@ from change_data_capture_poc_spark.functions.url import (
 )
 from change_data_capture_poc_spark.operators.chunking import (
     CHUNK_ORACLE,
-    cdc_chunk_ctes,
+    CDC_CHUNK_ORACLE,
     cdc_chunks_from,
     chunk_sliding_window,
 )
@@ -1361,23 +1364,13 @@ def streaming_quarantine_drain(
         .format("text")
         .load(d)
     )
-    env = envelope_schema(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("etype", T.StringType()),
-        ]
-    )
     lsn = (
-        F.from_json("value", env)
+        F.from_json("value", envelope_schema(QUAR_ROW_FIELDS))
         .getField("payload")
         .getField("source")
         .getField("lsn")
     )
-    reason = (
-        F.when(lsn.isNotNull(), F.lit("ok"))
-        .when(F.substring("value", 1, 1) != "{", F.lit("not_json"))
-        .otherwise(F.lit("truncated"))
-    )
+    reason = quarantine_reason(lsn.isNotNull(), F.col("value"))
     counts = (
         stream.select(F.col("day").cast("string").alias("day"), reason.alias("reason"))
         .groupBy("day", "reason")
@@ -1386,30 +1379,7 @@ def streaming_quarantine_drain(
     drained = _drain(
         counts, "streaming_quarantine_tbl", "complete"
     )
-    n_reason = lambda r: F.sum(  # noqa: E731
-        F.when(F.col("reason") == r, F.col("cnt")).otherwise(0)
-    ).cast("long")
-    return (
-        drained.groupBy("day")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_lines"),
-            n_reason("ok").alias("n_ok"),
-            n_reason("truncated").alias("n_truncated"),
-            n_reason("not_json").alias("n_not_json"),
-        )
-        .select(
-            "day",
-            "n_lines",
-            "n_ok",
-            "n_truncated",
-            "n_not_json",
-            F.round(
-                (F.col("n_lines") - F.col("n_ok")) * 1.0 / F.col("n_lines")
-                + F.lit(1e-9),
-                6,
-            ).alias("bad_fraction"),
-        )
-    )
+    return quarantine_report(drained, F.sum("cnt"), F.col("cnt"))
 
 
 @register(
@@ -1491,11 +1461,7 @@ def streaming_heavy_hitters_drain(
 
 @register(
     "streaming_chunk_cdc_drain",
-    oracle="WITH "
-    + cdc_chunk_ctes().strip()
-    + """
-    SELECT doc_id, chunk_idx, n_words, chunk_fp FROM chunks
-    """,
+    oracle=CDC_CHUNK_ORACLE,
     doc="STREAMING content-defined chunking — chunk_content_defined's "
         "stream twin: documents arrive as a stream and the identical "
         "map-only fold (operators/chunking.cdc_chunk_fold_expr: the running "

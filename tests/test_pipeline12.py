@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from change_data_capture_poc_spark.functions.url import (
+    URL_CANON_CTES,
     canonical_url_col,
     raw_url_col,
 )
@@ -156,8 +157,8 @@ def test_port_strip_twin_semantics_on_adversarial_urls(spark):
     Spark replace-ALL vs DuckDB replace-FIRST difference can no longer
     diverge on a URL carrying a second ':443/'-looking substring (e.g.
     in a query-param value). The synthesis can't produce such URLs, so
-    this pins the rule on crafted ones directly, running the exact twin
-    expressions side by side."""
+    this pins the rule on crafted ones directly, running the engine
+    column and the oracle's canonicalisation chain side by side."""
     import duckdb
 
     crafted = [
@@ -179,48 +180,15 @@ def test_port_strip_twin_semantics_on_adversarial_urls(spark):
     }
 
     con = duckdb.connect()
-    # The oracle's s1..s5 chain restated over a VALUES list — same
-    # regexes as URL_CANON_CTE_SQL (which is doc-synthesis-bound and
-    # can't be fed crafted strings directly).
+    # The oracle's own canonicalisation chain, reading the crafted URLs
+    # as its u(doc_id, raw_url) relation.
+    values = ", ".join("(?, ?)" for _ in crafted)
     duck = con.execute(
-        """
-        WITH u(raw) AS (SELECT * FROM (VALUES (?), (?), (?), (?))),
-        s1 AS (
-            SELECT raw,
-                   regexp_replace(regexp_replace(regexp_replace(
-                       lower(raw), '#.*$', ''), '^https?://', ''),
-                       '^www\\.', '') AS s
-            FROM u
-        ),
-        s2 AS (
-            SELECT raw,
-                   regexp_replace(s, '^([^/:?#]*):(443|80)/', '\\1/') AS s
-            FROM s1
-        ),
-        s3 AS (
-            SELECT raw,
-                   regexp_replace(
-                       CASE WHEN instr(s, '?') > 0
-                            THEN s[1:instr(s, '?') - 1] ELSE s END,
-                       '/+$', '') AS hostpath,
-                   CASE WHEN instr(s, '?') > 0
-                        THEN s[instr(s, '?') + 1:] ELSE '' END AS qs
-            FROM s2
-        ),
-        s4 AS (
-            SELECT raw, hostpath,
-                   list_sort(list_filter(string_split(qs, '&'),
-                       p -> p <> '' AND NOT starts_with(p, 'utm_')))
-                       AS kept
-            FROM s3
-        )
-        SELECT raw,
-               hostpath || CASE WHEN len(kept) > 0
-                    THEN '?' || list_aggregate(kept, 'string_agg', '&')
-                    ELSE '' END AS canon
-        FROM s4
+        f"""
+        WITH u(doc_id, raw_url) AS (VALUES {values}),{URL_CANON_CTES}
+        SELECT raw_url, canonical_url FROM canon
         """,
-        crafted,
+        [x for i, u in enumerate(crafted) for x in (i, u)],
     ).fetchall()
     duck_out = {raw: canon for raw, canon in duck}
 

@@ -116,19 +116,12 @@ def test_representative_queries_deterministic(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-# Private helpers one query module still imports from another, as
-# (module, name). This list may only shrink: a shared algorithm belongs
-# in operators/ or functions/ (as the ANN index and recall gates now
-# live in operators/ann.py and MinHash LSH in operators/minhash.py),
-# not behind another query module's underscore.
-_CROSS_QUERY_PRIVATE_IMPORTS = {
-}
-
-
 def test_no_new_cross_query_private_imports():
-    """Every ``from ...queries.<mod> import _name`` inside queries/ must
-    be on the allowlist above, and every allowlisted pair must still be
-    imported somewhere (drop it from the list when its last import goes)."""
+    """No module in queries/ imports a ``_``-prefixed name from another
+    query module. A rule two queries share (a batch query and its
+    stream twin, say) lives in operators/, functions/ or cdc/ under a
+    public name, as the chunkers live in operators/chunking.py and the
+    quarantine log in cdc/quarantine.py."""
     import ast
     import pathlib
 
@@ -138,23 +131,19 @@ def test_no_new_cross_query_private_imports():
     found = set()
     for path in pathlib.Path(pkg.__file__).parent.glob("*.py"):
         for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.ImportFrom) and (
-                node.module or ""
-            ).startswith(prefix):
-                mod = node.module[len(prefix):]
-                found |= {
-                    (mod, a.name) for a in node.names if a.name.startswith("_")
-                }
-    allowed = {
-        (mod, name)
-        for mod, names in _CROSS_QUERY_PRIVATE_IMPORTS.items()
-        for name in names
-    }
-    assert not found - allowed, (
-        f"new cross-query private imports {sorted(found - allowed)}: move "
-        f"the shared helper to operators/ or functions/ instead"
-    )
-    assert not allowed - found, (
-        f"allowlisted pairs no longer imported {sorted(allowed - found)}: "
-        f"remove them from _CROSS_QUERY_PRIVATE_IMPORTS"
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            mod = node.module or ""
+            if node.level == 0 and mod.startswith(prefix):
+                mod = mod[len(prefix):]
+            elif node.level == 0:
+                continue
+            found |= {
+                (path.stem, mod, a.name)
+                for a in node.names
+                if a.name.startswith("_")
+            }
+    assert not found, (
+        f"cross-query private imports {sorted(found)}: move the shared "
+        f"helper to operators/, functions/ or cdc/ instead"
     )
