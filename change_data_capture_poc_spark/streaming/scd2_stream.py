@@ -123,6 +123,13 @@ class ParquetOverwriteBackend:
         rows: DataFrame,
         partition_col: str = "bucket",
     ) -> None:
+        """Replace the ``partition_col`` partitions of ``path`` that
+        ``rows`` covers with ``rows``. The write over ``rows`` must
+        run before this returns: ``IncrementalScd2`` reads its
+        late-event count from an ``Observation`` on ``rows``, which
+        only that write action fills in, so an ``apply`` that returns
+        without writing ``rows`` leaves ``process_batch`` waiting
+        forever."""
         rows.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(partition_col).parquet(path)
@@ -132,7 +139,9 @@ def get_merge_backend() -> ParquetOverwriteBackend:
     """The stream's merge backend. ``IncrementalScd2`` looks this name
     up in the module on every construction, so a wrapper installed
     here (perfbench/cdc_stream.py times ``apply`` this way) is used by
-    the next stream started."""
+    the next stream started. A replacement backend keeps the contract
+    of ``ParquetOverwriteBackend.apply``: it runs the write over
+    ``rows`` before it returns."""
     return ParquetOverwriteBackend()
 
 
