@@ -126,10 +126,10 @@ class ParquetOverwriteBackend:
         """Replace the ``partition_col`` partitions of ``path`` that
         ``rows`` covers with ``rows``. The write over ``rows`` must
         run before this returns: ``IncrementalScd2`` reads its
-        late-event count from an ``Observation`` on ``rows``, which
-        only that write action fills in, so an ``apply`` that returns
-        without writing ``rows`` leaves ``process_batch`` waiting
-        forever."""
+        late-event count from an ``Observation`` in the plan of
+        ``rows``, which only that write action fills in, so an
+        ``apply`` that returns without writing ``rows`` leaves
+        ``process_batch`` waiting forever."""
         rows.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(partition_col).parquet(path)
