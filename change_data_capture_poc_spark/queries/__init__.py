@@ -16,8 +16,10 @@ Modules:
                     fuzzy join, EMA)
 - ``pipeline3_q`` — corpus curation (splits, budgets, spans, rerank,
                     kmeans/PCA, evals)
-- ``pipeline4_q`` — chunking, multiprobe IVF recall (index and gate
-                    from operators/ann.py), backoff LM, winnowing,
+- ``pipeline4_q`` — sliding-window chunking (chunker in
+                    operators/chunking.py), multiprobe IVF recall
+                    (index and gate from operators/ann.py), backoff
+                    LM, winnowing,
                     Misra-Gries heavy hitters (operators/sketch.py),
                     sampling
 - ``pipeline5_q`` — CCNet perplexity pruning, IVF hard negatives,
@@ -49,13 +51,15 @@ Modules:
 - ``pipeline9_q`` — corpus-scale BPE encode, sampled-truth multiprobe
                     recall gate, persisted IVF-PQ index build/serve/
                     compact lifecycle over operators/ann.py, best-fit
-                    sequence packing, CDC quarantine report, and the
+                    sequence packing, CDC quarantine report and
+                    replay (log and rule in cdc/quarantine.py), and the
                     tokenizer queries and vocabulary artifacts over
                     operators/subword.py (BPE encode/decode, WordPiece
                     MaxMatch and threshold curve, unigram EM train/
                     Viterbi encode/soft e-step, family bake-off)
-- ``pipeline10_q`` — content-defined chunking (map-only fold) +
-                    chunk dedup reports (batch/incremental), retrieval
+- ``pipeline10_q`` — content-defined chunking (map-only fold in
+                    operators/chunking.py) + chunk dedup reports
+                    (batch/incremental), retrieval
                     quality (nDCG@10/MRR@100), RRF hybrid fusion,
                     deterministic epoch shuffle plan, cross-modal
                     retrieval, entity resolution (match/merge/eval),
@@ -64,7 +68,8 @@ Modules:
                     Parquet type-widening reader over two physical
                     writer generations), corpus data card rollup
 - ``pipeline12_q`` — URL-canonicalization dedup (RefinedWeb/Dolma
-                    front-line crawl dedup key), applied paragraph
+                    front-line crawl dedup key; rule in
+                    functions/url.py), applied paragraph
                     Bloom dedup (Dolma's check-then-add stream made
                     relational via per-bit first-set times)
 """

@@ -1294,9 +1294,11 @@ def er_eval_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "chunk_incremental_dedup",
-    oracle="WITH "
+# The delta cohort (doc_id % 10 == 7) probed against the fingerprints
+# of the rest of the corpus: shared by the in-plan and the persisted-
+# index variants, since persistence must not change the result.
+_CHUNK_DELTA_ORACLE = (
+    "WITH "
     + CDC_CHUNK_CTES
     + """,
     idx AS (
@@ -1315,7 +1317,35 @@ def er_eval_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / SUM(d.n_words) + 1e-9, 6) AS known_ratio
     FROM delta d LEFT JOIN idx i USING (chunk_fp)
     GROUP BY d.doc_id
-    """,
+    """
+)
+
+
+def _known_chunks(delta: DataFrame, idx: DataFrame) -> DataFrame:
+    """Per delta document: its chunks, how many of their fingerprints
+    ``idx`` (one distinct ``chunk_fp`` per row) already holds, and the
+    share of its words they cover."""
+    known = F.coalesce("known", F.lit(0))
+    return (
+        delta.join(idx.withColumn("known", F.lit(1)), "chunk_fp", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_chunks"),
+            F.sum(known).cast("long").alias("n_known_chunks"),
+            F.sum(known * F.col("n_words")).cast("long")
+            .alias("known_words"),
+            F.round(
+                F.sum(known * F.col("n_words")) * 1.0 / F.sum("n_words")
+                + F.lit(1e-9),
+                6,
+            ).alias("known_ratio"),
+        )
+    )
+
+
+@register(
+    "chunk_incremental_dedup",
+    oracle=_CHUNK_DELTA_ORACLE,
     doc="Incremental chunk-store dedup — the arrival-time shape of "
         "chunk_cdc_dedup_report (and the chunk sibling of "
         "dedup_incremental_delta_index): newly-arriving documents "
@@ -1337,27 +1367,8 @@ def chunk_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ch = cdc_chunks(spark, sf_dir).transform(persist_once)
-    idx = (
-        ch.where(F.col("doc_id") % 10 != 7).select("chunk_fp").distinct()
-        .withColumn("known", F.lit(1))
-    )
-    delta = ch.where(F.col("doc_id") % 10 == 7)
-    known = F.coalesce("known", F.lit(0))
-    return (
-        delta.join(idx, "chunk_fp", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum(known).cast("long").alias("n_known_chunks"),
-            F.sum(known * F.col("n_words")).cast("long")
-            .alias("known_words"),
-            F.round(
-                F.sum(known * F.col("n_words")) * 1.0 / F.sum("n_words")
-                + F.lit(1e-9),
-                6,
-            ).alias("known_ratio"),
-        )
-    )
+    idx = ch.where(F.col("doc_id") % 10 != 7).select("chunk_fp").distinct()
+    return _known_chunks(ch.where(F.col("doc_id") % 10 == 7), idx)
 
 
 # ---------------------------------------------------------------------------
@@ -1421,26 +1432,7 @@ def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "chunk_incremental_serve",
-    oracle="WITH "
-    + CDC_CHUNK_CTES
-    + """,
-    idx AS (
-        SELECT DISTINCT chunk_fp FROM chunks WHERE doc_id % 10 <> 7
-    ),
-    delta AS (SELECT * FROM chunks WHERE doc_id % 10 = 7)
-    SELECT d.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(SUM(CASE WHEN i.chunk_fp IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_known_chunks,
-           CAST(SUM(CASE WHEN i.chunk_fp IS NOT NULL
-                         THEN d.n_words ELSE 0 END) AS BIGINT)
-               AS known_words,
-           ROUND(SUM(CASE WHEN i.chunk_fp IS NOT NULL
-                          THEN d.n_words ELSE 0 END) * 1.0
-                 / SUM(d.n_words) + 1e-9, 6) AS known_ratio
-    FROM delta d LEFT JOIN idx i USING (chunk_fp)
-    GROUP BY d.doc_id
-    """,
+    oracle=_CHUNK_DELTA_ORACLE,
     doc="Chunk-store incremental SERVE — the online half: newly "
         "arriving documents (the delta cohort) are chunked fresh and "
         "probed against the PERSISTED fingerprint index; the existing "
@@ -1453,23 +1445,6 @@ def chunk_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def chunk_incremental_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_chunk_index(spark, sf_dir)
-    idx = spark.read.parquet(
-        os.path.join(d, "fp_index.parquet")
-    ).withColumn("known", F.lit(1))
+    idx = spark.read.parquet(os.path.join(d, "fp_index.parquet"))
     delta = cdc_chunks(spark, sf_dir).where(F.col("doc_id") % 10 == 7)
-    known = F.coalesce("known", F.lit(0))
-    return (
-        delta.join(idx, "chunk_fp", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum(known).cast("long").alias("n_known_chunks"),
-            F.sum(known * F.col("n_words")).cast("long")
-            .alias("known_words"),
-            F.round(
-                F.sum(known * F.col("n_words")) * 1.0 / F.sum("n_words")
-                + F.lit(1e-9),
-                6,
-            ).alias("known_ratio"),
-        )
-    )
+    return _known_chunks(delta, idx)

@@ -11,16 +11,8 @@ order, fragments, trailing slashes — so the dedup key is the
 CANONICALIZED URL, not the raw string.
 
 The driver testdata has no URL column, so the query first synthesizes
-a deterministically messy URL per document from ``doc_id`` residues
-(both engines state the identical rule), then canonicalizes:
-
-1. lowercase;
-2. strip the scheme (``http://`` / ``https://`` — crawl frontiers
-   treat them as one resource) and a leading ``www.``;
-3. strip the fragment and default ports (``:443``/``:80``);
-4. drop ``utm_*`` tracking parameters, SORT the surviving query
-   parameters (order-insensitive match), drop empty params;
-5. strip trailing slashes from the path.
+a deterministically messy URL per document from ``doc_id`` residues,
+then canonicalizes it; both rules live in functions/url.py.
 
 Scale shape: synthesis + canonicalization are pure JVM string/regex
 map work (no UDFs); the census aggregates (canonical, raw) pairs

@@ -858,8 +858,13 @@ def streaming_centroid_assign_drain(
     return _drain(out, "streaming_centroid_assign_tbl", "complete")
 
 
-def _documents_stream_dir(sf_dir: str) -> str:
-    return _stream_dir(sf_dir, "documents", "/docs")
+def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table as a file stream, under the batch table's
+    schema (file streams require one)."""
+    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    return spark.readStream.schema(schema).parquet(
+        _stream_dir(sf_dir, "documents", "/docs")
+    )
 
 
 @register(
@@ -887,10 +892,7 @@ def _documents_stream_dir(sf_dir: str) -> str:
 def streaming_minhash_band_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     bands = spark_bands(spark_grams(stream))
     agg = (
         bands.groupBy("band_id", "band_key")
@@ -916,10 +918,7 @@ def streaming_minhash_band_drain(
         "must come out of the streaming engine).",
 )
 def streaming_chunk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     out = chunk_sliding_window(stream.select("doc_id", "text"))
     return _drain(out, "streaming_chunk_tbl", "append")
 
@@ -1064,10 +1063,7 @@ def streaming_semdedup_assign_drain(
 def streaming_suffixgram_dup_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     grams = stream.select(
         "doc_id", F.split("text", " ").alias("w")
     ).where(F.size("w") >= SPAN_K).select(
@@ -1162,10 +1158,7 @@ def streaming_hll_register_drain(
 def streaming_cms_register_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     t = stream.select(
         F.explode(F.split("text", " ")).alias("word")
     ).where(F.col("word") != "")
@@ -1207,10 +1200,7 @@ def streaming_bloom_bitset_drain(
 ) -> DataFrame:
     from change_data_capture_poc_spark.sources.tables import load_table
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     tr_grams = (
         stream.withColumn("h", md5_mod(F.col("doc_id"), 100))
         .where(F.col("h") < 80)
@@ -1258,10 +1248,7 @@ def streaming_weighted_reservoir_drain(
         weighted_reservoir,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     scored = wps_scored(stream)
     from pyspark.sql import Window
 
@@ -1435,10 +1422,7 @@ def streaming_heavy_hitters_drain(
 ) -> DataFrame:
     from change_data_capture_poc_spark.sources.tables import load_table
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     # No empty-token filter: the batch twin (and its oracle) count
     # every split token, so the candidate superset must too.
     toks = stream.select(
@@ -1475,10 +1459,7 @@ def streaming_heavy_hitters_drain(
 def streaming_chunk_cdc_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     out = cdc_chunks_from(
         stream.select("doc_id", "source", "text")
     ).select("doc_id", "chunk_idx", "n_words", "chunk_fp")
@@ -1514,10 +1495,7 @@ _URL_DEDUP_STREAM_ORACLE = f"""
         "an offline readout anyway.",
 )
 def streaming_url_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _documents_stream_dir(sf_dir)
-    )
+    stream = _documents_stream(spark, sf_dir)
     canon = stream.select(
         "doc_id",
         canonical_url_col(raw_url_col()).alias("canonical_url"),
