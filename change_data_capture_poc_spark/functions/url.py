@@ -152,7 +152,7 @@ _RAW_URL_SQL = """
 
 
 # The synthesized messy URL of every document, as u(doc_id, raw_url).
-URL_RAW_CTE = f"""
+_RAW_URL_CTE = f"""
     u AS (
         SELECT doc_id, {_RAW_URL_SQL} AS raw_url FROM documents
     )"""
@@ -199,4 +199,4 @@ URL_CANON_CTES = f"""
 
 # Both URL oracles (the batch census and its stream twin) read the
 # canonical URL of every document from this chain.
-URL_CANON_CTE_SQL = f"{URL_RAW_CTE},{URL_CANON_CTES}"
+URL_CANON_CTE_SQL = f"{_RAW_URL_CTE},{URL_CANON_CTES}"
