@@ -10,7 +10,8 @@ recompute as the fallback that makes it exact.
 Layout. One SCD2 table under ``scd2_path``, partitioned by ``part``:
 
 - ``part=c<b>``: the current snapshot, the open row of every key, with
-  ``b = pmod(hash(id), n_buckets)``;
+  ``b = pmod(hash(id), n_buckets)``. ``n_buckets`` defaults to 1, so
+  the whole snapshot is the one partition ``c0``;
 - ``part=h<batch_id>``: closed versions, each in the partition of the
   batch whose event closed it. A closed version never changes again,
   so these partitions are append-only.
@@ -82,13 +83,17 @@ keeping state in the table keeps executor memory flat at 100 TB.
 Cost at scale. A batch reads its own events plus the current rows of
 the buckets it touches, and rewrites those buckets and one ``h``
 partition. A batch of K distinct keys touches an expected
-1-(1-1/n)^K share of the n buckets: the benchmark's 200-event batches
-at n = 16 touch 16 of 16, so each batch still rewrites the whole
-snapshot, which grows with the number of keys (SCALING.md "Merge
-backend"). The ``h`` partitions and log directories grow by one per
-batch, so the listings of ``result()`` and ``reconcile()`` go
-parallel (one more job) past 32 batches; compacting old log batches is
-open (ROADMAP direction 2).
+n(1-(1-1/n)^K) of the n buckets. Whenever K >= n that is about all n:
+every bucket is read and rewritten, so bucketing saves no bytes and
+only adds n-1 files to write, commit and read back, each with a fixed
+cost (about 17 ms per partition on 4 cores). Hence the default of one
+bucket: an in-order batch writes one ``c0`` file and one ``h`` file.
+More buckets pay only when n >> K, that is when each batch holds far
+fewer distinct keys than there are buckets over a large snapshot
+(SCALING.md "Merge backend" has the sweep). The ``h`` partitions and
+log directories grow by one per batch, so the listings of ``result()``
+and ``reconcile()`` go parallel (one more job) past 32 batches;
+compacting old log batches is open (ROADMAP direction 2).
 """
 
 from __future__ import annotations
@@ -121,7 +126,7 @@ class ParquetOverwriteBackend:
         spark: SparkSession,
         path: str,
         rows: DataFrame,
-        partition_col: str = "bucket",
+        partition_col: str,
     ) -> None:
         """Replace the ``partition_col`` partitions of ``path`` that
         ``rows`` covers with ``rows``. The write over ``rows`` must
@@ -153,6 +158,13 @@ class IncrementalScd2:
     Durable SCD2 writes go through the merge backend that
     ``get_merge_backend`` returns (replace-partitions semantics, see
     the module docstring).
+
+    ``n_buckets`` is the number of ``c<b>`` partitions the current
+    snapshot is hashed into by ``id``. The default, 1, keeps it in
+    ``c0``; more buckets let a batch skip the snapshot rows of keys it
+    does not touch, which saves bytes only when a batch holds far fewer
+    distinct keys than there are buckets (module docstring, "Cost at
+    scale").
     """
 
     def __init__(
@@ -161,7 +173,7 @@ class IncrementalScd2:
         log_path: str,
         scd2_path: str,
         attr_fields: list[str] | None = None,
-        n_buckets: int = 16,
+        n_buckets: int = 1,
     ) -> None:
         self.spark = spark
         self.log_path = log_path
@@ -320,9 +332,12 @@ def run_incremental_scd2(
     scd2_path: str,
     checkpoint: str,
     attr_fields: list[str] | None = None,
-    n_buckets: int = 16,
+    n_buckets: int = 1,
 ) -> tuple[StreamingQuery, IncrementalScd2]:
-    """Wire an envelope stream into the incremental SCD2 materializer."""
+    """Wire an envelope stream into the incremental SCD2 materializer.
+
+    ``n_buckets`` is passed to ``IncrementalScd2``: the number of hash
+    partitions of the current snapshot, 1 by default."""
     inc = IncrementalScd2(spark, log_path, scd2_path, attr_fields, n_buckets)
     q = (
         stream.writeStream.foreachBatch(inc.process_batch)

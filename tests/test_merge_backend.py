@@ -93,7 +93,7 @@ def test_incremental_scd2_uses_backend(spark, tmp_path, monkeypatch):
             self.inner = inner
             self.name = inner.name
 
-        def apply(self, spark_, path, rows, partition_col="bucket"):
+        def apply(self, spark_, path, rows, partition_col):
             calls.append(path)
             self.inner.apply(spark_, path, rows, partition_col)
 

@@ -578,23 +578,39 @@ def test_incremental_scd2_batch_job_budget(spark, tmp_path):
     stages. The touched buckets come from an Observation on the log
     write, and the current-snapshot and log reads use the known schema,
     so neither adds a job (a distinct() over the log or a parquet schema
-    inference would)."""
+    inference would).
+
+    With the default ``n_buckets`` the current snapshot is one
+    partition, so each multi-key batch writes one ``c`` file and at
+    most one file per ``h`` partition, not one file per bucket."""
     from change_data_capture_poc_spark.streaming import IncrementalScd2
 
     sc = spark.sparkContext
     df = CdcGenerator(seed=11).products_df(spark, num_records=80)
-    inc = IncrementalScd2(spark, str(tmp_path / "log"),
-                          str(tmp_path / "scd2"), n_buckets=4)
-    try:
-        for batch_id, batch in enumerate(_split_envelopes(spark, df, 2)):
-            group = f"scd2-job-budget-{batch_id}"
-            sc.setJobGroup(group, group)
-            inc.process_batch(batch, batch_id)
-            jobs = sc.statusTracker().getJobIdsForGroup(group)
-            assert len(jobs) <= 3, (batch_id, sorted(jobs))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert _scd2_matches_recompute(inc, df)
+    for n_buckets in (4, None):
+        root = tmp_path / f"n{n_buckets}"
+        kwargs = {} if n_buckets is None else {"n_buckets": n_buckets}
+        inc = IncrementalScd2(spark, str(root / "log"), str(root / "scd2"),
+                              **kwargs)
+        try:
+            for batch_id, batch in enumerate(_split_envelopes(spark, df, 2)):
+                group = f"scd2-job-budget-{n_buckets}-{batch_id}"
+                sc.setJobGroup(group, group)
+                inc.process_batch(batch, batch_id)
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+                assert len(jobs) <= 3, (n_buckets, batch_id, sorted(jobs))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert _scd2_matches_recompute(inc, df)
+        files = {
+            part.name: [f for f in os.listdir(part)
+                        if not f.startswith(("_", "."))]
+            for part in (root / "scd2").iterdir() if part.is_dir()
+        }
+        assert sorted(p for p in files if p.startswith("part=c")) == [
+            f"part=c{b}" for b in range(n_buckets or 1)], files
+        assert any(p.startswith("part=h") for p in files), files
+        assert all(len(f) == 1 for f in files.values()), files
 
 
 def test_incremental_scd2_in_order_batch_reads_no_older_log(spark, tmp_path):
