@@ -87,13 +87,13 @@ n(1-(1-1/n)^K) of the n buckets. Whenever K >= n that is about all n:
 every bucket is read and rewritten, so bucketing saves no bytes and
 only adds n-1 files to write, commit and read back, each with a fixed
 cost (about 17 ms per partition on 4 cores). Hence the default of one
-bucket: an in-order batch writes one ``c0`` file and one ``h`` file.
-More buckets pay only when n >> K, that is when each batch holds far
-fewer distinct keys than there are buckets over a large snapshot
-(SCALING.md "Merge backend" has the sweep). The ``h`` partitions and
-log directories grow by one per batch, so the listings of ``result()``
-and ``reconcile()`` go parallel (one more job) past 32 batches;
-compacting old log batches is open (ROADMAP direction 2).
+bucket: an in-order batch writes one ``c0`` file and at most one
+``h`` file. More buckets pay only when n >> K, that is when each batch
+holds far fewer distinct keys than there are buckets over a large
+snapshot (SCALING.md "Merge backend" has the sweep). The ``h``
+partitions and log directories grow by one per batch, so the listings
+of ``result()`` and ``reconcile()`` go parallel (one more job) past 32
+batches; compacting old log batches is open (ROADMAP direction 2).
 """
 
 from __future__ import annotations
