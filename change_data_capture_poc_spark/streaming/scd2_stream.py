@@ -9,9 +9,8 @@ recompute as the fallback that makes it exact.
 
 Layout. One SCD2 table under ``scd2_path``, partitioned by ``part``:
 
-- ``part=c<b>``: the current snapshot, the open row of every key, with
-  ``b = pmod(hash(id), n_buckets)``. ``n_buckets`` defaults to 1, so
-  the whole snapshot is the one partition ``c0``;
+- ``part=c0``: the current snapshot, the open row of every key, in
+  one partition ("Cost at scale" says why it is not split);
 - ``part=h<batch_id>``: closed versions, each in the partition of the
   batch whose event closed it. A closed version never changes again,
   so these partitions are append-only.
@@ -19,22 +18,24 @@ Layout. One SCD2 table under ``scd2_path``, partitioned by ``part``:
 A hidden ``log_seq_num`` column keeps each row's LSN; ``result()``
 drops it and ``part``. The log, the source of truth for
 ``reconcile()``, is one unbucketed parquet file per micro-batch under
-``log_path/batch_id=<id>/``, with ``bucket`` as a data column.
+``log_path/batch_id=<id>/``, with a constant ``bucket`` data column
+of 0 (the snapshot's one partition; perfbench/cdc_stream.py counts it
+per batch).
 
 Per micro-batch (three Spark jobs: the log write, then the table
 write's shuffle stage and its write stage):
   1. write the batch's decoded events to its log directory. An
-     ``Observation`` on that write returns the set of touched buckets;
-     an empty batch touches none and stops here;
-  2. read the ``c<b>`` partitions of the touched buckets only, by
-     explicit paths under ``basePath`` — the file index never lists the
-     growing ``h`` partitions or any older log batch;
+     ``Observation`` on that write counts them; an empty batch stops
+     here;
+  2. read the ``c0`` partition only, by explicit path under
+     ``basePath`` — the file index never lists the growing ``h``
+     partitions or any older log batch;
   3. union those rows with the batch's events (read back from its log
      file). One window per ``id`` gives each event its
      ``version_number`` (the key's current version + row number) and
      its expiry (``lead`` of the start timestamp, or the sentinel);
   4. write the result once through the merge backend: closed rows go
-     to ``h<batch_id>``, open rows to ``c<b>``.
+     to ``h<batch_id>``, open rows to ``c0``.
 
 Late data. An event whose LSN is at or below its key's current LSN is
 late, out of order, or part of a replayed batch whose table write had
@@ -80,20 +81,23 @@ Why not ``applyInPandasWithState``: per-key SCD2 state is unbounded
 (every key lives forever — SURVEY.md §7 "streaming state at scale");
 keeping state in the table keeps executor memory flat at 100 TB.
 
-Cost at scale. A batch reads its own events plus the current rows of
-the buckets it touches, and rewrites those buckets and one ``h``
-partition. A batch of K distinct keys touches an expected
-n(1-(1-1/n)^K) of the n buckets. Whenever K >= n that is about all n:
-every bucket is read and rewritten, so bucketing saves no bytes and
-only adds n-1 files to write, commit and read back, each with a fixed
-cost (about 17 ms per partition on 4 cores). Hence the default of one
-bucket: an in-order batch writes one ``c0`` file and at most one
-``h`` file. More buckets pay only when n >> K, that is when each batch
-holds far fewer distinct keys than there are buckets over a large
-snapshot (SCALING.md "Merge backend" has the sweep). The ``h``
-partitions and log directories grow by one per batch, so the listings
-of ``result()`` and ``reconcile()`` go parallel (one more job) past 32
-batches; compacting old log batches is open (ROADMAP direction 2).
+Cost at scale. A batch reads its own events plus the current
+snapshot, and rewrites the snapshot and one ``h`` partition: an
+in-order batch writes one ``c0`` file and at most one ``h`` file. An
+earlier layout hashed the snapshot by ``id`` into 16 partitions
+``c0``..``c15``, so that a batch would read and rewrite only those of
+the keys it touches. A batch of K distinct keys touches an expected
+n(1-(1-1/n)^K) of n such partitions, which is about all n whenever
+K >= n: the split saved no bytes and added n-1 files per batch to
+write, commit and read back, each with a fixed cost (about 17 ms per
+partition on 4 cores). A sweep of n and batch size found no case where
+n > 1 won (SCALING.md "Merge backend"). That layout's ``c1``.. would
+never be read here, so a table written under it is refused; delete the
+table directory and ``reconcile()`` rebuilds it from the log. The
+``h`` partitions and log directories grow by one per batch, so the
+listings of ``result()`` and ``reconcile()`` go parallel (one more
+job) past 32 batches; compacting old log batches is open (ROADMAP
+direction 2).
 """
 
 from __future__ import annotations
@@ -108,6 +112,9 @@ from change_data_capture_poc_spark.cdc.scd2 import (
     PRODUCT_ATTRS,
     SCD2_SENTINEL,
 )
+
+# The current snapshot's one partition (module docstring, "Layout").
+_CURRENT = "c0"
 
 
 class ParquetOverwriteBackend:
@@ -159,12 +166,9 @@ class IncrementalScd2:
     ``get_merge_backend`` returns (replace-partitions semantics, see
     the module docstring).
 
-    ``n_buckets`` is the number of ``c<b>`` partitions the current
-    snapshot is hashed into by ``id``. The default, 1, keeps it in
-    ``c0``; more buckets let a batch skip the snapshot rows of keys it
-    does not touch, which saves bytes only when a batch holds far fewer
-    distinct keys than there are buckets (module docstring, "Cost at
-    scale").
+    Raises ``ValueError`` if ``scd2_path`` holds a snapshot partition
+    other than ``c0``, written by the earlier hashed layout (module
+    docstring, "Cost at scale").
     """
 
     def __init__(
@@ -173,20 +177,30 @@ class IncrementalScd2:
         log_path: str,
         scd2_path: str,
         attr_fields: list[str] | None = None,
-        n_buckets: int = 1,
     ) -> None:
         self.spark = spark
         self.log_path = log_path
         self.scd2_path = scd2_path
         self.attr_fields = attr_fields or PRODUCT_ATTRS
-        self.n_buckets = n_buckets
         self.backend = get_merge_backend()
         # The log's schema, known once this instance has landed a batch;
         # until then reconcile() infers it (one more Spark job).
         self._log_schema: T.StructType | None = None
-
-    def _bucket(self) -> Column:
-        return F.pmod(F.hash("id"), F.lit(self.n_buckets))
+        sc = spark.sparkContext
+        self._path = sc._jvm.org.apache.hadoop.fs.Path
+        root = self._path(scd2_path)
+        self._fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+        if self._fs.exists(root):
+            names = [st.getPath().getName()
+                     for st in self._fs.listStatus(root)]
+            split = sorted(n for n in names if n.startswith("part=c")
+                           and n != f"part={_CURRENT}")
+            if split:
+                raise ValueError(
+                    f"{scd2_path} holds snapshot partitions {split} of a "
+                    f"hashed layout; only part={_CURRENT} is read. Delete "
+                    "the table and call reconcile() to rebuild it from the "
+                    "log.")
 
     def _rows(self, events: DataFrame, batch_id: Column) -> DataFrame:
         """Decoded log events → table-shaped rows, not yet versioned or
@@ -250,7 +264,7 @@ class IncrementalScd2:
             .alias("row_valid_expiration_timestamp"),
             "log_seq_num",
             F.when(closed, F.concat(F.lit("h"), F.col("next_batch")))
-            .otherwise(F.concat(F.lit("c"), self._bucket()))
+            .otherwise(F.lit(_CURRENT))
             .alias("part"),
         )
         self.backend.apply(self.spark, self.scd2_path, out, "part")
@@ -264,36 +278,28 @@ class IncrementalScd2:
         # data, repaired by reconcile() (module docstring, "Replay").
         landed = Observation()
         events = decode_envelope(batch_df).withColumn(
-            "bucket", self._bucket()
-        ).observe(landed, F.collect_set("bucket").alias("touched"))
+            "bucket", F.lit(0)
+        ).observe(landed, F.count(F.lit(1)).alias("n"))
         batch_dir = f"{self.log_path}/batch_id={batch_id}"
         events.coalesce(1).write.mode("overwrite").parquet(batch_dir)
-        touched = landed.get["touched"]
         schema = events.schema
         self._log_schema = T.StructType(
             schema.fields + [T.StructField("batch_id", T.LongType())])
-        if not touched:
+        if not landed.get["n"]:
             return
         rows = self._rows(
             self.spark.read.schema(schema).parquet(batch_dir),
             F.lit(batch_id),
         )
-        sc = self.spark.sparkContext
-        jvm_path = sc._jvm.org.apache.hadoop.fs.Path
-        fs = jvm_path(self.scd2_path).getFileSystem(
-            sc._jsc.hadoopConfiguration())
-        paths = [
-            p for p in (f"{self.scd2_path}/part=c{b}" for b in sorted(touched))
-            if fs.exists(jvm_path(p))
-        ]
-        if paths:
+        current = f"{self.scd2_path}/part={_CURRENT}"
+        if self._fs.exists(self._path(current)):
             table = [f for f in rows.schema.fields
                      if f.name not in ("batch_id", "cur")]
             rows = rows.union(
                 self.spark.read.schema(T.StructType(
                     table + [T.StructField("part", T.StringType())]))
                 .option("basePath", self.scd2_path)
-                .parquet(*paths)
+                .parquet(current)
                 .select(
                     *[f.name for f in table],
                     F.lit(None).cast("long").alias("batch_id"),
@@ -316,7 +322,7 @@ class IncrementalScd2:
         micro-batch. The log is the source of truth (the reference's
         recompute-from-log stance, transform_scd2.py:20). Each closed
         version goes to ``h<batch_id of the event that closes it>``,
-        each open one to ``c<b>``, in one ``apply``; cost is one pass
+        each open one to ``c0``, in one ``apply``; cost is one pass
         over the log."""
         reader = self.spark.read
         if self._log_schema is not None:
@@ -332,13 +338,9 @@ def run_incremental_scd2(
     scd2_path: str,
     checkpoint: str,
     attr_fields: list[str] | None = None,
-    n_buckets: int = 1,
 ) -> tuple[StreamingQuery, IncrementalScd2]:
-    """Wire an envelope stream into the incremental SCD2 materializer.
-
-    ``n_buckets`` is passed to ``IncrementalScd2``: the number of hash
-    partitions of the current snapshot, 1 by default."""
-    inc = IncrementalScd2(spark, log_path, scd2_path, attr_fields, n_buckets)
+    """Wire an envelope stream into the incremental SCD2 materializer."""
+    inc = IncrementalScd2(spark, log_path, scd2_path, attr_fields)
     q = (
         stream.writeStream.foreachBatch(inc.process_batch)
         .option("checkpointLocation", checkpoint)

@@ -65,7 +65,6 @@ def test_incremental_scd2_recovers_from_checkpoint_restart(
         log_path=str(tmp_path / "log"),
         scd2_path=str(tmp_path / "scd2"),
         checkpoint=str(tmp_path / "ckpt"),
-        n_buckets=4,
     )
 
     # Run 1: one file per micro-batch, killed after the first completed

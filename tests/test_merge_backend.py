@@ -105,7 +105,7 @@ def test_incremental_scd2_uses_backend(spark, tmp_path, monkeypatch):
 
     scd2_path = str(tmp_path / "scd2")
     inc = scd2_stream.IncrementalScd2(
-        spark, str(tmp_path / "log"), scd2_path, n_buckets=4
+        spark, str(tmp_path / "log"), scd2_path
     )
     assert isinstance(inc.backend, Recording)
     assert inc.backend.name == "parquet"

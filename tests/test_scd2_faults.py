@@ -117,8 +117,7 @@ class _CrashOnce:
 
 @st.composite
 def _schedules(draw):
-    """(changes, arrival order, batch cut points, fault, fault batch,
-    number of snapshot buckets)."""
+    """(changes, arrival order, batch cut points, fault, fault batch)."""
     changes = draw(_changes)
     n = len(changes)
     order = list(range(n))
@@ -128,33 +127,28 @@ def _schedules(draw):
     cuts = sorted(draw(st.lists(
         st.integers(0, n), min_size=n_batches - 1, max_size=n_batches - 1)))
     fault = draw(st.sampled_from(["none", "replay", "crash", "empty"]))
-    return (changes, order, cuts, fault, draw(st.integers(0, n_batches - 1)),
-            draw(st.sampled_from([1, 2])))
+    return changes, order, cuts, fault, draw(st.integers(0, n_batches - 1))
 
 
 # Always run: key 0's update lands in batch 0 and its create, one LSN
 # older, in batch 1. Without the late-data fallback the create is lost;
 # if the upsert placed the create itself, it would leave it in h1, a
-# partition the recompute never writes. Once with the one-bucket
-# default, once with a split snapshot.
+# partition the recompute never writes.
 @example(schedule=([(0, False, 0, False), (0, False, 1, False),
-                    (1, False, 2, True)], [1, 2, 0], [2], "none", 0, 1))
-@example(schedule=([(0, False, 0, False), (0, False, 1, False),
-                    (1, False, 2, True)], [1, 2, 0], [2], "none", 0, 2))
+                    (1, False, 2, True)], [1, 2, 0], [2], "none", 0))
 @given(schedule=_schedules())
 @settings(**_SETTINGS)
 def test_incremental_scd2_equals_recompute_under_faults(
     spark, tmp_path, schedule
 ):
-    changes, order, cuts, fault, at, n_buckets = schedule
+    changes, order, cuts, fault, at = schedule
     rows = _envelopes(changes)
     bounds = [0, *cuts, len(rows)]
     batches = [[rows[i] for i in order[a:b]]
                for a, b in zip(bounds, bounds[1:])]
 
     root = tempfile.mkdtemp(dir=tmp_path)
-    inc = IncrementalScd2(spark, f"{root}/log", f"{root}/scd2",
-                          n_buckets=n_buckets)
+    inc = IncrementalScd2(spark, f"{root}/log", f"{root}/scd2")
     inc.backend = crash = _CrashOnce(inc.backend)
     batch_id = 0
     for j, batch in enumerate(batches):

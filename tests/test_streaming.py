@@ -80,7 +80,6 @@ def test_incremental_scd2_converges_to_batch(spark, tmp_path):
         log_path=str(tmp_path / "log"),
         scd2_path=str(tmp_path / "scd2"),
         checkpoint=str(tmp_path / "ckpt"),
-        n_buckets=4,
     )
     assert q.awaitTermination(300)  # False = still running, see above
 
@@ -458,7 +457,7 @@ def test_live_synthetic_cdc_to_scd2(spark, tmp_path):
     log_p = str(tmp_path / "log")
     scd2_p = str(tmp_path / "scd2")
     stream = stream_synthetic_envelopes(spark, rows_per_second=300, n_keys=50)
-    inc = IncrementalScd2(spark, log_p, scd2_p, n_buckets=4)
+    inc = IncrementalScd2(spark, log_p, scd2_p)
     q = (
         stream.writeStream.foreachBatch(inc.process_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -575,42 +574,63 @@ def _scd2_matches_recompute(inc, df):
 def test_incremental_scd2_batch_job_budget(spark, tmp_path):
     """One micro-batch of the incremental merge runs at most three Spark
     jobs — the log write, then the table write's shuffle and write
-    stages. The touched buckets come from an Observation on the log
+    stages. The landed-event count comes from an Observation on the log
     write, and the current-snapshot and log reads use the known schema,
-    so neither adds a job (a distinct() over the log or a parquet schema
+    so neither adds a job (a count() over the log or a parquet schema
     inference would).
 
-    With the default ``n_buckets`` the current snapshot is one
-    partition, so each multi-key batch writes one ``c`` file and at
-    most one file per ``h`` partition, not one file per bucket."""
+    The current snapshot is one partition, so each multi-key batch
+    writes one ``c0`` file and at most one file per ``h`` partition."""
     from change_data_capture_poc_spark.streaming import IncrementalScd2
 
     sc = spark.sparkContext
     df = CdcGenerator(seed=11).products_df(spark, num_records=80)
-    for n_buckets in (4, None):
-        root = tmp_path / f"n{n_buckets}"
-        kwargs = {} if n_buckets is None else {"n_buckets": n_buckets}
-        inc = IncrementalScd2(spark, str(root / "log"), str(root / "scd2"),
-                              **kwargs)
-        try:
-            for batch_id, batch in enumerate(_split_envelopes(spark, df, 2)):
-                group = f"scd2-job-budget-{n_buckets}-{batch_id}"
-                sc.setJobGroup(group, group)
-                inc.process_batch(batch, batch_id)
-                jobs = sc.statusTracker().getJobIdsForGroup(group)
-                assert len(jobs) <= 3, (n_buckets, batch_id, sorted(jobs))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert _scd2_matches_recompute(inc, df)
-        files = {
-            part.name: [f for f in os.listdir(part)
-                        if not f.startswith(("_", "."))]
-            for part in (root / "scd2").iterdir() if part.is_dir()
-        }
-        assert sorted(p for p in files if p.startswith("part=c")) == [
-            f"part=c{b}" for b in range(n_buckets or 1)], files
-        assert any(p.startswith("part=h") for p in files), files
-        assert all(len(f) == 1 for f in files.values()), files
+    scd2_p = tmp_path / "scd2"
+    inc = IncrementalScd2(spark, str(tmp_path / "log"), str(scd2_p))
+    try:
+        for batch_id, batch in enumerate(_split_envelopes(spark, df, 2)):
+            group = f"scd2-job-budget-{batch_id}"
+            sc.setJobGroup(group, group)
+            inc.process_batch(batch, batch_id)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) <= 3, (batch_id, sorted(jobs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _scd2_matches_recompute(inc, df)
+    files = {
+        part.name: [f for f in os.listdir(part)
+                    if not f.startswith(("_", "."))]
+        for part in scd2_p.iterdir() if part.is_dir()
+    }
+    assert [p for p in files if p.startswith("part=c")] == ["part=c0"], files
+    assert any(p.startswith("part=h") for p in files), files
+    assert all(len(f) == 1 for f in files.values()), files
+
+
+def test_incremental_scd2_refuses_hashed_snapshot(spark, tmp_path):
+    """A table whose current snapshot is split over ``c0``..``c<n-1>``
+    (the earlier hashed layout) would have its ``c1``.. rows versioned
+    again from scratch, leaving two open rows per key. The constructor
+    refuses it; deleting the table and reconciling from the log
+    rebuilds it."""
+    import shutil
+
+    import pytest
+
+    from change_data_capture_poc_spark.streaming import IncrementalScd2
+
+    df = CdcGenerator(seed=23).products_df(spark, num_records=60)
+    log_p = str(tmp_path / "log")
+    scd2_p = tmp_path / "scd2"
+    IncrementalScd2(spark, log_p, str(scd2_p)).process_batch(df, 0)
+    shutil.copytree(scd2_p / "part=c0", scd2_p / "part=c3")
+    with pytest.raises(ValueError, match=r"part=c3"):
+        IncrementalScd2(spark, log_p, str(scd2_p))
+
+    shutil.rmtree(scd2_p)
+    inc = IncrementalScd2(spark, log_p, str(scd2_p))
+    inc.reconcile()
+    assert _scd2_matches_recompute(inc, df)
 
 
 def test_incremental_scd2_in_order_batch_reads_no_older_log(spark, tmp_path):
@@ -624,7 +644,7 @@ def test_incremental_scd2_in_order_batch_reads_no_older_log(spark, tmp_path):
 
     df = CdcGenerator(seed=19).products_df(spark, num_records=90)
     log_p = str(tmp_path / "log")
-    inc = IncrementalScd2(spark, log_p, str(tmp_path / "scd2"), n_buckets=4)
+    inc = IncrementalScd2(spark, log_p, str(tmp_path / "scd2"))
     b0, b1, b2 = _split_envelopes(spark, df, 3)
     inc.process_batch(b0, 0)
     inc.process_batch(b1, 1)
@@ -642,8 +662,7 @@ def test_incremental_scd2_replay_is_idempotent(spark, tmp_path):
     df = CdcGenerator(seed=13).products_df(spark, num_records=90)
     b0, b1 = _split_envelopes(spark, df, 2)
     log_p = str(tmp_path / "log")
-    inc = IncrementalScd2(spark, log_p, str(tmp_path / "scd2"),
-                          n_buckets=4)
+    inc = IncrementalScd2(spark, log_p, str(tmp_path / "scd2"))
     for batch_id, batch in [(0, b0), (1, b1), (0, b0), (1, b1)]:
         inc.process_batch(batch, batch_id)
 
@@ -667,7 +686,7 @@ def test_incremental_scd2_empty_batches_are_noops(spark, tmp_path):
         "payload", F.col("payload").withField("op", F.lit(None).cast("string"))
     )
     scd2_p = str(tmp_path / "scd2")
-    inc = IncrementalScd2(spark, str(tmp_path / "log"), scd2_p, n_buckets=4)
+    inc = IncrementalScd2(spark, str(tmp_path / "log"), scd2_p)
 
     inc.process_batch(empty, 0)
     assert not os.path.exists(scd2_p)
